@@ -35,7 +35,7 @@ from sparksearch.query import query_term_rows, query_terms_df, topk  # noqa: E40
 from sparksearch.session import get_spark  # noqa: E402
 from sparksearch.stats import collection_stats, doc_table, lexicon  # noqa: E402
 from sparksearch.tokenize import postings_from_documents  # noqa: E402
-from sparksearch.wand import wand_topk, wand_topk_batch  # noqa: E402
+from sparksearch.wand import wand_topk_batch  # noqa: E402
 
 BENCH_QUERIES = [
     (1, "hash join merge", DISJUNCTIVE),
@@ -55,10 +55,10 @@ BENCH_QUERIES = [
     (17, "slow fast query", CONJUNCTIVE),
     (18, "group line part", CONJUNCTIVE),
     # mid-df band: 'dup' is the testdata's one positive-idf term (df 5%).
-    # A positive θ from its postings makes chunks holding ONLY hot
+    # A positive θ from its postings makes buckets holding ONLY hot
     # negative-idf terms unbeatable-bound skippable (combined disjunctive
     # bound = Σ positive-else-0 per term), so these queries exercise the
-    # WAND skipping regime at headline level — queries 1-18 are all-hot
+    # bound-skipping regime at headline level — queries 1-18 are all-hot
     # by construction and legitimately decode everything.
     (21, "dup", DISJUNCTIVE),
     (22, "dup the", DISJUNCTIVE),
@@ -124,7 +124,7 @@ def main() -> None:
             # build needs at 10^12 files); span 2048 is the batch-throughput
             # geometry a production corpus uses (measured: 64 tiny buckets
             # on this 5k-doc corpus tripled per-(query,bucket) overhead in
-            # the batch path).  Skip-granularity studies run on a separate
+            # the batch path).  The reordering study runs on a separate
             # bucket-granular index below — a real corpus has BOTH (10^5+
             # buckets of span 2048); this tiny corpus cannot, so the two
             # regimes are measured on two geometries, each documented.
@@ -141,16 +141,9 @@ def main() -> None:
 
         # --- query phases over the persisted compressed index --------------
         qt = query_terms_df(spark, BENCH_QUERIES)
-        timed(
-            "wand_topk_all",
-            lambda: wand_topk(
-                blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K
-            ).count(),
-        )
-
-        # doc-partitioned batch mode: same 16 queries (comparability with
-        # wand_topk_all) plus a 512-query generated set — the architecture
-        # for large batch query sets (index shuffled once, not per query)
+        # the top-k kernel over the bench query set (headline q/s), then a
+        # 512-query generated set (index shuffled once per call, not per
+        # query)
         timed(
             "wand_batch_topk_all",
             lambda: wand_topk_batch(
@@ -197,85 +190,17 @@ def main() -> None:
             ).count(),
         )
 
-        # pruning evidence: evaluator choice + chunks decoded vs total per
-        # query (constant per query; one representative row each).  Block-
-        # max skipping operates per doc-range bucket, so it needs bucket
-        # COUNT to act on: the main span-2048 index has 2-3 buckets on this
-        # tiny corpus (a production corpus has 10^5+ at the same span), so
-        # the skip studies run on a bucket-granular index over the same
-        # length-ordered postings — ~64 buckets, the geometry a real
-        # corpus's doc-range structure actually exposes to the evaluator.
+        # the reordering study needs bucket COUNT to act on: the main
+        # span-2048 index has 2-3 buckets on this tiny corpus (a production
+        # corpus has 10^5+ at the same span), so it runs on a
+        # bucket-granular index over the same length-ordered postings —
+        # ~64 buckets, the geometry a real corpus's doc-range structure
+        # actually exposes to bound skipping.
         gspan = max(64, n_docs // 64)
         gblocks = build_block_index(
             spark.read.parquet(f"{tmp}/postings"), st["avg_doc_len"], bucket_span=gspan
         ).cache()
         gblocks.count()
-        pruning: dict = {"index": f"length_ordered postings, bucket_span={gspan}"}
-        stats_rows = wand_topk(
-            gblocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K, with_stats=True
-        ).collect()
-        for r in stats_rows:
-            q = str(r["query_id"])
-            if q not in pruning:
-                tot, dec = int(r["chunks_total"]), int(r["chunks_decoded"])
-                pruning[q] = {
-                    "evaluator": r["evaluator"],
-                    "chunks_total": tot,
-                    "chunks_decoded": dec,
-                    "decode_ratio": round(dec / max(tot, 1), 4),
-                }
-
-        # chunk-level vs block-level score bounds: same cursor evaluator, one
-        # run with per-chunk max/min metadata, one with it stripped (block-
-        # level fallback) — the decoded-chunk delta is the measured win of
-        # the per-chunk metadata.  The driver testdata's vocabulary is all
-        # hot negative-idf terms (WAND legitimately cannot prune there), so
-        # this study runs on the package's synthetic code corpus, whose
-        # mid-df positive-idf identifiers + rare uniq tokens are the regime
-        # finer bounds actually help (rare term fills θ, hot chunks skip).
-        def skip_study() -> dict:
-            from sparksearch.corpus import documents_from_corpus, synthetic_corpus
-
-            sdocs = documents_from_corpus(synthetic_corpus(spark, 4000, seed=11)).cache()
-            sposts = postings_from_documents(sdocs)
-            sst = collection_stats(sdocs)
-            slex = lexicon(sposts).select("term", "df")
-            sblocks = build_block_index(sposts, sst["avg_doc_len"], bucket_span=1024).cache()
-            sblocks.count()
-            rq = [
-                (101, "uniq99tok buffer", DISJUNCTIVE),
-                (102, "uniq42tok data", DISJUNCTIVE),
-                (103, "uniq17tok value", DISJUNCTIVE),
-                (104, "uniq123tok size", DISJUNCTIVE),
-                (105, "uniq7tok count", DISJUNCTIVE),
-            ]
-            qt_rare = query_terms_df(spark, rq)
-
-            def _decoded(bdf):
-                rows = wand_topk(
-                    bdf, slex, qt_rare, sst["n_docs"], sst["avg_doc_len"],
-                    k=TOP_K, evaluator="cursor", with_stats=True,
-                ).collect()
-                agg: dict[int, tuple[int, int]] = {}
-                for r in rows:
-                    agg[r["query_id"]] = (int(r["chunks_total"]), int(r["chunks_decoded"]))
-                return agg
-
-            chunk_meta = _decoded(sblocks)
-            block_meta = _decoded(sblocks.drop("chunk_max_norms", "chunk_min_norms"))
-            out = {
-                str(q): {
-                    "chunks_total": chunk_meta.get(q, (0, 0))[0],
-                    "decoded_chunk_bounds": chunk_meta.get(q, (0, 0))[1],
-                    "decoded_block_bounds": block_meta.get(q, (0, 0))[1],
-                }
-                for q in sorted(set(chunk_meta) | set(block_meta))
-            }
-            sdocs.unpersist()
-            sblocks.unpersist()
-            return out
-
-        rare_and_skipping = skip_study()
 
         # document reordering A/B: the same corpus indexed with the driver's
         # uniform-random docIDs vs the LENGTH-ORDERED layout (the bench
@@ -336,9 +261,9 @@ def main() -> None:
         #    the steady-state cost a query adds to a running service.
         lat = []
         for q in BENCH_QUERIES[:12]:
-            qt1 = query_terms_df(spark, [q])
+            qt1 = query_term_rows([q])
             t0 = time.perf_counter()
-            wand_topk(blocks, lex, qt1, st["n_docs"], st["avg_doc_len"], k=TOP_K).count()
+            wand_topk_batch(blocks, lex, qt1, st["n_docs"], st["avg_doc_len"], k=TOP_K).count()
             lat.append(time.perf_counter() - t0)
         lat.sort()
         latency = {
@@ -346,7 +271,7 @@ def main() -> None:
             "cold_p95_s": round(lat[min(int(len(lat) * 0.95), len(lat) - 1)], 4),
             "cold_min_s": round(lat[0], 4),
             "cold_max_s": round(lat[-1], 4),
-            "marginal_16q_s": round(timings["wand_topk_all"] / len(BENCH_QUERIES), 4),
+            "marginal_16q_s": round(timings["wand_batch_topk_all"] / len(BENCH_QUERIES), 4),
             "marginal_batch_s": round(timings["wand_batch_512q"] / 512, 5),
         }
 
@@ -411,15 +336,11 @@ def main() -> None:
 
         total = round(sum(timings.values()), 4)
         n_queries = len(BENCH_QUERIES)
-        # Evidence dicts (per-query pruning ratios, chunk-vs-block skipping
-        # study) go to EARLIER stdout lines + a side file: the driver keeps
-        # only the tail of stdout and must be able to parse the FINAL line,
-        # so that line stays a compact headline (< ~1500 chars).
-        evidence = {
-            "pruning": pruning,
-            "rare_and_skipping": rare_and_skipping,
-            "doc_reordering": doc_reordering,
-        }
+        # Evidence dicts (the reordering A/B) go to EARLIER stdout lines + a
+        # side file: the driver keeps only the tail of stdout and must be
+        # able to parse the FINAL line, so that line stays a compact
+        # headline (< ~1500 chars).
+        evidence = {"doc_reordering": doc_reordering}
         for key, val in evidence.items():
             print(json.dumps({"evidence": key, key: val}))
         try:
@@ -442,7 +363,7 @@ def main() -> None:
                 "docs_per_sec_incl_reorder": round(
                     n_docs / (timings["index_build"] + timings["doc_reorder"]), 2
                 ),
-                "bm25_queries_per_sec": round(n_queries / timings["wand_topk_all"], 2),
+                "bm25_queries_per_sec": round(n_queries / timings["wand_batch_topk_all"], 2),
                 "bm25_batch_queries_per_sec": round(512 / timings["wand_batch_512q"], 2),
                 "bm25_query_latency": latency,
                 "cpus": cpus,

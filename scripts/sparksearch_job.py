@@ -17,7 +17,7 @@ from committed stage manifests (sparksearch.checkpoint).
 
 Subcommands:
   build   corpus -> documents/postings/lexicon/doc_table/blocks snapshots
-  query   top-k over a built index (WAND over the compressed blocks)
+  query   top-k over a built index (the batch kernel over the compressed blocks)
   bench   timed build+query with docs/sec + q/s (JSON line)
 """
 
@@ -81,8 +81,8 @@ def cmd_build(args) -> None:
 
 def cmd_query(args) -> None:
     from sparksearch.constants import TOP_K
-    from sparksearch.query import query_terms_df
-    from sparksearch.wand import wand_topk
+    from sparksearch.query import query_term_rows
+    from sparksearch.wand import wand_topk_batch
 
     spark = _spark(args)
     from pyspark.sql import functions as F
@@ -97,8 +97,8 @@ def cmd_query(args) -> None:
     ).collect()[0]
     n_docs, avg_dl = int(stats["n_docs"]), float(stats["avg_dl"])
 
-    qt = query_terms_df(spark, [(0, args.query, args.mode)])
-    res = wand_topk(blocks, lex, qt, n_docs, avg_dl, k=args.k or TOP_K)
+    qt = query_term_rows([(0, args.query, args.mode)])
+    res = wand_topk_batch(blocks, lex, qt, n_docs, avg_dl, k=args.k or TOP_K)
     out = (
         F.broadcast(res)
         .join(doc_table.select("doc_id", "repo", "path"), "doc_id")

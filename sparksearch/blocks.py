@@ -46,10 +46,6 @@ BLOCKS_SCHEMA = T.StructType(
         T.StructField("payload", T.BinaryType(), False),
         T.StructField("max_tf_norm", T.DoubleType(), False),
         T.StructField("min_tf_norm", T.DoubleType(), False),
-        # per-chunk score-bound metadata (finer WAND skipping than the
-        # block-level max/min; ~16 bytes per 64 postings)
-        T.StructField("chunk_max_norms", T.ArrayType(T.DoubleType()), False),
-        T.StructField("chunk_min_norms", T.ArrayType(T.DoubleType()), False),
     ]
 )
 
@@ -119,8 +115,6 @@ def build_block_index(
             out["payload"].append(b.payload)
             out["max_tf_norm"].append(b.max_tf_norm)
             out["min_tf_norm"].append(b.min_tf_norm)
-            out["chunk_max_norms"].append(b.chunk_max_norms.tolist())
-            out["chunk_min_norms"].append(b.chunk_min_norms.tolist())
 
     def encode_stream(batches):
         pend: pd.DataFrame | None = None

@@ -9,7 +9,7 @@ hw3/DataLoader.cpp:302-314 (BM25_t_q):
 
 ONE floating-point association is pinned for the per-posting contribution of
 a weighted query term, across EVERY evaluator in the engine (exhaustive
-DataFrame scorer, cursor WAND, vectorized block-max, batch matrix path, pure-
+DataFrame scorer, the batch top-k kernel's scalar and matrix paths, pure-
 Python oracle, DuckDB oracle SQL):
 
     tf_norm = ((k1 + 1) * tf) / (K + tf)         # query-independent factor

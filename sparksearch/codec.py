@@ -25,11 +25,11 @@ distributed engine, not accidents):
 * a third per-chunk stream of per-posting doc lengths (varbyte), so a block
   is self-contained for exact BM25 scoring — the reference instead does O(1)
   in-memory DocTable lookups per posting (hw3/DataLoader.cpp:307), which has
-  no cheap distributed equivalent inside a WAND evaluator;
+  no cheap distributed equivalent inside the scoring kernel;
 * per-block max/min of the idf-independent BM25 factor
   tf_norm = (k1+1)*tf/(K+tf) — multiplied by the term's idf at query time
-  this gives the block-max WAND bound of the north_star (idf may be negative
-  here, hence min AND max are kept).
+  this gives the per-block score bound that the top-k kernel's θ-skipping
+  uses (idf may be negative here, hence min AND max are kept).
 """
 
 from __future__ import annotations
@@ -108,11 +108,6 @@ class EncodedBlock:
     payload: bytes
     max_tf_norm: float
     min_tf_norm: float
-    # per-CHUNK max/min tf_norm: the finer-grained skip metadata (the
-    # reference skips per chunk on last_docID, hw3/DataLoader.cpp:793-806;
-    # we additionally bound the score per chunk for block-max WAND)
-    chunk_max_norms: np.ndarray  # float64 per chunk
-    chunk_min_norms: np.ndarray  # float64 per chunk
 
 
 def encode_postings(
@@ -190,8 +185,6 @@ def encode_postings(
                 payload=payload,
                 max_tf_norm=max(c[4] for c in sel),
                 min_tf_norm=min(c[5] for c in sel),
-                chunk_max_norms=np.array([c[4] for c in sel], np.float64),
-                chunk_min_norms=np.array([c[5] for c in sel], np.float64),
             )
         )
         i = j
@@ -203,26 +196,13 @@ def chunk_offsets(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Per-chunk byte offsets inside a block payload: (chunk_start,
     docid_end, tf_end, dl_end) — chunk i's three streams live at
-    [start, d_end), [d_end, t_end), [t_end, l_end).  Enables decoding ONE
-    chunk without touching the rest of the block."""
+    [start, d_end), [d_end, t_end), [t_end, l_end)."""
     d = np.asarray(docid_sizes, np.int64)
     t = np.asarray(tf_sizes, np.int64)
     l = np.asarray(dl_sizes, np.int64)
     total = d + t + l
     start = np.r_[0, np.cumsum(total)[:-1]]
     return start, start + d, start + d + t, start + total
-
-
-def decode_chunk(
-    payload: bytes, start: int, d_end: int, t_end: int, l_end: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """-> (doc_ids, tfs, doc_lens) for ONE chunk (delta base is reset at
-    every chunk boundary, so chunks decode independently — the property
-    that makes both the bucketed build and chunk-level skipping possible)."""
-    gaps = varbyte_decode(payload[start:d_end]).astype(np.int64)
-    tfs = varbyte_decode(payload[d_end:t_end]).astype(np.int64)
-    dls = varbyte_decode(payload[t_end:l_end]).astype(np.int64)
-    return np.cumsum(gaps), tfs, dls
 
 
 def encode_postings_hw2(doc_ids: np.ndarray, tfs: np.ndarray) -> bytes:

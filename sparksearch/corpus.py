@@ -232,8 +232,8 @@ def length_ordered_documents(corpus: DataFrame) -> DataFrame:
     Document reordering: BM25's length norm makes short docs score high,
     so length-ordered ids give every (term, bucket) a tight, monotone
     tf_norm range — block-max bounds then separate buckets sharply and
-    WAND-style skipping (per-query and batch) prunes most of the index
-    for top-k queries.  Delta-gap compression also improves because
+    the top-k kernel's bound skipping prunes most of the index for top-k
+    queries.  Delta-gap compression also improves because
     similar docs cluster.  (repo, path) tie-breaks keep the key unique.
     """
     keyed = corpus.withColumn(

@@ -47,7 +47,7 @@ from .dedup import (
 from .query import query_terms_df, score_postings
 from .stats import collection_stats, doc_table, lexicon
 from .tokenize import postings_from_documents, tokenize_text
-from .wand import wand_topk
+from .wand import wand_topk_batch
 
 # --- shared constants for the registered entries -----------------------------
 
@@ -178,25 +178,6 @@ def _spark_topk_exhaustive(spark: SparkSession, sf_dir: str, mode: str) -> DataF
     if mode == CONJUNCTIVE:
         agg = agg.filter(F.col("matched") == F.col("n_terms"))
     m = agg.select("query_id", "doc_id", micro(F.col("score")).alias("score_micro"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_micro"), F.asc("doc_id"))
-    return (
-        m.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "doc_id", "score_micro")
-    )
-
-
-def _spark_topk_wand(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
-    """Compressed-index block-max path; over-fetch then micro re-rank so the
-    1e-6 rounding boundary cannot disagree with the oracle's ranking."""
-    docs = _docs(spark, sf_dir)
-    st = collection_stats(docs)
-    postings = postings_from_documents(docs)
-    lex = lexicon(postings).select("term", "df")
-    blocks = build_block_index(postings, st["avg_doc_len"])
-    qt = query_terms_df(spark, [q for q in QUERY_SET if q[2] == mode])
-    raw = wand_topk(blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K + 30)
-    m = raw.select("query_id", "doc_id", micro(F.col("score")).alias("score_micro"))
     w = Window.partitionBy("query_id").orderBy(F.desc("score_micro"), F.asc("doc_id"))
     return (
         m.withColumn("rank", F.row_number().over(w))
@@ -388,33 +369,23 @@ _register(
     _topk_sql(CONJUNCTIVE),
 )
 
-# 8/9. block-max WAND DAAT top-k over the compressed index (north_star;
-#      must equal the exhaustive oracle rank-identically)
-_register(
-    "wand_topk_or",
-    lambda spark, sf_dir: _spark_topk_wand(spark, sf_dir, DISJUNCTIVE),
-    _topk_sql(DISJUNCTIVE),
-)
-_register(
-    "wand_topk_and",
-    lambda spark, sf_dir: _spark_topk_wand(spark, sf_dir, CONJUNCTIVE),
-    _topk_sql(CONJUNCTIVE),
-)
-
-# 9b/9c. doc-partitioned BATCH evaluation (the large-query-set throughput
-#        architecture: index shuffled once by doc bucket, queries broadcast,
-#        decode-once-score-many per bucket, per-bucket top-k merge) — must
-#        equal the same exhaustive SQL oracle rank-identically
+# 8/9. top-k over the compressed index (the batch kernel: index shuffled
+#      once by doc bucket, queries broadcast, decode-once-score-many per
+#      bucket, per-shard top-k merge) — must equal the exhaustive SQL oracle
+#      rank-identically.  bucket_span=None is the single-bucket reference
+#      layout (each term encoded as one group).
 def _spark_topk_batch(
-    spark: SparkSession, sf_dir: str, mode: str, prune: bool | str = "auto"
+    spark: SparkSession,
+    sf_dir: str,
+    mode: str,
+    prune: bool | str = "auto",
+    bucket_span: int | None = 128,
 ) -> DataFrame:
-    from .wand import wand_topk_batch
-
     docs = _docs(spark, sf_dir)
     st = collection_stats(docs)
     postings = postings_from_documents(docs)
     lex = lexicon(postings).select("term", "df")
-    blocks = build_block_index(postings, st["avg_doc_len"], bucket_span=128)
+    blocks = build_block_index(postings, st["avg_doc_len"], bucket_span=bucket_span)
     qt = query_terms_df(spark, [q for q in QUERY_SET if q[2] == mode])
     # micro_rank: bucket truncation + final window both rank on the
     # micro-rounded key (a total order) — exactly k rows needed, no tie
@@ -429,6 +400,16 @@ def _spark_topk_batch(
     )
 
 
+_register(
+    "wand_topk_or",
+    lambda spark, sf_dir: _spark_topk_batch(spark, sf_dir, DISJUNCTIVE, bucket_span=None),
+    _topk_sql(DISJUNCTIVE),
+)
+_register(
+    "wand_topk_and",
+    lambda spark, sf_dir: _spark_topk_batch(spark, sf_dir, CONJUNCTIVE, bucket_span=None),
+    _topk_sql(CONJUNCTIVE),
+)
 _register(
     "wand_batch_topk_or",
     lambda spark, sf_dir: _spark_topk_batch(spark, sf_dir, DISJUNCTIVE),
@@ -459,7 +440,6 @@ _register(
 # the same (unique) ordering key assign_dense_ids sorts on.
 def _spark_topk_batch_lenordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .corpus import length_ordered_documents
-    from .wand import wand_topk_batch
 
     corpus = _docs(spark, sf_dir).select("repo", "path", "commit", "lang", "content")
     docs = length_ordered_documents(corpus)
@@ -1093,7 +1073,8 @@ _register("crawl_frontier", _frontier, _frontier_oracle)
 #      over the union (fixture_oracles.streaming_fixture_sql).  Checks the
 #      doc-id offset/alignment policy, exactly-once batch accounting
 #      (n_batches from the stream state), the pinned-avgdl scoring
-#      contract, AND rank/score parity of WAND over the streamed blocks.
+#      contract, AND rank/score parity of the top-k kernel over the
+#      streamed blocks.
 STREAM_BATCHES = 3
 STREAM_BUCKET_SPAN = 64
 
@@ -1105,7 +1086,6 @@ def _streaming_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
 
     from .streaming import _load_state, read_index, run_incremental_index
-    from .wand import wand_topk
 
     _fixture_sf_guard(sf_dir)
     root = tempfile.mkdtemp(prefix="sparksearch_stream_entry_")
@@ -1124,7 +1104,7 @@ def _streaming_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(stage)
             )
             part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-            dst = os.path.join(input_dir, f"batch_{b}.parquet")
+            dst = os.path.join(input_dir, f"batch_{b:02d}.parquet")
             os.replace(os.path.join(stage, part), dst)
             # strictly increasing, well-separated mtimes: the source drains
             # oldest-first, so batch order (hence doc-id offsets) is pinned
@@ -1142,15 +1122,12 @@ def _streaming_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, blocks, lex, st = read_index(spark, index_dir)
         n_batches = len(_load_state(index_dir)["batches"])
         qt = query_terms_df(spark, QUERY_SET)
-        raw = wand_topk(
+        raw = wand_topk_batch(
             blocks, lex.select("term", "df"), qt, st["n_docs"], st["avg_doc_len"],
-            k=TOP_K + 30,
+            k=TOP_K, micro_rank=True,
         )
-        m = raw.select("query_id", "doc_id", micro(F.col("score")).alias("score_micro"))
-        w = Window.partitionBy("query_id").orderBy(F.desc("score_micro"), F.asc("doc_id"))
         res = (
-            m.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
+            raw.select("query_id", "rank", "doc_id", micro(F.col("score")).alias("score_micro"))
             .join(F.broadcast(docs.select("doc_id", "path")), "doc_id")
             .select(
                 "query_id",
@@ -1234,7 +1211,7 @@ FROM rows GROUP BY algo
 
 def flagship(spark: SparkSession) -> DataFrame:
     """entry(): the full pipeline end-to-end at sf0.001 — adapter → tokenize
-    UDF → stats/lexicon → compressed block index → block-max WAND top-k →
+    UDF → stats/lexicon → compressed block index → batch top-k kernel →
     broadcast join back to (repo, path)."""
     sf_dir = "/root/testdata/sf0.001"
     docs = _docs(spark, sf_dir)
@@ -1243,7 +1220,7 @@ def flagship(spark: SparkSession) -> DataFrame:
     lex = lexicon(postings).select("term", "df")
     blocks = build_block_index(postings, st["avg_doc_len"])
     qt = query_terms_df(spark, QUERY_SET)
-    out = wand_topk(blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K)
+    out = wand_topk_batch(blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K)
     return F.broadcast(out).join(
         docs.select("doc_id", "repo", "path", "content_sha256"), "doc_id"
     ).select("query_id", "rank", "doc_id", "score", "repo", "path", "content_sha256")

@@ -78,7 +78,8 @@ def query_term_rows(queries: list[tuple[int, str, str]]) -> list[dict]:
 
 def query_terms_df(spark: SparkSession, queries: list[tuple[int, str, str]]) -> DataFrame:
     """:func:`query_term_rows` as a DataFrame — the relational form used by
-    the join-based evaluators (:func:`topk`, :func:`wand_topk`)."""
+    the join-based exhaustive scorer :func:`topk` (``wand_topk_batch``
+    accepts either form)."""
     rows = [
         (r["query_id"], r["mode"], r["term"], r["weight"], r["n_terms"])
         for r in query_term_rows(queries)
@@ -93,8 +94,10 @@ def score_postings(postings: DataFrame, lexicon: DataFrame, qterms: DataFrame, n
     enriched tiny dim is broadcast into the postings scan — Catalyst pushes the
     ``term IN (...)`` semi-join down to the parquet scan of postings.
     """
-    # literal IN-list pushdown (see wand.py): prune the postings scan to the
-    # query vocabulary before the broadcast join
+    # literal IN-list pushdown: the query vocabulary is tiny and known
+    # driver-side, so filtering on it BEFORE the broadcast join lets the
+    # predicate reach the parquet scan (a broadcast join alone would scan
+    # every posting)
     query_vocab = [r["term"] for r in qterms.select("term").distinct().collect()]
     lex_slice = lexicon.select("term", *[c for c in ("df",) if c in lexicon.columns]).filter(
         F.col("term").isin(query_vocab)

@@ -11,9 +11,9 @@ ROUNDED UP to the next multiple of ``bucket_span`` (persisted in the
 stream state), so each batch's buckets are strictly disjoint from — and
 sort after — all existing buckets.  The alignment matters: two batches
 sharing a (term, bucket) would both restart block_id at 0, and the query
-path's (bucket, block_id) ordering would interleave their doc ranges,
-breaking the monotone ``block_last`` sequence the WAND cursors binary-
-search over.  The cost is doc-id GAPS at batch boundaries (ids are unique
+path's (bucket, block_id) ordering would interleave their doc ranges —
+an index the top-k kernel rejects, since a doc listed twice would be
+summed twice.  The cost is doc-id GAPS at batch boundaries (ids are unique
 and ascending but not dense across batches — documented deviation from
 the batch builder's dense ids; BM25 and the query path never require
 density).  Encoding a micro-batch therefore never rewrites existing

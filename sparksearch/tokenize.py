@@ -4,7 +4,7 @@ Semantics pinned to the reference tokenizer (hw2/DataLoader.cpp:27-70,
 hw3/config.h:59): maximal runs of non-separator characters, NO lowercasing, NO
 stemming, empty tokens dropped.
 
-Three equivalent plans are provided:
+Two equivalent plans are provided:
 
 * :func:`postings_from_documents` — the scale path (default).  A vectorized
   pandas UDF (``mapInPandas``) computes per-document term frequencies
@@ -14,10 +14,9 @@ Three equivalent plans are provided:
   in-memory SortedPosting map + 20MB spill runs (hw2/InvertedIndex.cpp:
   82-118) collapse into this single narrow stage; the sorted-run *merge*
   (hw2/DataLoader.cpp:143-255) is whatever shuffle downstream consumers
-  ask for.  Adopted over the posting-rows variant after an interleaved A/B
-  (scripts/tokenizer_ab.py: faster in every round, ~21% at the median).
-* :func:`postings_from_documents_rows` — the previous posting-rows-across-
-  Arrow variant, kept as the A/B baseline.
+  ask for.  Adopted over a posting-rows-across-Arrow variant after an
+  interleaved A/B in round 2 (faster in every round, ~21% at the median;
+  PLANS.md §1).
 * :func:`postings_sql_plan` — pure built-in expressions (split/explode/groupBy)
   used as an independent in-Spark cross-check and as the shape the DuckDB
   oracle mirrors.
@@ -76,37 +75,6 @@ def tokenize_text_literal(text: str) -> list[str]:
     if word:
         out.append("".join(word))
     return out
-
-
-def postings_from_documents_rows(documents: DataFrame, text_col: str = "content") -> DataFrame:
-    """(doc_id, term, tf, doc_len) via a zero-shuffle vectorized pandas UDF
-    emitting posting rows directly (the A/B baseline plan)."""
-
-    src = documents.select("doc_id", F.col(text_col).alias("content"), "doc_len")
-
-    def tok(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            tokens = pdf["content"].str.split(_PY_SEP_RE)
-            ex = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy().repeat(tokens.str.len().to_numpy()),
-                    "term": [t for lst in tokens for t in lst],
-                }
-            )
-            ex = ex[ex["term"].str.len() > 0]
-            tf = (
-                ex.groupby(["doc_id", "term"], sort=False)
-                .size()
-                .reset_index(name="tf")
-            )
-            tf["tf"] = tf["tf"].astype("int32")
-            lens = pdf.set_index("doc_id")["doc_len"]
-            tf["doc_len"] = tf["doc_id"].map(lens).astype("int64")
-            yield tf[["doc_id", "term", "tf", "doc_len"]]
-
-    return src.mapInPandas(tok, schema=POSTINGS_SCHEMA)
 
 
 def postings_from_documents(documents: DataFrame, text_col: str = "content") -> DataFrame:

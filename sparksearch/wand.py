@@ -1,36 +1,34 @@
-"""Block-max WAND document-at-a-time top-k over the compressed index.
+"""Doc-partitioned batch BM25 top-k over the compressed index — the one
+production top-k engine.
 
-The reference evaluates queries TAAT-exhaustively (hw3/DataLoader.cpp:372-430)
-with chunk skipping only in the conjunctive probe (hw3/DataLoader.cpp:793-864
-via per-chunk last_docID).  The north_star mandates DAAT block-max WAND using
-the per-block max-score metadata we added at index time (codec.py).
-
-Execution shape: the per-query evaluation is a grouped vectorized pandas UDF —
-``blocks ⨝ broadcast(query terms) → groupBy(query_id) → applyInPandas(WAND)``.
-All blocks of one query's terms are co-located by the single groupBy shuffle;
-block payloads decode lazily inside the evaluator, so WAND's block skipping
-(`last_doc_id < pivot` → never decode) translates directly into skipped Arrow
-bytes.  The bounded top-k heap is the reference's findTopKscores heap
-(hw3/DataLoader.cpp:636-671) with the tie-break pinned to
-(score desc, doc_id asc).
+The reference's query processor is one loop (hw3/DataLoader.cpp:372-430,
+636-671): decode a term's posting blocks, accumulate BM25 into a dense
+score array, keep a bounded top-k heap.  :func:`wand_topk_batch` runs that
+loop once per doc-range shard: the term-pruned index subset is shuffled
+ONCE by ``bucket mod n_shards``, the query batch (one query or 10^5) is
+broadcast, and each shard walks its buckets in ascending doc order,
+decoding every matched term once (block-at-a-time, numpy), scoring every
+query against the decoded arrays and keeping a per-query running top-k.
+A window top-k merges the shards.  :func:`wand_topk_batch_distributed`
+feeds the same kernel from a query DataFrame.  The exhaustive DataFrame
+scorer (query.topk), the pure-Python oracle and the DuckDB SQL are the
+independent references it is tested against.
 
 Per-posting contributions use the ONE pinned floating-point association
 ``(weight * idf) * tf_norm`` (bm25.py module docstring), so a single
-contribution is bit-identical across every evaluator in this module, the
-exhaustive DataFrame scorer (query.py), the pure-Python oracle, and the
-DuckDB oracle SQL.  Multi-term SUM order is evaluator-dependent (Spark
-aggregates in partition order; the matrix path sums in term-index order),
-so raw-score equality across evaluators is only guaranteed for queries
+contribution is bit-identical across this kernel, the exhaustive
+DataFrame scorer (query.py), the pure-Python oracle, and the DuckDB
+oracle SQL.  Multi-term SUM order differs between engines (Spark
+aggregates in partition order; the kernel takes terms in sorted order), so
+raw-score equality with the references is only guaranteed for queries
 with <= 2 distinct terms (two-operand addition commutes exactly); the
-cross-evaluator RANK contract holds at micro resolution
-(round(score * 1e6) desc, doc_id asc) — the resolution the driver oracle
-pins.  Within one evaluator, ranking is deterministic at raw resolution
-with the doc_id tie-break; sub-micro tie ORDER across evaluators is
-unspecified.
+rank contract holds at micro resolution (round(score * 1e6) desc, doc_id
+asc) — the resolution the driver oracle pins.  Within the kernel,
+ranking is deterministic at raw resolution with the doc_id tie-break.
 
-Upper bounds with the reference's UNCLAMPED idf (negative for df > N/2):
-contribution = (weight * idf) * tf_norm, so the per-block bound is
-``(weight * idf) * (max_tf_norm  if idf >= 0 else  min_tf_norm)`` —
+Score bounds with the reference's UNCLAMPED idf (negative for df > N/2):
+contribution = (weight * idf) * tf_norm, so the per-(bucket, term) bound
+is ``(weight * idf) * (max_tf_norm  if idf >= 0 else  min_tf_norm)`` —
 the SAME association as the score sites (a differently-associated bound
 can land 1 ulp below a true contribution and wrongly prune a θ-tie) —
 a bound CONDITIONAL on the doc containing the term.  Combining per-term
@@ -39,20 +37,26 @@ a negative-bound term (contributing 0 > bound), so the combined bound is
 ``Σ max(bd_t, 0)`` when any bd_t > 0, else ``max_t bd_t`` (the doc must
 contain at least one query term).  Summing raw (possibly negative) bounds
 under-estimates and can skip a winning pos-only doc — see
-:func:`_disjunctive_bound` and tests/test_wand.py::test_negative_idf_mix.
+:func:`_disjunctive_bound` and
+tests/test_wand.py::test_negative_idf_mix_disjunctive_bounds.
 Conjunctive evaluation forces every term present, so there the plain sum
 is sound (and tighter).
 
-Rank-identity argument for pruning at the θ boundary: docs are visited in
-ascending doc_id, so equal-score ties already in the heap are the smaller
-doc_ids; pruning when Σ bounds <= θ only drops docs that could at best tie,
-and ties lose to incumbents — exactly the oracle's (score desc, doc_id asc)
-order.
+Rank identity under pruning: a (query, bucket) evaluation is skipped only
+when its bound is STRICTLY below θ (an achieved k-th score) minus a
+float-safety margin, widened by one micro quantum under ``micro_rank`` —
+so a skipped bucket holds no doc that could tie or beat the k-th, and
+pruning changes work, never results.
+
+Index-order invariant: within one (term, bucket), blocks in block_id
+order hold strictly ascending doc ids (the build sorts by doc_id; the
+streaming ingest aligns batch offsets to buckets so batches never share
+one).  The kernel rejects an index that breaks it: a doc listed twice
+would otherwise be summed twice.
 """
 
 from __future__ import annotations
 
-import heapq
 import warnings
 
 import numpy as np
@@ -62,7 +66,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .bm25 import bm25_idf_py
-from .codec import chunk_offsets, decode_block, decode_chunk, tf_norm
+from .codec import decode_block, tf_norm
 from .constants import CONJUNCTIVE, TOP_K
 
 # {blocks DataFrame -> LRU{vocab tuple -> collected (bucket, term, mx, mn)
@@ -84,7 +88,7 @@ _META_CACHE_PER_DF = 8
 _CACHE_LOCK = threading.Lock()
 
 # {lexicon DataFrame -> {term -> df}} incremental cache for the driver-side
-# df/idf resolution in wand_topk / wand_topk_batch: a batch service resolves
+# df/idf resolution in wand_topk_batch: a batch service resolves
 # many query batches against one immutable lexicon snapshot, and each resolve
 # was one collect JOB — a fixed serial driver cost per call (profiled ~0.2 s)
 # that capped measured short-phase 4x-core scaling.  Only terms not yet
@@ -127,160 +131,6 @@ def _lexicon_dfs(lexicon: DataFrame, vocab: list[str]) -> dict[str, int]:
                 cache[t] = out[t]
     return out
 
-TOPK_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.IntegerType(), False),
-        T.StructField("rank", T.IntegerType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)
-
-# stats variant: constant per-query pruning evidence appended to every row
-TOPK_STATS_SCHEMA = T.StructType(
-    list(TOPK_SCHEMA.fields)
-    + [
-        T.StructField("evaluator", T.StringType(), False),
-        T.StructField("chunks_total", T.LongType(), False),
-        T.StructField("chunks_decoded", T.LongType(), False),
-    ]
-)
-
-
-class TermCursor:
-    """Lazy CHUNK-granular cursor over one term's block sequence (ascending
-    doc_id).  Skip metadata is per 64-posting chunk — last_doc_id (the
-    reference's skip key, hw3/DataLoader.cpp:793-806) plus our per-chunk
-    score bound — so next_geq never decodes a skipped chunk, and the WAND
-    upper bound is the suffix max over remaining chunks (finer than the
-    per-block bound: rare-term conjunctive queries skip inside blocks)."""
-
-    __slots__ = ("weight", "idf", "avg_dl", "chunk_last", "suffix_bound", "chunk_src",
-                 "ci", "pi", "_docs", "_scores", "exhausted",
-                 "chunks_total", "chunks_decoded")
-
-    def __init__(self, term_blocks: pd.DataFrame, weight: float, idf: float, avg_dl: float):
-        tb = term_blocks.sort_values(["bucket", "block_id"])
-        has_chunk_meta = "chunk_max_norms" in tb.columns
-        lasts, bounds, srcs = [], [], []
-        for b in tb.itertuples(index=False):
-            n_chunks = len(b.last_doc_ids)
-            s, d_end, t_end, l_end = chunk_offsets(
-                np.asarray(b.docid_sizes), np.asarray(b.tf_sizes), np.asarray(b.dl_sizes)
-            )
-            if has_chunk_meta:
-                cmax = np.asarray(b.chunk_max_norms, np.float64)
-                cmin = np.asarray(b.chunk_min_norms, np.float64)
-            else:  # index persisted before chunk metadata: block-level bound
-                cmax = np.full(n_chunks, float(b.max_tf_norm))
-                cmin = np.full(n_chunks, float(b.min_tf_norm))
-            # same op shape as the score computation ((w*idf)*norm) so the
-            # fp-monotonicity bound argument holds exactly
-            bounds.append((weight * idf) * (cmax if idf >= 0 else cmin))
-            lasts.append(np.asarray(b.last_doc_ids, np.int64))
-            payload = bytes(b.payload)
-            for i in range(n_chunks):
-                srcs.append((payload, int(s[i]), int(d_end[i]), int(t_end[i]), int(l_end[i])))
-        self.chunk_last = np.concatenate(lasts) if lasts else np.zeros(0, np.int64)
-        if len(self.chunk_last) > 1 and (np.diff(self.chunk_last) < 0).any():
-            # next_geq binary-searches chunk_last, which is only sound when
-            # chunk doc ranges are disjoint and ascending — guaranteed by the
-            # batch build (doc-sorted within (term, bucket)) and by the
-            # streaming build's bucket-aligned batch offsets.  An index
-            # violating it (e.g. written by a pre-alignment streaming build)
-            # must fail loudly, not silently drop postings.
-            raise ValueError(
-                "posting blocks have overlapping/descending doc ranges; "
-                "rebuild or compact the index (buckets must be doc-disjoint)"
-            )
-        chunk_bound = np.concatenate(bounds) if bounds else np.zeros(0)
-        self.suffix_bound = (
-            np.maximum.accumulate(chunk_bound[::-1])[::-1] if len(chunk_bound) else chunk_bound
-        )
-        self.chunk_src = srcs
-        self.chunks_total = len(srcs)
-        self.chunks_decoded = 0
-        self.weight = weight
-        self.idf = idf
-        self.avg_dl = avg_dl
-        self.ci = -1
-        self.pi = 0
-        self._docs = None
-        self.exhausted = self.chunks_total == 0
-        if not self.exhausted:
-            self._load(0)
-
-    def _load(self, ci: int) -> None:
-        payload, s, d_end, t_end, l_end = self.chunk_src[ci]
-        docs, tfs, dls = decode_chunk(payload, s, d_end, t_end, l_end)
-        self._docs = docs
-        # score the whole chunk vectorized on load (64 values) — the
-        # per-posting score read is then a plain array index; scalar
-        # (weight*idf) binds first (left-assoc), matching bm25.py's pinned
-        # association
-        self._scores = (self.weight * self.idf) * tf_norm(
-            tfs.astype(np.float64), dls.astype(np.float64), self.avg_dl
-        )
-        self.ci = ci
-        self.pi = 0
-        self.chunks_decoded += 1
-
-    def doc(self) -> int:
-        return int(self._docs[self.pi])
-
-    def upper_bound(self) -> float:
-        """Score bound for the REMAINING chunks (current onward)."""
-        return float(self.suffix_bound[self.ci])
-
-    def next_geq(self, target: int) -> None:
-        """Advance to first posting with doc_id >= target, skipping whole
-        chunks via last_doc_id metadata (skipped chunks never decode)."""
-        if self.exhausted:
-            return
-        if self.chunk_last[self.ci] < target:
-            nci = int(np.searchsorted(self.chunk_last, target, side="left"))
-            if nci >= self.chunks_total:
-                self.exhausted = True
-                return
-            self._load(nci)
-            # chunk_last[nci] >= target ⇒ a qualifying posting exists here
-            self.pi = int(np.searchsorted(self._docs, target))
-        else:
-            self.pi = int(np.searchsorted(self._docs[self.pi :], target) + self.pi)
-
-    def advance(self) -> None:
-        self.pi += 1
-        if self.pi >= len(self._docs):
-            if self.ci + 1 >= self.chunks_total:
-                self.exhausted = True
-            else:
-                self._load(self.ci + 1)
-
-    def score_current(self) -> float:
-        return float(self._scores[self.pi])
-
-
-class _TopK:
-    """Bounded heap, tie-break (score desc, doc_id asc) — the distributed twin
-    of hw3/DataLoader.cpp:636-671 with ties pinned."""
-
-    def __init__(self, k: int):
-        self.k = k
-        self.heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-
-    def theta(self) -> float:
-        return self.heap[0][0] if len(self.heap) >= self.k else float("-inf")
-
-    def offer(self, doc_id: int, score: float) -> None:
-        item = (score, -doc_id)
-        if len(self.heap) < self.k:
-            heapq.heappush(self.heap, item)
-        elif item > self.heap[0]:
-            heapq.heapreplace(self.heap, item)
-
-    def ranked(self) -> list[tuple[int, float]]:
-        return [(-nd, s) for s, nd in sorted(self.heap, key=lambda x: (-x[0], -x[1]))]
-
 
 def _micro_i64(scores: np.ndarray) -> np.ndarray:
     """round(score * 1e6) half-away-from-zero — the repo-wide *_micro
@@ -295,285 +145,6 @@ def _disjunctive_bound(acc_pos: float, best_single: float) -> float:
     max ``best_single`` (module docstring: negative-bound terms may be
     absent and contribute 0, so they never tighten a disjunctive bound)."""
     return acc_pos if acc_pos > 0.0 else best_single
-
-
-def wand_topk_query(cursors: list[TermCursor], k: int) -> list[tuple[int, float]]:
-    top = _TopK(k)
-    cursors = [c for c in cursors if not c.exhausted]
-    while cursors:
-        cursors.sort(key=lambda c: c.doc())
-        acc_pos = 0.0
-        best_single = float("-inf")
-        pivot_idx = -1
-        theta = top.theta()
-        for i, c in enumerate(cursors):
-            ub = c.upper_bound()
-            if ub > 0.0:
-                acc_pos += ub
-            if ub > best_single:
-                best_single = ub
-            # prefix bound is nondecreasing in i, so the first crossing
-            # is the pivot (docs below it cannot beat θ)
-            if _disjunctive_bound(acc_pos, best_single) > theta:
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break  # no doc can beat θ
-        pivot_doc = cursors[pivot_idx].doc()
-        if cursors[0].doc() == pivot_doc:
-            score = 0.0
-            for c in cursors:
-                if c.doc() == pivot_doc:
-                    score += c.score_current()
-                    c.advance()
-                elif c.doc() > pivot_doc:
-                    break
-            top.offer(pivot_doc, score)
-        else:
-            for c in cursors:
-                if c.doc() >= pivot_doc:
-                    break
-                c.next_geq(pivot_doc)
-        cursors = [c for c in cursors if not c.exhausted]
-    return top.ranked()
-
-
-def conjunctive_topk_query(cursors: list[TermCursor], n_terms: int, k: int) -> list[tuple[int, float]]:
-    """AND via min-df seed + next_geq block skipping — the distributed twin of
-    the reference's seed-hash probe with chunk skip (hw3/DataLoader.cpp:393-428,
-    773-864)."""
-    if len(cursors) < n_terms or any(c.exhausted for c in cursors):
-        return []
-    top = _TopK(k)
-    while not any(c.exhausted for c in cursors):
-        candidate = max(c.doc() for c in cursors)
-        for c in cursors:
-            c.next_geq(candidate)
-        if any(c.exhausted for c in cursors):
-            break
-        if all(c.doc() == candidate for c in cursors):
-            top.offer(candidate, sum(c.score_current() for c in cursors))
-            for c in cursors:
-                c.advance()
-    return top.ranked()
-
-
-def blockmax_vectorized_topk(
-    pdf: pd.DataFrame, mode: str, n_terms: int, avg_dl: float, k: int
-) -> tuple[list[tuple[int, float]], int, int]:
-    """Vectorized block-max evaluation of one query: doc-range-at-a-time.
-
-    The bucketed index aligns blocks of ALL terms on the same doc-id ranges
-    (blocks.py bucket = doc_id // span), so evaluation walks ranges in
-    ascending doc order: a range whose summed per-term score bound cannot
-    beat the current θ is skipped WITHOUT decoding (block-max WAND's skip,
-    applied range-wise); surviving ranges decode and score with numpy
-    (np.unique doc merge + np.add.at accumulation) instead of a per-posting
-    Python loop.  Exactness argument is the same as cursor WAND's: a
-    skipped range can at best tie θ, and ties lose to incumbents, which
-    carry smaller doc_ids because ranges are visited in ascending order.
-    The reference analog is TAAT with per-chunk last_docID skipping
-    (hw3/DataLoader.cpp:773-864) — ours skips on score bounds, per
-    north_star.
-
-    Inside a surviving bucket, per-chunk metadata refines the skip to
-    SUB-bucket granularity (the reference's 64-posting chunk): the union
-    of all terms' chunk-end doc_ids partitions the bucket into elementary
-    intervals; each interval's bound combines every term's covering-chunk
-    bound (mode-aware, as above).  Only chunks overlapping a surviving
-    interval decode, and scored docs are masked to surviving intervals —
-    docs of skipped intervals may carry PARTIAL sums (a skipped chunk of
-    one term can share docs with a decoded chunk of another), so they are
-    discarded, which is sound because their full score is bounded ≤ θ.
-    When every interval survives (hot queries) the whole-block
-    one-pass-per-stream decoder is used instead of per-chunk decode.
-    """
-    chunks_total = int(pdf["n_chunks"].sum())
-    chunks_decoded = 0
-    terms = {}
-    for term, tb in pdf.groupby("term", sort=False):
-        terms[term] = (float(tb["weight"].iloc[0]), float(tb["idf"].iloc[0]), tb)
-    if mode == CONJUNCTIVE and len(terms) < n_terms:
-        return [], chunks_total, 0
-
-    # per (bucket, term): presence-conditional score bound; combine per
-    # bucket with the mode-aware rule (module docstring): conjunctive =
-    # plain Σ (every term forced present); disjunctive = Σ of positive
-    # bounds, or the max bound when all are negative (a doc may lack any
-    # negative-bound term and contribute 0 for it)
-    bucket_sum: dict[int, float] = {}
-    bucket_pos: dict[int, float] = {}
-    bucket_max: dict[int, float] = {}
-    bucket_blocks: dict[int, list] = {}
-    bucket_term_count: dict[int, int] = {}
-    for term, (weight, idf, tb) in terms.items():
-        per_bucket_bound: dict[int, float] = {}
-        for b in tb.itertuples(index=False):
-            # same (weight*idf)*norm shape as the score sites (bm25.py pinned
-            # association) — a differently-associated bound can land 1 ulp
-            # BELOW a true contribution and wrongly prune an exact θ-tie
-            bd = (weight * idf) * (b.max_tf_norm if idf >= 0 else b.min_tf_norm)
-            bk = int(b.bucket)
-            per_bucket_bound[bk] = max(per_bucket_bound.get(bk, float("-inf")), bd)
-            bucket_blocks.setdefault(bk, []).append((term, b))
-        for bk, bd in per_bucket_bound.items():
-            bucket_sum[bk] = bucket_sum.get(bk, 0.0) + bd
-            if bd > 0.0:
-                bucket_pos[bk] = bucket_pos.get(bk, 0.0) + bd
-            bucket_max[bk] = max(bucket_max.get(bk, float("-inf")), bd)
-            bucket_term_count[bk] = bucket_term_count.get(bk, 0) + 1
-    bucket_bounds = {
-        bk: (
-            bucket_sum[bk]
-            if mode == CONJUNCTIVE
-            else _disjunctive_bound(bucket_pos.get(bk, 0.0), bucket_max[bk])
-        )
-        for bk in bucket_sum
-    }
-
-    has_chunk_meta = "chunk_max_norms" in pdf.columns
-    topk_docs = np.zeros(0, np.int64)
-    topk_scores = np.zeros(0)
-    theta = float("-inf")
-    for bk in sorted(bucket_blocks):
-        if mode == CONJUNCTIVE and bucket_term_count.get(bk, 0) < n_terms:
-            continue  # some query term has no postings in this doc range
-        if len(topk_docs) >= k and bucket_bounds[bk] <= theta:
-            continue  # range-level block-max skip: payloads never decoded
-        tblocks: dict[str, list] = {}
-        for term, b in bucket_blocks[bk]:
-            tblocks.setdefault(term, []).append(b)
-        for bs in tblocks.values():
-            bs.sort(key=lambda b: b.block_id)
-
-        doc_parts, score_parts = [], []
-        kept_edges = None  # (edges, kept) when interval-level skipping fired
-        if len(topk_docs) >= k and has_chunk_meta:
-            # sub-bucket skip: elementary intervals from the union of all
-            # terms' chunk-end doc_ids, bounded by covering-chunk metadata
-            metas = []
-            for term, bs in tblocks.items():
-                weight, idf, _ = terms[term]
-                wi = weight * idf
-                lasts = np.concatenate([np.asarray(b.last_doc_ids, np.int64) for b in bs])
-                key = "chunk_max_norms" if idf >= 0 else "chunk_min_norms"
-                cb = np.concatenate([np.asarray(getattr(b, key), np.float64) for b in bs])
-                metas.append((term, wi, lasts, wi * cb, bs))
-            edges = np.unique(np.concatenate([m[2] for m in metas]))
-            n_iv = len(edges)
-            if mode == CONJUNCTIVE:
-                iv_bound = np.zeros(n_iv)
-                iv_valid = np.ones(n_iv, bool)
-            else:
-                iv_pos = np.zeros(n_iv)
-                iv_best = np.full(n_iv, -np.inf)
-            covers = []
-            for term, wi, lasts, cbd, bs in metas:
-                # interval i = (edges[i-1], edges[i]]; its covering chunk
-                # for this term is the first with last_doc_id >= edges[i]
-                cover = np.searchsorted(lasts, edges, side="left")
-                covered = cover < len(lasts)
-                bd = np.where(covered, cbd[np.minimum(cover, len(lasts) - 1)], 0.0)
-                covers.append((cover, covered))
-                if mode == CONJUNCTIVE:
-                    iv_valid &= covered
-                    iv_bound += bd
-                else:
-                    iv_pos += np.where(covered & (bd > 0), bd, 0.0)
-                    iv_best = np.maximum(iv_best, np.where(covered, bd, -np.inf))
-            if mode == CONJUNCTIVE:
-                kept = iv_valid & (iv_bound > theta)
-            else:
-                kept = np.where(iv_pos > 0, iv_pos, iv_best) > theta
-            if not kept.any():
-                continue  # interval bounds are tighter than the bucket's
-            if not kept.all():
-                kept_edges = (edges, kept)
-                for (term, wi, lasts, cbd, bs), (cover, covered) in zip(metas, covers):
-                    keep_chunk = np.zeros(len(lasts), bool)
-                    np.logical_or.at(keep_chunk, cover[covered], kept[covered])
-                    ci = 0
-                    for b in bs:
-                        nb = len(b.last_doc_ids)
-                        if keep_chunk[ci : ci + nb].any():
-                            s, d_end, t_end, l_end = chunk_offsets(
-                                np.asarray(b.docid_sizes),
-                                np.asarray(b.tf_sizes),
-                                np.asarray(b.dl_sizes),
-                            )
-                            payload = bytes(b.payload)
-                            for j in range(nb):
-                                if keep_chunk[ci + j]:
-                                    docs, tfs, dls = decode_chunk(
-                                        payload, int(s[j]), int(d_end[j]),
-                                        int(t_end[j]), int(l_end[j]),
-                                    )
-                                    doc_parts.append(docs)
-                                    score_parts.append(
-                                        wi * tf_norm(
-                                            tfs.astype(np.float64),
-                                            dls.astype(np.float64), avg_dl,
-                                        )
-                                    )
-                        ci += nb
-                    chunks_decoded += int(keep_chunk.sum())
-        if kept_edges is None:  # hot path: whole-block one-pass decode
-            for term, bs in tblocks.items():
-                weight, idf, _ = terms[term]
-                wi = weight * idf
-                for b in bs:
-                    chunks_decoded += int(b.n_chunks)
-                    docs, tfs, dls = decode_block(
-                        bytes(b.payload),
-                        np.asarray(b.docid_sizes),
-                        np.asarray(b.tf_sizes),
-                        np.asarray(b.dl_sizes),
-                    )
-                    doc_parts.append(docs)
-                    score_parts.append(
-                        wi * tf_norm(tfs.astype(np.float64), dls.astype(np.float64), avg_dl)
-                    )
-        if not doc_parts:
-            continue
-        all_docs = np.concatenate(doc_parts)
-        all_scores = np.concatenate(score_parts)
-        b_lo = int(all_docs.min())
-        span = int(all_docs.max()) - b_lo + 1
-        if span <= max(4 * len(all_docs), 1 << 16):
-            # dense accumulation over the bucket's doc range (bincount is
-            # one C pass; the unique/sort variant was the profile hotspot)
-            off = all_docs - b_lo
-            dsum = np.bincount(off, weights=all_scores, minlength=span)
-            dcnt = np.bincount(off, minlength=span)
-            sel = dcnt == n_terms if mode == CONJUNCTIVE else dcnt > 0
-            uniq = np.flatnonzero(sel)
-            sums = dsum[uniq]
-            uniq = uniq + b_lo
-        else:  # pathologically sparse id space: sort-based fallback
-            uniq, inv, cnt = np.unique(all_docs, return_inverse=True, return_counts=True)
-            sums = np.zeros(len(uniq))
-            np.add.at(sums, inv, all_scores)
-            if mode == CONJUNCTIVE:
-                keep = cnt == n_terms
-                uniq, sums = uniq[keep], sums[keep]
-        if kept_edges is not None and len(uniq):
-            # docs in skipped intervals may carry partial sums — discard
-            # (their full score is bounded <= θ, so never top-k material)
-            edges, kept = kept_edges
-            m = kept[np.searchsorted(edges, uniq, side="left")]
-            uniq, sums = uniq[m], sums[m]
-        if len(uniq) == 0:
-            continue
-        # vectorized bounded top-k merge, tie-break (score desc, doc asc)
-        md = np.concatenate([topk_docs, uniq])
-        ms = np.concatenate([topk_scores, sums])
-        order = np.lexsort((md, -ms))[:k]
-        topk_docs, topk_scores = md[order], ms[order]
-        if len(topk_docs) >= k:
-            theta = float(topk_scores.min())
-    order = np.lexsort((topk_docs, -topk_scores))
-    ranked = [(int(topk_docs[i]), float(topk_scores[i])) for i in order]
-    return ranked, chunks_total, chunks_decoded
 
 
 def _prune_gate(
@@ -681,9 +252,16 @@ def _prune_gate(
 
 
 # shared by wand_topk_batch (broadcast query ingest) and
-# wand_topk_batch_distributed (DataFrame query ingest): BOTH paths run the
-# exact same per-shard kernel below, so their scores are bit-identical by
-# construction (the fp-determinism contract, bm25.py module docstring).
+# wand_topk_batch_distributed (DataFrame query ingest): both front-ends
+# build each query's term dict in sorted term order and run the same
+# per-shard kernel below, which decodes a bucket's terms in sorted order.
+# So for every (query, bucket) that both evaluate on the same branch
+# (scalar adds below 32 surviving queries, BLAS at or above), the operands
+# and their summation order are identical and the scores are bit-identical
+# (the fp-determinism contract, bm25.py module docstring).  The list
+# path's seed-θ pass can change a bucket's survivor count and with it the
+# branch, so across front-ends the guaranteed contract is micro-resolution
+# rank identity.
 _BATCH_CAND_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.IntegerType(), False),
@@ -740,13 +318,14 @@ def _batch_score_bucket(
     once, builds dense per-term accumulators, θ-skips (cross-task seed θ in
     ``thetas`` + in-shard running θ in ``run_theta``), then either the BLAS
     matrix path (≥32 survivors) or per-query dense vector adds."""
-    # decode each term once for this bucket; track per-term max/min tf_norm
-    # over its blocks for the bound check
+    # decode each term once for this bucket, in sorted term order (the
+    # matrix path's term axis); track per-term max/min tf_norm over its
+    # blocks for the bound check
     decoded: list[tuple[str, np.ndarray, np.ndarray]] = []
     term_stats: dict[str, tuple[float, float]] = {}
     lo = None
     hi = None
-    for term, tb in pdf.groupby("term", sort=False):
+    for term, tb in pdf.groupby("term", sort=True):
         tb = tb.sort_values(["bucket", "block_id"])
         d_parts, n_parts = [], []
         for b in tb.itertuples(index=False):
@@ -761,6 +340,13 @@ def _batch_score_bucket(
                 tf_norm(tfs.astype(np.float64), dls.astype(np.float64), avg_doc_len)
             )
         docs = np.concatenate(d_parts)
+        if len(docs) > 1 and (np.diff(docs) <= 0).any():
+            # the dense accumulators below would silently sum a doc listed
+            # twice (e.g. two index builds unioned over one (term, bucket))
+            raise ValueError(
+                "posting blocks have overlapping/descending doc ranges; "
+                "rebuild or compact the index (buckets must be doc-disjoint)"
+            )
         decoded.append((term, docs, np.concatenate(n_parts)))
         term_stats[term] = (
             float(tb["max_tf_norm"].max()),
@@ -775,10 +361,9 @@ def _batch_score_bucket(
     # hw3/DataLoader.cpp:376-392, applied per doc range): one bincount per
     # TERM, then each query is a few dense vector adds — no per-query
     # sort/unique (that variant saturated the memory bus and anti-scaled at
-    # 32 cores).  Sparse-span guard (mirrors blockmax_vectorized_topk): an
-    # unbucketed index (bucket_span=None) or a sparse doc-id subset must not
-    # allocate span-sized arrays — remap doc_ids to a compact
-    # 0..n_unique-1 space first.
+    # 32 cores).  Sparse-span guard: an unbucketed index (bucket_span=None)
+    # or a sparse doc-id subset must not allocate span-sized arrays — remap
+    # doc_ids to a compact 0..n_unique-1 space first.
     total_len = sum(len(d) for _, d, _ in decoded)
     span = hi - lo + 1
     if span > max(4 * total_len, 1 << 16):
@@ -1006,13 +591,13 @@ def wand_topk_batch(
     micro_rank: bool = False,
     n_shards: int | None = None,
 ) -> DataFrame:
-    """(query_id, rank, doc_id, score): DOC-PARTITIONED batch evaluation —
-    the throughput architecture for large query sets.
+    """(query_id, rank, doc_id, score): DOC-PARTITIONED evaluation of a
+    query batch — one query or many — over the compressed index.
 
-    :func:`wand_topk` co-locates each query's blocks by joining blocks to
-    queries and shuffling by query_id; with Q queries sharing hot terms
-    that join DUPLICATES every shared block payload Q times (measured: the
-    shuffle, not scoring, dominates past ~10^3 queries/batch).  Here the
+    Co-locating each query's blocks instead (join blocks to queries,
+    shuffle by query_id) DUPLICATES every shared block payload once per
+    query (measured: that shuffle, not scoring, dominated past ~10^3
+    queries/batch).  Here the
     index subset is shuffled ONCE, partitioned by doc-range bucket; the
     query set (tiny: terms, weights, idfs) is broadcast; each bucket
     decodes every matched term ONCE and scores ALL queries against the
@@ -1025,12 +610,13 @@ def wand_topk_batch(
     Exactness: a doc lives in exactly ONE bucket (bucket = doc_id range),
     so per-bucket scoring is complete per doc (conjunctive count filters
     stay correct) and the global top-k is a merge of per-bucket top-k.
-    Rank-identical to :func:`wand_topk` (cross-tested).
+    Rank-identical to the exhaustive :func:`query.topk` and the oracles
+    (cross-tested).
 
     ``prune=True`` adds per-(query, bucket) score-bound skipping — the
     batch-mode analog of the reference's chunk skipping
-    (hw3/DataLoader.cpp:793-806) and of the per-query evaluators' range
-    skip.  Two cheap preliminary jobs derive a θ lower bound per query:
+    (hw3/DataLoader.cpp:793-806).  Two cheap preliminary jobs derive a θ
+    lower bound per query:
 
     1. a metadata-only aggregate (no payload bytes) of per-(bucket, term)
        max/min tf_norm gives each query a score bound per bucket; the
@@ -1101,8 +687,11 @@ def wand_topk_batch(
     # the one idf definition (bm25.py: Python libm, never JVM F.log),
     # computed once per DISTINCT term, not once per (query, term) row
     idf_by_term = {t: bm25_idf_py(lex_rows.get(t, 0), n_docs) for t in vocab}
+    # (query_id, term) order: each query's terms insert sorted, the order
+    # wand_topk_batch_distributed uses, so both front-ends accumulate
+    # multi-term scores and bounds identically (see _BATCH_CAND_SCHEMA)
     all_queries: dict[int, dict] = {}
-    for r in rows:
+    for r in sorted(rows, key=lambda r: (int(r["query_id"]), r["term"])):
         q = all_queries.setdefault(
             int(r["query_id"]), {"mode": r["mode"], "n_terms": int(r["n_terms"]), "terms": {}}
         )
@@ -1312,10 +901,14 @@ def wand_topk_batch_distributed(
       at 10^6+ queries the broadcast itself is the bottleneck the judge's
       r4 review called out).
 
-    Each cogroup task rebuilds the per-shard query dict worker-side and
-    runs the SAME kernel as the list path (_batch_walk_shard, including
-    the in-shard running θ), so results are rank-identical (pytest
-    tests/test_wand.py::test_batch_distributed_rank_identity).  The
+    Each cogroup task rebuilds the per-shard query dict worker-side, in
+    the list path's (query_id, term) order, and runs the SAME kernel
+    (_batch_walk_shard, including the in-shard running θ).  Scores of a
+    (query, bucket) are bit-identical to the list path's whenever both
+    take the same scoring branch, and results are rank-identical at micro
+    resolution (pytest
+    tests/test_wand.py::test_batch_distributed_rank_identity, on unsorted
+    query text).  The
     cross-task seed-θ prune pass is deliberately absent: it needs a
     per-query seed assignment collected on the driver, exactly the O(Q)
     driver state this variant exists to avoid (the in-shard running θ is
@@ -1405,98 +998,3 @@ def wand_topk_batch_distributed(
         .join(mapping, "rep")
         .select("query_id", "rank", "doc_id", "score")
     )
-
-
-def wand_topk(
-    blocks: DataFrame,
-    lexicon: DataFrame,
-    qterms: DataFrame,
-    n_docs: int,
-    avg_doc_len: float,
-    k: int = TOP_K,
-    evaluator: str = "auto",
-    auto_df_fraction: float = 0.02,
-    with_stats: bool = False,
-) -> DataFrame:
-    """(query_id, rank, doc_id, score) over the compressed index; with
-    ``with_stats`` three pruning-evidence columns are appended (constant per
-    query): evaluator chosen, chunks_total, chunks_decoded.
-
-    One IN-list-pruned scan + broadcast join selects the query terms'
-    blocks (the Spark analog of the lexicon offset lookup + mmap,
-    hw3/DataLoader.cpp:316-365), one shuffle co-locates each query's
-    blocks, then the per-query evaluator runs in the group:
-
-    * ``evaluator="vectorized"``: bucket-range-at-a-time with range-level
-      block-max skipping and numpy scoring — fast on hot (stopword-class)
-      terms where posting-at-a-time Python is the bottleneck;
-    * ``evaluator="cursor"``: classic posting-at-a-time block-max WAND /
-      conjunctive next_geq cursors — maximal skipping on rare terms;
-    * ``evaluator="auto"`` (default): per-query cost-based dispatch — the
-      df-selectivity analog of the reference's min-df seed heuristic
-      (hw3/DataLoader.cpp:396-406): if the query's total posting volume
-      exceeds ``auto_df_fraction`` of the collection, scan-and-vectorize
-      beats pointer chasing; below it, skipping wins.
-    All evaluators produce identical ranked output (tested against each
-    other and the exhaustive oracle).
-    """
-    # literal IN-list pushdown: the query vocabulary is tiny and known
-    # driver-side, so materialize it and filter BEFORE the join — the
-    # predicate reaches the parquet/Iceberg scan (PushedFilters: In(term))
-    # and row-group stats skip everything else.  The broadcast join alone
-    # would scan the whole index (the Spark analog of the reference's
-    # lexicon-offset random access, hw3/DataLoader.cpp:316-365).
-    query_vocab = [r["term"] for r in qterms.select("term").distinct().collect()]
-    # df + idf resolved driver-side from the tiny lexicon slice: idf MUST
-    # come from the one Python-libm definition (bm25.bm25_idf_py) — the
-    # JVM's Math.log can differ by 1 ulp and flip exact score ties between
-    # this path and the numpy/batch evaluators (bm25.py module docstring)
-    dfs = _lexicon_dfs(lexicon, query_vocab)
-    spark = qterms.sparkSession
-    idf_df = spark.createDataFrame(
-        [(t, dfs.get(t, 0), bm25_idf_py(dfs.get(t, 0), n_docs)) for t in query_vocab],
-        "term string, df long, idf double",
-    )
-    q_df = qterms.join(F.broadcast(idf_df), "term", "left")
-    joined = blocks.filter(F.col("term").isin(query_vocab)).join(F.broadcast(q_df), "term")
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        mode = pdf["mode"].iloc[0]
-        n_terms = int(pdf["n_terms"].iloc[0])
-        ev = evaluator
-        if ev == "auto":
-            total_df = float(pdf.groupby("term")["df"].first().sum())
-            ev = "vectorized" if total_df >= auto_df_fraction * n_docs else "cursor"
-        if ev == "vectorized":
-            ranked, c_total, c_decoded = blockmax_vectorized_topk(
-                pdf, mode, n_terms, avg_doc_len, k
-            )
-        else:  # "cursor": posting-at-a-time reference evaluator
-            cursors = []
-            for term, tb in pdf.groupby("term", sort=False):
-                cursors.append(
-                    TermCursor(tb, float(tb["weight"].iloc[0]), float(tb["idf"].iloc[0]), avg_doc_len)
-                )
-            if mode == CONJUNCTIVE:
-                ranked = conjunctive_topk_query(cursors, n_terms, k)
-            else:
-                ranked = wand_topk_query(cursors, k)
-            c_total = sum(c.chunks_total for c in cursors)
-            c_decoded = sum(c.chunks_decoded for c in cursors)
-        out = pd.DataFrame(
-            {
-                "query_id": qid,
-                "rank": np.arange(1, len(ranked) + 1, dtype=np.int32),
-                "doc_id": [d for d, _ in ranked],
-                "score": [s for _, s in ranked],
-            }
-        )
-        if with_stats:
-            out["evaluator"] = ev
-            out["chunks_total"] = np.int64(c_total)
-            out["chunks_decoded"] = np.int64(c_decoded)
-        return out
-
-    schema = TOPK_STATS_SCHEMA if with_stats else TOPK_SCHEMA
-    return joined.groupBy("query_id").applyInPandas(run, schema=schema)

@@ -21,7 +21,7 @@ from sparksearch.query import query_terms_df  # noqa: E402
 from sparksearch.stats import lexicon  # noqa: E402
 from sparksearch.streaming import read_index, run_incremental_index  # noqa: E402
 from sparksearch.tokenize import postings_from_documents  # noqa: E402
-from sparksearch.wand import wand_topk  # noqa: E402
+from sparksearch.wand import wand_topk_batch  # noqa: E402
 
 QUERIES = [
     (1, "if return buffer", "disjunctive"),
@@ -72,22 +72,22 @@ def test_streamed_index_equals_batch(spark, tmp_path):
     for b in state["batches"]:
         assert b["offset"] % 64 == 0
 
-    # batch twin over the SAME doc-id assignment + pinned avgdl; all three
-    # evaluators must agree (the cursor path walks blocks ACROSS batch
-    # buckets — the next_geq regression the bucket alignment guarantees)
+    # batch twin over the SAME doc-id assignment + pinned avgdl; the top-k
+    # kernel must agree on both (over the stream index it also checks that
+    # no two batches share a (term, bucket) — the kernel rejects one that
+    # does, the overlap the bucket alignment rules out)
     posts = postings_from_documents(docs)
     batch_blocks = build_block_index(posts, stats["avg_doc_len"], bucket_span=64)
     batch_lex = lexicon(posts).select("term", "df")
 
     qt = query_terms_df(spark, QUERIES)
     key = lambda r: (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))  # noqa: E731
-    want = wand_topk(batch_blocks, batch_lex, qt, stats["n_docs"], stats["avg_doc_len"]).collect()
-    for ev in ("auto", "cursor", "vectorized"):
-        got = wand_topk(
-            blocks, lex, qt, stats["n_docs"], stats["avg_doc_len"], evaluator=ev
-        ).collect()
-        assert sorted(map(key, got)) == sorted(map(key, want)), ev
-        assert len(got) > 0
+    want = wand_topk_batch(
+        batch_blocks, batch_lex, qt, stats["n_docs"], stats["avg_doc_len"]
+    ).collect()
+    got = wand_topk_batch(blocks, lex, qt, stats["n_docs"], stats["avg_doc_len"]).collect()
+    assert sorted(map(key, got)) == sorted(map(key, want))
+    assert len(got) > 0
 
 
 def test_stream_resume_no_double_count(spark, tmp_path):
@@ -191,7 +191,9 @@ def test_compaction_preserves_results(spark, tmp_path):
     batch_blocks = build_block_index(posts, stats["avg_doc_len"], bucket_span=128)
     batch_lex = lexicon(posts).select("term", "df")
     qt = query_terms_df(spark, QUERIES)
-    got = wand_topk(blocks, lex, qt, stats["n_docs"], stats["avg_doc_len"]).collect()
-    want = wand_topk(batch_blocks, batch_lex, qt, stats["n_docs"], stats["avg_doc_len"]).collect()
+    got = wand_topk_batch(blocks, lex, qt, stats["n_docs"], stats["avg_doc_len"]).collect()
+    want = wand_topk_batch(
+        batch_blocks, batch_lex, qt, stats["n_docs"], stats["avg_doc_len"]
+    ).collect()
     key = lambda r: (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))  # noqa: E731
     assert sorted(map(key, got)) == sorted(map(key, want))

@@ -1,7 +1,9 @@
-"""WAND over the compressed index must equal the exhaustive DataFrame path
-(and hence the oracle) rank-identically, for both modes."""
+"""The batch top-k kernel over the compressed index must equal the
+exhaustive DataFrame path and the pure-Python oracle rank-identically, for
+both modes and every index layout."""
 
 import pytest
+from pyspark.errors import PythonException
 
 from sparksearch.blocks import build_block_index
 from sparksearch.constants import CONJUNCTIVE, DISJUNCTIVE
@@ -10,7 +12,7 @@ from sparksearch.oracle import engine as oracle
 from sparksearch.query import query_terms_df, topk
 from sparksearch.stats import collection_stats, lexicon
 from sparksearch.tokenize import postings_from_documents
-from sparksearch.wand import wand_topk, wand_topk_batch
+from sparksearch.wand import wand_topk_batch
 
 QUERIES = [
     (1, "if return", DISJUNCTIVE),
@@ -49,9 +51,11 @@ def _collect_by_query(df):
 
 
 def test_wand_matches_exhaustive_and_oracle(spark, ctx):
+    """The batch kernel and the exhaustive DataFrame scorer must both equal
+    the oracle, doc for doc and score for score, in both modes."""
     docs, posts, st, lex, blocks, idx = ctx
     qt = query_terms_df(spark, QUERIES)
-    wand_res = _collect_by_query(wand_topk(blocks, lex, qt, st["n_docs"], st["avg_doc_len"]))
+    wand_res = _collect_by_query(wand_topk_batch(blocks, lex, qt, st["n_docs"], st["avg_doc_len"]))
     exh_res = _collect_by_query(topk(posts, lex, qt, st["n_docs"], st["avg_doc_len"]))
     for qid, text, mode in QUERIES:
         want = oracle.topk(idx, text, mode)
@@ -68,63 +72,23 @@ def test_wand_single_bucket_layout(spark, ctx):
     """Same results when each term is one group (exact reference geometry)."""
     docs, posts, st, lex, _, idx = ctx
     blocks1 = build_block_index(posts, st["avg_doc_len"])  # no bucketing
-    qt = query_terms_df(spark, QUERIES[:5])
-    res = _collect_by_query(wand_topk(blocks1, lex, qt, st["n_docs"], st["avg_doc_len"]))
-    for qid, text, mode in QUERIES[:5]:
+    qt = query_terms_df(spark, QUERIES)
+    res = _collect_by_query(wand_topk_batch(blocks1, lex, qt, st["n_docs"], st["avg_doc_len"]))
+    for qid, text, mode in QUERIES:
         want = oracle.topk(idx, text, mode)
         got = res.get(qid, [])
-        assert [r["doc_id"] for r in got] == [d for d, _ in want]
-
-
-def test_vectorized_equals_cursor_evaluator(spark, ctx):
-    """The vectorized bucket-at-a-time evaluator must produce the exact
-    ranked list of the posting-at-a-time cursor evaluator (and hence of
-    the exhaustive oracle) in both modes."""
-    docs, posts, st, lex, blocks, idx = ctx
-    qt = query_terms_df(spark, QUERIES)
-    a = wand_topk(blocks, lex, qt, st["n_docs"], st["avg_doc_len"], evaluator="vectorized")
-    b = wand_topk(blocks, lex, qt, st["n_docs"], st["avg_doc_len"], evaluator="cursor")
-    ra = [(r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9)) for r in a.collect()]
-    rb = [(r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9)) for r in b.collect()]
-    assert sorted(ra) == sorted(rb)
-
-
-def test_chunk_meta_fallback_and_stats(spark, ctx):
-    """Stripping the per-chunk score bounds (old index layout) must change
-    NOTHING about the ranked output — only how many chunks decode; the
-    with_stats columns must be self-consistent and show real skipping."""
-    docs, posts, st, lex, blocks, idx = ctx
-    qt = query_terms_df(spark, QUERIES)
-    full = wand_topk(blocks, lex, qt, st["n_docs"], st["avg_doc_len"], evaluator="cursor")
-    nometa = wand_topk(
-        blocks.drop("chunk_max_norms", "chunk_min_norms"),
-        lex, qt, st["n_docs"], st["avg_doc_len"], evaluator="cursor",
-    )
-    kf = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9)) for r in full.collect())
-    kn = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9)) for r in nometa.collect())
-    assert kf == kn
-
-    stats = wand_topk(
-        blocks, lex, qt, st["n_docs"], st["avg_doc_len"], evaluator="cursor", with_stats=True
-    ).collect()
-    plain = {(r["query_id"], r["rank"], r["doc_id"]) for r in full.collect()}
-    assert {(r["query_id"], r["rank"], r["doc_id"]) for r in stats} == plain
-    by_q = {}
-    for r in stats:
-        by_q[r["query_id"]] = (r["chunks_total"], r["chunks_decoded"], r["evaluator"])
-    assert all(d <= t and ev == "cursor" for t, d, ev in by_q.values())
-    # rare-term queries must actually skip chunks (uniq13tok + hot term)
-    assert any(d < t for t, d, _ in by_q.values())
+        assert [r["doc_id"] for r in got] == [d for d, _ in want], qid
 
 
 def test_batch_docpart_equals_perquery(spark, ctx):
-    """The doc-partitioned batch evaluator (shuffle the index once, score
-    every query per bucket, merge per-bucket top-k) must be rank-identical
-    to the per-query-group evaluator and the oracle, in both modes and in
-    both bucket layouts."""
-    docs, posts, st, lex, blocks, idx = ctx
+    """The doc-partitioned batch kernel (shuffle the index once, score
+    every query per bucket, merge per-shard top-k) must be rank-identical
+    to the per-query oracle in both modes, scores included, also when the
+    buckets are so fine that each query's top-k is merged from many."""
+    docs, posts, st, lex, _, idx = ctx
+    blocks8 = build_block_index(posts, st["avg_doc_len"], bucket_span=8)
     qt = query_terms_df(spark, QUERIES)
-    batch = _collect_by_query(wand_topk_batch(blocks, lex, qt, st["n_docs"], st["avg_doc_len"]))
+    batch = _collect_by_query(wand_topk_batch(blocks8, lex, qt, st["n_docs"], st["avg_doc_len"]))
     for qid, text, mode in QUERIES:
         want = oracle.topk(idx, text, mode)
         got = batch.get(qid, [])
@@ -132,30 +96,13 @@ def test_batch_docpart_equals_perquery(spark, ctx):
         for g, (_, os_) in zip(got, want):
             assert abs(g["score"] - os_) < 1e-9
 
-    # single-bucket layout (bucket_span=None) still answers correctly
-    blocks1 = build_block_index(posts, st["avg_doc_len"])
-    b1 = _collect_by_query(wand_topk_batch(blocks1, lex, qt, st["n_docs"], st["avg_doc_len"]))
-    for qid, text, mode in QUERIES:
-        want = oracle.topk(idx, text, mode)
-        assert [r["doc_id"] for r in b1.get(qid, [])] == [d for d, _ in want], qid
-
-
-def test_auto_dispatch_equals_both(spark, ctx):
-    docs, posts, st, lex, blocks, idx = ctx
-    qt = query_terms_df(spark, QUERIES)
-    auto = wand_topk(blocks, lex, qt, st["n_docs"], st["avg_doc_len"], evaluator="auto")
-    vec = wand_topk(blocks, lex, qt, st["n_docs"], st["avg_doc_len"], evaluator="vectorized")
-    ka = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9)) for r in auto.collect())
-    kv = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9)) for r in vec.collect())
-    assert ka == kv
-
 
 def test_negative_idf_mix_disjunctive_bounds(spark):
     """Regression (round 3): disjunctive queries mixing positive- and
     negative-idf terms.  A doc lacking the negative-idf term contributes 0
     for it — more than the (negative) per-block bound — so summing raw
     bounds under-estimates the best achievable score of pos-only docs and
-    skipped the true rank-1 doc in both evaluators.  The corpus is tuned so
+    can skip the true rank-1 doc.  The corpus is tuned so
     the unsound bound falls strictly below θ while doc 180 (pos-only)
     out-scores every doc containing both terms."""
     rows = []
@@ -174,12 +121,6 @@ def test_negative_idf_mix_disjunctive_bounds(spark):
     )
     assert truth[0][2] == 180  # the adversarial doc really is rank-1
     blocks = build_block_index(posts, avgdl, bucket_span=64).cache()
-    for ev in ("vectorized", "cursor"):
-        got = sorted(
-            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-            for r in wand_topk(blocks, lex, qt, n, avgdl, k=k, evaluator=ev).collect()
-        )
-        assert got == truth, ev
     got = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
         for r in wand_topk_batch(blocks, lex, qt, n, avgdl, k=k).collect()
@@ -215,6 +156,24 @@ def test_batch_sparse_span_guard(spark):
         for r in wand_topk_batch(blocks, lex, qt, n, avgdl, k=10).collect()
     )
     assert got == truth
+
+
+def test_batch_rejects_overlapping_blocks(spark):
+    """Two index builds unioned over one (term, bucket) with overlapping doc
+    ids list docs 5..9 twice; the dense accumulators would sum them twice
+    and return wrong scores.  The kernel must reject such an index."""
+    a = [(d, "alpha", 1, 100) for d in range(10)]
+    b = [(d, "alpha", 2, 100) for d in range(5, 15)]
+    schema = "doc_id long, term string, tf int, doc_len long"
+    pa, pb = spark.createDataFrame(a, schema), spark.createDataFrame(b, schema)
+    n, avgdl = 100, 100.0
+    lex = lexicon(pa.unionByName(pb)).select("term", "df")
+    blocks = build_block_index(pa, avgdl, bucket_span=64).unionByName(
+        build_block_index(pb, avgdl, bucket_span=64)
+    )
+    qt = query_terms_df(spark, [(1, "alpha", DISJUNCTIVE)])
+    with pytest.raises(PythonException, match="overlapping/descending doc ranges"):
+        wand_topk_batch(blocks, lex, qt, n, avgdl, prune=False).collect()
 
 
 def test_batch_prune_skips_and_identical(spark):
@@ -294,41 +253,12 @@ def test_batch_auto_gate_fires_on_skewed_declines_on_uniform(spark):
         blocks.unpersist()
 
 
-def test_vectorized_chunk_skipping_decodes_less(spark):
-    """Interval-level (per-chunk) bounds must let the vectorized evaluator
-    skip chunks INSIDE a surviving bucket: bucket 1 contains a burst of
-    very short docs (high norms — its bucket bound beats θ) followed by
-    long docs whose chunks bound below θ, so only the leading chunks
-    decode.  Output must stay identical to the exhaustive path."""
-    rows = []
-    for d in range(1000):
-        dl = 10 if 512 <= d < 520 else 50 + 2 * d
-        rows.append((d, "alpha", 1, dl))
-        rows.append((d, "beta", 1, dl))
-    posts = spark.createDataFrame(rows, "doc_id long, term string, tf int, doc_len long")
-    n, avgdl = 4000, 100.0
-    lex = lexicon(posts).select("term", "df")
-    qt = query_terms_df(spark, [(1, "alpha beta", DISJUNCTIVE)])
-    blocks = build_block_index(posts, avgdl, bucket_span=512).cache()
-    blocks.count()
-    truth = sorted(
-        (r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in topk(posts, lex, qt, n, avgdl).collect()
-    )
-    out = wand_topk(
-        blocks, lex, qt, n, avgdl, evaluator="vectorized", with_stats=True
-    ).collect()
-    got = sorted((r["rank"], r["doc_id"], round(r["score"], 9)) for r in out)
-    assert got == truth
-    t, d = int(out[0]["chunks_total"]), int(out[0]["chunks_decoded"])
-    assert d < t, (d, t)
-    blocks.unpersist()
-
-
 def test_batch_matrix_path_and_signature_dedup(spark, ctx):
     """>=32 surviving queries route through the BLAS matrix path; results
-    must equal the per-query evaluator.  Duplicate query signatures must be
-    evaluated once and replicated to every member query_id."""
+    must equal the exhaustive DataFrame scorer (every query has two
+    distinct terms, so raw scores are bit-identical across engines).
+    Duplicate query signatures must be evaluated once and replicated to
+    every member query_id."""
     docs, posts, st, lex, blocks, idx = ctx
     base = [
         (i, f"{t1} {t2}", DISJUNCTIVE if i % 2 == 0 else CONJUNCTIVE)
@@ -342,7 +272,7 @@ def test_batch_matrix_path_and_signature_dedup(spark, ctx):
     qt = query_terms_df(spark, base)
     ref = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in wand_topk(blocks, lex, qt, st["n_docs"], st["avg_doc_len"]).collect()
+        for r in topk(posts, lex, qt, st["n_docs"], st["avg_doc_len"]).collect()
     )
     got = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
@@ -407,10 +337,11 @@ def test_batch_distributed_rank_identity(spark, ctx):
     collect/dedup-loop/broadcast; judge r4 item 4) must be rank-identical to
     the list path on a 10^5-query batch with heavy signature duplication.
 
-    Query texts list terms in sorted order so BOTH paths insert each query's
-    terms in the same order — per-query float sums are then bit-identical
-    (cross-term accumulation order is the one remaining fp degree of
-    freedom; each contribution is already pinned by bm25.py)."""
+    Query texts list terms in pool order, not sorted: both front-ends must
+    themselves insert each query's terms in sorted order, so cross-term
+    accumulation (the one fp degree of freedom left once bm25.py pins each
+    contribution) runs in the same order on both and the scores compared
+    below agree to 9 decimals at identical micro ranks."""
     from itertools import combinations
 
     from sparksearch.wand import wand_topk_batch_distributed
@@ -427,7 +358,7 @@ def test_batch_distributed_rank_identity(spark, ctx):
         for j, trip in enumerate(triples):
             qid = rep * len(triples) + j
             mode = DISJUNCTIVE if j % 2 == 0 else CONJUNCTIVE
-            qset.append((qid, " ".join(sorted(trip)), mode))
+            qset.append((qid, " ".join(trip), mode))
     assert len(qset) >= 100_000
     qt = query_terms_df(spark, qset)
     k = 5
