@@ -204,13 +204,14 @@ def main() -> None:
 
         # document reordering A/B: the same corpus indexed with the driver's
         # uniform-random docIDs vs the LENGTH-ORDERED layout (the bench
-        # default above), same bucket_span, same query set, θ-skipping
-        # forced — per-bucket score bounds vary monotonically along the
-        # doc_id axis under length ordering, so the batch evaluator's
-        # bound-skipping fires (query_evals_skipped > 0) where the uniform
-        # layout gives every bucket the same bound and skips ~nothing.
-        # Driver entry wand_batch_topk_lenordered hard-checks rank
-        # identity vs DuckDB.
+        # default above), same bucket_span, same query set — per-bucket
+        # score bounds vary monotonically along the doc_id axis under
+        # length ordering, so the running θ's bound-skipping fires
+        # (query_evals_skipped > 0) where the uniform layout gives every
+        # bucket the same bound and skips ~nothing.  The evals counts are
+        # the running θ's, per layout: matching (query, bucket) pairs and
+        # those it skipped.  Driver entry wand_batch_topk_lenordered
+        # hard-checks rank identity vs DuckDB.
         def lenorder_study() -> dict:
             from sparksearch.blocks import index_size_stats
 
@@ -228,11 +229,9 @@ def main() -> None:
                 t0 = time.perf_counter()
                 wand_topk_batch(
                     bdf, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K,
-                    prune=True, stats_out=so,
+                    stats_out=so,
                 ).count()
                 t = time.perf_counter() - t0
-                tot = so.get("query_evals_total")
-                sk = so.get("query_evals_skipped")
                 # compression accounting per layout (judge r4 item 3: the
                 # reorder lever's net value measured, not asserted): same
                 # postings, same span — payload delta is purely the doc-id
@@ -240,8 +239,8 @@ def main() -> None:
                 sz = index_size_stats(bdf)
                 out[label] = {
                     "t_sec": round(t, 4),
-                    "query_evals_total": int(tot.value) if tot is not None else None,
-                    "query_evals_skipped": int(sk.value) if sk is not None else None,
+                    "query_evals_total": int(so["query_evals_total"].value),
+                    "query_evals_skipped": int(so["query_evals_skipped"].value),
                     "payload_bytes": int(sz["payload_bytes"]),
                     "n_blocks": int(sz["n_blocks"]),
                 }
@@ -348,7 +347,7 @@ def main() -> None:
                 os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "BENCH_EVIDENCE.json"), "w"
             ) as f:
-                json.dump(evidence, f, indent=1)
+                json.dump({"cpus": cpus, "sf": sf, **evidence}, f, indent=1)
         except OSError:
             pass  # read-only checkout: the stdout lines above still carry it
         headline = json.dumps(

@@ -378,8 +378,8 @@ def _spark_topk_batch(
     spark: SparkSession,
     sf_dir: str,
     mode: str,
-    prune: bool | str = "auto",
     bucket_span: int | None = 128,
+    n_shards: int | None = None,
 ) -> DataFrame:
     docs = _docs(spark, sf_dir)
     st = collection_stats(docs)
@@ -393,7 +393,7 @@ def _spark_topk_batch(
     # contract is matched structurally
     raw = wand_topk_batch(
         blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K,
-        prune=prune, micro_rank=True,
+        micro_rank=True, n_shards=n_shards,
     )
     return raw.select(
         "query_id", "rank", "doc_id", micro(F.col("score")).alias("score_micro")
@@ -420,12 +420,12 @@ _register(
     lambda spark, sf_dir: _spark_topk_batch(spark, sf_dir, CONJUNCTIVE),
     _topk_sql(CONJUNCTIVE),
 )
-# same oracle with θ-skipping FORCED on (the adaptive gate declines on the
-# uniform driver testdata): hard-green proof that bound pruning never
-# changes results, checked by the driver itself
+# same oracle with ONE shard: one task walks every bucket in doc order, so
+# the running θ skips the most — hard-green proof that bound skipping
+# never changes results, checked by the driver itself
 _register(
     "wand_batch_topk_pruned",
-    lambda spark, sf_dir: _spark_topk_batch(spark, sf_dir, DISJUNCTIVE, prune=True),
+    lambda spark, sf_dir: _spark_topk_batch(spark, sf_dir, DISJUNCTIVE, n_shards=1),
     _topk_sql(DISJUNCTIVE),
 )
 
@@ -433,9 +433,9 @@ _register(
 # 9c. the same batch evaluation over a LENGTH-ORDERED docID layout
 # (document reordering — corpus.length_ordered_documents): docIDs are
 # reassigned densely in ascending content-length order, which makes
-# per-bucket score bounds vary monotonically along the doc_id axis so the
-# batch evaluator's θ-skipping actually fires (the uniform driver layout
-# gives every bucket the same bound).  The oracle reproduces the id
+# per-bucket score bounds vary monotonically along the doc_id axis — the
+# layout on which the running θ's skipping fires (the uniform driver
+# layout gives every bucket the same bound).  The oracle reproduces the id
 # remap exactly: dense rank over (lpad(length,10,'0'), repo, path) —
 # the same (unique) ordering key assign_dense_ids sorts on.
 def _spark_topk_batch_lenordered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,7 +450,7 @@ def _spark_topk_batch_lenordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     qt = query_terms_df(spark, [q for q in QUERY_SET if q[2] == DISJUNCTIVE])
     raw = wand_topk_batch(
         blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K,
-        prune=True, micro_rank=True,
+        micro_rank=True,
     )
     return raw.select(
         "query_id", "rank", "doc_id", micro(F.col("score")).alias("score_micro")

@@ -42,11 +42,15 @@ tests/test_wand.py::test_negative_idf_mix_disjunctive_bounds.
 Conjunctive evaluation forces every term present, so there the plain sum
 is sound (and tighter).
 
-Rank identity under pruning: a (query, bucket) evaluation is skipped only
-when its bound is STRICTLY below θ (an achieved k-th score) minus a
-float-safety margin, widened by one micro quantum under ``micro_rank`` —
-so a skipped bucket holds no doc that could tie or beat the k-th, and
-pruning changes work, never results.
+Bound skipping has one mechanism, the reference's heap threshold
+tightening as it streams doc ranges (hw3/DataLoader.cpp:636-671): each
+shard walks its buckets in ascending doc order, and once a query holds k
+results in that shard its k-th best ACHIEVED score is θ.  A later
+(query, bucket) evaluation is skipped only when its bound is STRICTLY
+below θ minus a float-safety margin, widened by one micro quantum under
+``micro_rank`` — so a skipped bucket holds no doc that could tie or beat
+the k-th, and skipping changes work, never results.  It launches no
+extra Spark job.
 
 Index-order invariant: within one (term, bucket), blocks in block_id
 order hold strictly ascending doc ids (the build sorts by doc_id; the
@@ -57,7 +61,8 @@ would otherwise be summed twice.
 
 from __future__ import annotations
 
-import warnings
+import threading
+import weakref
 
 import numpy as np
 import pandas as pd
@@ -69,47 +74,46 @@ from .bm25 import bm25_idf_py
 from .codec import decode_block, tf_norm
 from .constants import CONJUNCTIVE, TOP_K
 
-# {blocks DataFrame -> LRU{vocab tuple -> collected (bucket, term, mx, mn)
-# rows}} for wand_topk_batch's θ-gate metadata pass (see its prune block);
-# the inner map is bounded so diverse query batches against one index
-# cannot grow driver memory without limit
-import threading
-import weakref
-from collections import OrderedDict
-
-_META_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_META_CACHE_PER_DF = 8
-
-# guards mutation of _META_CACHE / _LEX_CACHE: a long-running batch service
-# may drive wand_topk_batch from several driver threads, and an unguarded
-# OrderedDict move_to_end/popitem race corrupts the LRU (ADVICE r4).  Spark
+# guards mutation of _LEX_CACHE: a long-running batch service may drive
+# wand_topk_batch from several driver threads, and an unguarded clear()
+# between a membership test and a read loses cached terms mid-call.  Spark
 # collects happen OUTSIDE the lock — a lost race costs one redundant
-# metadata job, never a wrong answer.
+# lexicon job, never a wrong answer.
 _CACHE_LOCK = threading.Lock()
 
-# {lexicon DataFrame -> {term -> df}} incremental cache for the driver-side
+# {lexicon DataFrame -> (complete, {term -> df})} cache for the driver-side
 # df/idf resolution in wand_topk_batch: a batch service resolves
 # many query batches against one immutable lexicon snapshot, and each resolve
 # was one collect JOB — a fixed serial driver cost per call (profiled ~0.2 s)
-# that capped measured short-phase 4x-core scaling.  Only terms not yet
-# cached are fetched; absent terms cache as df=0 so they are never re-probed.
+# that capped measured short-phase 4x-core scaling.  A lexicon of at most
+# _LEX_CACHE_MAX_TERMS terms is fetched whole by its first call, so no later
+# call launches a lexicon job and a query costs the same whether or not its
+# terms were seen before; a larger one is fetched per missing term, and
+# absent terms cache as df=0 so they are never re-probed.
 _LEX_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _LEX_CACHE_MAX_TERMS = 1 << 16
 
-# _prune_gate temp-memory budget: elements per (query-block x buckets) array
-_GATE_TARGET_ELEMS = 16 << 20
-
 
 def _lexicon_dfs(lexicon: DataFrame, vocab: list[str]) -> dict[str, int]:
-    """df counts for ``vocab`` from the lexicon, incrementally cached per
-    lexicon DataFrame object.  WeakKeyDictionary: entries die with the
-    DataFrame, so a rebuilt lexicon (a new object) can never serve stale
-    counts.  The per-DataFrame dict is cleared if it would outgrow
-    ``_LEX_CACHE_MAX_TERMS`` (query vocabularies are tiny; the bound only
-    guards a pathological unbounded-vocabulary service, mirroring the
-    _META_CACHE LRU bound)."""
+    """df counts for ``vocab`` from the lexicon, cached per lexicon
+    DataFrame object.  WeakKeyDictionary: entries die with the DataFrame,
+    so a rebuilt lexicon (a new object) can never serve stale counts.  A
+    lexicon larger than ``_LEX_CACHE_MAX_TERMS`` is cached incrementally
+    and its dict is cleared if it would outgrow the bound (query
+    vocabularies are tiny; the bound only guards a pathological
+    unbounded-vocabulary service)."""
     with _CACHE_LOCK:
-        cache = _LEX_CACHE.setdefault(lexicon, {})
+        entry = _LEX_CACHE.get(lexicon)
+    if entry is None:
+        head = lexicon.select("term", "df").limit(_LEX_CACHE_MAX_TERMS + 1).collect()
+        complete = len(head) <= _LEX_CACHE_MAX_TERMS
+        entry = (complete, {r["term"]: int(r["df"]) for r in head} if complete else {})
+        with _CACHE_LOCK:
+            entry = _LEX_CACHE.setdefault(lexicon, entry)
+    complete, cache = entry
+    if complete:
+        return {t: cache.get(t, 0) for t in vocab}
+    with _CACHE_LOCK:
         out = {t: cache[t] for t in vocab if t in cache}
     missing = [t for t in vocab if t not in out]
     if missing:
@@ -147,121 +151,15 @@ def _disjunctive_bound(acc_pos: float, best_single: float) -> float:
     return acc_pos if acc_pos > 0.0 else best_single
 
 
-def _prune_gate(
-    queries: dict[int, dict],
-    idf_by_term: dict[str, float],
-    term_arrays: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]],
-    buckets_sorted: list[int],
-    n_b: int,
-) -> tuple[dict[int, int], int, int]:
-    """Seed-bucket selection + skip-potential estimate for the batch θ-skip
-    (see :func:`wand_topk_batch`'s prune block): per query, the bound over
-    every bucket from per-(bucket, term) tf_norm extremes; the seed is the
-    bucket with the highest bound; a (query, bucket) pair counts as skip
-    POTENTIAL when its bound sits clearly below the query's MEDIAN bound
-    (not the best — a single rare-term bucket would make every other bucket
-    look skippable when the real θ is far lower).  Uniform corpora cluster
-    within ~5% of the median -> zero potential -> the auto gate declines.
-
-    Vectorized over QUERY BLOCKS: per-query numpy calls over a (n_buckets,)
-    axis cost ~0.3 s driver-SERIAL at 3k queries x 150 buckets — a fixed
-    per-call cost that capped measured short-phase 4x-core scaling.  idf is
-    a per-TERM global (one definition, bm25_idf_py), so the mx-vs-mn base
-    selection hoists out of the query loop; each term slot of a block is
-    then one (B, n_buckets) masked accumulation, identical arithmetic to
-    the per-query formulation (tests/test_wand.py pins the equivalence
-    against a straight scalar port).
-
-    Returns (seed_of {qid: seed bucket}, valid_pairs, potential_pairs).
-    """
-    seed_of: dict[int, int] = {}
-    potential_pairs = 0
-    valid_pairs = 0
-    qitems_all = list(queries.items())
-    if not term_arrays or not qitems_all:
-        return seed_of, valid_pairs, potential_pairs
-    terms_list = list(term_arrays)
-    tpos = {t: i for i, t in enumerate(terms_list)}
-    mx_a = np.stack([term_arrays[t][0] for t in terms_list])
-    mn_a = np.stack([term_arrays[t][1] for t in terms_list])
-    pres_a = np.stack([term_arrays[t][2] for t in terms_list])
-    base_is_mx = np.array([idf_by_term.get(t, 0.0) >= 0 for t in terms_list])
-    base_a = np.where(base_is_mx[:, None], mx_a, mn_a)
-    max_s = max(len(q["terms"]) for _, q in qitems_all)
-    # ADAPTIVE query-block size: ~6 live (B, n_buckets) float64 temporaries
-    # exist per block, so bound B*n_buckets ELEMENTS (not B alone) — a fixed
-    # B=1024 at a production 10^5-bucket geometry is ~0.8 GB per array on
-    # the driver (ADVICE r4); 16M elements keeps the live set under ~1 GB
-    # total regardless of bucket count, and B=1024 remains the cap so small
-    # indexes keep the measured blocking.
-    qblk = max(1, min(1024, _GATE_TARGET_ELEMS // max(n_b, 1)))
-    for blk in range(0, len(qitems_all), qblk):
-        part = qitems_all[blk : blk + qblk]
-        nq = len(part)
-        tidx = np.zeros((nq, max_s), np.int64)
-        slot_ok = np.zeros((nq, max_s), bool)
-        wi = np.zeros((nq, max_s))
-        missing_q = np.zeros(nq, bool)
-        conj = np.zeros(nq, bool)
-        for r, (qid, q) in enumerate(part):
-            conj[r] = q["mode"] == CONJUNCTIVE
-            for s, (t, (w, idf)) in enumerate(q["terms"].items()):
-                ti = tpos.get(t)
-                if ti is None:
-                    missing_q[r] = True
-                    continue
-                tidx[r, s] = ti
-                slot_ok[r, s] = True
-                wi[r, s] = w * idf
-        acc_sum = np.zeros((nq, n_b))
-        acc_pos = np.zeros((nq, n_b))
-        best_term = np.full((nq, n_b), -np.inf)
-        all_present = np.ones((nq, n_b), bool)
-        any_present = np.zeros((nq, n_b), bool)
-        for s in range(max_s):
-            ok = slot_ok[:, s]
-            if not ok.any():
-                continue
-            pres = pres_a[tidx[:, s]]
-            bd = wi[:, s : s + 1] * base_a[tidx[:, s]]
-            m = ok[:, None] & pres
-            acc_sum += np.where(m, bd, 0.0)
-            acc_pos += np.where(m & (bd > 0), bd, 0.0)
-            best_term = np.where(m, np.maximum(best_term, bd), best_term)
-            # pad / missing-term slots do not constrain presence
-            all_present &= ~ok[:, None] | pres
-            any_present |= m
-        valid = np.where(conj[:, None], all_present & ~missing_q[:, None], any_present)
-        bound = np.where(conj[:, None], acc_sum, np.where(acc_pos > 0, acc_pos, best_term))
-        has_valid = valid.any(axis=1)
-        bm = np.where(valid, bound, np.nan)
-        # all-NaN rows (no valid bucket) are filtered by has_valid below;
-        # nanmedian reports them via warnings, not the FP err state
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore", RuntimeWarning)
-            ref = np.nanmedian(bm, axis=1)
-        margin = 0.05 * np.maximum(1.0, np.abs(ref))
-        below = valid & (bound < (ref - margin)[:, None])
-        valid_pairs += int(valid[has_valid].sum())
-        potential_pairs += int(below[has_valid].sum())
-        best_i = np.argmax(np.where(valid, bound, -np.inf), axis=1)
-        for r, (qid, _q) in enumerate(part):
-            if has_valid[r]:
-                seed_of[qid] = buckets_sorted[int(best_i[r])]
-    return seed_of, valid_pairs, potential_pairs
-
-
 # shared by wand_topk_batch (broadcast query ingest) and
 # wand_topk_batch_distributed (DataFrame query ingest): both front-ends
-# build each query's term dict in sorted term order and run the same
-# per-shard kernel below, which decodes a bucket's terms in sorted order.
-# So for every (query, bucket) that both evaluate on the same branch
-# (scalar adds below 32 surviving queries, BLAS at or above), the operands
-# and their summation order are identical and the scores are bit-identical
-# (the fp-determinism contract, bm25.py module docstring).  The list
-# path's seed-θ pass can change a bucket's survivor count and with it the
-# branch, so across front-ends the guaranteed contract is micro-resolution
-# rank identity.
+# hand the same per-shard kernel below the same representative queries,
+# each with its term dict in sorted term order, and the kernel decodes a
+# bucket's terms in sorted order.  A (query, bucket) that both evaluate on
+# the same branch (scalar adds below 32 surviving queries, BLAS at or
+# above) sums the same operands in the same order, so its scores are
+# bit-identical (the fp-determinism contract, bm25.py module docstring);
+# the tested contract across front-ends is micro-resolution rank identity.
 _BATCH_CAND_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.IntegerType(), False),
@@ -306,18 +204,17 @@ def _batch_score_bucket(
     qitems,
     run_theta: dict,
     collect,
-    thetas: dict | None,
-    acc_total,
-    acc_skipped,
+    evals: list[int],
     avg_doc_len: float,
     k: int,
     micro_rank: bool,
 ) -> None:
     """Score every query of ``qitems`` against ONE bucket's blocks (see
     wand_topk_batch's docstring for the architecture).  Decodes each term
-    once, builds dense per-term accumulators, θ-skips (cross-task seed θ in
-    ``thetas`` + in-shard running θ in ``run_theta``), then either the BLAS
-    matrix path (≥32 survivors) or per-query dense vector adds."""
+    once, builds dense per-term accumulators, skips queries whose bucket
+    bound falls below their in-shard running θ (``run_theta``), then
+    either the BLAS matrix path (≥32 survivors) or per-query dense vector
+    adds.  ``evals`` counts [matching (query, bucket) pairs, skipped]."""
     # decode each term once for this bucket, in sorted term order (the
     # matrix path's term axis); track per-term max/min tf_norm over its
     # blocks for the bound check
@@ -394,15 +291,10 @@ def _batch_score_bucket(
             continue
         if q["mode"] == CONJUNCTIVE and len(present) < q["n_terms"]:
             continue
-        if thetas is not None and acc_total is not None:
-            acc_total.add(1)
-        # effective θ = max(cross-task seed θ, in-shard running k-th best)
-        # — both are achieved scores, so both are sound lower bounds on the
-        # final k-th
-        tq = thetas.get(qid) if thetas is not None else None
-        rt = run_theta.get(qid)
-        if rt is not None and (tq is None or rt > tq):
-            tq = rt
+        evals[0] += 1
+        # θ = this shard's running k-th best, an achieved score and so a
+        # sound lower bound on the final k-th
+        tq = run_theta.get(qid)
         if tq is not None:
             bound = _query_bound(q, term_stats)
             # strict less-than with a float-safety margin (one micro quantum
@@ -410,8 +302,7 @@ def _batch_score_bucket(
             # work, never results
             margin = 1e-9 * max(1.0, abs(tq)) + (1e-6 if micro_rank else 0.0)
             if bound is not None and bound < tq - margin:
-                if acc_skipped is not None and thetas is not None:
-                    acc_skipped.add(1)
+                evals[1] += 1
                 continue
         survivors.append((qid, q, present))
 
@@ -522,18 +413,17 @@ def _batch_score_bucket(
 def _batch_walk_shard(
     pdf: pd.DataFrame,
     qs: dict,
-    restrict: dict | None,
-    thetas: dict | None,
-    acc_total,
-    acc_skipped,
+    accs: tuple | None,
     avg_doc_len: float,
     k: int,
     micro_rank: bool,
 ) -> pd.DataFrame:
     """Walk ONE shard's buckets in ascending doc order keeping a per-query
     RUNNING top-k (see wand_topk_batch's n_shards paragraph); emits ≤k rows
-    per query for the final merge window."""
-    all_items = None if restrict is not None else list(qs.items())
+    per query for the final merge window.  ``accs``: optional (total,
+    skipped) Spark accumulators, each added to once per task."""
+    qitems = list(qs.items())
+    evals = [0, 0]
     # per-query running top-k across this shard's buckets (merged ≤2k
     # bounded cut per bucket) + running θ once k results exist
     cand: dict[int, tuple[np.ndarray, np.ndarray]] = {}
@@ -552,17 +442,13 @@ def _batch_walk_shard(
         if len(docs_sel) >= k:
             run_theta[qid] = float(scores_sel.min())
 
-    for bucket_id, bpdf in pdf.groupby("bucket", sort=True):
-        if restrict is not None:
-            qitems = [(qid, qs[qid]) for qid in restrict.get(int(bucket_id), ())]
-            if not qitems:
-                continue
-        else:
-            qitems = all_items
+    for _, bpdf in pdf.groupby("bucket", sort=True):
         _batch_score_bucket(
-            bpdf, qitems, run_theta, collect, thetas, acc_total, acc_skipped,
-            avg_doc_len, k, micro_rank,
+            bpdf, qitems, run_theta, collect, evals, avg_doc_len, k, micro_rank
         )
+    if accs is not None:
+        accs[0].add(evals[0])
+        accs[1].add(evals[1])
     if not cand:
         return pd.DataFrame({c: [] for c in _BATCH_EMPTY}).astype(_BATCH_EMPTY)
     out_q, out_d, out_s = [], [], []
@@ -586,7 +472,6 @@ def wand_topk_batch(
     n_docs: int,
     avg_doc_len: float,
     k: int = TOP_K,
-    prune: bool | str = "auto",
     stats_out: dict | None = None,
     micro_rank: bool = False,
     n_shards: int | None = None,
@@ -613,42 +498,19 @@ def wand_topk_batch(
     Rank-identical to the exhaustive :func:`query.topk` and the oracles
     (cross-tested).
 
-    ``prune=True`` adds per-(query, bucket) score-bound skipping — the
-    batch-mode analog of the reference's chunk skipping
-    (hw3/DataLoader.cpp:793-806).  Two cheap preliminary jobs derive a θ
-    lower bound per query:
-
-    1. a metadata-only aggregate (no payload bytes) of per-(bucket, term)
-       max/min tf_norm gives each query a score bound per bucket; the
-       bucket with the highest bound is the query's *seed* bucket;
-    2. seed buckets are scored exactly (each query only in its own seed);
-       the k-th best seed score is a sound lower bound θ_q on the final
-       global k-th score.
-
-    The main pass broadcasts {query: θ_q} and each bucket skips the dense
-    evaluation of any query whose bucket bound falls below θ_q (with a
-    1e-9-relative float-safety margin — skipped work, never skipped
-    correctness).  The seed bucket itself always survives its own bound
-    (θ_q is achieved inside it), so the main pass is self-contained.
-
-    ``prune="auto"`` (default) gates the θ-derivation job on a skip-
-    potential estimate from the metadata pass alone: bound-skipping can
-    only fire where per-bucket score bounds VARY across buckets (doc-
-    ordered heterogeneity — repo-sorted or time-ordered corpora), and on a
-    uniform corpus every bucket's bound beats θ, so the extra job would be
-    pure overhead.  If fewer than 5% of (query, bucket) pairs have a bound
-    meaningfully below the query's best bucket bound, pruning is skipped.
-    ``prune=True`` forces it; ``prune=False`` disables (single-job path).
-    ``stats_out`` (optional dict) receives accumulators
-    ``query_evals_total`` / ``query_evals_skipped`` (None when the gate
-    declined); read ``.value`` after an action (task-retry-approximate,
-    evidence only).
+    ``stats_out`` (optional dict) receives two accumulators:
+    ``query_evals_total`` counts the (query, bucket) pairs where the query
+    matches the bucket's terms — the evaluations the running θ considered
+    — and ``query_evals_skipped`` those it skipped.  Each task counts
+    locally and adds once; read ``.value`` after an action
+    (task-retry-approximate, evidence only).  Without ``stats_out`` no
+    accumulator is created.
 
     ``micro_rank=True`` truncates each shard's local top-k on the
     micro-rounded key (round(score*1e6) half-away, desc, doc_id asc) —
     a TOTAL order, so exactly k rows per shard suffice for any consumer
     that re-ranks on the micro score (the driver entries) with no tie
-    slack; the θ-skip margin widens to one micro quantum so pruning can
+    slack; the θ-skip margin widens to one micro quantum so skipping can
     never drop a doc that ties at micro resolution.  Emitted scores stay
     exact doubles either way.
 
@@ -664,12 +526,12 @@ def wand_topk_batch(
       buckets in the shard whose metadata bound falls below it skip their
       dense evaluation with NO extra Spark jobs (the distributed analog of
       the reference's single-threaded heap threshold tightening as it
-      streams doc ranges, hw3/DataLoader.cpp:636-671) — this composes with
-      the cross-task seed-θ pass (``prune``), which remains the only way a
-      bucket can be skipped before its shard has accumulated k results.
-      Sound for the same reason as seed θ: the running θ is the k-th best
-      ACHIEVED score, visit order only affects how fast it tightens, and
-      the float/micro margins below make ties unskippable.
+      streams doc ranges, hw3/DataLoader.cpp:636-671).  This is the only
+      bound skip.  Sound because the running θ is the k-th best ACHIEVED
+      score; visit order only affects how fast it tightens, and the
+      float/micro margins make ties unskippable.  Fewer shards mean longer
+      walks and more skipping (``n_shards=1`` walks every bucket in one
+      task), at the cost of parallelism.
 
     ``qterms`` may be the usual DataFrame or a plain driver-side list of
     dicts/Rows with the same fields — query batches originate driver-side,
@@ -717,134 +579,15 @@ def wand_topk_batch(
         "shard", F.pmod(F.col("bucket"), F.lit(int(n_shards)))
     )
 
-    def make_scorer(restrict_bc, theta_bc, acc_total, acc_skipped):
-        """Per-SHARD scorer over the broadcast query set (see the n_shards
-        paragraph of the docstring; the kernel itself is the module-level
-        _batch_walk_shard, shared bit-for-bit with the distributed-ingest
-        variant).  restrict_bc: {bucket: [qid]} to score only each query's
-        seed bucket (θ-derivation pass); theta_bc: {qid: θ} to bound-skip
-        queries (cross-task pruned pass)."""
-
-        def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _batch_walk_shard(
-                pdf,
-                bq.value,
-                restrict_bc.value if restrict_bc is not None else None,
-                theta_bc.value if theta_bc is not None else None,
-                acc_total,
-                acc_skipped,
-                avg_doc_len,
-                k,
-                micro_rank,
-            )
-
-        return per_shard
-
-    theta_bc = None
-    acc_total = acc_skipped = None
-    if prune:
-        # pass 1 (metadata only, payload column pruned away): per-(bucket,
-        # term) norm extremes -> per-query bound over every bucket, seed
-        # bucket (highest bound), and the skip-potential gate.  All numpy
-        # over a (n_buckets,) axis per query term — no Python loop over
-        # buckets, so 10^4 buckets x 10^3 queries stays driver-cheap.
-        # The collected rows are memoized per (blocks DataFrame, vocab):
-        # a batch service evaluates many batches against one index
-        # snapshot, and the extremes depend only on the index — without
-        # the cache every call pays a metadata job whose only purpose on
-        # a uniform corpus is to let the gate decline.  WeakKeyDictionary:
-        # entries die with the DataFrame object, so a rebuilt index (a
-        # new DataFrame) can never hit a stale entry.  The per-DataFrame
-        # map is a small LRU (_META_CACHE_PER_DF entries, move-to-end on
-        # hit): a long-running service with diverse query vocabularies
-        # must not grow O(buckets x terms) rows per distinct vocab without
-        # bound (ADVICE r3).
-        meta_key = tuple(vocab)
-        with _CACHE_LOCK:
-            per_df = _META_CACHE.setdefault(blocks, OrderedDict())
-            meta = per_df.get(meta_key)
-            if meta is not None:
-                per_df.move_to_end(meta_key)
-        if meta is None:
-            meta = (
-                sel.groupBy("bucket", "term")
-                .agg(F.max("max_tf_norm").alias("mx"), F.min("min_tf_norm").alias("mn"))
-                .collect()
-            )
-            with _CACHE_LOCK:
-                per_df[meta_key] = meta
-                while len(per_df) > _META_CACHE_PER_DF:
-                    per_df.popitem(last=False)
-        buckets_sorted = sorted({int(r["bucket"]) for r in meta})
-        bk_pos = {bk: i for i, bk in enumerate(buckets_sorted)}
-        n_b = len(buckets_sorted)
-        term_arrays: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        for r in meta:
-            t = r["term"]
-            if t not in term_arrays:
-                term_arrays[t] = (
-                    np.zeros(n_b),
-                    np.zeros(n_b),
-                    np.zeros(n_b, bool),
-                )
-            mx, mn, pres = term_arrays[t]
-            i = bk_pos[int(r["bucket"])]
-            mx[i], mn[i], pres[i] = float(r["mx"]), float(r["mn"]), True
-        seed_of, valid_pairs, potential_pairs = _prune_gate(
-            queries, idf_by_term, term_arrays, buckets_sorted, n_b
-        )
-        # the gate must weigh potential against the θ-derivation COST, not
-        # just detect heterogeneity.  Economics: a skipped (query, bucket)
-        # saves only that query's dense accumulation — the bucket still
-        # decodes every term once for the surviving queries — while the θ
-        # pass costs a full extra evaluation per query (its seed bucket),
-        # the seed buckets' decode, and two extra Spark jobs.  So pruning
-        # pays only when a LARGE fraction of per-query work is skippable:
-        # ≥25% of valid pairs AND ≥4 evaluations saved per evaluation the
-        # seed pass spends.  Near-uniform corpora sit at 5-15% (bound
-        # noise around the median margin) and decline; genuinely skewed
-        # corpora (time-ordered, per-repo term locality) clear 25% easily
-        # because rare terms are absent from most buckets.  Measured on
-        # the uniform synthetic corpus (60k docs, 1536 queries): firing
-        # cost 3x the full evaluation; these floors keep it off there.
-        if prune == "auto" and (
-            valid_pairs == 0
-            or potential_pairs / valid_pairs < 0.25
-            or potential_pairs < 4 * len(queries)
-        ):
-            seed_of = {}  # θ job cannot pay for itself
-        if seed_of:
-            # pass 2: exact scores in each query's seed bucket -> θ_q =
-            # k-th best there (a sound lower bound on the global k-th)
-            by_seed: dict[int, list[int]] = {}
-            for qid, bk in seed_of.items():
-                by_seed.setdefault(bk, []).append(qid)
-            restrict_bc = sc.broadcast(by_seed)
-            seed_rows = (
-                sel.filter(F.col("bucket").isin(sorted(by_seed)))
-                .groupBy("shard")
-                .applyInPandas(make_scorer(restrict_bc, None, None, None), schema=_BATCH_CAND_SCHEMA)
-                .collect()
-            )
-            by_q_scores: dict[int, list[float]] = {}
-            for r in seed_rows:
-                by_q_scores.setdefault(int(r["query_id"]), []).append(float(r["score"]))
-            thetas = {
-                qid: sorted(ss, reverse=True)[k - 1]
-                for qid, ss in by_q_scores.items()
-                if len(ss) >= k
-            }
-            if thetas:
-                theta_bc = sc.broadcast(thetas)
-                acc_total = sc.accumulator(0)
-                acc_skipped = sc.accumulator(0)
+    accs = None
     if stats_out is not None:
-        stats_out["query_evals_total"] = acc_total
-        stats_out["query_evals_skipped"] = acc_skipped
+        accs = (sc.accumulator(0), sc.accumulator(0))
+        stats_out["query_evals_total"], stats_out["query_evals_skipped"] = accs
 
-    cands = sel.groupBy("shard").applyInPandas(
-        make_scorer(None, theta_bc, acc_total, acc_skipped), schema=_BATCH_CAND_SCHEMA
-    )
+    def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _batch_walk_shard(pdf, bq.value, accs, avg_doc_len, k, micro_rank)
+
+    cands = sel.groupBy("shard").applyInPandas(per_shard, schema=_BATCH_CAND_SCHEMA)
     from pyspark.sql import Window
 
     rank_col = (
@@ -880,9 +623,12 @@ def wand_topk_batch_distributed(
     n_shards: int | None = None,
 ) -> DataFrame:
     """Distributed-query-ingest variant of :func:`wand_topk_batch` for
-    HUGE batches (10^5-10^8 queries): the query set stays a DataFrame
-    end-to-end — no driver collect, no driver dedup loop, no broadcast
-    dict — so batch size is bounded by cluster memory, not the driver.
+    batches of about 10^5 queries and more (PLANS §2b-ii, 4-core host:
+    the list path wins at 10^3 queries, the two tie at 10^4, this
+    variant wins at 10^5 by 1.3-1.7x):
+    the query set stays a DataFrame end-to-end — no driver collect, no
+    driver dedup loop, no broadcast dict — so batch size is bounded by
+    cluster memory, not the driver.
 
     Where the list path's fixed driver work scales O(|batch|):
 
@@ -908,12 +654,7 @@ def wand_topk_batch_distributed(
     take the same scoring branch, and results are rank-identical at micro
     resolution (pytest
     tests/test_wand.py::test_batch_distributed_rank_identity, on unsorted
-    query text).  The
-    cross-task seed-θ prune pass is deliberately absent: it needs a
-    per-query seed assignment collected on the driver, exactly the O(Q)
-    driver state this variant exists to avoid (the in-shard running θ is
-    retained and is the dominant skip at scale; a distributed seed
-    assignment is a natural follow-on).
+    query text).
 
     Reference analog: batch TREC query evaluation (hw3/DataLoader.cpp
     query loop) lifted to a query RELATION instead of a driver list.
@@ -970,9 +711,7 @@ def wand_topk_batch_distributed(
                 {"mode": t.mode, "n_terms": int(t.n_terms), "terms": {}},
             )
             qq["terms"][t.term] = (float(t.weight), float(t.idf))
-        return _batch_walk_shard(
-            idx_pdf, qs, None, None, None, None, avg_doc_len, k, micro_rank
-        )
+        return _batch_walk_shard(idx_pdf, qs, None, avg_doc_len, k, micro_rank)
 
     cands = (
         sel.groupBy("shard")

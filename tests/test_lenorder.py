@@ -1,10 +1,10 @@
-"""Document reordering (length-ordered docIDs) and batch-evaluator cache.
+"""Document reordering (length-ordered docIDs).
 
 Length-ordered ids (corpus.length_ordered_documents) are the standard
 index-layout lever that makes per-bucket score bounds discriminative:
 BM25's length norm ties score magnitude to doc_len, so once docIDs ascend
 with length every (term, bucket) has a tight monotone tf_norm range and
-the batch evaluator's θ-skipping (wand.wand_topk_batch prune path) fires.
+the batch evaluator's running-θ skipping (wand.wand_topk_batch) fires.
 Results must stay rank-identical (micro resolution) to the exhaustive
 postings evaluator — reordering is a layout change, never a semantics
 change.
@@ -14,15 +14,11 @@ import pytest
 
 from sparksearch.blocks import build_block_index
 from sparksearch.constants import CONJUNCTIVE, DISJUNCTIVE
-from sparksearch.corpus import (
-    documents_from_corpus,
-    length_ordered_documents,
-    synthetic_corpus,
-)
-from sparksearch.query import query_term_rows, query_terms_df, topk
+from sparksearch.corpus import length_ordered_documents, synthetic_corpus
+from sparksearch.query import query_terms_df, topk
 from sparksearch.stats import collection_stats, lexicon
 from sparksearch.tokenize import postings_from_documents
-from sparksearch.wand import _META_CACHE, _META_CACHE_PER_DF, wand_topk_batch
+from sparksearch.wand import wand_topk_batch
 
 QUERIES = [
     (1, "if return the", DISJUNCTIVE),   # all-hot: bounds vary by length bucket
@@ -58,8 +54,9 @@ def test_length_order_invariant(lctx):
 
 def test_lenordered_batch_rank_identical_and_skips(spark, lctx):
     """wand_topk_batch over the length-ordered index: micro-rank-identical
-    to the exhaustive evaluator, and the forced θ-skip path must actually
-    skip dense (query, bucket) evaluations on this layout."""
+    to the exhaustive evaluator, and with one shard (one task walks every
+    bucket in doc order) the running θ must actually skip dense
+    (query, bucket) evaluations on this layout."""
     docs, posts, st, lex, blocks = lctx
     qt = query_terms_df(spark, QUERIES)
 
@@ -75,41 +72,16 @@ def test_lenordered_batch_rank_identical_and_skips(spark, lctx):
     so: dict = {}
     got_rows = wand_topk_batch(
         blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=10,
-        prune=True, micro_rank=True, stats_out=so,
+        n_shards=1, micro_rank=True, stats_out=so,
     ).collect()
     got = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"] * 1e6))
         for r in got_rows
     )
     assert got == sorted(truth)
-    assert so["query_evals_total"] is not None
     skipped = int(so["query_evals_skipped"].value)
     total = int(so["query_evals_total"].value)
     assert 0 < skipped < total, (skipped, total)
-
-
-def test_meta_cache_lru_bounded(spark):
-    """The θ-gate metadata memo must stay bounded per index DataFrame no
-    matter how many distinct query vocabularies a long-running batch
-    service evaluates (ADVICE r3)."""
-    docs = documents_from_corpus(synthetic_corpus(spark, 80, seed=3)).cache()
-    posts = postings_from_documents(docs)
-    st = collection_stats(docs)
-    lex = lexicon(posts).cache()
-    blocks = build_block_index(posts, st["avg_doc_len"], bucket_span=16).cache()
-    blocks.count()
-    terms = ["if", "return", "the", "for", "int", "x", "i", "def", "else", "while"]
-    assert len(terms) > _META_CACHE_PER_DF
-    for i, term in enumerate(terms):
-        wand_topk_batch(
-            blocks, lex, query_term_rows([(i, term, DISJUNCTIVE)]),
-            st["n_docs"], st["avg_doc_len"], k=5, prune=True,
-        ).count()
-    assert len(_META_CACHE[blocks]) <= _META_CACHE_PER_DF
-    # most-recent vocab must be a hit (still cached)
-    assert (terms[-1],) in _META_CACHE[blocks]
-    docs.unpersist()
-    blocks.unpersist()
 
 
 def test_reorder_documents_equals_length_ordered(spark):

@@ -104,7 +104,10 @@ def test_negative_idf_mix_disjunctive_bounds(spark):
     bounds under-estimates the best achievable score of pos-only docs and
     can skip the true rank-1 doc.  The corpus is tuned so
     the unsound bound falls strictly below θ while doc 180 (pos-only)
-    out-scores every doc containing both terms."""
+    out-scores every doc containing both terms.  With one shard the
+    running θ reaches doc 180's bucket and evaluates the disjunctive
+    bound there; with the default shards (8 partitions) each of the 3
+    buckets has its own task and nothing is skipped."""
     rows = []
     for d in range(150):  # df(neg)=150 of N=200 -> idf < 0
         rows.append((d, "neg", 8 if d < 10 else 10, 100))
@@ -121,11 +124,14 @@ def test_negative_idf_mix_disjunctive_bounds(spark):
     )
     assert truth[0][2] == 180  # the adversarial doc really is rank-1
     blocks = build_block_index(posts, avgdl, bucket_span=64).cache()
-    got = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in wand_topk_batch(blocks, lex, qt, n, avgdl, k=k).collect()
-    )
-    assert got == truth
+    for shards in (1, None):
+        got = sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+            for r in wand_topk_batch(
+                blocks, lex, qt, n, avgdl, k=k, n_shards=shards
+            ).collect()
+        )
+        assert got == truth, shards
     blocks.unpersist()
 
 
@@ -173,16 +179,61 @@ def test_batch_rejects_overlapping_blocks(spark):
     )
     qt = query_terms_df(spark, [(1, "alpha", DISJUNCTIVE)])
     with pytest.raises(PythonException, match="overlapping/descending doc ranges"):
-        wand_topk_batch(blocks, lex, qt, n, avgdl, prune=False).collect()
+        wand_topk_batch(blocks, lex, qt, n, avgdl).collect()
+
+
+@pytest.mark.parametrize(
+    "front_end, qterms",
+    [("list", "rows"), ("list", "frame"), ("distributed", "frame")],
+)
+def test_batch_empty_query_batch(spark, ctx, front_end, qterms):
+    """An empty query batch (no rows, or an empty QUERY_TERMS_SCHEMA
+    DataFrame) returns zero rows with the result columns, on both
+    front-ends."""
+    from sparksearch.query import QUERY_TERMS_SCHEMA
+    from sparksearch.wand import wand_topk_batch_distributed
+
+    _, _, st_, lex, blocks, _ = ctx
+    q = [] if qterms == "rows" else spark.createDataFrame([], QUERY_TERMS_SCHEMA)
+    fn = wand_topk_batch if front_end == "list" else wand_topk_batch_distributed
+    res = fn(blocks, lex, q, st_["n_docs"], st_["avg_doc_len"])
+    assert res.columns == ["query_id", "rank", "doc_id", "score"]
+    assert res.count() == 0
+
+
+@pytest.mark.parametrize("max_terms", [None, 5])
+def test_lexicon_cache_whole_or_incremental(spark, ctx, monkeypatch, max_terms):
+    """A lexicon within the cache bound is fetched whole by its first call,
+    so a later call with unseen terms launches no job; a larger one is
+    fetched per missing term.  Both answer every df, absent terms as 0."""
+    from sparksearch import wand
+
+    if max_terms is not None:
+        monkeypatch.setattr(wand, "_LEX_CACHE_MAX_TERMS", max_terms)
+    lex = ctx[3].select("term", "df")  # a fresh DataFrame: a cold cache entry
+    truth = {r["term"]: r["df"] for r in lex.collect()}
+    sc = spark.sparkContext
+    terms = [["if", "zebraxyz"], ["return", "uniq13tok", "qqq"]]
+    for vocab in terms:
+        assert wand._lexicon_dfs(lex, vocab) == {t: truth.get(t, 0) for t in vocab}
+    complete = wand._LEX_CACHE[lex][0]
+    assert complete == (max_terms is None)
+    group = f"lexicon-probe-{max_terms}"
+    sc.setJobGroup(group, "second call with unseen terms")
+    try:
+        assert wand._lexicon_dfs(lex, ["for", "sym1"]) == {t: truth.get(t, 0) for t in ["for", "sym1"]}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (len(sc.statusTracker().getJobIdsForGroup(group)) == 0) == complete
 
 
 def test_batch_prune_skips_and_identical(spark):
-    """Bound-skipping (prune=True) on a corpus whose BM25 norms drift
-    monotonically with doc_id (doc length rising — the length-ordered
-    layout) must skip most (query, bucket) evaluations and stay
-    rank-identical to the unpruned path.  With doc_len = 50 + 2d every
-    bucket past the first has max_norm below the global 20th-best score,
-    so 9 of 10 alpha-buckets are skippable per query."""
+    """The running θ on a corpus whose BM25 norms drift monotonically with
+    doc_id (doc length rising — the length-ordered layout): with one shard
+    one task walks every bucket in doc order, so once the first bucket
+    fills the top-k, every later bucket's max_norm bound falls below θ and
+    9 of 10 buckets are skipped per query (doc_len = 50 + 2d).  Results
+    must equal the exhaustive scorer, and stats_out must show the skips."""
     rows = []
     for d in range(1000):  # df=1000 of N=4000 -> both terms positive idf
         rows.append((d, "alpha", 1, 50 + 2 * d))
@@ -195,62 +246,22 @@ def test_batch_prune_skips_and_identical(spark):
     )
     blocks = build_block_index(posts, avgdl, bucket_span=100).cache()
     blocks.count()
-    off = wand_topk_batch(blocks, lex, qt, n, avgdl, prune=False)
+    truth = sorted(
+        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+        for r in topk(posts, lex, qt, n, avgdl).collect()
+    )
     stats: dict = {}
-    on = wand_topk_batch(blocks, lex, qt, n, avgdl, prune=True, stats_out=stats)
-    a = sorted(map(tuple, off.collect()))
-    b = sorted(map(tuple, on.collect()))
-    assert a == b
-    assert stats["query_evals_skipped"] is not None
+    got = sorted(
+        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+        for r in wand_topk_batch(
+            blocks, lex, qt, n, avgdl, stats_out=stats, n_shards=1
+        ).collect()
+    )
+    assert got == truth
     skipped = stats["query_evals_skipped"].value
     total = stats["query_evals_total"].value
     assert skipped >= total // 2 > 0, (skipped, total)
     blocks.unpersist()
-
-
-def test_batch_auto_gate_fires_on_skewed_declines_on_uniform(spark):
-    """The prune="auto" gate is an economic decision: the θ-derivation pass
-    costs one extra evaluation per query, so it must fire only when a large
-    fraction of (query, bucket) work is skippable.  Skewed corpus
-    (monotone doc_len -> bucket bounds spread far beyond the 5% median
-    margin): gate fires, skips work, stays rank-identical.  Uniform corpus
-    (constant doc_len -> every bucket bound identical): gate declines —
-    observable as stats_out accumulators staying None (no θ job ran)."""
-    skew = []
-    for d in range(1000):
-        skew.append((d, "alpha", 1, 50 + 2 * d))
-        skew.append((d, "beta", 1, 50 + 2 * d))
-    uni = [(d, t, 1, 100) for d in range(1000) for t in ("alpha", "beta")]
-    n, avgdl = 4000, 100.0
-    qt = query_terms_df(
-        spark, [(1, "alpha beta", DISJUNCTIVE), (2, "alpha beta", CONJUNCTIVE)]
-    )
-    for rows, should_fire in ((skew, True), (uni, False)):
-        posts = spark.createDataFrame(
-            rows, "doc_id long, term string, tf int, doc_len long"
-        )
-        lex = lexicon(posts).select("term", "df")
-        blocks = build_block_index(posts, avgdl, bucket_span=100).cache()
-        blocks.count()
-        truth = sorted(
-            map(tuple, wand_topk_batch(blocks, lex, qt, n, avgdl, prune=False).collect())
-        )
-        stats: dict = {}
-        auto = sorted(
-            map(
-                tuple,
-                wand_topk_batch(
-                    blocks, lex, qt, n, avgdl, prune="auto", stats_out=stats
-                ).collect(),
-            )
-        )
-        assert auto == truth
-        if should_fire:
-            assert stats["query_evals_skipped"] is not None
-            assert stats["query_evals_skipped"].value > 0
-        else:
-            assert stats["query_evals_total"] is None  # θ job never launched
-        blocks.unpersist()
 
 
 def test_batch_matrix_path_and_signature_dedup(spark, ctx):
@@ -404,8 +415,7 @@ def _corpus_and_queries(draw):
         qs.append((qid, " ".join(qterms), mode))
     span = draw(st.sampled_from([16, 50, None]))
     shards = draw(st.sampled_from([1, 3, None]))
-    prune = draw(st.sampled_from([False, True]))
-    return rows, qs, span, shards, prune
+    return rows, qs, span, shards
 
 
 @settings(max_examples=8, deadline=None)
@@ -617,8 +627,7 @@ def _corpus_and_queries(draw):
       (80, 'alpha', 1, 30)],
      [(0, 'alpha', 'disjunctive')],
      50,
-     1,
-     False),
+     1),
 ).via('discovered failure')
 @example(
     case=([(0, 'alpha', 1, 226),
@@ -738,14 +747,13 @@ def _corpus_and_queries(draw):
       (47, 'alpha', 2, 30)],
      [(0, 'alpha', 'disjunctive')],
      50,
-     1,
-     False),
+     1),
 ).via('discovered failure')
 def test_batch_property_matches_exhaustive(case):
     """Property (the engine's cross-evaluator contract, wand.py docstring):
     for random corpora (including duplicate-score ties from coarse tf/doc_len
     grids), random query bags (duplicate terms = weights), any
-    bucket_span/unbucketed layout, any shard count, pruning on or off —
+    bucket_span/unbucketed layout, any shard count —
 
     1. wand_topk_batch is rank-identical to the exhaustive postings-table
        evaluator at MICRO resolution (round(score*1e6) desc, doc_id asc),
@@ -757,7 +765,7 @@ def test_batch_property_matches_exhaustive(case):
        the committed @example below is the round-3 falsifying case where a
        one-ulp multiply-association mismatch flipped a 5-way exact tie.)
     """
-    rows, qs, span, shards, prune = case
+    rows, qs, span, shards = case
     if not rows:
         return
     spark = _hyp_spark()
@@ -783,8 +791,7 @@ def test_batch_property_matches_exhaustive(case):
             truth_raw[(qid, d)] = s
     blocks = build_block_index(posts, avgdl, bucket_span=span)
     got_rows = wand_topk_batch(
-        blocks, lex, qt, n, avgdl, k=10, n_shards=shards, prune=prune,
-        micro_rank=True,
+        blocks, lex, qt, n, avgdl, k=10, n_shards=shards, micro_rank=True,
     ).collect()
     got = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"] * 1e6))
