@@ -96,14 +96,13 @@ def main() -> None:
         # discriminative and WAND/batch skipping can fire (the driver's
         # uniform random layout makes every doc range look alike, so sound
         # bounds can never skip there).  The reorder is timed as its own
-        # phase: it is real build cost (seeded-sample range partition +
-        # dense id assignment, 3 linear passes — corpus.assign_dense_ids).
-        # FOLDED form (judge r4 item 3): corpus.reorder_documents re-ids the
-        # already-canonical table in place of a second derivation pass — the
-        # sha256/commit/doc_len columns are reused, not recomputed, so the
-        # phase is assign_dense_ids' passes + the documents sink and nothing
-        # else.  build+reorder total is the honest build cost either way;
-        # docs_per_sec_incl_reorder reports it.
+        # phase: it is real build cost (corpus.assign_dense_ids: a seeded
+        # boundary sample and a per-bucket count, two small collects, then
+        # one window shuffle that numbers rows within each bucket).
+        # corpus.reorder_documents re-ids the already-canonical table from
+        # its corpus columns, so the phase is those passes + doc_len/sha256
+        # + the documents sink.  build+reorder total is the honest build
+        # cost; docs_per_sec_incl_reorder reports it.
         def reorder():
             from sparksearch.corpus import reorder_documents
 

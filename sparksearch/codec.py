@@ -13,11 +13,12 @@ hw3/DataLoader.cpp:4-26 decodeVarbyte, hw3/config.h:41-42):
   which is what makes the distributed bucketed build (blocks.py) possible.
 * tfs varbyte-encoded raw.
 * blocks <= 64 KB: greedy packing of chunks, block cost = 4-byte chunk-count
-  header + per chunk (12 bytes metadata + payload)
-  (hw3/Lexicon.cpp:145-165).
+  header + per chunk (metadata + payload) (hw3/Lexicon.cpp:145-165).
 * per-chunk metadata: last_docID, docID byte size, tf byte size
-  (hw3/Lexicon.cpp:167-189); payload interleaves per chunk: docID bytes then
-  tf bytes (hw3/Lexicon.cpp:191-209).
+  (hw3/Lexicon.cpp:167-189) — 12 bytes in the reference, 16 here
+  (``CHUNK_META_BYTES``) because of the doc-length byte size field (see
+  EXTENSIONS); payload interleaves per chunk: docID bytes then tf bytes
+  (hw3/Lexicon.cpp:191-209), then doc-length bytes.
 
 EXTENSIONS over the reference (both documented design changes for the
 distributed engine, not accidents):

@@ -16,7 +16,6 @@ TOP_K = 20
 # --- blocked index layout (hw3/config.h:41-43) ------------------------------
 POSTINGS_PER_CHUNK = 64          # "POSTINGS_IN_BLOCK" in the reference
 BLOCK_SIZE_BYTES = 65536         # BLOCK_SIZE: a block is <= 64 KB
-CHUNK_META_BYTES = 12            # 3 * uint32 per chunk (last_docid, did_sz, tf_sz)
 BLOCK_HEADER_BYTES = 4           # uint32 chunk count
 
 # --- tokenizer separator set (hw3/config.h:59, hw2/DataLoader.cpp:33) --------

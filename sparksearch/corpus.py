@@ -10,8 +10,9 @@ provides:
   ``(doc_id, text, lang, source, n_chars)``,
 * dense docID assignment equivalent to the reference's arrival-order ids
   (hw2/DataLoader.cpp:93,110) — implemented scale-safely (no single-partition
-  global window): range-partition by the ordering key, count per partition,
-  broadcast cumulative offsets, add partition-local positions.
+  global window): seeded-sample range buckets of the ordering key, a count
+  per bucket, then ``offset[bucket] + row_number()`` over a window
+  partitioned by bucket.
 
 Canonical ``documents`` schema produced by both paths:
   doc_id long, repo string, path string, commit string, lang string,
@@ -24,6 +25,7 @@ hw3/DataLoader.cpp:307), not token count.
 from __future__ import annotations
 
 import hashlib
+from itertools import accumulate
 from typing import Iterator
 
 import numpy as np
@@ -31,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 CORPUS_SCHEMA = T.StructType(
     [
@@ -122,14 +125,24 @@ def assign_dense_ids(
     single-partition sort.  ``order_cols`` must be a unique key.
 
     The range bucket of each row is an **explicit function of the data**
-    (seeded-sample boundary list, broadcast into a comparison expression),
+    (seeded-sample boundary list, inlined into a comparison expression),
     never of Spark's runtime partition placement — ``repartitionByRange``
     re-samples per job, so two jobs over the same plan can disagree about
     partition boundaries and corrupt the offsets (observed at 60k rows).
-    Three passes, all scale-linear: (1) seeded boundary sample, (2) count
-    per bucket → cumulative offsets (tiny collect), (3) shuffle by bucket +
-    sort-within + offset-add in mapInPandas.  This is the distributed analog
-    of the reference's sequential docID assignment (hw2/DataLoader.cpp:93,110).
+    Two small eager collects — the boundary sample, then a count per bucket
+    → cumulative offsets — and one lazy Catalyst expression:
+    ``offset[__bucket] + row_number() OVER (PARTITION BY __bucket ORDER BY
+    __key) - 1``, the offsets inlined as a literal array.  This is the
+    distributed analog of the reference's sequential docID assignment
+    (hw2/DataLoader.cpp:93,110).  No Python runs per row, so a caller that
+    drops ``doc_id`` lets the optimizer prune the window and its shuffle.
+
+    Cost at scale: the window shuffles by bucket, sorts by key, then
+    buffers each bucket's rows (every column) before numbering them, in
+    Spark's spill-backed window buffer; a pandas pass after the same sort
+    could stream them instead.  A bucket holds about
+    ``rows / num_partitions`` rows, and ``num_partitions`` defaults to the
+    input's partition count (at least 8).
 
     INVARIANT: ``order_cols`` values must not contain ``\\x00``/``\\x01``
     control characters.  The total order here compares the
@@ -140,7 +153,6 @@ def assign_dense_ids(
     construction; an ingest adapter feeding arbitrary bytes must sanitize
     or pre-escape them first (ADVICE r4).
     """
-    spark = df.sparkSession
     if num_partitions is None:
         num_partitions = max(df.rdd.getNumPartitions(), 8)
 
@@ -167,38 +179,10 @@ def assign_dense_ids(
         r["__bucket"]: r["cnt"]
         for r in d.groupBy("__bucket").agg(F.count("*").alias("cnt")).collect()
     }
-    offsets = {}
-    acc = 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-    boffsets = spark.sparkContext.broadcast(offsets)
-
-    parted = d.repartition(max(len(counts), 1), "__bucket").sortWithinPartitions(
-        "__bucket", "__key"
-    )
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType(), False)] + list(df.schema.fields)
-    )
-
-    def add_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pos: dict[int, int] = {}  # bucket -> rows already numbered (stream-safe)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = np.empty(len(pdf), dtype=np.int64)
-            start = 0
-            for b, grp in pdf.groupby("__bucket", sort=True):
-                p = pos.get(int(b), 0)
-                off = boffsets.value[int(b)] + p
-                ids[start : start + len(grp)] = np.arange(off, off + len(grp))
-                pos[int(b)] = p + len(grp)
-                start += len(grp)
-            out = pdf.drop(columns=["__key", "__bucket"])
-            out.insert(0, "doc_id", ids)
-            yield out
-
-    return parted.mapInPandas(add_ids, schema=out_schema)
+    offsets = accumulate((counts.get(b, 0) for b in range(len(bounds))), initial=0)
+    offset = F.array(*map(F.lit, offsets)).cast("array<long>")[F.col("__bucket")]
+    rank = F.row_number().over(Window.partitionBy("__bucket").orderBy("__key"))
+    return d.select((offset + rank - 1).alias("doc_id"), *df.columns)
 
 
 def documents_from_corpus(corpus: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
@@ -239,24 +223,17 @@ def length_ordered_documents(corpus: DataFrame) -> DataFrame:
     keyed = corpus.withColumn(
         "__len_key", F.lpad(F.length("content").cast("string"), 10, "0")
     )
-    out = documents_from_corpus(keyed, ["__len_key", "repo", "path"])
-    return out.select(*[f.name for f in DOCUMENTS_SCHEMA.fields])
+    return documents_from_corpus(keyed, ["__len_key", "repo", "path"])
 
 
 def reorder_documents(documents: DataFrame) -> DataFrame:
     """Re-assign dense docIDs of an EXISTING canonical documents table in
-    ascending content-length order — the in-build form of document
-    reordering (folds the reorder into the index build instead of running
-    it as a separate derivation pass).  Identical id assignment to
-    :func:`length_ordered_documents` (lpad(doc_len) key, (repo, path)
-    tie-break), but reuses the already-computed ``doc_len`` /
-    ``content_sha256`` / ``commit`` columns, so the only work is
-    :func:`assign_dense_ids`' linear passes."""
-    keyed = documents.drop("doc_id").withColumn(
-        "__len_key", F.lpad(F.col("doc_len").cast("string"), 10, "0")
-    )
-    out = assign_dense_ids(keyed, ["__len_key", "repo", "path"])
-    return out.select(*[f.name for f in DOCUMENTS_SCHEMA.fields])
+    ascending content-length order: :func:`length_ordered_documents` over
+    its corpus columns, so the ids are identical.  When ``documents`` is
+    still a plan (e.g. ``documents_from_corpus(corpus)``), the optimizer
+    prunes that plan's id window, shuffle and sha256, since their outputs
+    are dropped; only its small eager collects have run."""
+    return length_ordered_documents(documents.select(*CORPUS_SCHEMA.fieldNames()))
 
 
 def documents_from_testdata(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -49,8 +49,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .blocks import build_block_index
-from .corpus import DOCUMENTS_SCHEMA
+from .blocks import build_block_index, decode_block_index, lexicon_from_blocks
+from .corpus import documents_from_corpus
 from .tokenize import postings_from_documents
 
 DEFAULT_BUCKET_SPAN = 1 << 14
@@ -134,18 +134,8 @@ def ingest_batch(
     # docstring)
     offset = -(-int(state["next_doc_id"]) // bucket_span) * bucket_span
 
-    from .corpus import assign_dense_ids
-
-    with_ids = assign_dense_ids(batch_df, ["repo", "path"])
-    docs = with_ids.select(
-        (F.col("doc_id") + F.lit(offset)).alias("doc_id"),
-        "repo",
-        "path",
-        "commit",
-        "lang",
-        "content",
-        F.length("content").cast("long").alias("doc_len"),
-        F.sha2(F.col("content"), 256).alias("content_sha256"),
+    docs = documents_from_corpus(batch_df).withColumn(
+        "doc_id", F.col("doc_id") + F.lit(offset)
     ).localCheckpoint(eager=True)
     n = docs.count()
 
@@ -250,8 +240,6 @@ def compact_index(
     """
     import shutil
 
-    from .blocks import build_block_index, decode_block_index
-
     docs = _read_parts(spark, os.path.join(index_dir, "documents"))
     blocks = _read_parts(spark, os.path.join(index_dir, "blocks"))
     state = _load_state(index_dir)
@@ -294,7 +282,7 @@ def read_index(spark: SparkSession, index_dir: str):
     """
     docs = _read_parts(spark, os.path.join(index_dir, "documents"))
     blocks = _read_parts(spark, os.path.join(index_dir, "blocks"))
-    lex = blocks.groupBy("term").agg(F.sum("n_postings").cast("long").alias("df"))
+    lex = lexicon_from_blocks(blocks).select("term", "df")
     row = docs.agg(
         F.count("*").alias("n_docs"), F.avg("doc_len").alias("avg_doc_len")
     ).collect()[0]

@@ -6,13 +6,24 @@ repartitionByRange-based two-pass)."""
 from __future__ import annotations
 
 import os
+import random
+import re
 import sys
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sparksearch.corpus import documents_from_corpus, synthetic_corpus  # noqa: E402
+from sparksearch.corpus import (  # noqa: E402
+    CORPUS_SCHEMA,
+    DOCUMENTS_SCHEMA,
+    assign_dense_ids,
+    documents_from_corpus,
+    reorder_documents,
+    synthetic_corpus,
+)
 
 
 def test_dense_ids_20k(spark):
@@ -27,8 +38,42 @@ def test_dense_ids_20k(spark):
     assert agg["mn"] == 0 and agg["mx"] == 19_999
 
 
-def test_ids_follow_sort_order(spark):
-    docs = documents_from_corpus(synthetic_corpus(spark, 2_000, seed=7))
-    rows = docs.select("doc_id", "repo", "path").collect()
-    by_key = sorted(rows, key=lambda r: (r["repo"], r["path"]))
-    assert [r["doc_id"] for r in by_key] == list(range(len(rows)))
+def _keyed_rows(n: int = 2_000) -> list[tuple]:
+    """(len_key, repo, path, commit, lang, content) rows whose zero-padded
+    length key takes only five values, so most keys tie on length and
+    (repo, path) decides their order."""
+    rng = random.Random(3)
+    rows = []
+    for i in range(n):
+        content = "x" * rng.choice([0, 3, 3, 7, 12])
+        rows.append((f"{len(content):010d}", f"org{rng.randrange(4)}", f"src/f{i}.py", "c", "py", content))
+    return rows
+
+
+@pytest.mark.parametrize("seed", [7, 11])
+@pytest.mark.parametrize("num_partitions", [1, 3, 16])
+def test_ids_follow_sort_order(spark, num_partitions, seed):
+    """Ids equal a Python sort of the length-ordered key whatever the
+    bucket bounds: the partition count and sample seed move the bounds,
+    never the ids."""
+    rows = _keyed_rows()
+    schema = T.StructType([T.StructField("len_key", T.StringType(), False), *CORPUS_SCHEMA.fields])
+    df = spark.createDataFrame(rows, schema)
+    ids = assign_dense_ids(df, ["len_key", "repo", "path"], num_partitions=num_partitions, seed=seed)
+    got = sorted(ids.select("doc_id", "len_key", "repo", "path").collect())
+    assert [r[0] for r in got] == list(range(len(rows)))
+    assert [tuple(r[1:]) for r in got] == sorted(r[:3] for r in rows)
+
+
+def test_reorder_plan_one_window_no_python(spark):
+    """The in-build reorder runs one id pass in the plan: the (repo, path)
+    ids it discards are pruned, and numbering is a built-in window, not a
+    Python UDF.  The output keeps the canonical column names and types."""
+    corpus = spark.createDataFrame([r[1:] for r in _keyed_rows(200)], CORPUS_SCHEMA)
+    docs = reorder_documents(documents_from_corpus(corpus))
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert "MapInPandas" not in plan, plan
+    assert [(f.name, f.dataType) for f in docs.schema] == [
+        (f.name, f.dataType) for f in DOCUMENTS_SCHEMA
+    ]

@@ -86,8 +86,8 @@ def test_lenordered_batch_rank_identical_and_skips(spark, lctx):
 
 def test_reorder_documents_equals_length_ordered(spark):
     """corpus.reorder_documents (the in-build fold — re-ids an existing
-    canonical table, reusing doc_len/sha256) must assign EXACTLY the ids
-    length_ordered_documents assigns when deriving from the raw corpus."""
+    canonical table) must assign EXACTLY the ids length_ordered_documents
+    assigns when deriving from the raw corpus."""
     from sparksearch.corpus import documents_from_corpus, reorder_documents
 
     corpus = synthetic_corpus(spark, 300, seed=23)
