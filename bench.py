@@ -139,6 +139,10 @@ def main() -> None:
         lex = spark.read.parquet(f"{tmp}/lexicon").select("term", "df")
 
         # --- query phases over the persisted compressed index --------------
+        # list-form qterms: query batches originate driver-side, so the
+        # top-k takes the rows directly (broadcast ingest, no per-call
+        # collect job); the DataFrame form feeds the exhaustive scorer
+        qt_rows = query_term_rows(BENCH_QUERIES)
         qt = query_terms_df(spark, BENCH_QUERIES)
         # the top-k kernel over the bench query set (headline q/s), then a
         # 512-query generated set (index shuffled once per call, not per
@@ -146,7 +150,7 @@ def main() -> None:
         timed(
             "wand_batch_topk_all",
             lambda: wand_topk_batch(
-                blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K
+                blocks, lex, qt_rows, st["n_docs"], st["avg_doc_len"], k=TOP_K
             ).count(),
         )
         # 512 signature-UNIQUE queries (distinct unordered term triples):
@@ -164,8 +168,6 @@ def main() -> None:
              DISJUNCTIVE if i % 2 == 0 else CONJUNCTIVE)
             for i, trip in enumerate(islice(combinations(vocab_terms, 3), 512))
         ]
-        # list-form qterms: query batches originate driver-side, so the
-        # batch evaluator takes the rows directly (no per-call collect job)
         qt_big = query_term_rows(big_set)
         timed(
             "wand_batch_512q",
@@ -173,18 +175,16 @@ def main() -> None:
                 blocks, lex, qt_big, st["n_docs"], st["avg_doc_len"], k=TOP_K
             ).count(),
         )
-        # distributed query ingest (wand_topk_batch_distributed): the query
-        # set stays a DataFrame — no driver collect/dedup/broadcast — the
-        # 10^6+-queries-per-batch architecture.  At 512 queries it pays the
-        # relational dedup + cogroup overhead the list path avoids; the
-        # line documents that fixed cost (the variant's win begins where
-        # the driver loop becomes the bottleneck, not here).
-        from sparksearch.wand import wand_topk_batch_distributed
-
+        # the same batch as a DataFrame takes the relational ingest — no
+        # driver collect/dedup/broadcast, the 10^5+-queries-per-call
+        # architecture.  At 512 queries it pays the relational dedup +
+        # cogroup overhead the list ingest avoids; the line documents that
+        # fixed cost (its win begins where the driver loop becomes the
+        # bottleneck, not here).
         qt_big_df = query_terms_df(spark, big_set)
         timed(
             "wand_batch_512q_distq",
-            lambda: wand_topk_batch_distributed(
+            lambda: wand_topk_batch(
                 blocks, lex, qt_big_df, st["n_docs"], st["avg_doc_len"], k=TOP_K
             ).count(),
         )
@@ -227,7 +227,7 @@ def main() -> None:
                 so: dict = {}
                 t0 = time.perf_counter()
                 wand_topk_batch(
-                    bdf, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K,
+                    bdf, lex, qt_rows, st["n_docs"], st["avg_doc_len"], k=TOP_K,
                     stats_out=so,
                 ).count()
                 t = time.perf_counter() - t0

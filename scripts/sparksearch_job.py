@@ -2,18 +2,21 @@
 """spark-submit entry point for the sparksearch engine (north_rule: "runs
 via spark-submit --py-files on multi-executor clusters").
 
-Ship the library alongside this script:
+Ship the library alongside this script (from the repository root):
 
-    cd /root/repo && zip -qr /tmp/sparksearch.zip sparksearch
-    spark-submit --py-files /tmp/sparksearch.zip scripts/sparksearch_job.py \
-        build --input synthetic:20000 --output /tmp/ss_index
-    spark-submit --py-files /tmp/sparksearch.zip scripts/sparksearch_job.py \
-        query --index /tmp/ss_index --query "hash join merge" --mode disjunctive
+    zip -qr sparksearch.zip sparksearch
+    spark-submit --py-files sparksearch.zip scripts/sparksearch_job.py \
+        build --input synthetic:20000 --output ss_index
+    spark-submit --py-files sparksearch.zip scripts/sparksearch_job.py \
+        query --index ss_index --query "hash join merge" --mode disjunctive
 
 On a cluster, drop the ``--master`` default (inherits the cluster manager)
-and point --input at the Iceberg/parquet corpus table.  The build is
-resumable: rerunning the same command against the same --output resumes
-from committed stage manifests (sparksearch.checkpoint).
+and point --input at the parquet corpus table (repo, path, commit, lang,
+content).  Documents get length-ordered ids
+(``corpus.length_ordered_documents``), like every other build; a driver
+testdata directory keeps its own ids.  The build is resumable: rerunning
+the same command against the same --output resumes from committed stage
+manifests (sparksearch.checkpoint).
 
 Subcommands:
   build   corpus -> documents/postings/lexicon/doc_table/blocks snapshots
@@ -46,18 +49,19 @@ def _spark(args):
 
 def _load_corpus(spark, spec: str):
     from sparksearch.corpus import (
-        documents_from_corpus,
+        CORPUS_SCHEMA,
         documents_from_testdata,
+        length_ordered_documents,
         synthetic_corpus,
     )
 
     if spec.startswith("synthetic:"):
         n = int(spec.split(":", 1)[1])
-        return documents_from_corpus(synthetic_corpus(spark, n, seed=42))
+        return length_ordered_documents(synthetic_corpus(spark, n, seed=42))
     if spec.endswith("documents.parquet") or "testdata" in spec:
         return documents_from_testdata(spark, spec.rstrip("/").removesuffix("/documents.parquet"))
-    # already-canonical documents table
-    return spark.read.parquet(spec)
+    # a corpus table: (repo, path, commit, lang, content)
+    return length_ordered_documents(spark.read.parquet(spec).select(*CORPUS_SCHEMA.names))
 
 
 def cmd_build(args) -> None:
@@ -127,9 +131,9 @@ def main() -> None:
 
     b = sub.add_parser("build")
     b.add_argument("--input", required=True,
-                   help="documents parquet dir | testdata sf dir | synthetic:N")
+                   help="corpus parquet dir | testdata sf dir | synthetic:N")
     b.add_argument("--output", required=True)
-    b.add_argument("--bucket-span", type=int, default=None)
+    b.add_argument("--bucket-span", type=int, default=2048)
     b.set_defaults(fn=cmd_build)
 
     q = sub.add_parser("query")
@@ -142,7 +146,7 @@ def main() -> None:
     be = sub.add_parser("bench")
     be.add_argument("--input", required=True)
     be.add_argument("--output", required=True)
-    be.add_argument("--bucket-span", type=int, default=None)
+    be.add_argument("--bucket-span", type=int, default=2048)
     be.set_defaults(fn=cmd_bench)
 
     args = ap.parse_args()

@@ -44,7 +44,7 @@ from .dedup import (
     simhash,
     simhash_pairs,
 )
-from .query import query_terms_df, score_postings
+from .query import query_term_rows, query_terms_df, score_postings
 from .stats import collection_stats, doc_table, lexicon
 from .tokenize import postings_from_documents, tokenize_text
 from .wand import wand_topk_batch
@@ -386,7 +386,7 @@ def _spark_topk_batch(
     postings = postings_from_documents(docs)
     lex = lexicon(postings).select("term", "df")
     blocks = build_block_index(postings, st["avg_doc_len"], bucket_span=bucket_span)
-    qt = query_terms_df(spark, [q for q in QUERY_SET if q[2] == mode])
+    qt = query_term_rows([q for q in QUERY_SET if q[2] == mode])
     # micro_rank: bucket truncation + final window both rank on the
     # micro-rounded key (a total order) — exactly k rows needed, no tie
     # slack (ADVICE r2), and the oracle's (score_micro desc, doc_id asc)
@@ -447,7 +447,7 @@ def _spark_topk_batch_lenordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings = postings_from_documents(docs)
     lex = lexicon(postings).select("term", "df")
     blocks = build_block_index(postings, st["avg_doc_len"], bucket_span=128)
-    qt = query_terms_df(spark, [q for q in QUERY_SET if q[2] == DISJUNCTIVE])
+    qt = query_term_rows([q for q in QUERY_SET if q[2] == DISJUNCTIVE])
     raw = wand_topk_batch(
         blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K,
         micro_rank=True,
@@ -1121,7 +1121,7 @@ def _streaming_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         docs, blocks, lex, st = read_index(spark, index_dir)
         n_batches = len(_load_state(index_dir)["batches"])
-        qt = query_terms_df(spark, QUERY_SET)
+        qt = query_term_rows(QUERY_SET)
         raw = wand_topk_batch(
             blocks, lex.select("term", "df"), qt, st["n_docs"], st["avg_doc_len"],
             k=TOP_K, micro_rank=True,
@@ -1219,7 +1219,7 @@ def flagship(spark: SparkSession) -> DataFrame:
     postings = postings_from_documents(docs)
     lex = lexicon(postings).select("term", "df")
     blocks = build_block_index(postings, st["avg_doc_len"])
-    qt = query_terms_df(spark, QUERY_SET)
+    qt = query_term_rows(QUERY_SET)
     out = wand_topk_batch(blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K)
     return F.broadcast(out).join(
         docs.select("doc_id", "repo", "path", "content_sha256"), "doc_id"

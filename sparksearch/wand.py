@@ -5,14 +5,15 @@ The reference's query processor is one loop (hw3/DataLoader.cpp:372-430,
 636-671): decode a term's posting blocks, accumulate BM25 into a dense
 score array, keep a bounded top-k heap.  :func:`wand_topk_batch` runs that
 loop once per doc-range shard: the term-pruned index subset is shuffled
-ONCE by ``bucket mod n_shards``, the query batch (one query or 10^5) is
-broadcast, and each shard walks its buckets in ascending doc order,
+ONCE by ``bucket mod n_shards``, every shard receives the query batch
+(one query or 10^6), and each shard walks its buckets in ascending doc order,
 decoding every matched term once (block-at-a-time, numpy), scoring every
 query against the decoded arrays and keeping a per-query running top-k.
-A window top-k merges the shards.  :func:`wand_topk_batch_distributed`
-feeds the same kernel from a query DataFrame.  The exhaustive DataFrame
-scorer (query.topk), the pure-Python oracle and the DuckDB SQL are the
-independent references it is tested against.
+A window top-k merges the shards.  It is the one public top-k entry: a
+driver-side query list is broadcast, a query DataFrame stays relational
+(cogrouped with the shards), and both feed the same kernel.  The
+exhaustive DataFrame scorer (query.topk), the pure-Python oracle and the
+DuckDB SQL are the independent references it is tested against.
 
 Per-posting contributions use the ONE pinned floating-point association
 ``(weight * idf) * tf_norm`` (bm25.py module docstring), so a single
@@ -23,8 +24,9 @@ aggregates in partition order; the kernel takes terms in sorted order), so
 raw-score equality with the references is only guaranteed for queries
 with <= 2 distinct terms (two-operand addition commutes exactly); the
 rank contract holds at micro resolution (round(score * 1e6) desc, doc_id
-asc) — the resolution the driver oracle pins.  Within the kernel,
-ranking is deterministic at raw resolution with the doc_id tie-break.
+asc) — the resolution the driver oracle pins.  Within the kernel, every
+scoring branch adds a query's terms in sorted order, and ranking is
+deterministic at raw resolution with the doc_id tie-break.
 
 Score bounds with the reference's UNCLAMPED idf (negative for df > N/2):
 contribution = (weight * idf) * tf_norm, so the per-(bucket, term) bound
@@ -66,7 +68,7 @@ import weakref
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -151,15 +153,13 @@ def _disjunctive_bound(acc_pos: float, best_single: float) -> float:
     return acc_pos if acc_pos > 0.0 else best_single
 
 
-# shared by wand_topk_batch (broadcast query ingest) and
-# wand_topk_batch_distributed (DataFrame query ingest): both front-ends
-# hand the same per-shard kernel below the same representative queries,
-# each with its term dict in sorted term order, and the kernel decodes a
-# bucket's terms in sorted order.  A (query, bucket) that both evaluate on
-# the same branch (scalar adds below 32 surviving queries, BLAS at or
-# above) sums the same operands in the same order, so its scores are
-# bit-identical (the fp-determinism contract, bm25.py module docstring);
-# the tested contract across front-ends is micro-resolution rank identity.
+# shared by both ingests of wand_topk_batch (broadcast list, relational
+# DataFrame): each hands the per-shard kernel below the same representative
+# queries, each with its term dict in sorted term order, and both scoring
+# branches add a query's per-term contributions in that order — so a
+# (query, bucket)'s scores are bit-identical whichever ingest fed it and
+# however many queries share its bucket (the fp-determinism contract,
+# bm25.py module docstring).
 _BATCH_CAND_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.IntegerType(), False),
@@ -197,6 +197,19 @@ def _query_bound(q: dict, term_stats: dict) -> float | None:
         if bd > best_single:
             best_single = bd
     return _disjunctive_bound(acc_pos, best_single)
+
+
+def _exact_scores(q: dict, present: list[str], term_dense: dict, idx: np.ndarray) -> np.ndarray:
+    """Float64 scores of query ``q`` at dense offsets ``idx``: the pinned
+    ``(weight * idf) * tf_norm`` contributions added one term at a time in
+    the query's sorted term order — the ONE summation order of both scoring
+    branches (a BLAS dot product fuses and reorders these adds)."""
+    score = None
+    for t in present:
+        w, idf = q["terms"][t]
+        contrib = (w * idf) * term_dense[t][0][idx]
+        score = contrib if score is None else score + contrib
+    return score
 
 
 def _batch_score_bucket(
@@ -393,21 +406,14 @@ def _batch_score_bucket(
                 cand = np.flatnonzero(sel_rows[r] & (masked[r] >= thr[r]))
                 if len(cand):
                     # EXACT f64 re-score of the ≈k survivors only
-                    emit(qid, cand, W[r] @ D[:, cand])
+                    emit(qid, cand, _exact_scores(q, present, term_dense, cand))
     else:
         for qid, q, present in survivors:
-            score = None
-            cnt = None
-            for t in present:
-                dn, mask = term_dense[t]
-                w, idf = q["terms"][t]
-                contrib = (w * idf) * dn
-                score = contrib if score is None else score + contrib
-                cnt = mask.copy() if cnt is None else cnt + mask
+            cnt = sum(term_dense[t][1] for t in present)
             keep = cnt == q["n_terms"] if q["mode"] == CONJUNCTIVE else cnt > 0
             docs_sel = np.flatnonzero(keep)
             if len(docs_sel):
-                emit(qid, docs_sel, score[docs_sel])
+                emit(qid, docs_sel, _exact_scores(q, present, term_dense, docs_sel))
 
 
 def _batch_walk_shard(
@@ -465,10 +471,114 @@ def _batch_walk_shard(
     )
 
 
+def _rows_ingest(blocks, lexicon, rows, n_docs, n_shards, shard, walk):
+    """Driver-side ingest of a query LIST: df/idf, signature dedup and the
+    query dict are built on the driver and the dict is broadcast to every
+    shard task.  Returns (candidates, rep->member mapping or None)."""
+    spark = blocks.sparkSession
+    vocab = sorted({r["term"] for r in rows})
+    lex_rows = _lexicon_dfs(lexicon, vocab)
+    # the one idf definition (bm25.py: Python libm, never JVM F.log),
+    # computed once per DISTINCT term, not once per (query, term) row
+    idf_by_term = {t: bm25_idf_py(lex_rows.get(t, 0), n_docs) for t in vocab}
+    # (query_id, term) order: each query's terms insert sorted, as in the
+    # DataFrame ingest (see _BATCH_CAND_SCHEMA)
+    all_queries: dict[int, dict] = {}
+    for r in sorted(rows, key=lambda r: (int(r["query_id"]), r["term"])):
+        q = all_queries.setdefault(
+            int(r["query_id"]), {"mode": r["mode"], "n_terms": int(r["n_terms"]), "terms": {}}
+        )
+        q["terms"][r["term"]] = (float(r["weight"]), idf_by_term[r["term"]])
+    # signature dedup: real batch workloads repeat queries (retries, head
+    # queries, templated expansions) — identical (mode, weighted term bag)
+    # signatures are evaluated ONCE; the representative is the smallest qid
+    # so output is deterministic.
+    group_of: dict[int, list[int]] = {}
+    _sig_rep: dict[tuple, int] = {}
+    for qid in sorted(all_queries):
+        q = all_queries[qid]
+        sig = (q["mode"], q["n_terms"], tuple(sorted(q["terms"].items())))
+        rep = _sig_rep.setdefault(sig, qid)
+        group_of.setdefault(rep, []).append(qid)
+    bq = spark.sparkContext.broadcast({qid: all_queries[qid] for qid in group_of})
+    sel = blocks.filter(F.col("term").isin(vocab)).withColumn("shard", shard)
+
+    def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        return walk(pdf, bq.value)
+
+    cands = sel.groupBy("shard").applyInPandas(per_shard, schema=_BATCH_CAND_SCHEMA)
+    if len(all_queries) == len(group_of):
+        return cands, None  # no duplicate signatures
+    mapping = spark.createDataFrame(
+        [(rep, qid) for rep, qids in group_of.items() for qid in qids],
+        "rep int, query_id int",
+    )
+    return cands, F.broadcast(mapping)
+
+
+def _frame_ingest(blocks, lexicon, qterms, n_docs, n_shards, shard, walk):
+    """Relational ingest of a query DATAFRAME: nothing reaches the driver,
+    so batch size is bounded by cluster memory.  Returns (candidates,
+    rep->member mapping)."""
+    spark = blocks.sparkSession
+    qcols = qterms.select("query_id", "mode", "n_terms", "term", "weight")
+    terms = qcols.select("term").distinct()
+    # df per distinct term (absent terms keep df=0 — they contribute no
+    # blocks but still count toward conjunctive n_terms)
+    tdf = terms.join(lexicon.select("term", "df"), "term", "left").na.fill({"df": 0})
+
+    @F.pandas_udf("double")
+    def idf_udf(dfc: pd.Series) -> pd.Series:
+        return pd.Series([bm25_idf_py(int(x), n_docs) for x in dfc], dtype="float64")
+
+    q = qcols.join(tdf.select("term", idf_udf(F.col("df")).alias("idf")), "term")
+    # signature dedup as a relational aggregation: rep = min(query_id) per
+    # (mode, n_terms, sorted weighted-term bag) — the list ingest's grouping
+    # and representative
+    sig = qcols.groupBy("query_id").agg(
+        F.first("mode").alias("mode"),
+        F.first("n_terms").alias("n_terms"),
+        F.sort_array(F.collect_list(F.struct("term", "weight"))).alias("bag"),
+    )
+    groups = sig.groupBy("mode", "n_terms", "bag").agg(
+        F.min("query_id").alias("rep"),
+        F.collect_list("query_id").alias("members"),
+    )
+    mapping = groups.select("rep", F.explode("members").alias("query_id"))
+    rep_terms = q.join(groups.select(F.col("rep").alias("query_id")), "query_id", "left_semi")
+    # each shard receives every rep query by an explicit crossJoin with the
+    # shard ids, cogrouped with the doc-sharded index: a
+    # (|rep terms| x n_shards)-row shuffle instead of a driver broadcast
+    shards = spark.range(n_shards).select(F.col("id").cast("int").alias("shard"))
+    qsh = rep_terms.crossJoin(shards)
+    # vocabulary pruning by semi join: the vocab is a relation here
+    sel = blocks.join(terms, "term", "left_semi").withColumn("shard", shard)
+
+    def per_shard(idx_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
+        if idx_pdf.empty or q_pdf.empty:
+            return pd.DataFrame({c: [] for c in _BATCH_EMPTY}).astype(_BATCH_EMPTY)
+        qs: dict[int, dict] = {}
+        for t in q_pdf.sort_values(["query_id", "term"]).itertuples(index=False):
+            qq = qs.setdefault(
+                int(t.query_id), {"mode": t.mode, "n_terms": int(t.n_terms), "terms": {}}
+            )
+            qq["terms"][t.term] = (float(t.weight), float(t.idf))
+        return walk(idx_pdf, qs)
+
+    cands = (
+        sel.groupBy("shard")
+        .cogroup(qsh.groupBy("shard"))
+        .applyInPandas(per_shard, schema=_BATCH_CAND_SCHEMA)
+    )
+    # a plain join: the mapping can be as big as the batch (AQE broadcasts
+    # it when it is small)
+    return cands, mapping
+
+
 def wand_topk_batch(
     blocks: DataFrame,
     lexicon: DataFrame,
-    qterms: DataFrame,
+    qterms: DataFrame | list,
     n_docs: int,
     avg_doc_len: float,
     k: int = TOP_K,
@@ -477,20 +587,43 @@ def wand_topk_batch(
     n_shards: int | None = None,
 ) -> DataFrame:
     """(query_id, rank, doc_id, score): DOC-PARTITIONED evaluation of a
-    query batch — one query or many — over the compressed index.
+    query batch — one query or 10^6 — over the compressed index.
 
     Co-locating each query's blocks instead (join blocks to queries,
     shuffle by query_id) DUPLICATES every shared block payload once per
     query (measured: that shuffle, not scoring, dominated past ~10^3
-    queries/batch).  Here the
-    index subset is shuffled ONCE, partitioned by doc-range bucket; the
-    query set (tiny: terms, weights, idfs) is broadcast; each bucket
-    decodes every matched term ONCE and scores ALL queries against the
-    decoded arrays (decode-once-score-many), emitting its local top-k per
-    query; a final window top-k merges buckets.  Shuffle volume is the
-    vocabulary-pruned index subset + k rows per (query, bucket) — payload
-    bytes never fan out with Q.  This is classic document-sharded search:
-    each shard answers every query over its doc range.
+    queries/batch).  Here the vocabulary-pruned index subset is shuffled
+    ONCE, partitioned by doc-range shard; every shard receives the query
+    set (tiny: terms, weights, idfs), decodes each matched term ONCE per
+    bucket and scores ALL queries against the decoded arrays
+    (decode-once-score-many); a final window top-k merges the shards.
+    Shuffle volume is the pruned index subset + k rows per (query, shard)
+    — payload bytes never fan out with Q.  This is classic
+    document-sharded search: each shard answers every query over its doc
+    range.
+
+    The batch's FORM picks how the queries reach the shards (PLANS
+    §2b-ii; 4-core host: the list wins at 10^3 queries per call, the two
+    tie at 10^4, the DataFrame wins at 10^5 by 1.3-1.7x):
+
+    * a driver-side list of dicts/Rows (:func:`query.query_term_rows`):
+      df/idf, signature dedup and the query dict are built on the driver
+      and broadcast — no collect job per call, the interactive path;
+    * a DataFrame with the ``QUERY_TERMS_SCHEMA`` columns
+      (:func:`query.query_terms_df`, or any relation): nothing is
+      collected and no job runs before an action.  DISTINCT terms
+      left-join the lexicon, idf comes from an Arrow UDF over distinct
+      terms (the one libm definition, bm25.bm25_idf_py — never JVM
+      F.log); signature dedup is two shuffle aggregations; representative
+      queries crossJoin the shard ids and are COGROUPED with the
+      doc-sharded index.
+
+    Either way identical (mode, weighted term bag) signatures are
+    evaluated ONCE (representative = smallest query_id) and the ranked
+    result is joined back to every member query_id, and every shard runs
+    the same kernel (:func:`_batch_walk_shard`) on the same sorted-term
+    query dicts — so both forms return bit-identical scores
+    (tests/test_wand.py::test_batch_distributed_rank_identity).
 
     Exactness: a doc lives in exactly ONE bucket (bucket = doc_id range),
     so per-bucket scoring is complete per doc (conjunctive count filters
@@ -532,64 +665,22 @@ def wand_topk_batch(
       float/micro margins make ties unskippable.  Fewer shards mean longer
       walks and more skipping (``n_shards=1`` walks every bucket in one
       task), at the cost of parallelism.
-
-    ``qterms`` may be the usual DataFrame or a plain driver-side list of
-    dicts/Rows with the same fields — query batches originate driver-side,
-    and a list skips one collect job per call (a fixed serial cost that
-    capped measured 4x-core scaling efficiency of short batch phases).
     """
     spark = blocks.sparkSession
-    sc = spark.sparkContext
-    if isinstance(qterms, list):
-        rows = qterms
-    else:
-        rows = qterms.select("query_id", "term", "weight", "mode", "n_terms").collect()
-    vocab = sorted({r["term"] for r in rows})
-    lex_rows = _lexicon_dfs(lexicon, vocab)
-    # the one idf definition (bm25.py: Python libm, never JVM F.log),
-    # computed once per DISTINCT term, not once per (query, term) row
-    idf_by_term = {t: bm25_idf_py(lex_rows.get(t, 0), n_docs) for t in vocab}
-    # (query_id, term) order: each query's terms insert sorted, the order
-    # wand_topk_batch_distributed uses, so both front-ends accumulate
-    # multi-term scores and bounds identically (see _BATCH_CAND_SCHEMA)
-    all_queries: dict[int, dict] = {}
-    for r in sorted(rows, key=lambda r: (int(r["query_id"]), r["term"])):
-        q = all_queries.setdefault(
-            int(r["query_id"]), {"mode": r["mode"], "n_terms": int(r["n_terms"]), "terms": {}}
-        )
-        q["terms"][r["term"]] = (float(r["weight"]), idf_by_term[r["term"]])
-    # signature dedup: real batch workloads repeat queries (retries, head
-    # queries, templated expansions) — identical (mode, weighted term bag)
-    # signatures are evaluated ONCE and the ranked result is replicated to
-    # every member query_id by a tiny broadcast join at the end.  The
-    # representative is the smallest qid so output is deterministic.
-    group_of: dict[int, list[int]] = {}
-    _sig_rep: dict[tuple, int] = {}
-    for qid in sorted(all_queries):
-        q = all_queries[qid]
-        sig = (q["mode"], q["n_terms"], tuple(sorted(q["terms"].items())))
-        rep = _sig_rep.setdefault(sig, qid)
-        group_of.setdefault(rep, []).append(qid)
-    queries = {qid: all_queries[qid] for qid in group_of}
-    bq = sc.broadcast(queries)
-
     if n_shards is None:
         n_shards = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    sel = blocks.filter(F.col("term").isin(vocab)).withColumn(
-        "shard", F.pmod(F.col("bucket"), F.lit(int(n_shards)))
-    )
-
+    shard = F.pmod(F.col("bucket"), F.lit(int(n_shards)))
     accs = None
     if stats_out is not None:
+        sc = spark.sparkContext
         accs = (sc.accumulator(0), sc.accumulator(0))
         stats_out["query_evals_total"], stats_out["query_evals_skipped"] = accs
 
-    def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _batch_walk_shard(pdf, bq.value, accs, avg_doc_len, k, micro_rank)
+    def walk(pdf: pd.DataFrame, qs: dict) -> pd.DataFrame:
+        return _batch_walk_shard(pdf, qs, accs, avg_doc_len, k, micro_rank)
 
-    cands = sel.groupBy("shard").applyInPandas(per_shard, schema=_BATCH_CAND_SCHEMA)
-    from pyspark.sql import Window
-
+    ingest = _frame_ingest if isinstance(qterms, DataFrame) else _rows_ingest
+    cands, mapping = ingest(blocks, lexicon, qterms, n_docs, int(n_shards), shard, walk)
     rank_col = (
         F.round(F.col("score") * 1e6, 0).cast("long") if micro_rank else F.col("score")
     )
@@ -599,139 +690,8 @@ def wand_topk_batch(
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "doc_id", "score")
     )
-    if len(all_queries) == len(group_of):
-        return ranked  # no duplicate signatures
-    mapping = spark.createDataFrame(
-        [(rep, qid) for rep, qids in group_of.items() for qid in qids],
-        "rep int, query_id int",
-    )
-    return (
-        ranked.withColumnRenamed("query_id", "rep")
-        .join(F.broadcast(mapping), "rep")
-        .select("query_id", "rank", "doc_id", "score")
-    )
-
-
-def wand_topk_batch_distributed(
-    blocks: DataFrame,
-    lexicon: DataFrame,
-    qterms: DataFrame,
-    n_docs: int,
-    avg_doc_len: float,
-    k: int = TOP_K,
-    micro_rank: bool = False,
-    n_shards: int | None = None,
-) -> DataFrame:
-    """Distributed-query-ingest variant of :func:`wand_topk_batch` for
-    batches of about 10^5 queries and more (PLANS §2b-ii, 4-core host:
-    the list path wins at 10^3 queries, the two tie at 10^4, this
-    variant wins at 10^5 by 1.3-1.7x):
-    the query set stays a DataFrame end-to-end — no driver collect, no
-    driver dedup loop, no broadcast dict — so batch size is bounded by
-    cluster memory, not the driver.
-
-    Where the list path's fixed driver work scales O(|batch|):
-
-    * idf resolution: DISTINCT terms left-join the lexicon (AQE picks
-      broadcast when the vocab is small, shuffle join when it is the whole
-      10^7-term lexicon), idf computed in an Arrow-batched UDF over
-      distinct terms only — the ONE libm definition (bm25.bm25_idf_py),
-      never JVM F.log (fp-determinism contract, bm25.py docstring);
-    * signature dedup: groupBy(query_id) → sorted (term, weight) bag →
-      groupBy(bag) picks rep = min(query_id), a pure shuffle aggregation
-      (the list path's driver loop);
-    * query distribution: rep queries are replicated shard-wise via an
-      explicit crossJoin with the n_shards ids and COGROUPED with the
-      doc-sharded index — a (|rep terms| × n_shards)-row shuffle instead of
-      a driver broadcast (the sharded twin of the broadcast-dict design;
-      at 10^6+ queries the broadcast itself is the bottleneck the judge's
-      r4 review called out).
-
-    Each cogroup task rebuilds the per-shard query dict worker-side, in
-    the list path's (query_id, term) order, and runs the SAME kernel
-    (_batch_walk_shard, including the in-shard running θ).  Scores of a
-    (query, bucket) are bit-identical to the list path's whenever both
-    take the same scoring branch, and results are rank-identical at micro
-    resolution (pytest
-    tests/test_wand.py::test_batch_distributed_rank_identity, on unsorted
-    query text).
-
-    Reference analog: batch TREC query evaluation (hw3/DataLoader.cpp
-    query loop) lifted to a query RELATION instead of a driver list.
-    """
-    spark = blocks.sparkSession
-    if n_shards is None:
-        n_shards = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    qcols = qterms.select("query_id", "mode", "n_terms", "term", "weight")
-    terms = qcols.select("term").distinct()
-    # df per distinct term (absent terms keep df=0 — they contribute no
-    # blocks but still count toward conjunctive n_terms)
-    tdf = terms.join(lexicon.select("term", "df"), "term", "left").na.fill({"df": 0})
-
-    @F.pandas_udf("double")
-    def idf_udf(dfc: pd.Series) -> pd.Series:
-        return pd.Series([bm25_idf_py(int(x), n_docs) for x in dfc], dtype="float64")
-
-    tidf = tdf.select("term", idf_udf(F.col("df")).alias("idf"))
-    q = qcols.join(tidf, "term")
-
-    # signature dedup as a relational aggregation: rep = min(query_id) per
-    # (mode, n_terms, sorted weighted-term bag) — identical grouping AND
-    # identical representative choice as the list path's driver loop
-    sig = qcols.groupBy("query_id").agg(
-        F.first("mode").alias("mode"),
-        F.first("n_terms").alias("n_terms"),
-        F.sort_array(F.collect_list(F.struct("term", "weight"))).alias("bag"),
-    )
-    groups = sig.groupBy("mode", "n_terms", "bag").agg(
-        F.min("query_id").alias("rep"),
-        F.collect_list("query_id").alias("members"),
-    )
-    mapping = groups.select("rep", F.explode("members").alias("query_id"))
-    rep_ids = groups.select(F.col("rep").alias("query_id"))
-    rep_terms = q.join(rep_ids, "query_id", "left_semi")
-
-    shards = spark.range(int(n_shards)).select(F.col("id").cast("int").alias("shard"))
-    qsh = rep_terms.crossJoin(shards)
-
-    # vocabulary pruning via semi join (the IN-list literal pushdown of the
-    # list path assumes a driver-side vocab; here the vocab is a relation)
-    sel = blocks.join(terms, "term", "left_semi").withColumn(
-        "shard", F.pmod(F.col("bucket"), F.lit(int(n_shards)))
-    )
-
-    def per_shard_cg(idx_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        if idx_pdf.empty or q_pdf.empty:
-            return pd.DataFrame({c: [] for c in _BATCH_EMPTY}).astype(_BATCH_EMPTY)
-        qs: dict[int, dict] = {}
-        for t in q_pdf.sort_values(["query_id", "term"]).itertuples(index=False):
-            qq = qs.setdefault(
-                int(t.query_id),
-                {"mode": t.mode, "n_terms": int(t.n_terms), "terms": {}},
-            )
-            qq["terms"][t.term] = (float(t.weight), float(t.idf))
-        return _batch_walk_shard(idx_pdf, qs, None, avg_doc_len, k, micro_rank)
-
-    cands = (
-        sel.groupBy("shard")
-        .cogroup(qsh.groupBy("shard"))
-        .applyInPandas(per_shard_cg, schema=_BATCH_CAND_SCHEMA)
-    )
-    from pyspark.sql import Window
-
-    rank_col = (
-        F.round(F.col("score") * 1e6, 0).cast("long") if micro_rank else F.col("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc(rank_col), F.asc("doc_id"))
-    ranked = (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
-    # replicate each representative's ranked result to every member query
-    # (plain join — the mapping can be as big as the batch; AQE broadcasts
-    # it when it is small)
+    if mapping is None:
+        return ranked
     return (
         ranked.withColumnRenamed("query_id", "rep")
         .join(mapping, "rep")

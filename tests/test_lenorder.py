@@ -15,7 +15,7 @@ import pytest
 from sparksearch.blocks import build_block_index
 from sparksearch.constants import CONJUNCTIVE, DISJUNCTIVE
 from sparksearch.corpus import length_ordered_documents, synthetic_corpus
-from sparksearch.query import query_terms_df, topk
+from sparksearch.query import query_term_rows, query_terms_df, topk
 from sparksearch.stats import collection_stats, lexicon
 from sparksearch.tokenize import postings_from_documents
 from sparksearch.wand import wand_topk_batch
@@ -71,7 +71,7 @@ def test_lenordered_batch_rank_identical_and_skips(spark, lctx):
 
     so: dict = {}
     got_rows = wand_topk_batch(
-        blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=10,
+        blocks, lex, query_term_rows(QUERIES), st["n_docs"], st["avg_doc_len"], k=10,
         n_shards=1, micro_rank=True, stats_out=so,
     ).collect()
     got = sorted(

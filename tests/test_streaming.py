@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sparksearch.blocks import build_block_index  # noqa: E402
 from sparksearch.corpus import synthetic_corpus  # noqa: E402
-from sparksearch.query import query_terms_df  # noqa: E402
+from sparksearch.query import query_term_rows  # noqa: E402
 from sparksearch.stats import lexicon  # noqa: E402
 from sparksearch.streaming import read_index, run_incremental_index  # noqa: E402
 from sparksearch.tokenize import postings_from_documents  # noqa: E402
@@ -80,7 +80,7 @@ def test_streamed_index_equals_batch(spark, tmp_path):
     batch_blocks = build_block_index(posts, stats["avg_doc_len"], bucket_span=64)
     batch_lex = lexicon(posts).select("term", "df")
 
-    qt = query_terms_df(spark, QUERIES)
+    qt = query_term_rows(QUERIES)
     key = lambda r: (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))  # noqa: E731
     want = wand_topk_batch(
         batch_blocks, batch_lex, qt, stats["n_docs"], stats["avg_doc_len"]
@@ -190,7 +190,7 @@ def test_compaction_preserves_results(spark, tmp_path):
     posts = postings_from_documents(docs)
     batch_blocks = build_block_index(posts, stats["avg_doc_len"], bucket_span=128)
     batch_lex = lexicon(posts).select("term", "df")
-    qt = query_terms_df(spark, QUERIES)
+    qt = query_term_rows(QUERIES)
     got = wand_topk_batch(blocks, lex, qt, stats["n_docs"], stats["avg_doc_len"]).collect()
     want = wand_topk_batch(
         batch_blocks, batch_lex, qt, stats["n_docs"], stats["avg_doc_len"]

@@ -9,7 +9,7 @@ from sparksearch.blocks import build_block_index
 from sparksearch.constants import CONJUNCTIVE, DISJUNCTIVE
 from sparksearch.corpus import documents_from_corpus, synthetic_corpus
 from sparksearch.oracle import engine as oracle
-from sparksearch.query import query_terms_df, topk
+from sparksearch.query import query_term_rows, query_terms_df, topk
 from sparksearch.stats import collection_stats, lexicon
 from sparksearch.tokenize import postings_from_documents
 from sparksearch.wand import wand_topk_batch
@@ -55,7 +55,9 @@ def test_wand_matches_exhaustive_and_oracle(spark, ctx):
     the oracle, doc for doc and score for score, in both modes."""
     docs, posts, st, lex, blocks, idx = ctx
     qt = query_terms_df(spark, QUERIES)
-    wand_res = _collect_by_query(wand_topk_batch(blocks, lex, qt, st["n_docs"], st["avg_doc_len"]))
+    wand_res = _collect_by_query(
+        wand_topk_batch(blocks, lex, query_term_rows(QUERIES), st["n_docs"], st["avg_doc_len"])
+    )
     exh_res = _collect_by_query(topk(posts, lex, qt, st["n_docs"], st["avg_doc_len"]))
     for qid, text, mode in QUERIES:
         want = oracle.topk(idx, text, mode)
@@ -72,7 +74,7 @@ def test_wand_single_bucket_layout(spark, ctx):
     """Same results when each term is one group (exact reference geometry)."""
     docs, posts, st, lex, _, idx = ctx
     blocks1 = build_block_index(posts, st["avg_doc_len"])  # no bucketing
-    qt = query_terms_df(spark, QUERIES)
+    qt = query_term_rows(QUERIES)
     res = _collect_by_query(wand_topk_batch(blocks1, lex, qt, st["n_docs"], st["avg_doc_len"]))
     for qid, text, mode in QUERIES:
         want = oracle.topk(idx, text, mode)
@@ -87,7 +89,7 @@ def test_batch_docpart_equals_perquery(spark, ctx):
     buckets are so fine that each query's top-k is merged from many."""
     docs, posts, st, lex, _, idx = ctx
     blocks8 = build_block_index(posts, st["avg_doc_len"], bucket_span=8)
-    qt = query_terms_df(spark, QUERIES)
+    qt = query_term_rows(QUERIES)
     batch = _collect_by_query(wand_topk_batch(blocks8, lex, qt, st["n_docs"], st["avg_doc_len"]))
     for qid, text, mode in QUERIES:
         want = oracle.topk(idx, text, mode)
@@ -117,7 +119,8 @@ def test_negative_idf_mix_disjunctive_bounds(spark):
     posts = spark.createDataFrame(rows, "doc_id long, term string, tf int, doc_len long")
     n, avgdl, k = 200, 100.0, 5
     lex = lexicon(posts).select("term", "df")
-    qt = query_terms_df(spark, [(1, "pos neg", DISJUNCTIVE), (2, "pos neg", CONJUNCTIVE)])
+    qset = [(1, "pos neg", DISJUNCTIVE), (2, "pos neg", CONJUNCTIVE)]
+    qt = query_terms_df(spark, qset)
     truth = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
         for r in topk(posts, lex, qt, n, avgdl, k=k).collect()
@@ -128,7 +131,7 @@ def test_negative_idf_mix_disjunctive_bounds(spark):
         got = sorted(
             (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
             for r in wand_topk_batch(
-                blocks, lex, qt, n, avgdl, k=k, n_shards=shards
+                blocks, lex, query_term_rows(qset), n, avgdl, k=k, n_shards=shards
             ).collect()
         )
         assert got == truth, shards
@@ -148,9 +151,8 @@ def test_batch_sparse_span_guard(spark):
             rows.append((i * (big // 50) + 7, "beta", 2, 120))
     posts = spark.createDataFrame(rows, "doc_id long, term string, tf int, doc_len long")
     lex = lexicon(posts).select("term", "df")
-    qt = query_terms_df(
-        spark, [(1, "alpha beta", DISJUNCTIVE), (2, "alpha beta", CONJUNCTIVE)]
-    )
+    qset = [(1, "alpha beta", DISJUNCTIVE), (2, "alpha beta", CONJUNCTIVE)]
+    qt = query_terms_df(spark, qset)
     n, avgdl = 100, 120.0
     truth = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
@@ -159,7 +161,7 @@ def test_batch_sparse_span_guard(spark):
     blocks = build_block_index(posts, avgdl)  # single bucket spanning 10^10 ids
     got = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in wand_topk_batch(blocks, lex, qt, n, avgdl, k=10).collect()
+        for r in wand_topk_batch(blocks, lex, query_term_rows(qset), n, avgdl, k=10).collect()
     )
     assert got == truth
 
@@ -177,26 +179,21 @@ def test_batch_rejects_overlapping_blocks(spark):
     blocks = build_block_index(pa, avgdl, bucket_span=64).unionByName(
         build_block_index(pb, avgdl, bucket_span=64)
     )
-    qt = query_terms_df(spark, [(1, "alpha", DISJUNCTIVE)])
+    qt = query_term_rows([(1, "alpha", DISJUNCTIVE)])
     with pytest.raises(PythonException, match="overlapping/descending doc ranges"):
         wand_topk_batch(blocks, lex, qt, n, avgdl).collect()
 
 
-@pytest.mark.parametrize(
-    "front_end, qterms",
-    [("list", "rows"), ("list", "frame"), ("distributed", "frame")],
-)
-def test_batch_empty_query_batch(spark, ctx, front_end, qterms):
+@pytest.mark.parametrize("form", ["rows", "frame"])
+def test_batch_empty_query_batch(spark, ctx, form):
     """An empty query batch (no rows, or an empty QUERY_TERMS_SCHEMA
-    DataFrame) returns zero rows with the result columns, on both
-    front-ends."""
+    DataFrame) returns zero rows with the result columns, through either
+    ingest."""
     from sparksearch.query import QUERY_TERMS_SCHEMA
-    from sparksearch.wand import wand_topk_batch_distributed
 
     _, _, st_, lex, blocks, _ = ctx
-    q = [] if qterms == "rows" else spark.createDataFrame([], QUERY_TERMS_SCHEMA)
-    fn = wand_topk_batch if front_end == "list" else wand_topk_batch_distributed
-    res = fn(blocks, lex, q, st_["n_docs"], st_["avg_doc_len"])
+    q = [] if form == "rows" else spark.createDataFrame([], QUERY_TERMS_SCHEMA)
+    res = wand_topk_batch(blocks, lex, q, st_["n_docs"], st_["avg_doc_len"])
     assert res.columns == ["query_id", "rank", "doc_id", "score"]
     assert res.count() == 0
 
@@ -233,7 +230,9 @@ def test_batch_prune_skips_and_identical(spark):
     one task walks every bucket in doc order, so once the first bucket
     fills the top-k, every later bucket's max_norm bound falls below θ and
     9 of 10 buckets are skipped per query (doc_len = 50 + 2d).  Results
-    must equal the exhaustive scorer, and stats_out must show the skips."""
+    must equal the exhaustive scorer, and stats_out must show the skips —
+    the same results and the same counts whether the batch is a list
+    (broadcast ingest) or a DataFrame (relational ingest)."""
     rows = []
     for d in range(1000):  # df=1000 of N=4000 -> both terms positive idf
         rows.append((d, "alpha", 1, 50 + 2 * d))
@@ -241,35 +240,38 @@ def test_batch_prune_skips_and_identical(spark):
     posts = spark.createDataFrame(rows, "doc_id long, term string, tf int, doc_len long")
     n, avgdl = 4000, 100.0
     lex = lexicon(posts).select("term", "df")
-    qt = query_terms_df(
-        spark, [(1, "alpha beta", DISJUNCTIVE), (2, "alpha beta", CONJUNCTIVE)]
-    )
+    qset = [(1, "alpha beta", DISJUNCTIVE), (2, "alpha beta", CONJUNCTIVE)]
+    qt = query_terms_df(spark, qset)
     blocks = build_block_index(posts, avgdl, bucket_span=100).cache()
     blocks.count()
     truth = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
         for r in topk(posts, lex, qt, n, avgdl).collect()
     )
-    stats: dict = {}
-    got = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in wand_topk_batch(
-            blocks, lex, qt, n, avgdl, stats_out=stats, n_shards=1
-        ).collect()
-    )
-    assert got == truth
-    skipped = stats["query_evals_skipped"].value
-    total = stats["query_evals_total"].value
-    assert skipped >= total // 2 > 0, (skipped, total)
+    seen = {}
+    for form, qin in (("rows", query_term_rows(qset)), ("frame", qt)):
+        stats: dict = {}
+        got = sorted(
+            map(tuple, wand_topk_batch(
+                blocks, lex, qin, n, avgdl, stats_out=stats, n_shards=1
+            ).collect())
+        )
+        assert [(q, rk, d, round(s, 9)) for q, rk, d, s in got] == truth, form
+        skipped = stats["query_evals_skipped"].value
+        total = stats["query_evals_total"].value
+        assert skipped >= total // 2 > 0, (form, skipped, total)
+        seen[form] = (got, skipped, total)
+    assert seen["rows"] == seen["frame"]
     blocks.unpersist()
 
 
 def test_batch_matrix_path_and_signature_dedup(spark, ctx):
-    """>=32 surviving queries route through the BLAS matrix path; results
-    must equal the exhaustive DataFrame scorer (every query has two
-    distinct terms, so raw scores are bit-identical across engines).
-    Duplicate query signatures must be evaluated once and replicated to
-    every member query_id."""
+    """>=32 surviving queries route through the matrix path; results must
+    equal the exhaustive DataFrame scorer with raw scores compared exactly
+    (every query has two distinct terms, so two-operand addition makes
+    them bit-identical across engines — a BLAS re-score, which fuses and
+    reorders the adds, breaks this).  Duplicate query signatures must be
+    evaluated once and replicated to every member query_id."""
     docs, posts, st, lex, blocks, idx = ctx
     base = [
         (i, f"{t1} {t2}", DISJUNCTIVE if i % 2 == 0 else CONJUNCTIVE)
@@ -282,20 +284,22 @@ def test_batch_matrix_path_and_signature_dedup(spark, ctx):
     assert len(base) >= 32
     qt = query_terms_df(spark, base)
     ref = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in topk(posts, lex, qt, st["n_docs"], st["avg_doc_len"]).collect()
+        map(tuple, topk(posts, lex, qt, st["n_docs"], st["avg_doc_len"]).collect())
     )
     got = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in wand_topk_batch(blocks, lex, qt, st["n_docs"], st["avg_doc_len"]).collect()
+        map(tuple, wand_topk_batch(
+            blocks, lex, query_term_rows(base), st["n_docs"], st["avg_doc_len"]
+        ).collect())
     )
-    assert got == ref
+    assert len(got) == len(ref)
+    for g, r in zip(got, ref):
+        assert g == r, (g, r)
 
     dup = base + [(500 + i, t, m) for i, (_, t, m) in enumerate(base[:10])]
     got2 = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["score"], 9))
+        (r["query_id"], r["rank"]): (r["doc_id"], r["score"])
         for r in wand_topk_batch(
-            blocks, lex, query_terms_df(spark, dup), st["n_docs"], st["avg_doc_len"]
+            blocks, lex, query_term_rows(dup), st["n_docs"], st["avg_doc_len"]
         ).collect()
     }
     base_map = {(q, rk): v for q, rk, *v in ((q, rk, d, s) for q, rk, d, s in got)}
@@ -313,8 +317,6 @@ def test_batch_list_qterms_and_shard_invariance(spark):
     task's running top-k, 7 = non-divisor of the bucket count, default =
     shuffle partitions), since shards only change where the per-query
     merge happens."""
-    from sparksearch.query import query_term_rows
-
     rows = []
     for d in range(400):
         rows.append((d, "alpha", 1 + d % 3, 80 + (d * 7) % 90))
@@ -344,18 +346,16 @@ def test_batch_list_qterms_and_shard_invariance(spark):
     blocks.unpersist()
 
 def test_batch_distributed_rank_identity(spark, ctx):
-    """The DataFrame-ingest variant (wand_topk_batch_distributed — no driver
-    collect/dedup-loop/broadcast; judge r4 item 4) must be rank-identical to
-    the list path on a 10^5-query batch with heavy signature duplication.
+    """A 10^5-query batch with heavy signature duplication must give the
+    same answer as a DataFrame (relational ingest: no driver collect,
+    dedup loop or broadcast) as it gives as a list (broadcast ingest).
 
-    Query texts list terms in pool order, not sorted: both front-ends must
+    Query texts list terms in pool order, not sorted: both ingests must
     themselves insert each query's terms in sorted order, so cross-term
     accumulation (the one fp degree of freedom left once bm25.py pins each
-    contribution) runs in the same order on both and the scores compared
-    below agree to 9 decimals at identical micro ranks."""
+    contribution) runs in the same order on both and the raw scores
+    compared below are bit-identical at identical ranks."""
     from itertools import combinations
-
-    from sparksearch.wand import wand_topk_batch_distributed
 
     docs, posts, st_, lex, blocks, idx = ctx
     pool = [
@@ -371,23 +371,38 @@ def test_batch_distributed_rank_identity(spark, ctx):
             mode = DISJUNCTIVE if j % 2 == 0 else CONJUNCTIVE
             qset.append((qid, " ".join(trip), mode))
     assert len(qset) >= 100_000
-    qt = query_terms_df(spark, qset)
     k = 5
     ref = wand_topk_batch(
-        blocks, lex, qt, st_["n_docs"], st_["avg_doc_len"], k=k, micro_rank=True
+        blocks, lex, query_term_rows(qset), st_["n_docs"], st_["avg_doc_len"],
+        k=k, micro_rank=True,
     )
-    got = wand_topk_batch_distributed(
-        blocks, lex, qt, st_["n_docs"], st_["avg_doc_len"], k=k, micro_rank=True
+    got = wand_topk_batch(
+        blocks, lex, query_terms_df(spark, qset), st_["n_docs"], st_["avg_doc_len"],
+        k=k, micro_rank=True,
     )
-    a = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in ref.collect()
-    )
-    b = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in got.collect()
-    )
+    a = sorted(map(tuple, ref.collect()))
+    b = sorted(map(tuple, got.collect()))
     assert len(a) == len(b) and a == b
+
+
+def test_batch_frame_ingest_launches_no_job_before_action(spark, ctx):
+    """A DataFrame batch stays relational: building the top-k plan runs no
+    Spark job (nothing is collected to the driver), and the first action
+    returns the list form's answer."""
+    _, _, st_, lex, blocks, _ = ctx
+    qt = query_terms_df(spark, QUERIES)
+    sc = spark.sparkContext
+    group = "frame-ingest-plan"
+    sc.setJobGroup(group, "build the top-k plan of a DataFrame batch")
+    try:
+        res = wand_topk_batch(blocks, lex, qt, st_["n_docs"], st_["avg_doc_len"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    want = wand_topk_batch(
+        blocks, lex, query_term_rows(QUERIES), st_["n_docs"], st_["avg_doc_len"]
+    )
+    assert sorted(map(tuple, res.collect())) == sorted(map(tuple, want.collect()))
 
 
 from hypothesis import example, given, settings
@@ -415,7 +430,8 @@ def _corpus_and_queries(draw):
         qs.append((qid, " ".join(qterms), mode))
     span = draw(st.sampled_from([16, 50, None]))
     shards = draw(st.sampled_from([1, 3, None]))
-    return rows, qs, span, shards
+    form = draw(st.sampled_from(["rows", "frame"]))
+    return rows, qs, span, shards, form
 
 
 @settings(max_examples=8, deadline=None)
@@ -627,7 +643,8 @@ def _corpus_and_queries(draw):
       (80, 'alpha', 1, 30)],
      [(0, 'alpha', 'disjunctive')],
      50,
-     1),
+     1,
+     'rows'),
 ).via('discovered failure')
 @example(
     case=([(0, 'alpha', 1, 226),
@@ -747,13 +764,14 @@ def _corpus_and_queries(draw):
       (47, 'alpha', 2, 30)],
      [(0, 'alpha', 'disjunctive')],
      50,
-     1),
+     1,
+     'frame'),
 ).via('discovered failure')
 def test_batch_property_matches_exhaustive(case):
     """Property (the engine's cross-evaluator contract, wand.py docstring):
     for random corpora (including duplicate-score ties from coarse tf/doc_len
     grids), random query bags (duplicate terms = weights), any
-    bucket_span/unbucketed layout, any shard count —
+    bucket_span/unbucketed layout, any shard count, either batch form —
 
     1. wand_topk_batch is rank-identical to the exhaustive postings-table
        evaluator at MICRO resolution (round(score*1e6) desc, doc_id asc),
@@ -765,7 +783,7 @@ def test_batch_property_matches_exhaustive(case):
        the committed @example below is the round-3 falsifying case where a
        one-ulp multiply-association mismatch flipped a 5-way exact tie.)
     """
-    rows, qs, span, shards = case
+    rows, qs, span, shards, form = case
     if not rows:
         return
     spark = _hyp_spark()
@@ -790,8 +808,9 @@ def test_batch_property_matches_exhaustive(case):
         for d, s in docs:
             truth_raw[(qid, d)] = s
     blocks = build_block_index(posts, avgdl, bucket_span=span)
+    qin = qt if form == "frame" else query_term_rows(qs)
     got_rows = wand_topk_batch(
-        blocks, lex, qt, n, avgdl, k=10, n_shards=shards, micro_rank=True,
+        blocks, lex, qin, n, avgdl, k=10, n_shards=shards, micro_rank=True,
     ).collect()
     got = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"] * 1e6))
