@@ -64,7 +64,7 @@ def _load_corpus(spark, spec: str):
     return length_ordered_documents(spark.read.parquet(spec).select(*CORPUS_SCHEMA.names))
 
 
-def cmd_build(args) -> None:
+def cmd_build(args) -> dict:
     from sparksearch.checkpoint import build_index_checkpointed
 
     spark = _spark(args)
@@ -81,9 +81,11 @@ def cmd_build(args) -> None:
         for s, r in out.items()
     }
     print(json.dumps(summary, indent=1))
+    return summary
 
 
 def cmd_query(args) -> None:
+    from sparksearch.checkpoint import CheckpointManager
     from sparksearch.constants import TOP_K
     from sparksearch.query import query_term_rows
     from sparksearch.wand import wand_topk_batch
@@ -94,12 +96,11 @@ def cmd_query(args) -> None:
     blocks = spark.read.parquet(f"{args.index}/blocks/data")
     lex = spark.read.parquet(f"{args.index}/lexicon/data").select("term", "df")
     doc_table = spark.read.parquet(f"{args.index}/doc_table/data")
-    # explicit aliases: dict-style agg orders columns arbitrarily, which
-    # silently swaps N and avgdl
-    stats = doc_table.agg(
-        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avg_dl")
-    ).collect()[0]
-    n_docs, avg_dl = int(stats["n_docs"]), float(stats["avg_dl"])
+    # N and avgdl from the manifests, no aggregate job: avgdl is the constant
+    # the block bounds were built with
+    cp = CheckpointManager(spark, args.index)
+    n_docs = cp.load_manifest("documents")["row_count"]
+    avg_dl = cp.load_manifest("blocks")["params"]["avg_doc_len"]
 
     qt = query_term_rows([(0, args.query, args.mode)])
     res = wand_topk_batch(blocks, lex, qt, n_docs, avg_dl, k=args.k or TOP_K)
@@ -114,11 +115,10 @@ def cmd_query(args) -> None:
 
 
 def cmd_bench(args) -> None:
-    spark = _spark(args)
+    _spark(args)  # start the session outside the timed build
     t0 = time.perf_counter()
-    cmd_build(args)
+    n = cmd_build(args)["documents"]["rows"]
     t_build = time.perf_counter() - t0
-    n = spark.read.parquet(f"{args.output}/documents/data").count()
     print(json.dumps({"metric": "build_wall", "value": round(t_build, 3), "unit": "sec",
                       "n_docs": n, "docs_per_sec": round(n / t_build, 1)}))
 

@@ -1,4 +1,4 @@
-"""Stage checkpointing with per-partition lineage + metrics (north_star:
+"""Stage checkpointing with per-file lineage + metrics (north_star:
 "resumable from Iceberg snapshot checkpoints with per-partition lineage and
 metrics (docs indexed, postings emitted, bytes compressed)").
 
@@ -7,23 +7,25 @@ intermediate files (hw3/config.h:66-75, hw3/main.cpp:6-66).  Our distributed
 analog: every pipeline stage lands in a parquet snapshot directory with a
 JSON *manifest* recording
 
-* ``stage``, ``inputs`` (upstream stage names + their manifest fingerprints
-  — the lineage chain),
-* ``row_count`` and per-partition metrics (rows per shuffle partition, plus
-  stage-specific sums such as postings emitted / payload bytes compressed),
-* wall time and a content fingerprint.
+* ``stage``, ``lineage`` (upstream stage names + their manifest fingerprints),
+* ``row_count``, a content ``data_hash`` and stage ``metrics`` (docs indexed,
+  postings emitted, bytes compressed), observed by the write job itself, so
+  each stage's plan is evaluated once and never re-read,
+* ``files``: each data file a write task produced, with its record count
+  (parquet footer) and size on disk, read on the driver with no Spark job —
+  an Iceberg manifest's ``record_count`` / ``file_size_in_bytes``,
+* wall time and a fingerprint over lineage, row count and data hash.
 
-``run_stage`` is idempotent: if a committed manifest exists whose lineage
-fingerprints match, the stage is *skipped* and its snapshot is read back —
-that is the resume path (kill the job between stages, rerun the same
-driver, finished stages replay from disk).  Manifest writes are
-write-temp-then-rename so a killed write never looks committed.
+``run_stage`` is idempotent: a stage whose committed manifest matches its
+lineage is *skipped* and its snapshot read back — the resume path (kill the
+job between stages, rerun the same driver, finished stages replay from
+disk).  Manifest writes are write-temp-then-rename so a killed write never
+looks committed.
 
 On a real cluster the same abstraction binds to an Iceberg catalog
 (``writeTo(...).createOrReplace()`` + snapshot ids); parquet + manifest is
-the jar-free stand-in with identical semantics at this layer, and the
-storage format keeps an append-only ``snapshots`` list exactly like
-Iceberg's metadata chain.
+the jar-free stand-in, and the manifest keeps an append-only ``snapshots``
+list like Iceberg's metadata chain.
 """
 
 from __future__ import annotations
@@ -35,7 +37,8 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -43,28 +46,32 @@ def _fingerprint(obj) -> str:
     return hashlib.sha256(json.dumps(obj, sort_keys=True, default=str).encode()).hexdigest()[:16]
 
 
-def dataframe_fingerprint(df: DataFrame, columns: list[str] | None = None) -> str:
-    """Order-independent content fingerprint of a DataFrame: row count +
-    bit-XOR + modular SUM of a 60-bit hash of the selected columns (one
-    columnar scan, partitioning-independent).  Used as the ROOT stage's
-    resume key so a rerun with different input data never resumes a stale
-    snapshot; pick a cheap column subset (e.g. doc_id + content_sha256) at
-    scale.  XOR alone cancels on even-multiplicity changes (swapping one
-    identical-row pair for another leaves count+XOR unchanged — ADVICE r2);
-    the additive component breaks that symmetry.  The sum aggregates in
-    decimal(38,0) (n*2^60 overflows long at ~8 rows) and is reduced mod
-    2^63 for the key."""
+def _content_aggs(df: DataFrame) -> list[Column]:
+    """Row count, bit-XOR and decimal SUM of a 60-bit hash of each row."""
     from .analysis import md5_hash60
 
-    cols = columns or df.columns
-    h = md5_hash60(F.to_json(F.struct(*[F.col(c) for c in cols])))
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(h).alias("x"),
-        F.sum(h.cast("decimal(38,0)")).alias("s"),
-    ).collect()[0]
-    s = int(row["s"] or 0) % (1 << 63)
-    return f"{int(row['n'])}:{int(row['x'] or 0):x}:{s:x}"
+    h = md5_hash60(F.to_json(F.struct(*[F.col(c) for c in df.columns])))
+    return [
+        F.count(F.lit(1)).alias("__rows"),
+        F.bit_xor(h).alias("__xor"),
+        F.sum(h.cast("decimal(38,0)")).alias("__sum"),
+    ]
+
+
+def _content_hash(m: dict) -> str:
+    s = int(m["__sum"] or 0) % (1 << 63)
+    return f"{int(m['__rows'])}:{int(m['__xor'] or 0):x}:{s:x}"
+
+
+def dataframe_fingerprint(df: DataFrame) -> str:
+    """Order-independent content fingerprint of a DataFrame: row count +
+    bit-XOR + SUM of a 60-bit hash of every row's JSON (one aggregate,
+    partitioning-independent) — the ``data_hash`` ``run_stage`` observes
+    while writing the same rows, so it is the root stage's resume check.
+    XOR alone cancels on even-multiplicity changes (swap one identical-row
+    pair for another — ADVICE r2); the sum breaks that symmetry.  It sums in
+    decimal(38,0) (n*2^60 overflows long at ~8 rows), reduced mod 2^63."""
+    return _content_hash(df.agg(*_content_aggs(df)).collect()[0].asDict())
 
 
 @dataclass
@@ -105,13 +112,16 @@ class CheckpointManager:
         metric_cols: dict[str, str] | None = None,
         params: dict | None = None,
     ) -> StageResult:
-        """Build-or-resume one stage.
+        """Build-or-resume one stage; a build evaluates ``build()`` once.
 
         ``inputs``: upstream stage names; their manifest fingerprints become
         this stage's lineage key — if any upstream changed, this stage
-        reruns.  ``metric_cols``: {metric_name: aggregate SQL expr} computed
-        per shuffle partition (e.g. {"postings_emitted": "count(*)",
-        "bytes_compressed": "sum(length(payload))"}).
+        reruns.  A root stage (no ``inputs``) resumes only if its committed
+        ``data_hash`` also equals ``dataframe_fingerprint(build())``; with no
+        committed manifest no fingerprint pass runs.  ``metric_cols``:
+        {metric_name: aggregate SQL expr}, stage totals observed during the
+        write (e.g. {"bytes_compressed": "sum(length(payload))"}; Spark
+        rejects DISTINCT aggregates there).
         """
         inputs = inputs or []
         lineage = {}
@@ -122,49 +132,37 @@ class CheckpointManager:
             lineage[up] = m["fingerprint"]
         key = _fingerprint({"stage": stage, "lineage": lineage, "params": params or {}})
 
-        existing = self.load_manifest(stage)
-        if existing is not None and existing.get("lineage_key") == key:
-            df = self.spark.read.parquet(self._data_path(stage))
-            return StageResult(stage, self._data_path(stage), existing, resumed=True, df=df)
-
-        t0 = time.time()
-        df = build()
         data_path = self._data_path(stage)
-        df.write.mode("overwrite").parquet(data_path)
-        persisted = self.spark.read.parquet(data_path)
+        existing = self.load_manifest(stage)
+        if (
+            existing is not None
+            and existing.get("lineage_key") == key
+            and (inputs or existing["data_hash"] == dataframe_fingerprint(build()))
+        ):
+            df = self.spark.read.parquet(data_path)
+            return StageResult(stage, data_path, existing, resumed=True, df=df)
 
-        # per-partition lineage metrics over the *persisted* snapshot, plus
-        # a per-partition content hash (same scan — no extra pass): the
-        # XOR-combined data_hash goes into the manifest fingerprint so an
-        # upstream rebuild that happens to preserve row_count still
-        # invalidates downstream stages
-        from .analysis import md5_hash60
-
-        row_hash = md5_hash60(F.to_json(F.struct(*[F.col(c) for c in persisted.columns])))
-        aggs = [F.count(F.lit(1)).alias("rows"), F.bit_xor(row_hash).alias("data_hash")]
-        for name, expr in (metric_cols or {}).items():
-            aggs.append(F.expr(expr).alias(name))
-        per_part = (
-            persisted.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(*aggs)
-            .orderBy("partition_id")
-            .collect()
-        )
-        partitions = [r.asDict() for r in per_part]
-        row_count = int(sum(p["rows"] for p in partitions))
-        data_hash = 0
-        for p in partitions:
-            data_hash ^= int(p["data_hash"] or 0)
+        t0, obs = time.time(), Observation()
+        metric_cols = metric_cols or {}
+        metrics = [F.expr(e).alias(n) for n, e in metric_cols.items()]
+        df = build()
+        df.observe(obs, *_content_aggs(df), *metrics).write.parquet(data_path, mode="overwrite")
+        m = obs.get
+        files = [
+            {"file": f.name, "rows": pq.read_metadata(f.path).num_rows, "bytes": f.stat().st_size}
+            for f in sorted(os.scandir(data_path), key=lambda f: f.name)
+            if f.name.endswith(".parquet")
+        ]
 
         manifest = {
             "stage": stage,
             "lineage_key": key,
             "lineage": lineage,
             "params": params or {},
-            "row_count": row_count,
-            "data_hash": f"{data_hash:x}",
-            "n_partitions": len(partitions),
-            "partitions": partitions,
+            "row_count": int(m["__rows"]),
+            "data_hash": _content_hash(m),
+            "metrics": {n: m[n] for n in metric_cols},
+            "files": files,
             "wall_sec": round(time.time() - t0, 3),
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
@@ -181,7 +179,8 @@ class CheckpointManager:
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, mp)  # atomic commit: kill mid-write never corrupts
-        return StageResult(stage, data_path, manifest, resumed=False, df=persisted)
+        df = self.spark.read.parquet(data_path)
+        return StageResult(stage, data_path, manifest, resumed=False, df=df)
 
 
 def build_index_checkpointed(
@@ -191,36 +190,34 @@ def build_index_checkpointed(
     documents → postings → (doc_table, lexicon, blocks).
 
     Metrics per north_star: docs indexed, postings emitted, bytes
-    compressed — recorded per partition in each stage manifest.
+    compressed — observed by each stage's write into its manifest.  avgdl
+    for the block bounds is the documents stage's observed chars / rows, so
+    no separate stats job runs.
     """
     from .blocks import build_block_index
-    from .stats import collection_stats, doc_table, lexicon
+    from .stats import doc_table, lexicon
     from .tokenize import postings_from_documents
 
     cp = CheckpointManager(spark, base_dir)
     out: dict[str, StageResult] = {}
 
-    # root stage resume key = content fingerprint of the INPUT (cheap column
-    # subset), so rerunning with different input data rebuilds instead of
-    # silently resuming the stale snapshot
-    in_fp = dataframe_fingerprint(documents, ["doc_id", "content_sha256"])
     out["documents"] = cp.run_stage(
         "documents",
         lambda: documents,
-        params={"input_fingerprint": in_fp},
         metric_cols={"docs_indexed": "count(*)", "chars": "sum(doc_len)"},
     )
     docs = out["documents"].df
+    dm = out["documents"].manifest
+    avg_doc_len = dm["metrics"]["chars"] / dm["row_count"]
 
     out["postings"] = cp.run_stage(
         "postings",
         lambda: postings_from_documents(docs),
         inputs=["documents"],
-        metric_cols={"postings_emitted": "count(*)", "docs_indexed": "count(distinct doc_id)"},
+        metric_cols={"postings_emitted": "count(*)"},
     )
     postings = out["postings"].df
 
-    st = collection_stats(docs)
     out["doc_table"] = cp.run_stage(
         "doc_table",
         lambda: doc_table(docs, postings),
@@ -235,9 +232,9 @@ def build_index_checkpointed(
     )
     out["blocks"] = cp.run_stage(
         "blocks",
-        lambda: build_block_index(postings, st["avg_doc_len"], bucket_span=bucket_span),
+        lambda: build_block_index(postings, avg_doc_len, bucket_span=bucket_span),
         inputs=["postings"],
-        params={"avg_doc_len": st["avg_doc_len"], "bucket_span": bucket_span},
+        params={"avg_doc_len": avg_doc_len, "bucket_span": bucket_span},
         metric_cols={
             "postings_emitted": "sum(n_postings)",
             "bytes_compressed": "sum(length(payload))",

@@ -23,11 +23,15 @@ def test_full_build_then_resume(spark, tmp_path):
     n_docs = out1["documents"].manifest["row_count"]
     assert n_docs == docs.count()
 
-    # per-partition lineage metrics present and consistent
+    # per-file lineage and observed stage metrics present and consistent
     pm = out1["postings"].manifest
-    assert sum(p["postings_emitted"] for p in pm["partitions"]) == pm["row_count"]
+    assert pm["metrics"]["postings_emitted"] == pm["row_count"]
+    assert sum(f["rows"] for f in pm["files"]) == pm["row_count"]
+    assert all(f["bytes"] > 0 for f in pm["files"])
     bm = out1["blocks"].manifest
-    assert sum(p["bytes_compressed"] for p in bm["partitions"]) > 0
+    assert bm["metrics"]["postings_emitted"] == pm["row_count"]
+    assert bm["metrics"]["bytes_compressed"] > 0
+    assert sum(f["rows"] for f in bm["files"]) == bm["row_count"]
     assert bm["lineage"]["postings"] == pm["fingerprint"]
 
     # second driver run = resume: every stage skips and replays from disk
@@ -78,13 +82,10 @@ def test_partial_crash_resume(spark, tmp_path):
     base = str(tmp_path / "ckpt3")
     docs = documents_from_testdata(spark, SF_DIR)
     cp = CheckpointManager(spark, base)
-    from sparksearch.checkpoint import dataframe_fingerprint
-
     cp.run_stage(
         "documents",
         lambda: docs,
-        params={"input_fingerprint": dataframe_fingerprint(docs, ["doc_id", "content_sha256"])},
-        metric_cols={"docs_indexed": "count(*)"},
+        metric_cols={"docs_indexed": "count(*)", "chars": "sum(doc_len)"},
     )
     # "crash" here — postings never ran.  New driver:
     out = build_index_checkpointed(spark, docs, base)
@@ -98,10 +99,11 @@ def test_partial_crash_resume(spark, tmp_path):
     assert m["fingerprint"]
 
 
-def test_fingerprint_even_multiplicity(spark):
+def test_fingerprint_even_multiplicity(spark, tmp_path):
     """XOR alone cancels when an identical-row pair is swapped for another
     pair (count unchanged) — the additive component must still distinguish
-    the contents (ADVICE r2)."""
+    the contents (ADVICE r2), both in ``dataframe_fingerprint`` and in the
+    manifest fingerprint ``run_stage`` commits."""
     from sparksearch.checkpoint import dataframe_fingerprint
 
     a = spark.createDataFrame([("x",), ("x",)], "v string")
@@ -111,3 +113,50 @@ def test_fingerprint_even_multiplicity(spark):
     # same count and XOR (both pairs cancel to 0) -> only the sum differs
     assert fa.split(":")[0] == fb.split(":")[0] == "2"
     assert fa.split(":")[1] == fb.split(":")[1] == "0"
+
+    ma = CheckpointManager(spark, str(tmp_path / "a")).run_stage("pairs", lambda: a).manifest
+    mb = CheckpointManager(spark, str(tmp_path / "b")).run_stage("pairs", lambda: b).manifest
+    assert ma["fingerprint"] != mb["fingerprint"]
+    assert (ma["data_hash"], mb["data_hash"]) == (fa, fb)
+
+
+def test_checkpointed_build_evaluates_once(spark, tmp_path):
+    """A fresh checkpointed build launches no more Spark jobs than writing
+    the same five stages plainly plus one ``collection_stats``: each stage's
+    plan runs once, its manifest comes from the write's observed metrics,
+    and the blocks' avgdl is the documents stage's observed one."""
+    from sparksearch.blocks import build_block_index
+    from sparksearch.stats import collection_stats, doc_table, lexicon
+    from sparksearch.tokenize import postings_from_documents
+
+    sc = spark.sparkContext
+    docs = documents_from_testdata(spark, SF_DIR)
+
+    def n_jobs(group, fn):
+        group = f"{group}-{tmp_path.name}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def write(name, df):
+        path = str(tmp_path / "plain" / name)
+        df.write.parquet(path)
+        return spark.read.parquet(path)
+
+    def plain():
+        d = write("documents", docs)
+        p = write("postings", postings_from_documents(d))
+        st = collection_stats(d)
+        write("doc_table", doc_table(d, p))
+        write("lexicon", lexicon(p))
+        write("blocks", build_block_index(p, st["avg_doc_len"]))
+
+    out = {}
+    base = str(tmp_path / "ckpt")
+    checkpointed = n_jobs("ckpt", lambda: out.update(build_index_checkpointed(spark, docs, base)))
+    assert not any(r.resumed for r in out.values())
+    assert checkpointed <= n_jobs("plain", plain)
+    assert out["blocks"].manifest["params"]["avg_doc_len"] == collection_stats(docs)["avg_doc_len"]
