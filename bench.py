@@ -7,8 +7,9 @@ local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
 plus derived throughput fields (docs_per_sec, queries_per_sec).
 
 Phases mirror the reference's lifecycle (SURVEY.md §3): index build
-(tokenize → postings → blocked compressed index → lexicon, persisted to
-parquet like the reference's on-disk index), then queries over the
+(``checkpoint.build_index``: length-ordered documents → postings → blocked
+compressed index, lexicon, doc table, persisted to parquet like the
+reference's on-disk index), then queries over the
 *persisted* index (so scan pruning on term is exercised), then the
 training-data-pipeline operators.  Scaling-efficiency evidence
 (local[8] vs local[32]) lives in bench_scaling.py.
@@ -26,14 +27,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from sparksearch.ann import cosine_topk, lsh_bucket_topk  # noqa: E402
-from sparksearch.blocks import build_block_index, lexicon_from_blocks  # noqa: E402
+from sparksearch.blocks import build_block_index  # noqa: E402
+from sparksearch.checkpoint import build_index  # noqa: E402
 from sparksearch.constants import CONJUNCTIVE, DISJUNCTIVE, TOP_K  # noqa: E402
-from sparksearch.corpus import documents_from_testdata  # noqa: E402
+from sparksearch.corpus import CORPUS_SCHEMA, documents_from_testdata  # noqa: E402
 from sparksearch.dedup import minhash_lsh_pairs, ngram_jaccard_pairs, simhash  # noqa: E402
 from sparksearch.analysis import text_quality  # noqa: E402
 from sparksearch.query import query_term_rows, query_terms_df, topk  # noqa: E402
 from sparksearch.session import get_spark  # noqa: E402
-from sparksearch.stats import collection_stats, doc_table, lexicon  # noqa: E402
 from sparksearch.tokenize import postings_from_documents  # noqa: E402
 from sparksearch.wand import wand_topk_batch  # noqa: E402
 
@@ -89,54 +90,35 @@ def main() -> None:
         raw_docs = documents_from_testdata(spark, sf_dir).repartition(cpus).cache()
         n_docs = raw_docs.count()  # warm the JVM + parquet footer outside timers
 
-        # DEFAULT index layout: length-ordered docIDs (document reordering,
-        # corpus.length_ordered_documents).  BM25's length norm ties score
-        # magnitude to doc_len, so ascending-length ids give every (term,
-        # chunk/bucket) a monotone tf_norm range — block-max bounds become
-        # discriminative and WAND/batch skipping can fire (the driver's
-        # uniform random layout makes every doc range look alike, so sound
-        # bounds can never skip there).  The reorder is timed as its own
-        # phase: it is real build cost (corpus.assign_dense_ids: a seeded
-        # boundary sample and a per-bucket count, two small collects, then
-        # one window shuffle that numbers rows within each bucket).
-        # corpus.reorder_documents re-ids the already-canonical table from
-        # its corpus columns, so the phase is those passes + doc_len/sha256
-        # + the documents sink.  build+reorder total is the honest build
-        # cost; docs_per_sec_incl_reorder reports it.
-        def reorder():
-            from sparksearch.corpus import reorder_documents
-
-            ld = reorder_documents(raw_docs)
-            ld.write.mode("overwrite").parquet(f"{tmp}/documents")
-            return spark.read.parquet(f"{tmp}/documents")
-
-        docs = timed("doc_reorder", reorder).repartition(cpus).cache()
+        # The build is the library's one resumable build
+        # (checkpoint.build_index): documents with length-ordered docIDs
+        # (document reordering) → postings → blocked index, lexicon, doc
+        # table, each stage persisted to parquet like the reference's
+        # on-disk index.  BM25's length norm ties score magnitude to
+        # doc_len, so ascending-length ids give every (term, bucket) a
+        # monotone tf_norm range — block-max bounds become discriminative
+        # and skipping can fire (the driver's uniform random layout makes
+        # every doc range look alike).  doc_reorder is the documents
+        # stage's wall (the id pass, doc_len/sha256 and the documents
+        # sink); index_build is the rest.  bucket_span 2048 bounds every
+        # encode group and is the batch-throughput geometry a production
+        # corpus uses (64 tiny buckets on this 5k-doc corpus tripled
+        # per-(query,bucket) overhead in the batch path); the reordering
+        # study below runs on a separate bucket-granular index.
+        t0 = time.perf_counter()
+        index = build_index(spark, raw_docs.select(*CORPUS_SCHEMA.names), f"{tmp}/index")
+        timings["doc_reorder"] = index["documents"].manifest["wall_sec"]
+        timings["index_build"] = round(time.perf_counter() - t0 - timings["doc_reorder"], 4)
+        st = {
+            "n_docs": index["documents"].manifest["row_count"],
+            "avg_doc_len": index["blocks"].manifest["params"]["avg_doc_len"],
+        }
+        docs = index["documents"].df.repartition(cpus).cache()
         docs.count()
 
-        # --- index build: tokenize -> postings -> blocked index + lexicon ---
-        def build():
-            st = collection_stats(docs)
-            postings = postings_from_documents(docs)
-            postings.write.mode("overwrite").parquet(f"{tmp}/postings")
-            persisted = spark.read.parquet(f"{tmp}/postings")
-            # bucket_span bounds every encode group (the skew guarantee the
-            # build needs at 10^12 files); span 2048 is the batch-throughput
-            # geometry a production corpus uses (measured: 64 tiny buckets
-            # on this 5k-doc corpus tripled per-(query,bucket) overhead in
-            # the batch path).  The reordering study runs on a separate
-            # bucket-granular index below — a real corpus has BOTH (10^5+
-            # buckets of span 2048); this tiny corpus cannot, so the two
-            # regimes are measured on two geometries, each documented.
-            blocks = build_block_index(persisted, st["avg_doc_len"], bucket_span=2048)
-            blocks.write.mode("overwrite").parquet(f"{tmp}/postings_index")
-            lexicon(persisted).write.mode("overwrite").parquet(f"{tmp}/lexicon")
-            doc_table(docs, persisted).write.mode("overwrite").parquet(f"{tmp}/doc_table")
-            return st
-
-        st = timed("index_build", build)
-
-        blocks = spark.read.parquet(f"{tmp}/postings_index")
-        lex = spark.read.parquet(f"{tmp}/lexicon").select("term", "df")
+        blocks = index["blocks"].df
+        lex = index["lexicon"].df.select("term", "df")
+        postings = index["postings"].df
 
         # --- query phases over the persisted compressed index --------------
         # list-form qterms: query batches originate driver-side, so the
@@ -196,9 +178,7 @@ def main() -> None:
         # ~64 buckets, the geometry a real corpus's doc-range structure
         # actually exposes to bound skipping.
         gspan = max(64, n_docs // 64)
-        gblocks = build_block_index(
-            spark.read.parquet(f"{tmp}/postings"), st["avg_doc_len"], bucket_span=gspan
-        ).cache()
+        gblocks = build_block_index(postings, st["avg_doc_len"], bucket_span=gspan).cache()
         gblocks.count()
 
         # document reordering A/B: the same corpus indexed with the driver's
@@ -274,7 +254,6 @@ def main() -> None:
         }
 
         # exhaustive (uncompressed) path for comparison
-        postings = spark.read.parquet(f"{tmp}/postings")
         timed(
             "exhaustive_topk_all",
             lambda: topk(postings, lex, qt, st["n_docs"], st["avg_doc_len"]).count(),

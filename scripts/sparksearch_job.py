@@ -12,11 +12,11 @@ Ship the library alongside this script (from the repository root):
 
 On a cluster, drop the ``--master`` default (inherits the cluster manager)
 and point --input at the parquet corpus table (repo, path, commit, lang,
-content).  Documents get length-ordered ids
-(``corpus.length_ordered_documents``), like every other build; a driver
-testdata directory keeps its own ids.  The build is resumable: rerunning
-the same command against the same --output resumes from committed stage
-manifests (sparksearch.checkpoint).
+content).  ``build`` runs ``checkpoint.build_index``, which gives every
+input length-ordered ids (``corpus.length_ordered_documents``); a driver
+testdata directory is read as its corpus columns, so its own ids are not
+kept.  The build is resumable: rerunning the same command against the same
+--output resumes from committed stage manifests without an id pass.
 
 Subcommands:
   build   corpus -> documents/postings/lexicon/doc_table/blocks snapshots
@@ -48,30 +48,22 @@ def _spark(args):
 
 
 def _load_corpus(spark, spec: str):
-    from sparksearch.corpus import (
-        CORPUS_SCHEMA,
-        documents_from_testdata,
-        length_ordered_documents,
-        synthetic_corpus,
-    )
+    """The corpus table (repo, path, commit, lang, content) --input names."""
+    from sparksearch.corpus import CORPUS_SCHEMA, documents_from_testdata, synthetic_corpus
 
     if spec.startswith("synthetic:"):
-        n = int(spec.split(":", 1)[1])
-        return length_ordered_documents(synthetic_corpus(spark, n, seed=42))
+        return synthetic_corpus(spark, int(spec.split(":", 1)[1]), seed=42)
     if spec.endswith("documents.parquet") or "testdata" in spec:
-        return documents_from_testdata(spark, spec.rstrip("/").removesuffix("/documents.parquet"))
-    # a corpus table: (repo, path, commit, lang, content)
-    return length_ordered_documents(spark.read.parquet(spec).select(*CORPUS_SCHEMA.names))
+        sf_dir = spec.rstrip("/").removesuffix("/documents.parquet")
+        return documents_from_testdata(spark, sf_dir).select(*CORPUS_SCHEMA.names)
+    return spark.read.schema(CORPUS_SCHEMA).parquet(spec)
 
 
 def cmd_build(args) -> dict:
-    from sparksearch.checkpoint import build_index_checkpointed
+    from sparksearch.checkpoint import build_index
 
     spark = _spark(args)
-    docs = _load_corpus(spark, args.input)
-    out = build_index_checkpointed(
-        spark, docs, args.output, bucket_span=args.bucket_span
-    )
+    out = build_index(spark, _load_corpus(spark, args.input), args.output, args.bucket_span)
     summary = {
         s: {
             "rows": r.manifest["row_count"],

@@ -1,31 +1,28 @@
-"""Stage checkpointing with per-file lineage + metrics (north_star:
+"""Resumable stage checkpointing with per-file lineage + metrics (north_star:
 "resumable from Iceberg snapshot checkpoints with per-partition lineage and
 metrics (docs indexed, postings emitted, bytes compressed)").
 
 The reference resumes via compile-time IS_* stage flags over persisted
-intermediate files (hw3/config.h:66-75, hw3/main.cpp:6-66).  Our distributed
-analog: every pipeline stage lands in a parquet snapshot directory with a
-JSON *manifest* recording
-
-* ``stage``, ``lineage`` (upstream stage names + their manifest fingerprints),
-* ``row_count``, a content ``data_hash`` and stage ``metrics`` (docs indexed,
-  postings emitted, bytes compressed), observed by the write job itself, so
-  each stage's plan is evaluated once and never re-read,
-* ``files``: each data file a write task produced, with its record count
-  (parquet footer) and size on disk, read on the driver with no Spark job —
-  an Iceberg manifest's ``record_count`` / ``file_size_in_bytes``,
-* wall time and a fingerprint over lineage, row count and data hash.
+intermediate files (hw3/config.h:66-75, hw3/main.cpp:6-66).  Here every
+stage lands in a parquet snapshot directory with a JSON *manifest*: its
+``lineage`` (upstream stage fingerprints), the ``row_count``, content
+``data_hash`` and ``metrics`` its write job observed (so each stage's plan
+is evaluated once and never re-read), a root stage's ``source_hash``, its
+``schema`` (so reopening infers nothing), and its ``files``: each data
+file's parquet-footer record count and size on disk, read on the driver
+with no Spark job (an Iceberg manifest's ``record_count`` /
+``file_size_in_bytes``).
 
 ``run_stage`` is idempotent: a stage whose committed manifest matches its
-lineage is *skipped* and its snapshot read back — the resume path (kill the
-job between stages, rerun the same driver, finished stages replay from
-disk).  Manifest writes are write-temp-then-rename so a killed write never
-looks committed.
+lineage is skipped and its snapshot reopened — kill the job between stages,
+rerun the same driver, and finished stages replay from disk.  Manifests are
+written temp-then-rename, so a killed write never looks committed.
+:func:`build_index` is the index build as such stages.
 
 On a real cluster the same abstraction binds to an Iceberg catalog
 (``writeTo(...).createOrReplace()`` + snapshot ids); parquet + manifest is
-the jar-free stand-in, and the manifest keeps an append-only ``snapshots``
-list like Iceberg's metadata chain.
+the jar-free stand-in, with an append-only ``snapshots`` list like
+Iceberg's metadata chain.
 """
 
 from __future__ import annotations
@@ -40,38 +37,40 @@ from typing import Callable
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _fingerprint(obj) -> str:
     return hashlib.sha256(json.dumps(obj, sort_keys=True, default=str).encode()).hexdigest()[:16]
 
 
-def _content_aggs(df: DataFrame) -> list[Column]:
-    """Row count, bit-XOR and decimal SUM of a 60-bit hash of each row."""
+def _content_aggs(columns: list[str], tag: str = "") -> list[Column]:
+    """Row count, bit-XOR and decimal SUM of a 60-bit hash of each row's
+    ``columns``; ``tag`` keeps two sets apart in one aggregate."""
     from .analysis import md5_hash60
 
-    h = md5_hash60(F.to_json(F.struct(*[F.col(c) for c in df.columns])))
+    h = md5_hash60(F.to_json(F.struct(*[F.col(c) for c in columns])))
     return [
-        F.count(F.lit(1)).alias("__rows"),
-        F.bit_xor(h).alias("__xor"),
-        F.sum(h.cast("decimal(38,0)")).alias("__sum"),
+        F.count(F.lit(1)).alias(f"__rows{tag}"),
+        F.bit_xor(h).alias(f"__xor{tag}"),
+        F.sum(h.cast("decimal(38,0)")).alias(f"__sum{tag}"),
     ]
 
 
-def _content_hash(m: dict) -> str:
-    s = int(m["__sum"] or 0) % (1 << 63)
-    return f"{int(m['__rows'])}:{int(m['__xor'] or 0):x}:{s:x}"
+def _content_hash(m: dict, tag: str = "") -> str:
+    s = int(m[f"__sum{tag}"] or 0) % (1 << 63)
+    return f"{int(m[f'__rows{tag}'])}:{int(m[f'__xor{tag}'] or 0):x}:{s:x}"
 
 
 def dataframe_fingerprint(df: DataFrame) -> str:
     """Order-independent content fingerprint of a DataFrame: row count +
     bit-XOR + SUM of a 60-bit hash of every row's JSON (one aggregate,
     partitioning-independent) — the ``data_hash`` ``run_stage`` observes
-    while writing the same rows, so it is the root stage's resume check.
+    while writing the same rows, and a root stage's check of its source.
     XOR alone cancels on even-multiplicity changes (swap one identical-row
     pair for another — ADVICE r2); the sum breaks that symmetry.  It sums in
     decimal(38,0) (n*2^60 overflows long at ~8 rows), reduced mod 2^63."""
-    return _content_hash(df.agg(*_content_aggs(df)).collect()[0].asDict())
+    return _content_hash(df.agg(*_content_aggs(df.columns)).collect()[0].asDict())
 
 
 @dataclass
@@ -108,22 +107,24 @@ class CheckpointManager:
         self,
         stage: str,
         build: Callable[[], DataFrame],
-        inputs: list[str] | None = None,
+        inputs: list[str] | DataFrame | None = None,
         metric_cols: dict[str, str] | None = None,
         params: dict | None = None,
     ) -> StageResult:
         """Build-or-resume one stage; a build evaluates ``build()`` once.
 
-        ``inputs``: upstream stage names; their manifest fingerprints become
-        this stage's lineage key — if any upstream changed, this stage
-        reruns.  A root stage (no ``inputs``) resumes only if its committed
-        ``data_hash`` also equals ``dataframe_fingerprint(build())``; with no
-        committed manifest no fingerprint pass runs.  ``metric_cols``:
-        {metric_name: aggregate SQL expr}, stage totals observed during the
-        write (e.g. {"bytes_compressed": "sum(length(payload))"}; Spark
-        rejects DISTINCT aggregates there).
+        ``inputs`` is what the stage derives from.  Upstream stage names:
+        their manifest fingerprints are its lineage, so it reruns when one
+        changed.  A source DataFrame (a root stage): ``build()`` must keep the
+        source's rows and columns (it may add columns); the write observes
+        their content hash as ``source_hash``, and a resume compares it with
+        ``dataframe_fingerprint(source)`` without calling ``build()``.
+        Neither: there is nothing to check, so the stage always rebuilds.
+        ``metric_cols``: {name: aggregate SQL expr}, stage totals observed
+        during the write (e.g. {"bytes_compressed": "sum(length(payload))"};
+        Spark rejects DISTINCT aggregates there).
         """
-        inputs = inputs or []
+        source, inputs = (inputs, []) if isinstance(inputs, DataFrame) else (None, inputs or [])
         lineage = {}
         for up in inputs:
             m = self.load_manifest(up)
@@ -132,21 +133,21 @@ class CheckpointManager:
             lineage[up] = m["fingerprint"]
         key = _fingerprint({"stage": stage, "lineage": lineage, "params": params or {}})
 
-        data_path = self._data_path(stage)
-        existing = self.load_manifest(stage)
-        if (
-            existing is not None
-            and existing.get("lineage_key") == key
-            and (inputs or existing["data_hash"] == dataframe_fingerprint(build()))
+        existing = self.load_manifest(stage) or {}
+        if existing.get("lineage_key") == key and (
+            inputs if source is None else existing.get("source_hash") == dataframe_fingerprint(source)
         ):
-            df = self.spark.read.parquet(data_path)
-            return StageResult(stage, data_path, existing, resumed=True, df=df)
+            return self._open(stage, existing, resumed=True)
 
         t0, obs = time.time(), Observation()
         metric_cols = metric_cols or {}
-        metrics = [F.expr(e).alias(n) for n, e in metric_cols.items()]
         df = build()
-        df.observe(obs, *_content_aggs(df), *metrics).write.parquet(data_path, mode="overwrite")
+        aggs = _content_aggs(df.columns)
+        if source is not None:
+            aggs += _content_aggs(source.columns, "_src")
+        metrics = [F.expr(e).alias(n) for n, e in metric_cols.items()]
+        data_path = self._data_path(stage)
+        df.observe(obs, *aggs, *metrics).write.parquet(data_path, mode="overwrite")
         m = obs.get
         files = [
             {"file": f.name, "rows": pq.read_metadata(f.path).num_rows, "bytes": f.stat().st_size}
@@ -161,17 +162,18 @@ class CheckpointManager:
             "params": params or {},
             "row_count": int(m["__rows"]),
             "data_hash": _content_hash(m),
+            "source_hash": None if source is None else _content_hash(m, "_src"),
+            "schema": df.schema.jsonValue(),
             "metrics": {n: m[n] for n in metric_cols},
             "files": files,
             "wall_sec": round(time.time() - t0, 3),
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         manifest["fingerprint"] = _fingerprint(
-            {k: manifest[k] for k in ("stage", "lineage_key", "row_count", "data_hash")}
+            {k: manifest[k] for k in ("stage", "lineage_key", "row_count", "data_hash", "schema")}
         )
         # append-only snapshot history (Iceberg metadata-chain analog)
-        prev = existing.get("snapshots", []) if existing else []
-        manifest["snapshots"] = prev + [
+        manifest["snapshots"] = existing.get("snapshots", []) + [
             {"fingerprint": manifest["fingerprint"], "committed_at": manifest["committed_at"]}
         ]
         mp = self._manifest_path(stage)
@@ -179,58 +181,65 @@ class CheckpointManager:
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, mp)  # atomic commit: kill mid-write never corrupts
-        df = self.spark.read.parquet(data_path)
-        return StageResult(stage, data_path, manifest, resumed=False, df=df)
+        return self._open(stage, manifest, resumed=False)
+
+    def _open(self, stage: str, manifest: dict, resumed: bool) -> StageResult:
+        path = self._data_path(stage)
+        df = self.spark.read.schema(T.StructType.fromJson(manifest["schema"])).parquet(path)
+        return StageResult(stage, path, manifest, resumed, df)
 
 
-def build_index_checkpointed(
-    spark: SparkSession, documents: DataFrame, base_dir: str, bucket_span: int | None = None
+def build_index(
+    spark: SparkSession, corpus: DataFrame, out: str, bucket_span: int = 2048
 ) -> dict[str, StageResult]:
-    """The full index build as resumable stages:
-    documents → postings → (doc_table, lexicon, blocks).
-
-    Metrics per north_star: docs indexed, postings emitted, bytes
-    compressed — observed by each stage's write into its manifest.  avgdl
-    for the block bounds is the documents stage's observed chars / rows, so
-    no separate stats job runs.
-    """
+    """The index build from a corpus table (repo, path, commit, lang,
+    content), as resumable stages under ``out``: documents (length-ordered
+    ids, ``corpus.length_ordered_documents``) → postings → (doc_table,
+    lexicon, blocks).  The documents stage is rooted at the corpus, so a
+    resume checks ``dataframe_fingerprint(corpus)`` and runs no id pass.
+    Each write observes its stage's metrics (docs indexed, postings emitted,
+    bytes compressed); N is the documents ``row_count`` and the blocks'
+    avgdl its observed chars / rows, so no stats job runs."""
     from .blocks import build_block_index
+    from .corpus import CORPUS_SCHEMA, length_ordered_documents
     from .stats import doc_table, lexicon
     from .tokenize import postings_from_documents
 
-    cp = CheckpointManager(spark, base_dir)
-    out: dict[str, StageResult] = {}
+    corpus = corpus.select(*CORPUS_SCHEMA.names)
+    cp = CheckpointManager(spark, out)
+    stages: dict[str, StageResult] = {}
 
-    out["documents"] = cp.run_stage(
+    stages["documents"] = cp.run_stage(
         "documents",
-        lambda: documents,
+        lambda: length_ordered_documents(corpus),
+        inputs=corpus,
         metric_cols={"docs_indexed": "count(*)", "chars": "sum(doc_len)"},
     )
-    docs = out["documents"].df
-    dm = out["documents"].manifest
+    docs = stages["documents"].df
+    dm = stages["documents"].manifest
     avg_doc_len = dm["metrics"]["chars"] / dm["row_count"]
 
-    out["postings"] = cp.run_stage(
+    stages["postings"] = cp.run_stage(
         "postings",
         lambda: postings_from_documents(docs),
         inputs=["documents"],
         metric_cols={"postings_emitted": "count(*)"},
     )
-    postings = out["postings"].df
+    postings = stages["postings"].df
 
-    out["doc_table"] = cp.run_stage(
+    stages["doc_table"] = cp.run_stage(
         "doc_table",
         lambda: doc_table(docs, postings),
         inputs=["documents", "postings"],
         metric_cols={"docs_indexed": "count(*)"},
     )
-    out["lexicon"] = cp.run_stage(
+    stages["lexicon"] = cp.run_stage(
         "lexicon",
         lambda: lexicon(postings),
         inputs=["postings"],
         metric_cols={"terms": "count(*)", "postings_emitted": "sum(df)"},
     )
-    out["blocks"] = cp.run_stage(
+    stages["blocks"] = cp.run_stage(
         "blocks",
         lambda: build_block_index(postings, avg_doc_len, bucket_span=bucket_span),
         inputs=["postings"],
@@ -240,4 +249,4 @@ def build_index_checkpointed(
             "bytes_compressed": "sum(length(payload))",
         },
     )
-    return out
+    return stages

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .blocks import build_block_index, decode_block_index, lexicon_from_blocks
-from .corpus import documents_from_corpus
+from .corpus import CORPUS_SCHEMA, documents_from_corpus
 from .tokenize import postings_from_documents
 
 DEFAULT_BUCKET_SPAN = 1 << 14
@@ -108,7 +108,6 @@ def ingest_batch(
     batch_id: int,
     index_dir: str,
     bucket_span: int = DEFAULT_BUCKET_SPAN,
-    avg_doc_len_hint: float | None = None,
 ) -> None:
     """Index one micro-batch exactly-once (idempotent under foreachBatch
     redelivery).  Commit protocol: stage both tables, atomic-rename docs
@@ -137,15 +136,12 @@ def ingest_batch(
     docs = documents_from_corpus(batch_df).withColumn(
         "doc_id", F.col("doc_id") + F.lit(offset)
     ).localCheckpoint(eager=True)
-    n = docs.count()
-
-    hint = state.get("avg_doc_len_hint") or avg_doc_len_hint
-    if hint is None:
-        hint = float(docs.agg(F.avg("doc_len").alias("a")).collect()[0]["a"] or 1.0)
-    state["avg_doc_len_hint"] = float(hint)
+    row = docs.agg(F.count("*").alias("n"), F.avg("doc_len").alias("a")).collect()[0]
+    n, hint = int(row["n"]), float(state.get("avg_doc_len_hint") or row["a"] or 1.0)
+    state["avg_doc_len_hint"] = hint
 
     postings = postings_from_documents(docs)
-    blocks = build_block_index(postings, float(hint), bucket_span=bucket_span)
+    blocks = build_block_index(postings, hint, bucket_span=bucket_span)
 
     docs_stage, blocks_stage = docs_dir + "__stage", blocks_dir + "__stage"
     shutil.rmtree(docs_stage, ignore_errors=True)
@@ -158,7 +154,7 @@ def ingest_batch(
                 "offset": offset,
                 "n_docs": n,
                 "batch_id": batch_id,
-                "avg_doc_len_hint": float(hint),
+                "avg_doc_len_hint": hint,
             },
             f,
         )
@@ -187,28 +183,26 @@ def run_incremental_index(
     index_dir: str,
     bucket_span: int = DEFAULT_BUCKET_SPAN,
     available_now: bool = True,
-    avg_doc_len_hint: float | None = None,
     max_files_per_trigger: int = 4,
 ) -> None:
     """Consume corpus parquet files arriving in ``input_dir``
     (repo, path, commit, lang, content) and maintain an appendable blocked
     index + documents table under ``index_dir``.
 
-    BM25 normalization policy: the index pins ``avg_doc_len`` once (first
-    batch, or the caller's hint) and stores it in the stream state; all
+    BM25 normalization policy: the index pins ``avg_doc_len`` once (the
+    first batch's mean) and stores it in the stream state; all
     block max/min tf_norm bounds AND query-time scoring use that pinned
     constant, so the bounds stay sound as the collection grows.  This is
     the reference's own policy — it scores with compile-time DOC_AVG_LEN
     (hw3/config.h:60).  Re-pinning is a compaction-time rewrite.
     """
     os.makedirs(index_dir, exist_ok=True)
-    corpus_schema = "repo string, path string, commit string, lang string, content string"
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_batch(batch_df, batch_id, index_dir, bucket_span, avg_doc_len_hint)
+        ingest_batch(batch_df, batch_id, index_dir, bucket_span)
 
     reader = (
-        spark.readStream.schema(corpus_schema)
+        spark.readStream.schema(CORPUS_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(input_dir)
     )
@@ -227,12 +221,11 @@ def compact_index(
     spark: SparkSession,
     index_dir: str,
     bucket_span: int = DEFAULT_BUCKET_SPAN,
-    repin_avg_doc_len: bool = True,
 ) -> dict:
     """Offline compaction: decode all blocks, re-encode with uniform
-    doc-range bucketing, and optionally re-pin ``avg_doc_len`` to the
-    current collection mean (tightening block-max bounds drifted by
-    growth).  Atomic swap: new blocks land in a staging dir, then replace.
+    doc-range bucketing, and re-pin ``avg_doc_len`` to the current
+    collection mean (tightening block-max bounds drifted by growth).
+    Atomic swap: new blocks land in a staging dir, then replace.
 
     Many tiny per-micro-batch buckets → few uniform buckets: the
     streaming-ingest analog of the reference's pairwise run merge
@@ -244,10 +237,7 @@ def compact_index(
     blocks = _read_parts(spark, os.path.join(index_dir, "blocks"))
     state = _load_state(index_dir)
 
-    if repin_avg_doc_len:
-        avg_dl = float(docs.agg(F.avg("doc_len").alias("a")).collect()[0]["a"])
-    else:
-        avg_dl = float(state.get("avg_doc_len_hint") or 1.0)
+    avg_dl = float(docs.agg(F.avg("doc_len").alias("a")).collect()[0]["a"])
 
     postings = decode_block_index(blocks)
     new_blocks = build_block_index(postings, avg_dl, bucket_span=bucket_span)

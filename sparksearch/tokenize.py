@@ -77,12 +77,12 @@ def tokenize_text_literal(text: str) -> list[str]:
     return out
 
 
-def postings_from_documents(documents: DataFrame, text_col: str = "content") -> DataFrame:
+def postings_from_documents(documents: DataFrame) -> DataFrame:
     """(doc_id, term, tf, doc_len): the default tokenize plan — per-doc
     ARRAY output across Arrow + JVM-side codegen'd explode (see module
     docstring; ~21% faster than the posting-rows variant, reproduced in
     interleaved A/B rounds)."""
-    src = documents.select("doc_id", F.col(text_col).alias("content"), "doc_len")
+    src = documents.select("doc_id", "content", "doc_len")
     arr_schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType(), False),
@@ -125,7 +125,7 @@ def postings_from_documents(documents: DataFrame, text_col: str = "content") -> 
     )
 
 
-def postings_sql_plan(documents: DataFrame, text_col: str = "content") -> DataFrame:
+def postings_sql_plan(documents: DataFrame) -> DataFrame:
     """Same result via pure Catalyst built-ins (JVM-side, codegen'd).
 
     One shuffle on (doc_id, term) with map-side partial aggregation; used as an
@@ -135,7 +135,7 @@ def postings_sql_plan(documents: DataFrame, text_col: str = "content") -> DataFr
         documents.select(
             "doc_id",
             "doc_len",
-            F.explode(F.split(F.col(text_col), SEPARATOR_REGEX)).alias("term"),
+            F.explode(F.split("content", SEPARATOR_REGEX)).alias("term"),
         )
         .filter(F.length("term") > 0)
         .groupBy("doc_id", "term")

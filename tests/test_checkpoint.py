@@ -1,4 +1,4 @@
-"""Resume semantics + lineage metrics for the checkpointed index build."""
+"""Resume semantics + lineage metrics for the resumable index build."""
 
 from __future__ import annotations
 
@@ -8,20 +8,29 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sparksearch.checkpoint import CheckpointManager, build_index_checkpointed  # noqa: E402
-from sparksearch.corpus import documents_from_testdata  # noqa: E402
+from sparksearch.checkpoint import CheckpointManager, build_index  # noqa: E402
+from sparksearch.corpus import (  # noqa: E402
+    CORPUS_SCHEMA,
+    documents_from_testdata,
+    length_ordered_documents,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata/sf0.001")
 
 
+def _corpus(spark):
+    """The testdata as a corpus table (repo, path, commit, lang, content)."""
+    return documents_from_testdata(spark, SF_DIR).select(*CORPUS_SCHEMA.names)
+
+
 def test_full_build_then_resume(spark, tmp_path):
     base = str(tmp_path / "ckpt")
-    docs = documents_from_testdata(spark, SF_DIR)
+    corpus = _corpus(spark)
 
-    out1 = build_index_checkpointed(spark, docs, base)
+    out1 = build_index(spark, corpus, base)
     assert not any(r.resumed for r in out1.values())
     n_docs = out1["documents"].manifest["row_count"]
-    assert n_docs == docs.count()
+    assert n_docs == corpus.count()
 
     # per-file lineage and observed stage metrics present and consistent
     pm = out1["postings"].manifest
@@ -34,61 +43,63 @@ def test_full_build_then_resume(spark, tmp_path):
     assert sum(f["rows"] for f in bm["files"]) == bm["row_count"]
     assert bm["lineage"]["postings"] == pm["fingerprint"]
 
-    # second driver run = resume: every stage skips and replays from disk
-    out2 = build_index_checkpointed(spark, docs, base)
+    # second driver run = resume: every stage skips and replays from disk,
+    # reopened with the schema its manifest recorded
+    out2 = build_index(spark, corpus, base)
     assert all(r.resumed for r in out2.values())
     assert out2["blocks"].df.count() == out1["blocks"].df.count()
+    for stage, r in out2.items():
+        assert r.df.schema == spark.read.parquet(r.path).schema, stage
 
 
 def test_param_change_invalidates(spark, tmp_path):
     base = str(tmp_path / "ckpt2")
-    docs = documents_from_testdata(spark, SF_DIR)
-    out1 = build_index_checkpointed(spark, docs, base)
+    corpus = _corpus(spark)
+    build_index(spark, corpus, base)
     # changing a build param must rerun the dependent stage only
-    out2 = build_index_checkpointed(spark, docs, base, bucket_span=64)
+    out2 = build_index(spark, corpus, base, bucket_span=64)
     assert out2["postings"].resumed
     assert not out2["blocks"].resumed
     assert out2["blocks"].manifest["params"]["bucket_span"] == 64
 
 
 def test_input_change_invalidates_root_and_downstream(spark, tmp_path):
-    """Rerunning with DIFFERENT input data must rebuild from the root —
-    even when the row count happens to be unchanged (the data_hash in the
-    manifest fingerprint invalidates downstream stages)."""
+    """The documents stage is rooted at the corpus: the same rows in another
+    partitioning resume every stage, while different content rebuilds from
+    the root — even when the row count happens to be unchanged (the
+    data_hash in the manifest fingerprint invalidates downstream stages)."""
     from pyspark.sql import functions as F
 
     base = str(tmp_path / "ckpt4")
-    docs = documents_from_testdata(spark, SF_DIR)
-    out1 = build_index_checkpointed(spark, docs, base)
+    corpus = _corpus(spark)
+    out1 = build_index(spark, corpus, base)
     assert not any(r.resumed for r in out1.values())
 
+    out2 = build_index(spark, corpus.repartition(3), base)
+    assert all(r.resumed for r in out2.values())
+
     # same row count, different content
-    docs2 = docs.withColumn(
-        "content", F.concat(F.col("content"), F.lit(" changed"))
-    ).withColumn("content_sha256", F.sha2(F.col("content"), 256)).withColumn(
-        "doc_len", F.length("content").cast("long")
-    )
-    out2 = build_index_checkpointed(spark, docs2, base)
-    assert not out2["documents"].resumed  # root input fingerprint changed
-    assert not out2["postings"].resumed   # data_hash chain invalidated
-    assert not out2["blocks"].resumed
-    assert out2["documents"].manifest["row_count"] == out1["documents"].manifest["row_count"]
-    assert out2["documents"].manifest["data_hash"] != out1["documents"].manifest["data_hash"]
+    changed = corpus.withColumn("content", F.concat(F.col("content"), F.lit(" changed")))
+    out3 = build_index(spark, changed, base)
+    assert not any(r.resumed for r in out3.values())
+    assert out3["documents"].manifest["row_count"] == out1["documents"].manifest["row_count"]
+    assert out3["documents"].manifest["data_hash"] != out1["documents"].manifest["data_hash"]
 
 
 def test_partial_crash_resume(spark, tmp_path):
     """Simulate a crash between stages: only stages with committed
     manifests resume; the rest rebuild."""
     base = str(tmp_path / "ckpt3")
-    docs = documents_from_testdata(spark, SF_DIR)
+    corpus = _corpus(spark)
     cp = CheckpointManager(spark, base)
     cp.run_stage(
         "documents",
-        lambda: docs,
+        lambda: length_ordered_documents(corpus),
+        inputs=corpus,
         metric_cols={"docs_indexed": "count(*)", "chars": "sum(doc_len)"},
     )
     # "crash" here — postings never ran.  New driver:
-    out = build_index_checkpointed(spark, docs, base)
+    out = build_index(spark, corpus, base)
     assert out["documents"].resumed
     assert not out["postings"].resumed
 
@@ -120,17 +131,25 @@ def test_fingerprint_even_multiplicity(spark, tmp_path):
     assert (ma["data_hash"], mb["data_hash"]) == (fa, fb)
 
 
-def test_checkpointed_build_evaluates_once(spark, tmp_path):
-    """A fresh checkpointed build launches no more Spark jobs than writing
-    the same five stages plainly plus one ``collection_stats``: each stage's
-    plan runs once, its manifest comes from the write's observed metrics,
-    and the blocks' avgdl is the documents stage's observed one."""
-    from sparksearch.blocks import build_block_index
-    from sparksearch.stats import collection_stats, doc_table, lexicon
-    from sparksearch.tokenize import postings_from_documents
+def test_checkpointed_build_evaluates_once(spark, tmp_path, monkeypatch):
+    """On sf0.001 a fresh ``build_index`` launches at most 15 Spark jobs:
+    the id pass's eager jobs, then each stage's plan runs once, its manifest
+    comes from the write's observed metrics and it is reopened with its
+    recorded schema (no inference job).  A full resume launches no more
+    jobs than one ``dataframe_fingerprint(corpus)`` and runs no id pass."""
+    import sparksearch.corpus as corpus_mod
+    from sparksearch.checkpoint import dataframe_fingerprint
+    from sparksearch.stats import collection_stats
 
+    id_passes = []
+    assign_dense_ids = corpus_mod.assign_dense_ids
+    monkeypatch.setattr(
+        corpus_mod,
+        "assign_dense_ids",
+        lambda *a, **kw: id_passes.append(1) or assign_dense_ids(*a, **kw),
+    )
     sc = spark.sparkContext
-    docs = documents_from_testdata(spark, SF_DIR)
+    corpus = _corpus(spark)
 
     def n_jobs(group, fn):
         group = f"{group}-{tmp_path.name}"
@@ -141,22 +160,34 @@ def test_checkpointed_build_evaluates_once(spark, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    def write(name, df):
-        path = str(tmp_path / "plain" / name)
-        df.write.parquet(path)
-        return spark.read.parquet(path)
-
-    def plain():
-        d = write("documents", docs)
-        p = write("postings", postings_from_documents(d))
-        st = collection_stats(d)
-        write("doc_table", doc_table(d, p))
-        write("lexicon", lexicon(p))
-        write("blocks", build_block_index(p, st["avg_doc_len"]))
-
     out = {}
     base = str(tmp_path / "ckpt")
-    checkpointed = n_jobs("ckpt", lambda: out.update(build_index_checkpointed(spark, docs, base)))
+    fresh = n_jobs("fresh", lambda: out.update(build_index(spark, corpus, base)))
     assert not any(r.resumed for r in out.values())
-    assert checkpointed <= n_jobs("plain", plain)
+    assert fresh <= 15 and len(id_passes) == 1
+
+    resume = n_jobs("resume", lambda: out.update(build_index(spark, corpus, base)))
+    assert all(r.resumed for r in out.values())
+    assert len(id_passes) == 1
+    assert resume <= n_jobs("fingerprint", lambda: dataframe_fingerprint(corpus))
+    docs = out["documents"].df
     assert out["blocks"].manifest["params"]["avg_doc_len"] == collection_stats(docs)["avg_doc_len"]
+
+
+def test_build_index_layout_equals_layer_functions(spark, tmp_path):
+    """``build_index`` spells the length-ordered layout the layer functions
+    give: the same documents (hence doc ids, which the DuckDB lenordered
+    oracles depend on) and the same blocks."""
+    from sparksearch.blocks import build_block_index
+    from sparksearch.stats import collection_stats
+    from sparksearch.tokenize import postings_from_documents
+
+    corpus = _corpus(spark)
+    out = build_index(spark, corpus, str(tmp_path / "ckpt"))
+    docs = length_ordered_documents(corpus).cache()
+    avg_doc_len = collection_stats(docs)["avg_doc_len"]
+    blocks = build_block_index(postings_from_documents(docs), avg_doc_len, 2048)
+    for got, want in ((out["documents"].df, docs), (out["blocks"].df, blocks)):
+        assert got.columns == want.columns
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    docs.unpersist()
