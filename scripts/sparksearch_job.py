@@ -36,14 +36,15 @@ def _spark(args):
     # under spark-submit the session is preconfigured; only fill gaps.
     from pyspark.sql import SparkSession
 
+    from sparksearch.session import ENGINE_CONF
+
     b = SparkSession.builder.appName("sparksearch-job")
     if args.local_cores:
         b = b.master(f"local[{args.local_cores}]").config(
             "spark.sql.shuffle.partitions", str(args.local_cores * 2)
         )
-    b = b.config("spark.sql.adaptive.enabled", "true").config(
-        "spark.sql.execution.arrow.pyspark.enabled", "true"
-    )
+    for k, v in ENGINE_CONF.items():
+        b = b.config(k, v)
     return b.getOrCreate()
 
 
@@ -78,6 +79,7 @@ def cmd_build(args) -> dict:
 
 def cmd_query(args) -> None:
     from sparksearch.checkpoint import CheckpointManager
+    from sparksearch.codec import check_format
     from sparksearch.constants import TOP_K
     from sparksearch.query import query_term_rows
     from sparksearch.wand import wand_topk_batch
@@ -85,17 +87,19 @@ def cmd_query(args) -> None:
     spark = _spark(args)
     from pyspark.sql import functions as F
 
-    blocks = spark.read.parquet(f"{args.index}/blocks/data")
-    lex = spark.read.parquet(f"{args.index}/lexicon/data").select("term", "df")
-    doc_table = spark.read.parquet(f"{args.index}/doc_table/data")
-    # N and avgdl from the manifests, no aggregate job: avgdl is the constant
+    # each stage reopened with its manifest's schema (no inference job); N
+    # and avgdl from the manifests, no aggregate job: avgdl is the constant
     # the block bounds were built with
     cp = CheckpointManager(spark, args.index)
+    blocks = cp.open("blocks")
+    check_format(blocks.manifest["params"].get("codec_format"), blocks.path)
+    lex = cp.open("lexicon").df.select("term", "df")
+    doc_table = cp.open("doc_table").df
     n_docs = cp.load_manifest("documents")["row_count"]
-    avg_dl = cp.load_manifest("blocks")["params"]["avg_doc_len"]
+    avg_dl = blocks.manifest["params"]["avg_doc_len"]
 
     qt = query_term_rows([(0, args.query, args.mode)])
-    res = wand_topk_batch(blocks, lex, qt, n_docs, avg_dl, k=args.k or TOP_K)
+    res = wand_topk_batch(blocks.df, lex, qt, n_docs, avg_dl, k=args.k or TOP_K)
     out = (
         F.broadcast(res)
         .join(doc_table.select("doc_id", "repo", "path"), "doc_id")

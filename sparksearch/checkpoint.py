@@ -183,6 +183,14 @@ class CheckpointManager:
         os.replace(tmp, mp)  # atomic commit: kill mid-write never corrupts
         return self._open(stage, manifest, resumed=False)
 
+    def open(self, stage: str) -> StageResult:
+        """A committed stage, reopened with its manifest's recorded schema
+        (no schema-inference job)."""
+        manifest = self.load_manifest(stage)
+        if manifest is None:
+            raise ValueError(f"stage {stage} has no committed manifest")
+        return self._open(stage, manifest, resumed=True)
+
     def _open(self, stage: str, manifest: dict, resumed: bool) -> StageResult:
         path = self._data_path(stage)
         df = self.spark.read.schema(T.StructType.fromJson(manifest["schema"])).parquet(path)
@@ -201,6 +209,7 @@ def build_index(
     bytes compressed); N is the documents ``row_count`` and the blocks'
     avgdl its observed chars / rows, so no stats job runs."""
     from .blocks import build_block_index
+    from .codec import FORMAT
     from .corpus import CORPUS_SCHEMA, length_ordered_documents
     from .stats import doc_table, lexicon
     from .tokenize import postings_from_documents
@@ -243,7 +252,12 @@ def build_index(
         "blocks",
         lambda: build_block_index(postings, avg_doc_len, bucket_span=bucket_span),
         inputs=["postings"],
-        params={"avg_doc_len": avg_doc_len, "bucket_span": bucket_span},
+        # the codec format keys the stage: blocks of another layout rebuild
+        params={
+            "avg_doc_len": avg_doc_len,
+            "bucket_span": bucket_span,
+            "codec_format": FORMAT,
+        },
         metric_cols={
             "postings_emitted": "sum(n_postings)",
             "bytes_compressed": "sum(length(payload))",

@@ -18,15 +18,26 @@ hw3/DataLoader.cpp:4-26 decodeVarbyte, hw3/config.h:41-42):
   (hw3/Lexicon.cpp:167-189) — 12 bytes in the reference, 16 here
   (``CHUNK_META_BYTES``) because of the doc-length byte size field (see
   EXTENSIONS); payload interleaves per chunk: docID bytes then tf bytes
-  (hw3/Lexicon.cpp:191-209), then doc-length bytes.
+  (hw3/Lexicon.cpp:191-209), then doc-length bytes.  The doc-length
+  stream is coded like the docID stream: a chunk's first length is
+  absolute, each later one the delta from the previous posting's length,
+  zigzag-mapped (0,-1,1,-2 -> 0,1,2,3) since lengths may go down, then
+  varbyte; the base resets at every chunk, so chunks stay independently
+  decodable.
 
 EXTENSIONS over the reference (both documented design changes for the
 distributed engine, not accidents):
 
-* a third per-chunk stream of per-posting doc lengths (varbyte), so a block
-  is self-contained for exact BM25 scoring — the reference instead does O(1)
-  in-memory DocTable lookups per posting (hw3/DataLoader.cpp:307), which has
-  no cheap distributed equivalent inside the scoring kernel;
+* a third per-chunk stream of per-posting doc lengths, so a block is
+  self-contained for exact BM25 scoring — the reference's payload holds only
+  docID gaps and tfs and looks lengths up in its in-memory DocTable
+  (hw3/Lexicon.cpp:191-209, hw3/DataLoader.cpp:307), which has no cheap
+  distributed equivalent inside the scoring kernel; a term-filtered blocks
+  frame must also decode on its own.  Under length-ordered doc ids the
+  lengths of a posting list ascend with its docIDs, so almost every
+  length delta is small and >= 0 (one varbyte byte), and the parquet page
+  codec (zstd, ``session.ENGINE_CONF``) compresses the low-entropy stream
+  further;
 * per-block max/min of the idf-independent BM25 factor
   tf_norm = (k1+1)*tf/(K+tf) — multiplied by the term's idf at query time
   this gives the per-block score bound that the top-k kernel's θ-skipping
@@ -49,6 +60,22 @@ from .constants import (
 
 # per-chunk metadata cost: last_docID + 3 stream sizes, 4 bytes each
 CHUNK_META_BYTES = 16
+
+# payload layout version: 1 = raw doc lengths, 2 = per-chunk zigzag-delta
+# doc lengths.  Both decode without error, so every writer that persists
+# blocks records it (the blocks stage's manifest params, the stream state,
+# each streamed batch's _meta.json) and readers refuse another version.
+FORMAT = 2
+
+
+def check_format(found: int | None, where: str) -> None:
+    """Refuse blocks persisted in another payload layout; ``None`` (nothing
+    recorded) is format 1, written before the version was kept."""
+    if (found or 1) != FORMAT:
+        raise ValueError(
+            f"{where}: blocks are codec format {found or 1}, this code reads "
+            f"format {FORMAT}; rebuild the index"
+        )
 
 
 def varbyte_encode(values: np.ndarray) -> tuple[bytes, np.ndarray]:
@@ -98,6 +125,39 @@ def tf_norm(tfs: np.ndarray, doc_lens: np.ndarray, avg_doc_len: float) -> np.nda
     return (BM25_K1 + 1) * tf / (K + tf)
 
 
+def _chunk_deltas(values: np.ndarray, chunk_starts: np.ndarray) -> np.ndarray:
+    """Each value minus its predecessor, except a chunk's first value, which
+    stays absolute (the delta base resets to 0 at every chunk)."""
+    out = np.empty(len(values), np.int64)
+    out[0] = values[0]
+    out[1:] = np.diff(values)
+    out[chunk_starts] = values[chunk_starts]
+    return out
+
+
+def _zigzag(v: np.ndarray) -> np.ndarray:
+    """Signed -> unsigned, small magnitudes to small codes: 0,-1,1,-2 -> 0,1,2,3."""
+    return ((v << 1) ^ (v >> 63)).view(np.uint64)
+
+
+def _unzigzag(u: np.ndarray) -> np.ndarray:
+    """Inverse of :func:`_zigzag`."""
+    u = u.astype(np.int64)
+    return (u >> 1) ^ -(u & 1)
+
+
+def _undo_chunk_deltas(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Inverse of :func:`_chunk_deltas` on each row of ``deltas``, for chunks
+    of ``counts`` values: one prefix sum per row minus each chunk's base
+    (the row's sum before the chunk)."""
+    glob = np.cumsum(deltas, axis=-1)
+    if len(counts) == 1:
+        return glob
+    base = np.zeros(deltas.shape[:-1] + counts.shape, np.int64)
+    base[..., 1:] = glob[..., np.cumsum(counts)[:-1] - 1]
+    return glob - np.repeat(base, counts, axis=-1)
+
+
 @dataclass
 class EncodedBlock:
     block_id: int
@@ -125,14 +185,11 @@ def encode_postings(
     if n > 1 and (np.diff(doc_ids) <= 0).any():
         raise ValueError("doc_ids must be strictly ascending")  # the 'nooo' check, hw3/Lexicon.cpp:98-101
 
-    # delta-gap with reset per 64-posting chunk (hw3/Lexicon.cpp:103-112)
-    gaps = np.empty(n, np.int64)
-    gaps[0] = doc_ids[0]
-    gaps[1:] = np.diff(doc_ids)
+    # doc ids: delta-gap with reset per 64-posting chunk (hw3/Lexicon.cpp:103-112);
+    # doc lengths: zigzag delta with the same reset (they may go down)
     chunk_starts = np.arange(0, n, POSTINGS_PER_CHUNK)
-    gaps[chunk_starts] = doc_ids[chunk_starts]
-    gaps[0] = doc_ids[0]
-    # chunk starts after the first: gap base resets to 0 -> absolute docID
+    gaps = _chunk_deltas(doc_ids, chunk_starts)
+    dl_deltas = _chunk_deltas(np.asarray(doc_lens, np.int64), chunk_starts)
     norms = tf_norm(tfs, doc_lens, avg_doc_len)
 
     n_chunks = len(chunk_starts)
@@ -141,7 +198,7 @@ def encode_postings(
     # encode whole streams once, split per chunk by cumulative value sizes
     gap_buf, gap_nb = varbyte_encode(gaps)
     tf_buf, tf_nb = varbyte_encode(tfs)
-    dl_buf, dl_nb = varbyte_encode(doc_lens)
+    dl_buf, dl_nb = varbyte_encode(_zigzag(dl_deltas))
     gap_off = np.r_[0, np.cumsum(gap_nb)]
     tf_off = np.r_[0, np.cumsum(tf_nb)]
     dl_off = np.r_[0, np.cumsum(dl_nb)]
@@ -235,37 +292,33 @@ def decode_block(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """-> (doc_ids, tfs, doc_lens) for one block (all its chunks).
 
-    Fully vectorized: each of the three interleaved streams is gathered
-    into one contiguous buffer and varbyte-decoded ONCE for the whole
-    block (3 decode calls instead of 3 per chunk); the per-chunk delta
-    reset is undone with a global prefix sum minus per-chunk base
-    (hw3/DataLoader.cpp:580-585 is the sequential original)."""
-    d = np.asarray(docid_sizes, np.int64)
-    t = np.asarray(tf_sizes, np.int64)
-    l = np.asarray(dl_sizes, np.int64)
-    n_chunks = len(d)
-    if n_chunks == 0:
+    Fully vectorized: each chunk's three streams are adjacent and each
+    ends on a whole varbyte value, so the payload is varbyte-decoded ONCE
+    for the whole block (chunk k yields its counts[k] gaps, then tfs, then
+    length codes) and split by index arithmetic; the per-chunk delta reset
+    of the docID and doc-length streams is undone with a global prefix sum
+    minus per-chunk base (hw3/DataLoader.cpp:580-585 is the sequential
+    original)."""
+    sizes = (
+        np.asarray(docid_sizes, np.int64)
+        + np.asarray(tf_sizes, np.int64)
+        + np.asarray(dl_sizes, np.int64)
+    )
+    if len(sizes) == 0:
         z = np.zeros(0, np.int64)
         return z, z.copy(), z.copy()
-    buf = np.frombuffer(payload, np.uint8)
-    start, d_end, t_end, l_end = chunk_offsets(d, t, l)
-
-    def gather(starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
-        if n_chunks == 1:
-            return buf[int(starts[0]) : int(ends[0])]
-        return np.concatenate([buf[int(s) : int(e)] for s, e in zip(starts, ends)])
-
-    gap_bytes = gather(start, d_end)
-    gaps = varbyte_decode(gap_bytes).astype(np.int64)
-    tfs = varbyte_decode(gather(d_end, t_end)).astype(np.int64)
-    dls = varbyte_decode(gather(t_end, l_end)).astype(np.int64)
-
-    # values per chunk = varbyte group count per gathered docid slice
-    is_last = ((gap_bytes & 0x80) == 0).astype(np.int64)  # cast: bool reduceat clips at 1
-    slice_offsets = np.r_[0, np.cumsum(d)[:-1]]
-    counts = np.add.reduceat(is_last, slice_offsets)
-    ends = np.cumsum(counts)
-    glob = np.cumsum(gaps)
-    base = np.r_[0, glob[ends[:-1] - 1]] if n_chunks > 1 else np.zeros(1, np.int64)
-    doc_ids = glob - np.repeat(base, counts)
+    buf = np.frombuffer(payload, np.uint8)[: int(sizes.sum())]
+    vals = varbyte_decode(buf).astype(np.int64)
+    n = len(vals) // 3
+    if len(sizes) == 1:
+        counts = np.array([n])
+        gaps, tfs, dl_codes = vals.reshape(3, n)
+    else:
+        # chunk k holds 3 * counts[k] values: the varbyte groups ending in it
+        groups = np.cumsum((buf & 0x80) == 0)[np.cumsum(sizes) - 1]
+        counts = np.diff(groups, prepend=0) // 3
+        at = np.arange(n) + 2 * np.repeat(np.cumsum(counts) - counts, counts)
+        per = np.repeat(counts, counts)
+        gaps, tfs, dl_codes = vals[at], vals[at + per], vals[at + 2 * per]
+    doc_ids, dls = _undo_chunk_deltas(np.stack([gaps, _unzigzag(dl_codes)]), counts)
     return doc_ids, tfs, dls

@@ -4,6 +4,12 @@ Local-mode testing stands in for a multi-executor cluster: partitioning and
 shuffle behavior are identical modulo network transport, so every plan here is
 written as if 1000 executors were reading 100 TB (explicit shuffle-partition
 sizing, AQE on, broadcast thresholds, Arrow enabled for the pandas-UDF stages).
+
+``ENGINE_CONF`` holds the settings every session of the engine needs,
+including the spark-submit script's own.  Parquet writes use zstd rather
+than Spark's default snappy: the blocks' delta-coded doc-id and doc-length
+streams are low-entropy bytes that zstd compresses and snappy barely does
+(zstd takes a third off the blocks table).
 """
 
 from __future__ import annotations
@@ -23,6 +29,23 @@ _WORKER_THREAD_PINS = {
     "MKL_NUM_THREADS": "1",
     "NUMEXPR_NUM_THREADS": "1",
     "VECLIB_MAXIMUM_THREADS": "1",
+}
+
+# Engine-wide settings, applied by get_spark and by the spark-submit
+# script's own session (scripts/sparksearch_job.py), so each is set once.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.parquet.compression.codec": "zstd",
+    # reuse Python workers across tasks: amortizes interpreter + numpy
+    # import cost and keeps the worker count stable at #cores instead of
+    # churning forks (true by default, pinned here so a deployment override
+    # cannot silently reintroduce fork churn)
+    "spark.python.worker.reuse": "true",
+    **{f"spark.executorEnv.{k}": v for k, v in _WORKER_THREAD_PINS.items()},
 }
 
 
@@ -46,24 +69,11 @@ def get_spark(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        # reuse Python workers across tasks: amortizes interpreter + numpy
-        # import cost and keeps the worker count stable at #cores instead
-        # of churning forks (true by default, pinned here so a deployment
-        # override cannot silently reintroduce fork churn)
-        .config("spark.python.worker.reuse", "true")
         .config("spark.driver.memory", os.environ.get("SPARKSEARCH_DRIVER_MEM", "8g"))
     )
-    for k, v in _WORKER_THREAD_PINS.items():
-        builder = builder.config(f"spark.executorEnv.{k}", v)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in {**ENGINE_CONF, **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     ship_package(spark)

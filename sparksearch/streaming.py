@@ -28,7 +28,10 @@ foreachBatch redelivery (crash anywhere before state save), a committed
 batch is detected by its blocks dir and only the stream state is
 repaired from the batch's ``_meta.json``; a half-committed batch (docs
 renamed, blocks missing) is discarded and rewritten.  Readers list both
-layouts with ``recursiveFileLookup``.
+layouts with ``recursiveFileLookup``.  The stream state and each batch's
+``_meta.json`` record the payload layout (``codec.FORMAT``); ingest,
+compaction and ``read_index`` refuse an index of another layout, so blocks
+of two layouts never mix in one index.
 
 Collection stats (N, avgdl) and the lexicon are maintained by cheap
 aggregations over the appended tables at read time — both are one
@@ -50,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .blocks import build_block_index, decode_block_index, lexicon_from_blocks
+from .codec import FORMAT, check_format
 from .corpus import CORPUS_SCHEMA, documents_from_corpus
 from .tokenize import postings_from_documents
 
@@ -65,7 +69,7 @@ def _load_state(index_dir: str) -> dict:
     if os.path.exists(p):
         with open(p) as f:
             return json.load(f)
-    return {"next_doc_id": 0, "batches": []}
+    return {"next_doc_id": 0, "batches": [], "codec_format": FORMAT}
 
 
 def _read_parts(spark: SparkSession, path: str) -> DataFrame:
@@ -94,6 +98,7 @@ def _repair_state_from_commit(index_dir: str, state: dict, batch_id: int, docs_d
     batch's _meta.json."""
     with open(os.path.join(docs_dir, "_meta.json")) as f:
         meta = json.load(f)
+    check_format(meta.get("codec_format"), f"{docs_dir}/_meta.json")
     state["next_doc_id"] = max(int(state["next_doc_id"]), meta["offset"] + meta["n_docs"])
     state["batches"].append(
         {"batch_id": batch_id, "n_docs": meta["n_docs"], "offset": meta["offset"]}
@@ -118,6 +123,7 @@ def ingest_batch(
     if batch_df.isEmpty():
         return
     state = _load_state(index_dir)
+    check_format(state.get("codec_format"), index_dir)  # no mixed layouts
     if str(batch_id) in {str(b["batch_id"]) for b in state["batches"]}:
         return  # replay of a fully recorded batch
     docs_dir, blocks_dir = _batch_dirs(index_dir, batch_id)
@@ -155,6 +161,7 @@ def ingest_batch(
                 "n_docs": n,
                 "batch_id": batch_id,
                 "avg_doc_len_hint": hint,
+                "codec_format": FORMAT,
             },
             f,
         )
@@ -233,9 +240,10 @@ def compact_index(
     """
     import shutil
 
+    state = _load_state(index_dir)
+    check_format(state.get("codec_format"), index_dir)
     docs = _read_parts(spark, os.path.join(index_dir, "documents"))
     blocks = _read_parts(spark, os.path.join(index_dir, "blocks"))
-    state = _load_state(index_dir)
 
     avg_dl = float(docs.agg(F.avg("doc_len").alias("a")).collect()[0]["a"])
 
@@ -270,13 +278,14 @@ def read_index(spark: SparkSession, index_dir: str):
     returned as ``stats["avg_doc_len_actual"]`` for monitoring/periodic
     re-pin + compaction.
     """
+    state = _load_state(index_dir)
+    check_format(state.get("codec_format"), index_dir)
     docs = _read_parts(spark, os.path.join(index_dir, "documents"))
     blocks = _read_parts(spark, os.path.join(index_dir, "blocks"))
     lex = lexicon_from_blocks(blocks).select("term", "df")
     row = docs.agg(
         F.count("*").alias("n_docs"), F.avg("doc_len").alias("avg_doc_len")
     ).collect()[0]
-    state = _load_state(index_dir)
     stats = {
         "n_docs": int(row["n_docs"]),
         "avg_doc_len": float(state.get("avg_doc_len_hint") or row["avg_doc_len"]),

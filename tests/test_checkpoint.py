@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
+
+import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -42,6 +45,9 @@ def test_full_build_then_resume(spark, tmp_path):
     assert bm["metrics"]["bytes_compressed"] > 0
     assert sum(f["rows"] for f in bm["files"]) == bm["row_count"]
     assert bm["lineage"]["postings"] == pm["fingerprint"]
+    # the test session (session.get_spark) writes zstd pages
+    meta = pq.read_metadata(sorted(glob.glob(f"{base}/blocks/data/*.parquet"))[0])
+    assert {meta.row_group(0).column(c).compression for c in range(meta.num_columns)} == {"ZSTD"}
 
     # second driver run = resume: every stage skips and replays from disk,
     # reopened with the schema its manifest recorded
@@ -61,6 +67,32 @@ def test_param_change_invalidates(spark, tmp_path):
     assert out2["postings"].resumed
     assert not out2["blocks"].resumed
     assert out2["blocks"].manifest["params"]["bucket_span"] == 64
+
+
+def test_blocks_of_another_codec_format_rebuild(spark, tmp_path):
+    """A blocks manifest written before the payload layout was recorded
+    (params without ``codec_format``: raw doc lengths) is rebuilt, never
+    reopened and decoded as delta-coded lengths."""
+    from sparksearch.checkpoint import _fingerprint
+    from sparksearch.codec import FORMAT
+
+    base = str(tmp_path / "ckpt5")
+    corpus = _corpus(spark)
+    build_index(spark, corpus, base)
+    mp = os.path.join(base, "blocks", "_MANIFEST.json")
+    with open(mp) as f:
+        m = json.load(f)
+    # the manifest as the earlier build committed it
+    del m["params"]["codec_format"]
+    old_key = {"stage": "blocks", "lineage": m["lineage"], "params": m["params"]}
+    m["lineage_key"] = _fingerprint(old_key)
+    with open(mp, "w") as f:
+        json.dump(m, f)
+
+    out = build_index(spark, corpus, base)
+    assert all(r.resumed for s, r in out.items() if s != "blocks")
+    assert not out["blocks"].resumed
+    assert out["blocks"].manifest["params"]["codec_format"] == FORMAT
 
 
 def test_input_change_invalidates_root_and_downstream(spark, tmp_path):

@@ -11,7 +11,10 @@ from hypothesis import strategies as st
 
 from sparksearch.codec import (
     CHUNK_META_BYTES,
+    FORMAT,
     EncodedBlock,
+    check_format,
+    chunk_offsets,
     decode_block,
     encode_postings,
     tf_norm,
@@ -82,16 +85,40 @@ def test_chunk_boundaries(n):
 
 
 def test_delta_reset_per_chunk():
-    # chunk 2 must start from absolute docID, not a running delta
-    doc_ids = list(range(1000, 1000 + 65))
-    blocks, d, _, _ = _roundtrip(doc_ids, [1] * 65, [10] * 65)
-    assert d == doc_ids
-    # decoding the second chunk alone must work (independence)
-    b = blocks[0]
-    d2 = decode_block(
-        b.payload, b.docid_sizes, b.tf_sizes, b.dl_sizes
-    )[0]
-    assert d2.tolist() == doc_ids
+    # chunk 2 must start from an absolute docID and an absolute doc length,
+    # not a running delta; lengths drop across the boundary and inside chunk 2
+    c = POSTINGS_PER_CHUNK
+    doc_ids = list(range(1000, 1000 + c + 5))
+    dls = [500 + i for i in range(c)] + [7, 7, 9, 8, 300]
+    blocks, d, _, l = _roundtrip(doc_ids, [1] * (c + 5), dls)
+    assert d == doc_ids and l == dls
+    # the second chunk's bytes, sliced out of the payload, decode alone
+    (b,) = blocks
+    start, _, _, l_end = chunk_offsets(b.docid_sizes, b.tf_sizes, b.dl_sizes)
+    d2, _, l2 = decode_block(
+        b.payload[start[1] : l_end[1]], b.docid_sizes[1:], b.tf_sizes[1:], b.dl_sizes[1:]
+    )
+    assert d2.tolist() == doc_ids[c:]
+    assert l2.tolist() == dls[c:]
+
+
+@pytest.mark.parametrize("dl", [0, 63, 64, 500, 2**20])
+def test_equal_lengths_cost_one_byte_after_the_first(dl):
+    # per chunk: the first length absolute (zigzag varbyte), then a 0 delta
+    # (1 byte) per later posting
+    n = 2 * POSTINGS_PER_CHUNK + 3
+    (b,) = encode_postings(np.arange(n), np.ones(n, np.int64), np.full(n, dl), 100.0)
+    first = len(varbyte_encode(np.array([2 * dl]))[0])
+    sizes = [POSTINGS_PER_CHUNK, POSTINGS_PER_CHUNK, 3]
+    assert b.dl_sizes.tolist() == [first + k - 1 for k in sizes]
+
+
+def test_check_format_refuses_other_layouts():
+    check_format(FORMAT, "idx")
+    # nothing recorded = written before the version was kept (raw lengths)
+    for found in (None, 1, FORMAT + 1):
+        with pytest.raises(ValueError, match="rebuild the index"):
+            check_format(found, "idx")
 
 
 def test_block_size_cap():
@@ -129,7 +156,7 @@ def test_non_ascending_rejected():
         st.tuples(
             st.integers(min_value=1, max_value=2**30),  # gap
             st.integers(min_value=1, max_value=1000),   # tf
-            st.integers(min_value=1, max_value=100000), # dl
+            st.integers(min_value=0, max_value=2**31 - 1),  # dl, unordered
         ),
         min_size=1,
         max_size=300,
@@ -167,9 +194,10 @@ def test_hw2_layout_roundtrip_and_size():
     assert (d2 == doc_ids).all() and (t2 == tfs).all()
 
     dls = np.full(5000, 500, np.int64)
-    hw3_payload = sum(len(b.payload) for b in encode_postings(doc_ids, tfs, dls, 500.0))
+    blocks = encode_postings(doc_ids, tfs, dls, 500.0)
+    hw3_payload = sum(len(b.payload) for b in blocks)
     # hw3 payload includes a third (doc-len) stream and still beats hw2's
     # absolute-docID stream on dense lists
-    assert len(buf) > hw3_payload * 0.6
-    hw3_docid_tf_only = hw3_payload - 5000 * 2  # dl stream is 2 bytes/posting here
+    assert len(buf) > hw3_payload
+    hw3_docid_tf_only = hw3_payload - sum(int(b.dl_sizes.sum()) for b in blocks)
     assert len(buf) > hw3_docid_tf_only

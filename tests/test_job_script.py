@@ -1,12 +1,16 @@
 """scripts/sparksearch_job.py end to end, in-process: a corpus parquet
-table (repo, path, commit, lang, content) builds a resumable index, a rerun
-resumes every stage, and the query subcommand prints the exhaustive
-scorer's ranking over the persisted postings."""
+table (repo, path, commit, lang, content) builds a resumable, zstd-written
+index, a rerun resumes every stage, and the query subcommand prints the
+exhaustive scorer's ranking over the persisted postings in 7 Spark jobs."""
 
+import glob
 import importlib.util
 import json
 import os
 import sys
+
+import pyarrow.parquet as pq
+import pytest
 
 from sparksearch.constants import DISJUNCTIVE
 from sparksearch.corpus import synthetic_corpus
@@ -39,7 +43,12 @@ def test_job_build_resume_query(spark, tmp_path, monkeypatch, capsys):
     job = _load_job()
     build = ["build", "--input", corpus, "--output", index, "--bucket-span", "64"]
 
+    # the script's own session writes zstd whatever codec it finds set
+    spark.conf.set("spark.sql.parquet.compression.codec", "snappy")
     first = json.loads(_run(job, monkeypatch, capsys, *build))
+    assert spark.conf.get("spark.sql.parquet.compression.codec") == "zstd"
+    meta = pq.read_metadata(sorted(glob.glob(f"{index}/blocks/data/*.parquet"))[0])
+    assert {meta.row_group(0).column(c).compression for c in range(meta.num_columns)} == {"ZSTD"}
     assert first["documents"]["rows"] == 300
     assert not any(s["resumed"] for s in first.values()), first
     second = json.loads(_run(job, monkeypatch, capsys, *build))
@@ -49,7 +58,14 @@ def test_job_build_resume_query(spark, tmp_path, monkeypatch, capsys):
     # two distinct terms: the kernel and the exhaustive scorer add the same
     # two contributions, so their rankings agree exactly
     text = "buffer node"
-    out = _run(job, monkeypatch, capsys, "query", "--index", index, "--query", text)
+    # every stage reopened with its manifest's schema: no inference job
+    sc, group = spark.sparkContext, f"job-query-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        out = _run(job, monkeypatch, capsys, "query", "--index", index, "--query", text)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
     got = []
     for line in out.splitlines():
         rank, score, doc_id, _ = line.split(None, 3)
@@ -66,3 +82,14 @@ def test_job_build_resume_query(spark, tmp_path, monkeypatch, capsys):
     )
     assert len(want) == 20
     assert got == want
+
+    # an index whose blocks manifest records no codec format holds raw doc
+    # lengths: query refuses it instead of scoring with misread lengths
+    mp = f"{index}/blocks/_MANIFEST.json"
+    with open(mp) as f:
+        m = json.load(f)
+    del m["params"]["codec_format"]
+    with open(mp, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="codec format 1"):
+        _run(job, monkeypatch, capsys, "query", "--index", index, "--query", text)

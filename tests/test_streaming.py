@@ -160,6 +160,52 @@ def test_exactly_once_commit_protocol(spark, tmp_path):
     shutil.rmtree(index_dir)
 
 
+def test_codec_format_recorded_and_checked(spark, tmp_path):
+    """The stream state and each batch's _meta.json record the payload
+    layout; an index written before it was recorded (raw doc lengths) is
+    refused by ingest, compaction, read_index and the commit repair, so
+    blocks of two layouts never mix."""
+    import json
+
+    import pytest
+
+    from sparksearch.codec import FORMAT
+    from sparksearch.streaming import _load_state, compact_index, ingest_batch
+
+    index_dir = str(tmp_path / "idx_fmt")
+    corpus = synthetic_corpus(spark, 40, seed=17).cache()
+    b0, b1 = corpus.limit(20), corpus.subtract(corpus.limit(20))
+    ingest_batch(b0, 0, index_dir, bucket_span=64)
+    state = _load_state(index_dir)
+    assert state["codec_format"] == FORMAT
+    meta_path = f"{index_dir}/documents/batch_0/_meta.json"
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert meta["codec_format"] == FORMAT
+
+    # the stream state as an earlier ingest left it
+    legacy = {k: v for k, v in state.items() if k != "codec_format"}
+    with open(f"{index_dir}/_STREAM_STATE.json", "w") as f:
+        json.dump(legacy, f)
+    for call in (
+        lambda: ingest_batch(b1, 1, index_dir, bucket_span=64),
+        lambda: compact_index(spark, index_dir, bucket_span=64),
+        lambda: read_index(spark, index_dir),
+    ):
+        with pytest.raises(ValueError, match="codec format 1"):
+            call()
+    assert not os.path.exists(f"{index_dir}/blocks/batch_1")
+
+    # commit repair from a batch whose _meta.json records no layout
+    with open(f"{index_dir}/_STREAM_STATE.json", "w") as f:
+        json.dump({**state, "batches": [], "next_doc_id": 0}, f)
+    del meta["codec_format"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="codec format 1"):
+        ingest_batch(b0, 0, index_dir, bucket_span=64)
+
+
 def test_compaction_preserves_results(spark, tmp_path):
     """Compaction (uniform re-bucketing + avgdl re-pin) must answer queries
     identically to a from-scratch batch build over the same docs with the
