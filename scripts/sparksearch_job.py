@@ -99,15 +99,16 @@ def cmd_query(args) -> None:
     avg_dl = blocks.manifest["params"]["avg_doc_len"]
 
     qt = query_term_rows([(0, args.query, args.mode)])
-    res = wand_topk_batch(blocks.df, lex, qt, n_docs, avg_dl, k=args.k or TOP_K)
-    out = (
-        F.broadcast(res)
-        .join(doc_table.select("doc_id", "repo", "path"), "doc_id")
-        .orderBy("rank")
-        .collect()
-    )
-    for r in out:
-        print(f"{r['rank']:3d}  {r['score']:12.6f}  {r['doc_id']:10d}  {r['repo']}/{r['path']}")
+    res = wand_topk_batch(blocks.df, lex, qt, n_docs, avg_dl, k=args.k or TOP_K).collect()
+    # the ≤k result names its docs: one pruned doc_table scan, no join
+    ids = [r["doc_id"] for r in res]
+    names = {
+        r["doc_id"]: f"{r['repo']}/{r['path']}"
+        for r in doc_table.filter(F.col("doc_id").isin(ids)).select("doc_id", "repo", "path").collect()
+    }
+    for r in sorted(res, key=lambda r: r["rank"]):
+        if r["doc_id"] in names:
+            print(f"{r['rank']:3d}  {r['score']:12.6f}  {r['doc_id']:10d}  {names[r['doc_id']]}")
 
 
 def cmd_bench(args) -> None:

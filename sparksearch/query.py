@@ -56,9 +56,11 @@ def query_term_rows(queries: list[tuple[int, str, str]]) -> list[dict]:
 
     Mirrors splitQuery (hw3/DataLoader.cpp:432-458): same separator set,
     duplicates folded into ``weight``; ``n_terms`` = distinct terms per
-    query.  Passed to :func:`wand.wand_topk_batch`, the list takes the
-    broadcast ingest: df/idf and signature dedup on the driver, no collect
-    job per call — the form for interactive and small batches."""
+    query.  Passed to :func:`wand.wand_topk_batch`, the list gets df/idf
+    and signature dedup on the driver — the form for interactive and small
+    batches.  A small list then scores on the driver inside the call (one
+    pruned blocks scan, the only Spark job); a larger one is broadcast to
+    the shard tasks."""
     rows = []
     for qid, text, mode in queries:
         toks = tokenize_text(text)

@@ -9,11 +9,20 @@ ONCE by ``bucket mod n_shards``, every shard receives the query batch
 (one query or 10^6), and each shard walks its buckets in ascending doc order,
 decoding every matched term once (block-at-a-time, numpy), scoring every
 query against the decoded arrays and keeping a per-query running top-k.
-A window top-k merges the shards.  It is the one public top-k entry: a
-driver-side query list is broadcast, a query DataFrame stays relational
-(cogrouped with the shards), and both feed the same kernel.  The
-exhaustive DataFrame scorer (query.topk), the pure-Python oracle and the
-DuckDB SQL are the independent references it is tested against.
+A window top-k merges the shards.  It is the one public top-k entry, and
+every placement feeds the same kernel:
+
+* a small driver-side query list (Σ lexicon df of its vocabulary at most
+  ``_DRIVER_MAX_DF``, and that Σ × its queries at most
+  ``_DRIVER_MAX_WORK``) runs the reference's in-process loop on the
+  driver: one IN-list-pruned Arrow scan, the kernel over it as one shard,
+  the ranking in pandas — one Spark job, evaluated eagerly inside the
+  call;
+* a larger list is broadcast to the shard tasks;
+* a query DataFrame stays relational (cogrouped with the shards).
+
+The exhaustive DataFrame scorer (query.topk), the pure-Python oracle and
+the DuckDB SQL are the independent references it is tested against.
 
 Per-posting contributions use the ONE pinned floating-point association
 ``(weight * idf) * tf_norm`` (bm25.py module docstring), so a single
@@ -68,6 +77,7 @@ import weakref
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -94,6 +104,21 @@ _CACHE_LOCK = threading.Lock()
 # absent terms cache as df=0 so they are never re-probed.
 _LEX_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _LEX_CACHE_MAX_TERMS = 1 << 16
+
+# Placement gate of a query LIST (PLANS §2b-ii): a list scores on the
+# driver when the Σ lexicon df of its vocabulary (the postings the driver
+# collects and decodes on one core) is at most _DRIVER_MAX_DF AND that Σ ×
+# its queries is at most _DRIVER_MAX_WORK; any other list is broadcast to
+# the shard tasks.  One cap per axis the committed placement sweep measured
+# (scripts/placement_sweep.py, PLACEMENT_SWEEP.json): each is the largest
+# point at and below which the driver's runs beat the broadcast's beyond
+# their quartile spread, so neither axis is extrapolated.  Measured on 4
+# local cores (local[4]) only: the broadcast side scales with executors
+# and the driver does not, so on a cluster the crossover sits lower.  The
+# work estimate counts every query, not only the distinct signatures
+# scored: the driver also replicates k rows to each duplicate, serially.
+_DRIVER_MAX_DF = 693_048
+_DRIVER_MAX_WORK = 399_052_000
 
 
 def _lexicon_dfs(lexicon: DataFrame, vocab: list[str]) -> dict[str, int]:
@@ -153,13 +178,13 @@ def _disjunctive_bound(acc_pos: float, best_single: float) -> float:
     return acc_pos if acc_pos > 0.0 else best_single
 
 
-# shared by both ingests of wand_topk_batch (broadcast list, relational
-# DataFrame): each hands the per-shard kernel below the same representative
-# queries, each with its term dict in sorted term order, and both scoring
-# branches add a query's per-term contributions in that order — so a
-# (query, bucket)'s scores are bit-identical whichever ingest fed it and
-# however many queries share its bucket (the fp-determinism contract,
-# bm25.py module docstring).
+# shared by every placement of wand_topk_batch (a list on the driver or
+# broadcast, a DataFrame relational): each hands the per-shard kernel below
+# the same representative queries, each with its term dict in sorted term
+# order, and both scoring branches add a query's per-term contributions in
+# that order — so a (query, bucket)'s scores are bit-identical whichever
+# placement fed it and however many queries share its bucket (the
+# fp-determinism contract, bm25.py module docstring).
 _BATCH_CAND_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.IntegerType(), False),
@@ -168,6 +193,15 @@ _BATCH_CAND_SCHEMA = T.StructType(
     ]
 )
 _BATCH_EMPTY = {"query_id": np.int32, "doc_id": np.int64, "score": np.float64}
+# the result columns, as the Spark placement's merge window types them
+_TOPK_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.IntegerType(), False),
+        T.StructField("rank", T.IntegerType(), False),
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("score", T.DoubleType(), False),
+    ]
+)
 
 
 def _query_bound(q: dict, term_stats: dict) -> float | None:
@@ -471,16 +505,28 @@ def _batch_walk_shard(
     )
 
 
-def _rows_ingest(blocks, lexicon, rows, n_docs, n_shards, shard, walk):
-    """Driver-side ingest of a query LIST: df/idf, signature dedup and the
-    query dict are built on the driver and the dict is broadcast to every
-    shard task.  Returns (candidates, rep->member mapping or None)."""
-    spark = blocks.sparkSession
-    vocab = sorted({r["term"] for r in rows})
-    lex_rows = _lexicon_dfs(lexicon, vocab)
+def _list_size(lexicon, rows) -> tuple[dict[str, int], int]:
+    """The placement gate's inputs for a query LIST, known before any job
+    runs: the lexicon df of each vocabulary term and the number of
+    queries."""
+    dfs = _lexicon_dfs(lexicon, sorted({r["term"] for r in rows}))
+    return dfs, len({r["query_id"] for r in rows})
+
+
+def _on_driver(dfs: dict[str, int], n_queries: int) -> bool:
+    """Whether a query list of these sizes scores on the driver (the gate
+    described at _DRIVER_MAX_DF)."""
+    sum_df = sum(dfs.values())
+    return sum_df <= _DRIVER_MAX_DF and sum_df * n_queries <= _DRIVER_MAX_WORK
+
+
+def _list_queries(rows, dfs, n_docs):
+    """The query dicts of both list placements: idf per term, the
+    sorted-term query dicts and the signature dedup.  Returns
+    (representative query dicts, (rep, member qid) pairs)."""
     # the one idf definition (bm25.py: Python libm, never JVM F.log),
     # computed once per DISTINCT term, not once per (query, term) row
-    idf_by_term = {t: bm25_idf_py(lex_rows.get(t, 0), n_docs) for t in vocab}
+    idf_by_term = {t: bm25_idf_py(df, n_docs) for t, df in dfs.items()}
     # (query_id, term) order: each query's terms insert sorted, as in the
     # DataFrame ingest (see _BATCH_CAND_SCHEMA)
     all_queries: dict[int, dict] = {}
@@ -500,19 +546,50 @@ def _rows_ingest(blocks, lexicon, rows, n_docs, n_shards, shard, walk):
         sig = (q["mode"], q["n_terms"], tuple(sorted(q["terms"].items())))
         rep = _sig_rep.setdefault(sig, qid)
         group_of.setdefault(rep, []).append(qid)
-    bq = spark.sparkContext.broadcast({qid: all_queries[qid] for qid in group_of})
+    reps = {qid: all_queries[qid] for qid in group_of}
+    members = [(rep, qid) for rep, qids in group_of.items() for qid in qids]
+    return reps, members
+
+
+def _driver_topk(blocks, vocab, reps, members, walk, micro_rank):
+    """Driver placement of a small query list: one IN-list-pruned Arrow
+    scan, the shard kernel over it as ONE shard, the merge window's
+    ranking in pandas, and the rows replicated to every member query id.
+    The result is a DataFrame over a pyarrow Table, so collecting it runs
+    no job."""
+    spark = blocks.sparkSession
+    cands = walk(blocks.filter(F.col("term").isin(vocab)).toPandas(), reps)
+    # the Spark merge window's key: (micro) score desc, doc_id asc
+    score = cands["score"].to_numpy()
+    key = _micro_i64(score) if micro_rank else score
+    order = np.lexsort((cands["doc_id"].to_numpy(), -key, cands["query_id"].to_numpy()))
+    ranked = cands.iloc[order]
+    ranked = ranked.assign(rank=(ranked.groupby("query_id").cumcount() + 1).astype(np.int32))
+    out = (
+        pd.DataFrame(members, columns=["rep", "query_id"])
+        .astype(np.int32)
+        .merge(ranked.rename(columns={"query_id": "rep"}), on="rep")
+    )
+    out = out.sort_values(["query_id", "rank"])[list(_TOPK_SCHEMA.names)]
+    table = pa.Table.from_pandas(out, preserve_index=False)
+    return spark.createDataFrame(table, schema=_TOPK_SCHEMA)
+
+
+def _rows_ingest(blocks, vocab, reps, members, shard, walk):
+    """Spark placement of a query LIST: the representative query dicts are
+    broadcast to every shard task.  Returns (candidates, rep->member
+    mapping or None)."""
+    spark = blocks.sparkSession
+    bq = spark.sparkContext.broadcast(reps)
     sel = blocks.filter(F.col("term").isin(vocab)).withColumn("shard", shard)
 
     def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         return walk(pdf, bq.value)
 
     cands = sel.groupBy("shard").applyInPandas(per_shard, schema=_BATCH_CAND_SCHEMA)
-    if len(all_queries) == len(group_of):
+    if len(members) == len(reps):
         return cands, None  # no duplicate signatures
-    mapping = spark.createDataFrame(
-        [(rep, qid) for rep, qids in group_of.items() for qid in qids],
-        "rep int, query_id int",
-    )
+    mapping = spark.createDataFrame(members, "rep int, query_id int")
     return cands, F.broadcast(mapping)
 
 
@@ -602,13 +679,22 @@ def wand_topk_batch(
     document-sharded search: each shard answers every query over its doc
     range.
 
-    The batch's FORM picks how the queries reach the shards (PLANS
-    §2b-ii; 4-core host: the list wins at 10^3 queries per call, the two
-    tie at 10^4, the DataFrame wins at 10^5 by 1.3-1.7x):
+    The batch's FORM and size pick where it is scored (PLANS §2b-ii):
 
     * a driver-side list of dicts/Rows (:func:`query.query_term_rows`):
-      df/idf, signature dedup and the query dict are built on the driver
-      and broadcast — no collect job per call, the interactive path;
+      df/idf, signature dedup and the query dicts are built on the driver.
+      Its sizes pick the placement before any job runs: when the Σ lexicon
+      df of its vocabulary is at most ``_DRIVER_MAX_DF`` and that Σ ×
+      its queries at most ``_DRIVER_MAX_WORK`` (module constants set by
+      the committed placement sweep), the call scores on the DRIVER: one
+      pruned Arrow scan of the blocks runs and the kernel walks it as one
+      shard, INSIDE the call (eagerly), and it returns a DataFrame over
+      the ranked rows, so collecting it runs no job.  ``n_shards`` has no
+      effect there, and the rows are the ones any ``n_shards`` gives.  A
+      malformed index (overlapping blocks) therefore raises
+      ``ValueError`` from the call itself there, where the shard plans
+      raise ``PythonException`` at the action.  A list above either cap
+      has its query dicts broadcast to the shard tasks;
     * a DataFrame with the ``QUERY_TERMS_SCHEMA`` columns
       (:func:`query.query_terms_df`, or any relation): nothing is
       collected and no job runs before an action.  DISTINCT terms
@@ -618,12 +704,13 @@ def wand_topk_batch(
       queries crossJoin the shard ids and are COGROUPED with the
       doc-sharded index.
 
-    Either way identical (mode, weighted term bag) signatures are
+    Every way, identical (mode, weighted term bag) signatures are
     evaluated ONCE (representative = smallest query_id) and the ranked
     result is joined back to every member query_id, and every shard runs
     the same kernel (:func:`_batch_walk_shard`) on the same sorted-term
-    query dicts — so both forms return bit-identical scores
-    (tests/test_wand.py::test_batch_distributed_rank_identity).
+    query dicts — so all three return bit-identical rows
+    (tests/test_wand.py::test_batch_distributed_rank_identity,
+    ::test_list_placements_bit_identical).
 
     Exactness: a doc lives in exactly ONE bucket (bucket = doc_id range),
     so per-bucket scoring is complete per doc (conjunctive count filters
@@ -647,7 +734,8 @@ def wand_topk_batch(
     never drop a doc that ties at micro resolution.  Emitted scores stay
     exact doubles either way.
 
-    SHARD grouping (``n_shards``, default = spark.sql.shuffle.partitions):
+    SHARD grouping (``n_shards``, default = spark.sql.shuffle.partitions;
+    the driver placement walks every bucket as one shard):
     buckets are grouped by ``bucket mod n_shards`` and one task walks its
     buckets in ascending doc order keeping a per-query RUNNING top-k, so
 
@@ -679,8 +767,16 @@ def wand_topk_batch(
     def walk(pdf: pd.DataFrame, qs: dict) -> pd.DataFrame:
         return _batch_walk_shard(pdf, qs, accs, avg_doc_len, k, micro_rank)
 
-    ingest = _frame_ingest if isinstance(qterms, DataFrame) else _rows_ingest
-    cands, mapping = ingest(blocks, lexicon, qterms, n_docs, int(n_shards), shard, walk)
+    if isinstance(qterms, DataFrame):
+        cands, mapping = _frame_ingest(
+            blocks, lexicon, qterms, n_docs, int(n_shards), shard, walk
+        )
+    else:
+        dfs, n_queries = _list_size(lexicon, qterms)
+        reps, members = _list_queries(qterms, dfs, n_docs)
+        if _on_driver(dfs, n_queries):
+            return _driver_topk(blocks, list(dfs), reps, members, walk, micro_rank)
+        cands, mapping = _rows_ingest(blocks, list(dfs), reps, members, shard, walk)
     rank_col = (
         F.round(F.col("score") * 1e6, 0).cast("long") if micro_rank else F.col("score")
     )

@@ -52,7 +52,7 @@ def test_length_order_invariant(lctx):
     assert lens == sorted(lens)
 
 
-def test_lenordered_batch_rank_identical_and_skips(spark, lctx):
+def test_lenordered_batch_rank_identical_and_skips(spark, lctx, placements):
     """wand_topk_batch over the length-ordered index: micro-rank-identical
     to the exhaustive evaluator, and with one shard (one task walks every
     bucket in doc order) the running θ must actually skip dense
@@ -69,19 +69,20 @@ def test_lenordered_batch_rank_identical_and_skips(spark, lctx):
         ds.sort(key=lambda t: (-round(t[1] * 1e6), t[0]))
         truth += [(qid, rk, d, round(s * 1e6)) for rk, (d, s) in enumerate(ds[:10], 1)]
 
-    so: dict = {}
-    got_rows = wand_topk_batch(
-        blocks, lex, query_term_rows(QUERIES), st["n_docs"], st["avg_doc_len"], k=10,
-        n_shards=1, micro_rank=True, stats_out=so,
-    ).collect()
-    got = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"] * 1e6))
-        for r in got_rows
-    )
-    assert got == sorted(truth)
-    skipped = int(so["query_evals_skipped"].value)
-    total = int(so["query_evals_total"].value)
-    assert 0 < skipped < total, (skipped, total)
+    for placement in placements():
+        so: dict = {}
+        got_rows = wand_topk_batch(
+            blocks, lex, query_term_rows(QUERIES), st["n_docs"], st["avg_doc_len"], k=10,
+            n_shards=1, micro_rank=True, stats_out=so,
+        ).collect()
+        got = sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"] * 1e6))
+            for r in got_rows
+        )
+        assert got == sorted(truth), placement
+        skipped = int(so["query_evals_skipped"].value)
+        total = int(so["query_evals_total"].value)
+        assert 0 < skipped < total, (placement, skipped, total)
 
 
 def test_reorder_documents_equals_length_ordered(spark):

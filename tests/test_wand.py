@@ -50,39 +50,42 @@ def _collect_by_query(df):
     return by_q
 
 
-def test_wand_matches_exhaustive_and_oracle(spark, ctx):
-    """The batch kernel and the exhaustive DataFrame scorer must both equal
-    the oracle, doc for doc and score for score, in both modes."""
+def test_wand_matches_exhaustive_and_oracle(spark, ctx, placements):
+    """The batch kernel (in either list placement) and the exhaustive
+    DataFrame scorer must both equal the oracle, doc for doc and score for
+    score, in both modes."""
     docs, posts, st, lex, blocks, idx = ctx
     qt = query_terms_df(spark, QUERIES)
-    wand_res = _collect_by_query(
-        wand_topk_batch(blocks, lex, query_term_rows(QUERIES), st["n_docs"], st["avg_doc_len"])
-    )
     exh_res = _collect_by_query(topk(posts, lex, qt, st["n_docs"], st["avg_doc_len"]))
-    for qid, text, mode in QUERIES:
-        want = oracle.topk(idx, text, mode)
-        got_w = wand_res.get(qid, [])
-        got_e = exh_res.get(qid, [])
-        assert len(got_w) == len(want) == len(got_e), (qid, len(got_w), len(want), len(got_e))
-        for gw, ge, (od, os_) in zip(got_w, got_e, want):
-            assert gw["doc_id"] == od, (qid, gw["doc_id"], od)
-            assert abs(gw["score"] - os_) < 1e-9
-            assert ge["doc_id"] == od
+    for placement in placements():
+        wand_res = _collect_by_query(
+            wand_topk_batch(blocks, lex, query_term_rows(QUERIES), st["n_docs"], st["avg_doc_len"])
+        )
+        for qid, text, mode in QUERIES:
+            want = oracle.topk(idx, text, mode)
+            got_w = wand_res.get(qid, [])
+            got_e = exh_res.get(qid, [])
+            assert len(got_w) == len(want) == len(got_e), (placement, qid, len(got_w), len(want))
+            for gw, ge, (od, os_) in zip(got_w, got_e, want):
+                assert gw["doc_id"] == od, (placement, qid, gw["doc_id"], od)
+                assert abs(gw["score"] - os_) < 1e-9
+                assert ge["doc_id"] == od
 
 
-def test_wand_single_bucket_layout(spark, ctx):
+def test_wand_single_bucket_layout(spark, ctx, placements):
     """Same results when each term is one group (exact reference geometry)."""
     docs, posts, st, lex, _, idx = ctx
     blocks1 = build_block_index(posts, st["avg_doc_len"])  # no bucketing
     qt = query_term_rows(QUERIES)
-    res = _collect_by_query(wand_topk_batch(blocks1, lex, qt, st["n_docs"], st["avg_doc_len"]))
-    for qid, text, mode in QUERIES:
-        want = oracle.topk(idx, text, mode)
-        got = res.get(qid, [])
-        assert [r["doc_id"] for r in got] == [d for d, _ in want], qid
+    for placement in placements():
+        res = _collect_by_query(wand_topk_batch(blocks1, lex, qt, st["n_docs"], st["avg_doc_len"]))
+        for qid, text, mode in QUERIES:
+            want = oracle.topk(idx, text, mode)
+            got = res.get(qid, [])
+            assert [r["doc_id"] for r in got] == [d for d, _ in want], (placement, qid)
 
 
-def test_batch_docpart_equals_perquery(spark, ctx):
+def test_batch_docpart_equals_perquery(spark, ctx, placements):
     """The doc-partitioned batch kernel (shuffle the index once, score
     every query per bucket, merge per-shard top-k) must be rank-identical
     to the per-query oracle in both modes, scores included, also when the
@@ -90,16 +93,19 @@ def test_batch_docpart_equals_perquery(spark, ctx):
     docs, posts, st, lex, _, idx = ctx
     blocks8 = build_block_index(posts, st["avg_doc_len"], bucket_span=8)
     qt = query_term_rows(QUERIES)
-    batch = _collect_by_query(wand_topk_batch(blocks8, lex, qt, st["n_docs"], st["avg_doc_len"]))
-    for qid, text, mode in QUERIES:
-        want = oracle.topk(idx, text, mode)
-        got = batch.get(qid, [])
-        assert [r["doc_id"] for r in got] == [d for d, _ in want], qid
-        for g, (_, os_) in zip(got, want):
-            assert abs(g["score"] - os_) < 1e-9
+    for placement in placements():
+        batch = _collect_by_query(
+            wand_topk_batch(blocks8, lex, qt, st["n_docs"], st["avg_doc_len"])
+        )
+        for qid, text, mode in QUERIES:
+            want = oracle.topk(idx, text, mode)
+            got = batch.get(qid, [])
+            assert [r["doc_id"] for r in got] == [d for d, _ in want], (placement, qid)
+            for g, (_, os_) in zip(got, want):
+                assert abs(g["score"] - os_) < 1e-9
 
 
-def test_negative_idf_mix_disjunctive_bounds(spark):
+def test_negative_idf_mix_disjunctive_bounds(spark, placements):
     """Regression (round 3): disjunctive queries mixing positive- and
     negative-idf terms.  A doc lacking the negative-idf term contributes 0
     for it — more than the (negative) per-block bound — so summing raw
@@ -127,18 +133,19 @@ def test_negative_idf_mix_disjunctive_bounds(spark):
     )
     assert truth[0][2] == 180  # the adversarial doc really is rank-1
     blocks = build_block_index(posts, avgdl, bucket_span=64).cache()
-    for shards in (1, None):
-        got = sorted(
-            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-            for r in wand_topk_batch(
-                blocks, lex, query_term_rows(qset), n, avgdl, k=k, n_shards=shards
-            ).collect()
-        )
-        assert got == truth, shards
+    for placement in placements():
+        for shards in (1, None):
+            got = sorted(
+                (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+                for r in wand_topk_batch(
+                    blocks, lex, query_term_rows(qset), n, avgdl, k=k, n_shards=shards
+                ).collect()
+            )
+            assert got == truth, (placement, shards)
     blocks.unpersist()
 
 
-def test_batch_sparse_span_guard(spark):
+def test_batch_sparse_span_guard(spark, placements):
     """A sparse doc-id subset over a huge id range (unbucketed index /
     bucket_span=None) must not allocate span-sized dense arrays: the
     guard remaps ids to a compact space.  Without it this test would try
@@ -159,17 +166,19 @@ def test_batch_sparse_span_guard(spark):
         for r in topk(posts, lex, qt, n, avgdl, k=10).collect()
     )
     blocks = build_block_index(posts, avgdl)  # single bucket spanning 10^10 ids
-    got = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in wand_topk_batch(blocks, lex, query_term_rows(qset), n, avgdl, k=10).collect()
-    )
-    assert got == truth
+    for placement in placements():
+        got = sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+            for r in wand_topk_batch(blocks, lex, query_term_rows(qset), n, avgdl, k=10).collect()
+        )
+        assert got == truth, placement
 
 
-def test_batch_rejects_overlapping_blocks(spark):
+def test_batch_rejects_overlapping_blocks(spark, placements):
     """Two index builds unioned over one (term, bucket) with overlapping doc
     ids list docs 5..9 twice; the dense accumulators would sum them twice
-    and return wrong scores.  The kernel must reject such an index."""
+    and return wrong scores.  The kernel must reject such an index: in a
+    Spark task (a PythonException) or, on the driver, as a ValueError."""
     a = [(d, "alpha", 1, 100) for d in range(10)]
     b = [(d, "alpha", 2, 100) for d in range(5, 15)]
     schema = "doc_id long, term string, tf int, doc_len long"
@@ -180,12 +189,14 @@ def test_batch_rejects_overlapping_blocks(spark):
         build_block_index(pb, avgdl, bucket_span=64)
     )
     qt = query_term_rows([(1, "alpha", DISJUNCTIVE)])
-    with pytest.raises(PythonException, match="overlapping/descending doc ranges"):
-        wand_topk_batch(blocks, lex, qt, n, avgdl).collect()
+    for placement in placements():
+        error = PythonException if placement == "spark" else ValueError
+        with pytest.raises(error, match="overlapping/descending doc ranges"):
+            wand_topk_batch(blocks, lex, qt, n, avgdl).collect()
 
 
 @pytest.mark.parametrize("form", ["rows", "frame"])
-def test_batch_empty_query_batch(spark, ctx, form):
+def test_batch_empty_query_batch(spark, ctx, form, placements):
     """An empty query batch (no rows, or an empty QUERY_TERMS_SCHEMA
     DataFrame) returns zero rows with the result columns, through either
     ingest."""
@@ -193,9 +204,10 @@ def test_batch_empty_query_batch(spark, ctx, form):
 
     _, _, st_, lex, blocks, _ = ctx
     q = [] if form == "rows" else spark.createDataFrame([], QUERY_TERMS_SCHEMA)
-    res = wand_topk_batch(blocks, lex, q, st_["n_docs"], st_["avg_doc_len"])
-    assert res.columns == ["query_id", "rank", "doc_id", "score"]
-    assert res.count() == 0
+    for placement in placements():
+        res = wand_topk_batch(blocks, lex, q, st_["n_docs"], st_["avg_doc_len"])
+        assert res.columns == ["query_id", "rank", "doc_id", "score"], placement
+        assert res.count() == 0, placement
 
 
 @pytest.mark.parametrize("max_terms", [None, 5])
@@ -224,15 +236,16 @@ def test_lexicon_cache_whole_or_incremental(spark, ctx, monkeypatch, max_terms):
     assert (len(sc.statusTracker().getJobIdsForGroup(group)) == 0) == complete
 
 
-def test_batch_prune_skips_and_identical(spark):
+def test_batch_prune_skips_and_identical(spark, placements):
     """The running θ on a corpus whose BM25 norms drift monotonically with
     doc_id (doc length rising — the length-ordered layout): with one shard
     one task walks every bucket in doc order, so once the first bucket
     fills the top-k, every later bucket's max_norm bound falls below θ and
     9 of 10 buckets are skipped per query (doc_len = 50 + 2d).  Results
     must equal the exhaustive scorer, and stats_out must show the skips —
-    the same results and the same counts whether the batch is a list
-    (broadcast ingest) or a DataFrame (relational ingest)."""
+    the same results and the same counts whether the batch is a list (in
+    either placement; the driver walks every bucket as one shard) or a
+    DataFrame (relational ingest)."""
     rows = []
     for d in range(1000):  # df=1000 of N=4000 -> both terms positive idf
         rows.append((d, "alpha", 1, 50 + 2 * d))
@@ -248,24 +261,27 @@ def test_batch_prune_skips_and_identical(spark):
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
         for r in topk(posts, lex, qt, n, avgdl).collect()
     )
-    seen = {}
-    for form, qin in (("rows", query_term_rows(qset)), ("frame", qt)):
+    def run(qin):
         stats: dict = {}
         got = sorted(
             map(tuple, wand_topk_batch(
                 blocks, lex, qin, n, avgdl, stats_out=stats, n_shards=1
             ).collect())
         )
-        assert [(q, rk, d, round(s, 9)) for q, rk, d, s in got] == truth, form
+        assert [(q, rk, d, round(s, 9)) for q, rk, d, s in got] == truth
         skipped = stats["query_evals_skipped"].value
         total = stats["query_evals_total"].value
-        assert skipped >= total // 2 > 0, (form, skipped, total)
-        seen[form] = (got, skipped, total)
-    assert seen["rows"] == seen["frame"]
+        assert skipped >= total // 2 > 0, (skipped, total)
+        return got, skipped, total
+
+    seen = {"frame": run(qt)}
+    for placement in placements():
+        seen[placement] = run(query_term_rows(qset))
+    assert seen["driver"] == seen["spark"] == seen["frame"]
     blocks.unpersist()
 
 
-def test_batch_matrix_path_and_signature_dedup(spark, ctx):
+def test_batch_matrix_path_and_signature_dedup(spark, ctx, placements):
     """>=32 surviving queries route through the matrix path; results must
     equal the exhaustive DataFrame scorer with raw scores compared exactly
     (every query has two distinct terms, so two-operand addition makes
@@ -286,31 +302,32 @@ def test_batch_matrix_path_and_signature_dedup(spark, ctx):
     ref = sorted(
         map(tuple, topk(posts, lex, qt, st["n_docs"], st["avg_doc_len"]).collect())
     )
-    got = sorted(
-        map(tuple, wand_topk_batch(
-            blocks, lex, query_term_rows(base), st["n_docs"], st["avg_doc_len"]
-        ).collect())
-    )
-    assert len(got) == len(ref)
-    for g, r in zip(got, ref):
-        assert g == r, (g, r)
-
     dup = base + [(500 + i, t, m) for i, (_, t, m) in enumerate(base[:10])]
-    got2 = {
-        (r["query_id"], r["rank"]): (r["doc_id"], r["score"])
-        for r in wand_topk_batch(
-            blocks, lex, query_term_rows(dup), st["n_docs"], st["avg_doc_len"]
-        ).collect()
-    }
-    base_map = {(q, rk): v for q, rk, *v in ((q, rk, d, s) for q, rk, d, s in got)}
-    for i, (qid, t, m) in enumerate(base[:10]):
-        ranks = [rk for (q, rk) in got2 if q == qid]
-        for rk in ranks:
-            assert got2[(500 + i, rk)] == got2[(qid, rk)]
-    for key, v in base_map.items():
-        assert got2[key] == tuple(v)
+    for placement in placements():
+        got = sorted(
+            map(tuple, wand_topk_batch(
+                blocks, lex, query_term_rows(base), st["n_docs"], st["avg_doc_len"]
+            ).collect())
+        )
+        assert len(got) == len(ref), placement
+        for g, r in zip(got, ref):
+            assert g == r, (placement, g, r)
 
-def test_batch_list_qterms_and_shard_invariance(spark):
+        got2 = {
+            (r["query_id"], r["rank"]): (r["doc_id"], r["score"])
+            for r in wand_topk_batch(
+                blocks, lex, query_term_rows(dup), st["n_docs"], st["avg_doc_len"]
+            ).collect()
+        }
+        base_map = {(q, rk): v for q, rk, *v in ((q, rk, d, s) for q, rk, d, s in got)}
+        for i, (qid, t, m) in enumerate(base[:10]):
+            ranks = [rk for (q, rk) in got2 if q == qid]
+            for rk in ranks:
+                assert got2[(500 + i, rk)] == got2[(qid, rk)]
+        for key, v in base_map.items():
+            assert got2[key] == tuple(v)
+
+def test_batch_list_qterms_and_shard_invariance(spark, placements):
     """wand_topk_batch accepts qterms as a driver-side row list
     (query_term_rows) and must match the DataFrame form exactly; the
     result must also be invariant to n_shards (1 = everything in one
@@ -332,23 +349,24 @@ def test_batch_list_qterms_and_shard_invariance(spark):
     truth = sorted(
         map(tuple, wand_topk_batch(blocks, lex, qt_df, n, avgdl, k=15).collect())
     )
-    for shards in (1, 7, None):
-        got = sorted(
-            map(
-                tuple,
-                wand_topk_batch(
-                    blocks, lex, query_term_rows(qset), n, avgdl, k=15,
-                    n_shards=shards,
-                ).collect(),
+    for placement in placements():
+        for shards in (1, 7, None):
+            got = sorted(
+                map(
+                    tuple,
+                    wand_topk_batch(
+                        blocks, lex, query_term_rows(qset), n, avgdl, k=15,
+                        n_shards=shards,
+                    ).collect(),
+                )
             )
-        )
-        assert got == truth, shards
+            assert got == truth, (placement, shards)
     blocks.unpersist()
 
-def test_batch_distributed_rank_identity(spark, ctx):
+def test_batch_distributed_rank_identity(spark, ctx, placements):
     """A 10^5-query batch with heavy signature duplication must give the
     same answer as a DataFrame (relational ingest: no driver collect,
-    dedup loop or broadcast) as it gives as a list (broadcast ingest).
+    dedup loop or broadcast) as it gives as a list (either placement).
 
     Query texts list terms in pool order, not sorted: both ingests must
     themselves insert each query's terms in sorted order, so cross-term
@@ -372,20 +390,21 @@ def test_batch_distributed_rank_identity(spark, ctx):
             qset.append((qid, " ".join(trip), mode))
     assert len(qset) >= 100_000
     k = 5
-    ref = wand_topk_batch(
-        blocks, lex, query_term_rows(qset), st_["n_docs"], st_["avg_doc_len"],
-        k=k, micro_rank=True,
-    )
     got = wand_topk_batch(
         blocks, lex, query_terms_df(spark, qset), st_["n_docs"], st_["avg_doc_len"],
         k=k, micro_rank=True,
     )
-    a = sorted(map(tuple, ref.collect()))
     b = sorted(map(tuple, got.collect()))
-    assert len(a) == len(b) and a == b
+    for placement in placements():
+        ref = wand_topk_batch(
+            blocks, lex, query_term_rows(qset), st_["n_docs"], st_["avg_doc_len"],
+            k=k, micro_rank=True,
+        )
+        a = sorted(map(tuple, ref.collect()))
+        assert len(a) == len(b) and a == b, placement
 
 
-def test_batch_frame_ingest_launches_no_job_before_action(spark, ctx):
+def test_batch_frame_ingest_launches_no_job_before_action(spark, ctx, placements):
     """A DataFrame batch stays relational: building the top-k plan runs no
     Spark job (nothing is collected to the driver), and the first action
     returns the list form's answer."""
@@ -399,13 +418,121 @@ def test_batch_frame_ingest_launches_no_job_before_action(spark, ctx):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
-    want = wand_topk_batch(
-        blocks, lex, query_term_rows(QUERIES), st_["n_docs"], st_["avg_doc_len"]
-    )
-    assert sorted(map(tuple, res.collect())) == sorted(map(tuple, want.collect()))
+    got = sorted(map(tuple, res.collect()))
+    for placement in placements():
+        want = wand_topk_batch(
+            blocks, lex, query_term_rows(QUERIES), st_["n_docs"], st_["avg_doc_len"]
+        )
+        assert got == sorted(map(tuple, want.collect())), placement
 
 
-from hypothesis import example, given, settings
+# list batches that each exercise one edge of the driver placement's
+# ranking and replication: (queries, k)
+PLACEMENT_CASES = {
+    "duplicate_signatures": (
+        [(1, "if return", DISJUNCTIVE), (2, "return if", DISJUNCTIVE),
+         (3, "uniq13tok if", CONJUNCTIVE), (4, "if return", DISJUNCTIVE),
+         (5, "if if", DISJUNCTIVE)],
+        5,
+    ),
+    "empty": ([], 20),
+    "absent_only": ([(1, "zebraxyz qqq", DISJUNCTIVE), (2, "zebraxyz", CONJUNCTIVE)], 20),
+    "conjunctive_absent_term": (
+        [(1, "zebraxyz if", CONJUNCTIVE), (2, "if return", CONJUNCTIVE)], 20
+    ),
+    "k_above_matches": ([(1, "uniq13tok", DISJUNCTIVE), (2, "def else", DISJUNCTIVE)], 10_000),
+}
+
+
+@pytest.mark.parametrize("micro_rank", [False, True])
+@pytest.mark.parametrize("case", sorted(PLACEMENT_CASES))
+def test_list_placements_bit_identical(spark, ctx, placements, case, micro_rank):
+    """A query list gives the same rows, raw scores compared exactly, and
+    the same column types whether it scores on the driver or in the Spark
+    shard plan."""
+    _, _, st_, lex, blocks, _ = ctx
+    qs, k = PLACEMENT_CASES[case]
+    out = {}
+    for placement in placements():
+        res = wand_topk_batch(
+            blocks, lex, query_term_rows(qs), st_["n_docs"], st_["avg_doc_len"],
+            k=k, micro_rank=micro_rank,
+        )
+        schema = [(f.name, f.dataType) for f in res.schema]
+        out[placement] = (schema, sorted(map(tuple, res.collect())))
+    assert out["driver"] == out["spark"]
+    if case == "duplicate_signatures":
+        rows = out["driver"][1]
+        assert [r[1:] for r in rows if r[0] == 1] == [r[1:] for r in rows if r[0] == 4] != []
+
+
+def test_driver_placement_one_job_no_broadcast(spark, ctx):
+    """Below the gate, with a warm lexicon cache, one list query from the
+    call through .collect() runs exactly one Spark job (the pruned blocks
+    scan) and creates no broadcast (a broadcast leaves a file in the
+    context's temp dir)."""
+    import os
+
+    from sparksearch import wand
+
+    _, _, st_, lex, blocks, _ = ctx
+    qt = query_term_rows([(1, "if return", DISJUNCTIVE)])
+    wand._lexicon_dfs(lex, ["if", "return"])
+    sc = spark.sparkContext
+    before = set(os.listdir(sc._temp_dir))
+    group = "driver-placement-jobs"
+    sc.setJobGroup(group, "one list query below the gate")
+    try:
+        rows = wand_topk_batch(blocks, lex, qt, st_["n_docs"], st_["avg_doc_len"]).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 20
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert set(os.listdir(sc._temp_dir)) <= before
+    assert wand._on_driver(*wand._list_size(lex, qt))
+
+
+@pytest.mark.parametrize(
+    "axis, qs",
+    [
+        ("df", [(1, "if return", DISJUNCTIVE)]),
+        ("work", [(1, "if return", DISJUNCTIVE), (2, "else if", CONJUNCTIVE)]),
+    ],
+)
+def test_gate_caps_each_axis(spark, ctx, monkeypatch, axis, qs):
+    """A list scores on the driver only within BOTH caps.  With the other
+    cap as committed, a list one past the tested cap (Σ df for one query,
+    Σ df × queries for two) is broadcast to the shard tasks, which runs no
+    job inside the call; exactly at the cap it scores on the driver, whose one
+    job runs inside the call.  Both give the same rows."""
+    from sparksearch import wand
+
+    _, _, st_, lex, blocks, _ = ctx
+    qt = query_term_rows(qs)
+    dfs, n_queries = wand._list_size(lex, qt)  # also warms the lexicon cache
+    sum_df = sum(dfs.values())
+    assert sum_df <= wand._DRIVER_MAX_DF and sum_df * n_queries <= wand._DRIVER_MAX_WORK
+    cap, size = {
+        "df": ("_DRIVER_MAX_DF", sum_df),
+        "work": ("_DRIVER_MAX_WORK", sum_df * n_queries),
+    }[axis]
+    sc = spark.sparkContext
+    out = {}
+    for limit, placement in [(size - 1, "spark"), (size, "driver")]:
+        monkeypatch.setattr(wand, cap, limit)
+        group = f"gate-{axis}-{placement}"
+        sc.setJobGroup(group, "one top-k call at the gate")
+        try:
+            res = wand_topk_batch(blocks, lex, qt, st_["n_docs"], st_["avg_doc_len"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs == (1 if placement == "driver" else 0), placement
+        out[placement] = sorted(map(tuple, res.collect()))
+    assert out["driver"] == out["spark"] != []
+
+
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 
@@ -434,7 +561,13 @@ def _corpus_and_queries(draw):
     return rows, qs, span, shards, form
 
 
-@settings(max_examples=8, deadline=None)
+# the placements fixture is one monkeypatch shared by every example; each
+# example sets the gate itself
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
 @given(_corpus_and_queries())
 @example(
     case=([(0, 'alpha', 2, 151),
@@ -767,7 +900,7 @@ def _corpus_and_queries(draw):
      1,
      'frame'),
 ).via('discovered failure')
-def test_batch_property_matches_exhaustive(case):
+def test_batch_property_matches_exhaustive(placements, case):
     """Property (the engine's cross-evaluator contract, wand.py docstring):
     for random corpora (including duplicate-score ties from coarse tf/doc_len
     grids), random query bags (duplicate terms = weights), any
@@ -808,20 +941,21 @@ def test_batch_property_matches_exhaustive(case):
         for d, s in docs:
             truth_raw[(qid, d)] = s
     blocks = build_block_index(posts, avgdl, bucket_span=span)
-    qin = qt if form == "frame" else query_term_rows(qs)
-    got_rows = wand_topk_batch(
-        blocks, lex, qin, n, avgdl, k=10, n_shards=shards, micro_rank=True,
-    ).collect()
-    got = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"] * 1e6))
-        for r in got_rows
-    )
-    assert got == sorted(truth)
     n_distinct = {qid: len(set(text.split())) for qid, text, _ in qs}
-    for r in got_rows:
-        if n_distinct[r["query_id"]] <= 2:
-            assert r["score"] == truth_raw[(r["query_id"], r["doc_id"])], (
-                r["query_id"], r["doc_id"])
+    for placement in placements() if form == "rows" else [form]:
+        qin = qt if form == "frame" else query_term_rows(qs)
+        got_rows = wand_topk_batch(
+            blocks, lex, qin, n, avgdl, k=10, n_shards=shards, micro_rank=True,
+        ).collect()
+        got = sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"] * 1e6))
+            for r in got_rows
+        )
+        assert got == sorted(truth), placement
+        for r in got_rows:
+            if n_distinct[r["query_id"]] <= 2:
+                assert r["score"] == truth_raw[(r["query_id"], r["doc_id"])], (
+                    placement, r["query_id"], r["doc_id"])
 
 
 _HYP_SPARK = []
