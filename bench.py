@@ -234,9 +234,9 @@ def main() -> None:
         # in-band) is apples-to-apples:
         #  * cold/per-call: each query as its own call, like the
         #    reference's interactive loop (hw3/DataLoader.cpp:483-545) — a
-        #    single query scores on the driver after one pruned blocks
-        #    scan, so the floor is that one job plus the 2 jobs that
-        #    `.count()` runs on the returned local frame, not scoring;
+        #    single query scores on the driver, which reads the blocks
+        #    stage's parquet files itself, so the floor is the 2 jobs
+        #    that `.count()` runs on the returned local frame, not scoring;
         #  * marginal/amortized: per-query marginal time inside a warm
         #    session, from the multi-query jobs above (total wall / n) —
         #    the steady-state cost a query adds to a running service.

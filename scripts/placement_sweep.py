@@ -37,7 +37,7 @@ Neither cap extrapolates past the points measured, and both hold for the
 Usage (from the repository root):
 
     python scripts/placement_sweep.py [--docs 20000] [--df-docs 20000,100000]
-        [--cores 4] [--reps 5] [--batches 1:1,10:10,...] [--df-terms 1,3,...]
+        [--cores 4] [--reps 9] [--batches 1:1,10:10,...] [--df-terms 1,3,...]
         [--relational 10000:2000,...] [--relational-reps 10]
         [--out PLACEMENT_SWEEP.json]
 """
@@ -106,7 +106,7 @@ def main() -> None:
         "10000:200,10000:2000,10000:4000,30000:2000,100000:200,100000:2000",
     )
     ap.add_argument("--df-terms", default="1,3,7,15,31")
-    ap.add_argument("--reps", type=int, default=5)
+    ap.add_argument("--reps", type=int, default=9)
     ap.add_argument("--relational", default="10000:2000,100000:2000")
     ap.add_argument("--relational-reps", type=int, default=10)
     ap.add_argument("--out", default="PLACEMENT_SWEEP.json")

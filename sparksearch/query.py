@@ -58,9 +58,9 @@ def query_term_rows(queries: list[tuple[int, str, str]]) -> list[dict]:
     duplicates folded into ``weight``; ``n_terms`` = distinct terms per
     query.  Passed to :func:`wand.wand_topk_batch`, the list gets df/idf
     and signature dedup on the driver — the form for interactive and small
-    batches.  A small list then scores on the driver inside the call (one
-    pruned blocks scan, the only Spark job); a larger one is broadcast to
-    the shard tasks."""
+    batches.  A small list then scores on the driver inside the call (over
+    a local parquet blocks table with no Spark job, else after one pruned
+    blocks scan); a larger one is broadcast to the shard tasks."""
     rows = []
     for qid, text, mode in queries:
         toks = tokenize_text(text)

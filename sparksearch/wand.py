@@ -15,9 +15,9 @@ every placement feeds the same kernel:
 * a small driver-side query list (Σ lexicon df of its vocabulary at most
   ``_DRIVER_MAX_DF``, and that Σ × its queries at most
   ``_DRIVER_MAX_WORK``) runs the reference's in-process loop on the
-  driver: one IN-list-pruned Arrow scan, the kernel over it as one shard,
-  the ranking in pandas — one Spark job, evaluated eagerly inside the
-  call;
+  driver, eagerly inside the call: the IN-list-pruned blocks (a local
+  parquet table's files read in-process, no Spark job; any other frame,
+  one Arrow scan job), the kernel over them as one shard, pandas ranking;
 * a larger list is broadcast to the shard tasks;
 * a query DataFrame stays relational (cogrouped with the shards).
 
@@ -74,10 +74,12 @@ from __future__ import annotations
 
 import threading
 import weakref
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -105,6 +107,12 @@ _CACHE_LOCK = threading.Lock()
 _LEX_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _LEX_CACHE_MAX_TERMS = 1 << 16
 
+# {blocks DataFrame -> its local parquet files or None} (_local_files)
+_FILES_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+# the blocks columns the shard kernel reads
+_KERNEL_COLS = ["term", "bucket", "block_id", "payload", "docid_sizes", "tf_sizes", "dl_sizes",
+                "max_tf_norm", "min_tf_norm"]
+
 # Placement gate of a query LIST (PLANS §2b-ii): a list scores on the
 # driver when the Σ lexicon df of its vocabulary (the postings the driver
 # collects and decodes on one core) is at most _DRIVER_MAX_DF AND that Σ ×
@@ -113,12 +121,13 @@ _LEX_CACHE_MAX_TERMS = 1 << 16
 # (scripts/placement_sweep.py, PLACEMENT_SWEEP.json): each is the largest
 # point at and below which the driver's runs beat the broadcast's beyond
 # their quartile spread, so neither axis is extrapolated.  Measured on 4
-# local cores (local[4]) only: the broadcast side scales with executors
-# and the driver does not, so on a cluster the crossover sits lower.  The
-# work estimate counts every query, not only the distinct signatures
-# scored: the driver also replicates k rows to each duplicate, serially.
-_DRIVER_MAX_DF = 693_048
-_DRIVER_MAX_WORK = 399_052_000
+# local cores (local[4]) over file-backed blocks only: the broadcast side
+# scales with executors and the driver does not, so on a cluster the
+# crossover sits lower.  The work estimate counts every query, not only
+# the distinct signatures: the driver also replicates k rows to each
+# duplicate, serially.
+_DRIVER_MAX_DF = 1_994_824
+_DRIVER_MAX_WORK = 119_715_600
 
 
 def _lexicon_dfs(lexicon: DataFrame, vocab: list[str]) -> dict[str, int]:
@@ -551,14 +560,41 @@ def _list_queries(rows, dfs, n_docs):
     return reps, members
 
 
+def _local_files(blocks: DataFrame) -> list[str] | None:
+    """The files Spark itself scans for ``blocks`` if its optimized plan is
+    a bare unpartitioned parquet relation on ``file:`` paths, else None (a
+    cached plan is an InMemoryRelation whose inputFiles() is []).  The
+    answer costs 10-35 ms of py4j, so it is cached per DataFrame object."""
+    with _CACHE_LOCK:
+        if blocks in _FILES_CACHE:
+            return _FILES_CACHE[blocks]
+    plan, files = blocks._jdf.queryExecution().optimizedPlan(), None
+    rel = plan.relation() if plan.getClass().getSimpleName() == "LogicalRelation" else None
+    uris = list(blocks.inputFiles()) if rel is not None else []
+    if uris and all(u.startswith("file:") for u in uris) and (
+        rel.getClass().getSimpleName() == "HadoopFsRelation"
+        and rel.fileFormat().getClass().getSimpleName() == "ParquetFileFormat"
+        and rel.partitionSchema().isEmpty()
+    ):
+        files = [unquote(urlparse(u).path) for u in uris]
+    with _CACHE_LOCK:
+        return _FILES_CACHE.setdefault(blocks, files)
+
+
 def _driver_topk(blocks, vocab, reps, members, walk, micro_rank):
-    """Driver placement of a small query list: one IN-list-pruned Arrow
-    scan, the shard kernel over it as ONE shard, the merge window's
-    ranking in pandas, and the rows replicated to every member query id.
-    The result is a DataFrame over a pyarrow Table, so collecting it runs
-    no job."""
+    """Driver placement of a small query list: the IN-list-pruned blocks
+    (:func:`_local_files` read in-process, else one Arrow scan job), the
+    shard kernel over them as ONE shard, the merge window's ranking in
+    pandas, and the rows replicated to every member query id.  The result
+    is a DataFrame over a pyarrow Table, so collecting it runs no job."""
     spark = blocks.sparkSession
-    cands = walk(blocks.filter(F.col("term").isin(vocab)).toPandas(), reps)
+    files = _local_files(blocks)
+    if files is None:
+        pdf = blocks.filter(F.col("term").isin(vocab)).select(_KERNEL_COLS).toPandas()
+    else:
+        in_vocab = ds.field("term").isin(pa.array(vocab, pa.string()))
+        pdf = ds.dataset(files).to_table(columns=_KERNEL_COLS, filter=in_vocab).to_pandas()
+    cands = walk(pdf, reps)
     # the Spark merge window's key: (micro) score desc, doc_id asc
     score = cands["score"].to_numpy()
     key = _micro_i64(score) if micro_rank else score
@@ -686,15 +722,17 @@ def wand_topk_batch(
       Its sizes pick the placement before any job runs: when the Σ lexicon
       df of its vocabulary is at most ``_DRIVER_MAX_DF`` and that Σ ×
       its queries at most ``_DRIVER_MAX_WORK`` (module constants set by
-      the committed placement sweep), the call scores on the DRIVER: one
-      pruned Arrow scan of the blocks runs and the kernel walks it as one
-      shard, INSIDE the call (eagerly), and it returns a DataFrame over
-      the ranked rows, so collecting it runs no job.  ``n_shards`` has no
-      effect there, and the rows are the ones any ``n_shards`` gives.  A
-      malformed index (overlapping blocks) therefore raises
-      ``ValueError`` from the call itself there, where the shard plans
-      raise ``PythonException`` at the action.  A list above either cap
-      has its query dicts broadcast to the shard tasks;
+      the committed placement sweep), the call scores on the DRIVER,
+      INSIDE the call (eagerly), and returns a DataFrame over the ranked
+      rows, so collecting it runs no job.  A bare local parquet
+      ``blocks`` table is read from its files (no Spark job); a filtered,
+      unioned, computed or cached frame, or an HDFS/S3 table, is one
+      pruned Arrow scan job.  ``n_shards`` has no effect there, and the
+      rows are the ones any ``n_shards`` gives.  A malformed index
+      (overlapping blocks) therefore raises ``ValueError`` from the call
+      itself there, where the shard plans raise ``PythonException`` at the
+      action.  A list above either cap has its query dicts broadcast to
+      the shard tasks;
     * a DataFrame with the ``QUERY_TERMS_SCHEMA`` columns
       (:func:`query.query_terms_df`, or any relation): nothing is
       collected and no job runs before an action.  DISTINCT terms

@@ -12,7 +12,7 @@ from sparksearch.oracle import engine as oracle
 from sparksearch.query import query_term_rows, query_terms_df, topk
 from sparksearch.stats import collection_stats, lexicon
 from sparksearch.tokenize import postings_from_documents
-from sparksearch.wand import wand_topk_batch
+from sparksearch.wand import _batch_walk_shard, wand_topk_batch
 
 QUERIES = [
     (1, "if return", DISJUNCTIVE),
@@ -490,6 +490,169 @@ def test_driver_placement_one_job_no_broadcast(spark, ctx):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     assert set(os.listdir(sc._temp_dir)) <= before
     assert wand._on_driver(*wand._list_size(lex, qt))
+
+
+def test_driver_placement_local_files_no_job(spark, ctx, tmp_path):
+    """Over a persisted ``spark.read.parquet`` blocks table, one list query
+    below the gate, from the call through .collect(), runs no Spark job and
+    creates no broadcast: the driver reads the table's parquet files
+    itself.  The rows are the cached frame's."""
+    import os
+
+    from sparksearch import wand
+
+    _, _, st_, lex, blocks, _ = ctx
+    blocks.write.parquet(str(tmp_path / "blocks"))
+    table = spark.read.parquet(str(tmp_path / "blocks"))
+    qt = query_term_rows([(1, "if return", DISJUNCTIVE)])
+    assert wand._on_driver(*wand._list_size(lex, qt))  # also warms the lexicon cache
+    sc = spark.sparkContext
+    before = set(os.listdir(sc._temp_dir))
+    group = "driver-placement-local-files"
+    sc.setJobGroup(group, "one list query over a parquet table")
+    try:
+        rows = wand_topk_batch(table, lex, qt, st_["n_docs"], st_["avg_doc_len"]).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert set(os.listdir(sc._temp_dir)) <= before
+    want = wand_topk_batch(blocks, lex, qt, st_["n_docs"], st_["avg_doc_len"]).collect()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, want)) and len(rows) == 20
+
+
+def test_local_files_cache_threads(spark, tmp_path):
+    """Threads asking for the files of the same frames all get the one
+    cached answer per frame (a lost update would hand some thread a list
+    other than the cached one)."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from sparksearch import wand
+
+    spark.range(50).write.parquet(str(tmp_path / "t"))
+    frames = [spark.read.parquet(str(tmp_path / "t")) for _ in range(4)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            asks = pool.map(lambda i: (i % 4, wand._local_files(frames[i % 4])), range(64), timeout=120)
+            got = list(asks)
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(got) == 64
+    for i, files in got:
+        assert files is wand._FILES_CACHE[frames[i]] and files
+
+
+@pytest.fixture(scope="module")
+def block_sources(spark, tmp_path_factory):
+    """{source: (blocks, lexicon, n_docs, avg_doc_len)} for every way the
+    repo opens a blocks table over local parquet files: the reopened
+    `build_index` stage (its manifest's schema), a bare
+    ``spark.read.parquet``, a streamed index (``recursiveFileLookup`` over
+    per-batch directories) and a compacted one."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from sparksearch.checkpoint import build_index
+    from sparksearch.streaming import compact_index, ingest_batch, read_index
+
+    root = tmp_path_factory.mktemp("blocks_sources")
+    corpus = synthetic_corpus(spark, 300, seed=5).cache()
+    idx = build_index(spark, corpus, str(root / "index"), bucket_span=64)
+    lex = idx["lexicon"].df.select("term", "df")
+    n_docs = idx["documents"].manifest["row_count"]
+    avgdl = idx["blocks"].manifest["params"]["avg_doc_len"]
+    out = {
+        "build_index": (idx["blocks"].df, lex, n_docs, avgdl),
+        "read_parquet": (spark.read.parquet(str(root / "index/blocks/data")), lex, n_docs, avgdl),
+    }
+    stream = str(root / "stream")
+    os.makedirs(stream)
+    for b in range(2):
+        part = corpus.filter(F.crc32(F.concat_ws("/", "repo", "path")) % 2 == b)
+        ingest_batch(part, b, stream, bucket_span=64)
+    shutil.copytree(stream, str(root / "compacted"))
+    compact_index(spark, str(root / "compacted"), bucket_span=128)
+    for name, path in [("read_index", stream), ("compact_index", str(root / "compacted"))]:
+        _, blocks, lex_, st_ = read_index(spark, path)
+        out[name] = (blocks, lex_, st_["n_docs"], st_["avg_doc_len"])
+    return out
+
+
+def _driver_run(monkeypatch, blocks, lex, n_docs, avgdl, micro_rank):
+    """(the blocks frame the kernel received, the top-k rows) of QUERIES
+    forced onto the driver placement."""
+    from sparksearch import wand
+
+    monkeypatch.setattr(wand, "_DRIVER_MAX_DF", float("inf"))
+    monkeypatch.setattr(wand, "_DRIVER_MAX_WORK", float("inf"))
+    seen = []
+
+    def spy(pdf, *args):
+        seen.append(pdf)
+        return _batch_walk_shard(pdf, *args)
+
+    monkeypatch.setattr(wand, "_batch_walk_shard", spy)
+    res = wand_topk_batch(
+        blocks, lex, query_term_rows(QUERIES), n_docs, avgdl, micro_rank=micro_rank
+    ).collect()
+    (pdf,) = seen
+    return pdf, sorted(map(tuple, res))
+
+
+def _row_set(pdf):
+    return sorted(
+        tuple(v.tolist() if hasattr(v, "tolist") else v for v in r)
+        for r in pdf.itertuples(index=False)
+    )
+
+
+@pytest.mark.parametrize("micro_rank", [False, True])
+@pytest.mark.parametrize("source", ["build_index", "read_parquet", "read_index", "compact_index"])
+def test_direct_read_equals_spark_scan(block_sources, monkeypatch, source, micro_rank):
+    """The driver placement's in-process read of a table's parquet files
+    hands the kernel the Spark scan's rows with the Spark scan's dtypes,
+    and the top-k rows, raw scores compared exactly, are identical."""
+    from sparksearch import wand
+
+    blocks, lex, n_docs, avgdl = block_sources[source]
+    assert wand._local_files(blocks)
+    direct, got = _driver_run(monkeypatch, blocks, lex, n_docs, avgdl, micro_rank)
+    monkeypatch.setattr(wand, "_local_files", lambda _: None)
+    scan, want = _driver_run(monkeypatch, blocks, lex, n_docs, avgdl, micro_rank)
+    assert direct.dtypes.to_dict() == scan.dtypes.to_dict()
+    assert _row_set(direct) == _row_set(scan) != []
+    assert got == want != []
+
+
+def test_other_blocks_frames_keep_spark_scan(spark, block_sources, monkeypatch, tmp_path):
+    """A cached read of the same path (Catalyst swaps in the cache, whose
+    inputFiles() is empty), a filtered frame, a union and a partitioned
+    table are not read from files, and their rows are the direct read's."""
+    from pyspark.sql import functions as F
+
+    from sparksearch import wand
+
+    plain, lex, n_docs, avgdl = block_sources["read_parquet"]
+    path = plain.inputFiles()[0].rsplit("/", 1)[0]
+    _, want = _driver_run(monkeypatch, plain, lex, n_docs, avgdl, True)
+    plain.write.partitionBy("bucket").parquet(str(tmp_path / "by_bucket"))
+    spark.read.parquet(path).cache()
+    try:
+        frames = {
+            "cached": spark.read.parquet(path),
+            "filtered": plain.filter(F.col("bucket") >= 0),
+            "union": plain.filter(F.col("bucket") < 2).union(plain.filter(F.col("bucket") >= 2)),
+            "partitioned": spark.read.parquet(str(tmp_path / "by_bucket")),
+        }
+        for name, frame in frames.items():
+            assert wand._local_files(frame) is None, name
+            assert _driver_run(monkeypatch, frame, lex, n_docs, avgdl, True)[1] == want, name
+    finally:
+        spark.read.parquet(path).unpersist()
 
 
 @pytest.mark.parametrize(
