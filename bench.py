@@ -7,9 +7,9 @@ local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
 plus derived throughput fields (docs_per_sec, queries_per_sec).
 
 Phases mirror the reference's lifecycle (SURVEY.md §3): index build
-(``checkpoint.build_index``: length-ordered documents → postings → blocked
-compressed index, lexicon, doc table, persisted to parquet like the
-reference's on-disk index), then queries over the
+(``checkpoint.build_index``: length-ordered documents with their
+DocTable word counts → blocked compressed index → lexicon, persisted to
+parquet like the reference's on-disk index), then queries over the
 *persisted* index (so scan pruning on term is exercised), then the
 training-data-pipeline operators.  Scaling-efficiency evidence
 (local[8] vs local[32]) lives in bench_scaling.py.
@@ -92,19 +92,19 @@ def main() -> None:
 
         # The build is the library's one resumable build
         # (checkpoint.build_index): documents with length-ordered docIDs
-        # (document reordering) → postings → blocked index, lexicon, doc
-        # table, each stage persisted to parquet like the reference's
-        # on-disk index.  BM25's length norm ties score magnitude to
-        # doc_len, so ascending-length ids give every (term, bucket) a
-        # monotone tf_norm range — block-max bounds become discriminative
-        # and skipping can fire (the driver's uniform random layout makes
-        # every doc range look alike).  doc_reorder is the documents
-        # stage's wall (the id pass, doc_len/sha256 and the documents
-        # sink); index_build is the rest.  bucket_span 2048 bounds every
-        # encode group and is the batch-throughput geometry a production
-        # corpus uses (64 tiny buckets on this 5k-doc corpus tripled
-        # per-(query,bucket) overhead in the batch path); the reordering
-        # study below runs on a separate bucket-granular index.
+        # (document reordering) → blocked index → lexicon, each stage
+        # persisted to parquet like the reference's on-disk index.  BM25's
+        # length norm ties score magnitude to doc_len, so ascending-length
+        # ids give every (term, bucket) a monotone tf_norm range — block-max
+        # bounds become discriminative and skipping can fire (the driver's
+        # uniform random layout makes every doc range look alike).
+        # doc_reorder is the documents stage's wall (the id pass,
+        # doc_len/sha256/word_nums and the documents sink); index_build is
+        # the rest.  bucket_span 2048 bounds every encode group and is the
+        # batch-throughput geometry a production corpus uses (64 tiny
+        # buckets on this 5k-doc corpus tripled per-(query,bucket) overhead
+        # in the batch path); the reordering study below runs on a separate
+        # bucket-granular index.
         t0 = time.perf_counter()
         index = build_index(spark, raw_docs.select(*CORPUS_SCHEMA.names), f"{tmp}/index")
         timings["doc_reorder"] = index["documents"].manifest["wall_sec"]
@@ -115,10 +115,13 @@ def main() -> None:
         }
         docs = index["documents"].df.repartition(cpus).cache()
         docs.count()
+        # the exhaustive scorer and the reordering study read postings,
+        # which the index does not keep: tokenized once, outside the timers
+        postings = postings_from_documents(docs).cache()
+        postings.count()
 
         blocks = index["blocks"].df
         lex = index["lexicon"].df.select("term", "df")
-        postings = index["postings"].df
 
         # --- query phases over the persisted compressed index --------------
         # list-form qterms: query batches originate driver-side, so the

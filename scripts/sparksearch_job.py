@@ -19,7 +19,7 @@ kept.  The build is resumable: rerunning the same command against the same
 --output resumes from committed stage manifests without an id pass.
 
 Subcommands:
-  build   corpus -> documents/postings/lexicon/doc_table/blocks snapshots
+  build   corpus -> documents/blocks/lexicon snapshots
   query   top-k over a built index (the batch kernel over the compressed blocks)
   bench   timed build+query with docs/sec + q/s (JSON line)
 """
@@ -94,17 +94,18 @@ def cmd_query(args) -> None:
     blocks = cp.open("blocks")
     check_format(blocks.manifest["params"].get("codec_format"), blocks.path)
     lex = cp.open("lexicon").df.select("term", "df")
-    doc_table = cp.open("doc_table").df
-    n_docs = cp.load_manifest("documents")["row_count"]
+    docs = cp.open("documents")
+    n_docs = docs.manifest["row_count"]
     avg_dl = blocks.manifest["params"]["avg_doc_len"]
 
     qt = query_term_rows([(0, args.query, args.mode)])
     res = wand_topk_batch(blocks.df, lex, qt, n_docs, avg_dl, k=args.k or TOP_K).collect()
-    # the ≤k result names its docs: one pruned doc_table scan, no join
+    # the ≤k result names its docs: one documents scan, pruned to three
+    # columns and the ids, no join
     ids = [r["doc_id"] for r in res]
     names = {
         r["doc_id"]: f"{r['repo']}/{r['path']}"
-        for r in doc_table.filter(F.col("doc_id").isin(ids)).select("doc_id", "repo", "path").collect()
+        for r in docs.df.select("doc_id", "repo", "path").filter(F.col("doc_id").isin(ids)).collect()
     }
     for r in sorted(res, key=lambda r: r["rank"]):
         if r["doc_id"] in names:

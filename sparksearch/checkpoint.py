@@ -17,7 +17,9 @@ with no Spark job (an Iceberg manifest's ``record_count`` /
 lineage is skipped and its snapshot reopened — kill the job between stages,
 rerun the same driver, and finished stages replay from disk.  Manifests are
 written temp-then-rename, so a killed write never looks committed.
-:func:`build_index` is the index build as such stages.
+:func:`build_index` is the index build as three such stages, the
+reference's DocTable, blocked lists and lexicon (documents → blocks →
+lexicon).
 
 On a real cluster the same abstraction binds to an Iceberg catalog
 (``writeTo(...).createOrReplace()`` + snapshot ids); parquet + manifest is
@@ -201,57 +203,47 @@ def build_index(
     spark: SparkSession, corpus: DataFrame, out: str, bucket_span: int = 2048
 ) -> dict[str, StageResult]:
     """The index build from a corpus table (repo, path, commit, lang,
-    content), as resumable stages under ``out``: documents (length-ordered
-    ids, ``corpus.length_ordered_documents``) → postings → (doc_table,
-    lexicon, blocks).  The documents stage is rooted at the corpus, so a
-    resume checks ``dataframe_fingerprint(corpus)`` and runs no id pass.
-    Each write observes its stage's metrics (docs indexed, postings emitted,
-    bytes compressed); N is the documents ``row_count`` and the blocks'
-    avgdl its observed chars / rows, so no stats job runs."""
-    from .blocks import build_block_index
+    content), as the reference's three on-disk artifacts in resumable stages
+    under ``out``: documents (length-ordered ids,
+    ``corpus.length_ordered_documents``, plus the DocTable's ``word_nums``)
+    → blocks → lexicon (term, df, n_blocks: docNum/blockNum).  The documents
+    stage is rooted at the corpus, so a resume checks
+    ``dataframe_fingerprint(corpus)`` and runs no id pass; its output columns
+    key it, so documents written without ``word_nums`` rebuild.  Each write
+    observes its stage's metrics (docs indexed, postings emitted, bytes
+    compressed); N is the documents ``row_count`` and the blocks' avgdl its
+    observed chars / rows, so no stats job runs."""
+    from .blocks import build_block_index, lexicon_from_blocks
     from .codec import FORMAT
-    from .corpus import CORPUS_SCHEMA, length_ordered_documents
-    from .stats import doc_table, lexicon
+    from .constants import SEPARATOR_REGEX
+    from .corpus import CORPUS_SCHEMA, DOCUMENTS_SCHEMA, length_ordered_documents
     from .tokenize import postings_from_documents
 
     corpus = corpus.select(*CORPUS_SCHEMA.names)
     cp = CheckpointManager(spark, out)
     stages: dict[str, StageResult] = {}
 
+    # distinct non-empty terms per doc (hw2/DataLoader.cpp:69): the split of
+    # tokenize.postings_sql_plan, as built-ins, so no second tokenize pass
+    pieces = F.split("content", SEPARATOR_REGEX)
+    word_nums = F.size(F.array_distinct(F.filter(pieces, lambda t: t != "")))
     stages["documents"] = cp.run_stage(
         "documents",
-        lambda: length_ordered_documents(corpus),
+        lambda: length_ordered_documents(corpus).withColumn("word_nums", word_nums),
         inputs=corpus,
+        params={"columns": [*DOCUMENTS_SCHEMA.names, "word_nums"]},
         metric_cols={"docs_indexed": "count(*)", "chars": "sum(doc_len)"},
     )
     docs = stages["documents"].df
     dm = stages["documents"].manifest
     avg_doc_len = dm["metrics"]["chars"] / dm["row_count"]
 
-    stages["postings"] = cp.run_stage(
-        "postings",
-        lambda: postings_from_documents(docs),
-        inputs=["documents"],
-        metric_cols={"postings_emitted": "count(*)"},
-    )
-    postings = stages["postings"].df
-
-    stages["doc_table"] = cp.run_stage(
-        "doc_table",
-        lambda: doc_table(docs, postings),
-        inputs=["documents", "postings"],
-        metric_cols={"docs_indexed": "count(*)"},
-    )
-    stages["lexicon"] = cp.run_stage(
-        "lexicon",
-        lambda: lexicon(postings),
-        inputs=["postings"],
-        metric_cols={"terms": "count(*)", "postings_emitted": "sum(df)"},
-    )
     stages["blocks"] = cp.run_stage(
         "blocks",
-        lambda: build_block_index(postings, avg_doc_len, bucket_span=bucket_span),
-        inputs=["postings"],
+        lambda: build_block_index(
+            postings_from_documents(docs), avg_doc_len, bucket_span=bucket_span
+        ),
+        inputs=["documents"],
         # the codec format keys the stage: blocks of another layout rebuild
         params={
             "avg_doc_len": avg_doc_len,
@@ -262,5 +254,11 @@ def build_index(
             "postings_emitted": "sum(n_postings)",
             "bytes_compressed": "sum(length(payload))",
         },
+    )
+    stages["lexicon"] = cp.run_stage(
+        "lexicon",
+        lambda: lexicon_from_blocks(stages["blocks"].df),
+        inputs=["blocks"],
+        metric_cols={"terms": "count(*)", "postings_emitted": "sum(df)"},
     )
     return stages

@@ -129,8 +129,9 @@ def assign_dense_ids(
     never of Spark's runtime partition placement — ``repartitionByRange``
     re-samples per job, so two jobs over the same plan can disagree about
     partition boundaries and corrupt the offsets (observed at 60k rows).
-    Two small eager collects — the boundary sample, then a count per bucket
-    → cumulative offsets — and one lazy Catalyst expression:
+    Two small eager collects — the boundary sample (the keys of smallest
+    seeded hash), then a count per bucket → cumulative offsets — and one
+    lazy Catalyst expression:
     ``offset[__bucket] + row_number() OVER (PARTITION BY __bucket ORDER BY
     __key) - 1``, the offsets inlined as a literal array.  This is the
     distributed analog of the reference's sequential docID assignment
@@ -160,10 +161,15 @@ def assign_dense_ids(
     d = df.withColumn("__key", key)
 
     if num_partitions > 1:
-        frac_rows = num_partitions * 100
-        n = d.count()
-        frac = min(1.0, frac_rows / max(n, 1))
-        sample = sorted(r["__key"] for r in d.select("__key").sample(False, frac, seed).collect())
+        # the keys of smallest seeded hash: one TakeOrderedAndProject job,
+        # independent of how the rows are partitioned
+        sample = sorted(
+            r["__key"]
+            for r in d.select("__key")
+            .orderBy(F.xxhash64(F.lit(seed), "__key"), "__key")
+            .limit(num_partitions * 100)
+            .collect()
+        )
         step = max(len(sample) // num_partitions, 1)
         bounds = sorted(set(sample[step::step]))[: num_partitions - 1]
     else:

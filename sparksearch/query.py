@@ -164,11 +164,3 @@ def topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "doc_id", "score")
     )
-
-
-def attach_urls(topk_df: DataFrame, doc_table: DataFrame) -> DataFrame:
-    """Map docID -> (repo, path): the reference's doc-table array lookup
-    (hw3/DataLoader.cpp:668,756) as a broadcast join of the tiny top-k side."""
-    return F.broadcast(topk_df).join(
-        doc_table.select("doc_id", "repo", "path"), "doc_id", "inner"
-    ).select("query_id", "rank", "doc_id", "score", "repo", "path")

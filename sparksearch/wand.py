@@ -363,10 +363,7 @@ def _batch_score_bucket(
         survivors.append((qid, q, present))
 
     def emit(qid: int, docs_sel: np.ndarray, scores_sel: np.ndarray) -> None:
-        if len(docs_sel) > k:  # local top-k, tie (score desc, doc asc)
-            rank_key = _micro_i64(scores_sel) if micro_rank else scores_sel
-            order = np.lexsort((docs_sel, -rank_key))[:k]
-            docs_sel, scores_sel = docs_sel[order], scores_sel[order]
+        # offsets → doc ids; collect() makes the one top-k cut
         collect(
             qid,
             (docs_sel + lo if id_map is None else id_map[docs_sel]).astype(np.int64),
@@ -392,7 +389,7 @@ def _batch_score_bucket(
         # γ·Σ_t|W[r,t]|·max|D_t| (standard summation bound, γ = 2·T·eps32),
         # so any doc whose exact score ties or beats the exact k-th has
         # s32 ≥ kth32 − 2·err_r; cutting at that threshold keeps every such
-        # doc, and emit's exact lexsort (on f64 scores) does the final
+        # doc, and collect()'s exact lexsort (on f64 scores) does the final
         # ranking — f32 never decides an ORDER, only a superset.
         # float32 for the presence-count matmul too: counts are small
         # integers (≤ n_terms ≤ 2^24), exactly representable
@@ -424,7 +421,7 @@ def _batch_score_bucket(
             # row-wise k-th largest, candidates = all >= it.  Under
             # micro_rank the threshold drops by one micro quantum (+ float-
             # safety) so every doc that could still TIE the k-th micro key
-            # survives into emit(), whose exact micro lexsort does the final
+            # survives into collect(), whose exact micro lexsort makes the
             # cut — sound because micro is monotone, so the k-th micro key
             # equals micro(k-th exact score), and s ≤ t - 1e-6 implies
             # micro(s) < micro(t).  (The former full-matrix _micro_i64 pass
@@ -441,7 +438,7 @@ def _batch_score_bucket(
                 kth = np.full(nq, -np.inf, np.float32)
             # threshold = f32 k-th − 2·err (covers both the k-th's own error
             # and a candidate's), − one micro quantum under micro_rank so
-            # micro ties survive into emit
+            # micro ties survive into collect()
             thr = kth.astype(np.float64) - 2.0 * err_row
             if micro_rank:
                 thr -= 1e-6 + 1e-9 * np.maximum(1.0, np.abs(kth))
@@ -473,8 +470,9 @@ def _batch_walk_shard(
     skipped) Spark accumulators, each added to once per task."""
     qitems = list(qs.items())
     evals = [0, 0]
-    # per-query running top-k across this shard's buckets (merged ≤2k
-    # bounded cut per bucket) + running θ once k results exist
+    # per-query running top-k across this shard's buckets (the kept ≤k
+    # merged with each bucket's matches, one cut) + running θ once k
+    # results exist
     cand: dict[int, tuple[np.ndarray, np.ndarray]] = {}
     run_theta: dict[int, float] = {}
 

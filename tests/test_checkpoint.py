@@ -8,6 +8,7 @@ import os
 import sys
 
 import pyarrow.parquet as pq
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -17,6 +18,7 @@ from sparksearch.corpus import (  # noqa: E402
     documents_from_testdata,
     length_ordered_documents,
 )
+from sparksearch.tokenize import postings_from_documents  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata/sf0.001")
 
@@ -35,16 +37,21 @@ def test_full_build_then_resume(spark, tmp_path):
     n_docs = out1["documents"].manifest["row_count"]
     assert n_docs == corpus.count()
 
+    # the reference's three artifacts, and nothing else on disk
+    assert set(out1) == {"documents", "blocks", "lexicon"}
+    assert sorted(os.listdir(base)) == ["blocks", "documents", "lexicon"]
+
     # per-file lineage and observed stage metrics present and consistent
-    pm = out1["postings"].manifest
-    assert pm["metrics"]["postings_emitted"] == pm["row_count"]
-    assert sum(f["rows"] for f in pm["files"]) == pm["row_count"]
-    assert all(f["bytes"] > 0 for f in pm["files"])
-    bm = out1["blocks"].manifest
-    assert bm["metrics"]["postings_emitted"] == pm["row_count"]
+    dm, bm, lm = (out1[s].manifest for s in ("documents", "blocks", "lexicon"))
+    n_postings = postings_from_documents(out1["documents"].df).count()
+    assert bm["metrics"]["postings_emitted"] == lm["metrics"]["postings_emitted"] == n_postings
     assert bm["metrics"]["bytes_compressed"] > 0
-    assert sum(f["rows"] for f in bm["files"]) == bm["row_count"]
-    assert bm["lineage"]["postings"] == pm["fingerprint"]
+    assert lm["metrics"]["terms"] == lm["row_count"]
+    for m in (bm, lm):
+        assert sum(f["rows"] for f in m["files"]) == m["row_count"]
+        assert all(f["bytes"] > 0 for f in m["files"])
+    assert bm["lineage"] == {"documents": dm["fingerprint"]}
+    assert lm["lineage"] == {"blocks": bm["fingerprint"]}
     # the test session (session.get_spark) writes zstd pages
     meta = pq.read_metadata(sorted(glob.glob(f"{base}/blocks/data/*.parquet"))[0])
     assert {meta.row_group(0).column(c).compression for c in range(meta.num_columns)} == {"ZSTD"}
@@ -62,10 +69,10 @@ def test_param_change_invalidates(spark, tmp_path):
     base = str(tmp_path / "ckpt2")
     corpus = _corpus(spark)
     build_index(spark, corpus, base)
-    # changing a build param must rerun the dependent stage only
+    # changing a build param must rerun the dependent stages only
     out2 = build_index(spark, corpus, base, bucket_span=64)
-    assert out2["postings"].resumed
-    assert not out2["blocks"].resumed
+    assert out2["documents"].resumed
+    assert not out2["blocks"].resumed and not out2["lexicon"].resumed
     assert out2["blocks"].manifest["params"]["bucket_span"] == 64
 
 
@@ -95,6 +102,30 @@ def test_blocks_of_another_codec_format_rebuild(spark, tmp_path):
     assert out["blocks"].manifest["params"]["codec_format"] == FORMAT
 
 
+def test_documents_without_word_nums_rebuild(spark, tmp_path):
+    """A documents manifest committed before the stage carried the
+    DocTable's ``word_nums`` (no ``columns`` param, no such column) is
+    rebuilt with it, never reopened without it."""
+    from sparksearch.checkpoint import _fingerprint
+
+    base = str(tmp_path / "ckpt6")
+    corpus = _corpus(spark)
+    build_index(spark, corpus, base)
+    mp = os.path.join(base, "documents", "_MANIFEST.json")
+    with open(mp) as f:
+        m = json.load(f)
+    # the manifest as the earlier build committed it
+    m["params"] = {}
+    m["lineage_key"] = _fingerprint({"stage": "documents", "lineage": {}, "params": {}})
+    m["schema"]["fields"] = [c for c in m["schema"]["fields"] if c["name"] != "word_nums"]
+    with open(mp, "w") as f:
+        json.dump(m, f)
+
+    out = build_index(spark, corpus, base)
+    assert not out["documents"].resumed
+    assert "word_nums" in out["documents"].df.columns
+
+
 def test_input_change_invalidates_root_and_downstream(spark, tmp_path):
     """The documents stage is rooted at the corpus: the same rows in another
     partitioning resume every stage, while different content rebuilds from
@@ -118,25 +149,30 @@ def test_input_change_invalidates_root_and_downstream(spark, tmp_path):
     assert out3["documents"].manifest["data_hash"] != out1["documents"].manifest["data_hash"]
 
 
-def test_partial_crash_resume(spark, tmp_path):
+def test_partial_crash_resume(spark, tmp_path, monkeypatch):
     """Simulate a crash between stages: only stages with committed
     manifests resume; the rest rebuild."""
+    import sparksearch.blocks as blocks_mod
+
     base = str(tmp_path / "ckpt3")
     corpus = _corpus(spark)
-    cp = CheckpointManager(spark, base)
-    cp.run_stage(
-        "documents",
-        lambda: length_ordered_documents(corpus),
-        inputs=corpus,
-        metric_cols={"docs_indexed": "count(*)", "chars": "sum(doc_len)"},
-    )
-    # "crash" here — postings never ran.  New driver:
+
+    def killed(*a, **kw):
+        raise RuntimeError("driver killed")
+
+    # "crash" after the documents stage committed — blocks never ran
+    monkeypatch.setattr(blocks_mod, "build_block_index", killed)
+    with pytest.raises(RuntimeError, match="driver killed"):
+        build_index(spark, corpus, base)
+    assert not os.path.exists(os.path.join(base, "blocks", "_MANIFEST.json"))
+    monkeypatch.undo()
+    # new driver:
     out = build_index(spark, corpus, base)
     assert out["documents"].resumed
-    assert not out["postings"].resumed
+    assert not out["blocks"].resumed and not out["lexicon"].resumed
 
     # corrupt-manifest safety: a half-written manifest is never committed
-    mp = os.path.join(base, "postings", "_MANIFEST.json")
+    mp = os.path.join(base, "blocks", "_MANIFEST.json")
     with open(mp) as f:
         m = json.load(f)
     assert m["fingerprint"]
@@ -164,10 +200,11 @@ def test_fingerprint_even_multiplicity(spark, tmp_path):
 
 
 def test_checkpointed_build_evaluates_once(spark, tmp_path, monkeypatch):
-    """On sf0.001 a fresh ``build_index`` launches at most 15 Spark jobs:
-    the id pass's eager jobs, then each stage's plan runs once, its manifest
-    comes from the write's observed metrics and it is reopened with its
-    recorded schema (no inference job).  A full resume launches no more
+    """On sf0.001 a fresh ``build_index`` launches at most 9 Spark jobs:
+    the id pass's 3 eager jobs, then each of the three stages' plans runs
+    once (its shuffle's map stage, then its write), its manifest comes from
+    the write's observed metrics and it is reopened with its recorded
+    schema (no inference job).  A full resume launches no more
     jobs than one ``dataframe_fingerprint(corpus)`` and runs no id pass."""
     import sparksearch.corpus as corpus_mod
     from sparksearch.checkpoint import dataframe_fingerprint
@@ -196,7 +233,7 @@ def test_checkpointed_build_evaluates_once(spark, tmp_path, monkeypatch):
     base = str(tmp_path / "ckpt")
     fresh = n_jobs("fresh", lambda: out.update(build_index(spark, corpus, base)))
     assert not any(r.resumed for r in out.values())
-    assert fresh <= 15 and len(id_passes) == 1
+    assert fresh <= 9 and len(id_passes) == 1
 
     resume = n_jobs("resume", lambda: out.update(build_index(spark, corpus, base)))
     assert all(r.resumed for r in out.values())
@@ -209,17 +246,24 @@ def test_checkpointed_build_evaluates_once(spark, tmp_path, monkeypatch):
 def test_build_index_layout_equals_layer_functions(spark, tmp_path):
     """``build_index`` spells the length-ordered layout the layer functions
     give: the same documents (hence doc ids, which the DuckDB lenordered
-    oracles depend on) and the same blocks."""
+    oracles depend on), the same blocks, ``stats.doc_table``'s
+    ``word_nums`` and ``stats.lexicon``'s df."""
     from sparksearch.blocks import build_block_index
-    from sparksearch.stats import collection_stats
-    from sparksearch.tokenize import postings_from_documents
+    from sparksearch.stats import collection_stats, doc_table, lexicon
 
     corpus = _corpus(spark)
     out = build_index(spark, corpus, str(tmp_path / "ckpt"))
+    got_docs = out["documents"].df
     docs = length_ordered_documents(corpus).cache()
+    postings = postings_from_documents(docs)
     avg_doc_len = collection_stats(docs)["avg_doc_len"]
-    blocks = build_block_index(postings_from_documents(docs), avg_doc_len, 2048)
-    for got, want in ((out["documents"].df, docs), (out["blocks"].df, blocks)):
+    blocks = build_block_index(postings, avg_doc_len, 2048)
+    for got, want in (
+        (got_docs.drop("word_nums"), docs),
+        (out["blocks"].df, blocks),
+        (got_docs.select("doc_id", "word_nums"), doc_table(docs, postings).select("doc_id", "word_nums")),
+        (out["lexicon"].df.select("term", "df"), lexicon(postings).select("term", "df")),
+    ):
         assert got.columns == want.columns
         assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
     docs.unpersist()

@@ -65,6 +65,21 @@ def test_ids_follow_sort_order(spark, num_partitions, seed):
     assert [tuple(r[1:]) for r in got] == sorted(r[:3] for r in rows)
 
 
+def test_id_pass_eager_jobs(spark):
+    """The id pass's eager work is one sample job (the keys of smallest
+    seeded hash, a TakeOrderedAndProject) and the per-bucket count (its
+    shuffle map stage and result): 3 jobs."""
+    schema = T.StructType([T.StructField("len_key", T.StringType(), False), *CORPUS_SCHEMA.fields])
+    df = spark.createDataFrame(_keyed_rows(), schema)
+    sc, group = spark.sparkContext, "dense-ids-eager-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        assign_dense_ids(df, ["len_key", "repo", "path"], num_partitions=16)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+
+
 def test_reorder_plan_one_window_no_python(spark):
     """The in-build reorder runs one id pass in the plan: the (repo, path)
     ids it discards are pruned, and numbering is a built-in window, not a

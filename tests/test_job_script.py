@@ -1,7 +1,7 @@
 """scripts/sparksearch_job.py end to end, in-process: a corpus parquet
 table (repo, path, commit, lang, content) builds a resumable, zstd-written
 index, a rerun resumes every stage, and the query subcommand prints the
-exhaustive scorer's ranking over the persisted postings in 2 Spark jobs."""
+exhaustive scorer's ranking over the index's documents in 2 Spark jobs."""
 
 import glob
 import importlib.util
@@ -16,6 +16,7 @@ from sparksearch.constants import DISJUNCTIVE
 from sparksearch.corpus import synthetic_corpus
 from sparksearch.query import query_terms_df, topk
 from sparksearch.stats import collection_stats
+from sparksearch.tokenize import postings_from_documents
 
 SCRIPT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -65,7 +66,7 @@ def test_job_build_resume_query(spark, tmp_path, monkeypatch, capsys):
         out = _run(job, monkeypatch, capsys, "query", "--index", index, "--query", text)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    # lexicon, doc_table lookup: the driver placement reads the blocks
+    # lexicon, documents lookup: the driver placement reads the blocks
     # stage's parquet files itself
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
     got = []
@@ -74,7 +75,7 @@ def test_job_build_resume_query(spark, tmp_path, monkeypatch, capsys):
         got.append((int(rank), int(doc_id), round(float(score) * 1e6)))
 
     docs = spark.read.parquet(f"{index}/documents/data")
-    posts = spark.read.parquet(f"{index}/postings/data")
+    posts = postings_from_documents(docs)
     lex = spark.read.parquet(f"{index}/lexicon/data").select("term", "df")
     st = collection_stats(docs)
     qt = query_terms_df(spark, [(0, text, DISJUNCTIVE)])
