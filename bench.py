@@ -116,9 +116,10 @@ def main() -> None:
         docs = index["documents"].df.repartition(cpus).cache()
         docs.count()
         # the exhaustive scorer and the reordering study read postings,
-        # which the index does not keep: tokenized once, outside the timers
-        postings = postings_from_documents(docs).cache()
-        postings.count()
+        # which the index does not keep: tokenized once and persisted to
+        # parquet outside the timers, so they read disk like the blocks
+        postings_from_documents(index["documents"].df).write.parquet(f"{tmp}/postings")
+        postings = spark.read.parquet(f"{tmp}/postings")
 
         blocks = index["blocks"].df
         lex = index["lexicon"].df.select("term", "df")

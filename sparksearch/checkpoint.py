@@ -212,10 +212,11 @@ def build_index(
     key it, so documents written without ``word_nums`` rebuild.  Each write
     observes its stage's metrics (docs indexed, postings emitted, bytes
     compressed); N is the documents ``row_count`` and the blocks' avgdl its
-    observed chars / rows, so no stats job runs."""
+    observed chars / rows, so no stats job runs.  Stage directories it does
+    not write (an older build's postings, doc_table) are left alone."""
+    from .analysis import tokens_array
     from .blocks import build_block_index, lexicon_from_blocks
     from .codec import FORMAT
-    from .constants import SEPARATOR_REGEX
     from .corpus import CORPUS_SCHEMA, DOCUMENTS_SCHEMA, length_ordered_documents
     from .tokenize import postings_from_documents
 
@@ -223,10 +224,9 @@ def build_index(
     cp = CheckpointManager(spark, out)
     stages: dict[str, StageResult] = {}
 
-    # distinct non-empty terms per doc (hw2/DataLoader.cpp:69): the split of
-    # tokenize.postings_sql_plan, as built-ins, so no second tokenize pass
-    pieces = F.split("content", SEPARATOR_REGEX)
-    word_nums = F.size(F.array_distinct(F.filter(pieces, lambda t: t != "")))
+    # distinct terms per doc (hw2/DataLoader.cpp:69), as built-ins, so no
+    # second tokenize pass; bigint like stats.doc_table's count
+    word_nums = F.size(F.array_distinct(tokens_array(F.col("content")))).cast("long")
     stages["documents"] = cp.run_stage(
         "documents",
         lambda: length_ordered_documents(corpus).withColumn("word_nums", word_nums),

@@ -124,26 +124,28 @@ def assign_dense_ids(
     """Dense 0-based ids in ``order_cols`` order, without a global-window
     single-partition sort.  ``order_cols`` must be a unique key.
 
-    The range bucket of each row is an **explicit function of the data**
-    (seeded-sample boundary list, inlined into a comparison expression),
-    never of Spark's runtime partition placement — ``repartitionByRange``
-    re-samples per job, so two jobs over the same plan can disagree about
-    partition boundaries and corrupt the offsets (observed at 60k rows).
-    Two small eager collects — the boundary sample (the keys of smallest
-    seeded hash), then a count per bucket → cumulative offsets — and one
-    lazy Catalyst expression:
+    The range bucket of each row is an **explicit expression** (a
+    boundary list sampled once, inlined into a comparison), never
+    re-derived per job — ``repartitionByRange`` re-samples per job, so two
+    jobs over the same plan can disagree about partition boundaries and
+    corrupt the offsets (observed at 60k rows).
+    Two small eager collects — the boundary sample (each partition's keys of
+    smallest seeded hash), then a count per bucket → cumulative offsets —
+    and one lazy Catalyst expression:
     ``offset[__bucket] + row_number() OVER (PARTITION BY __bucket ORDER BY
     __key) - 1``, the offsets inlined as a literal array.  This is the
     distributed analog of the reference's sequential docID assignment
-    (hw2/DataLoader.cpp:93,110).  No Python runs per row, so a caller that
-    drops ``doc_id`` lets the optimizer prune the window and its shuffle.
+    (hw2/DataLoader.cpp:93,110); the bounds only balance the buckets, never
+    move ids.  No Python runs per row, so a caller that drops ``doc_id``
+    lets the optimizer prune the window and its shuffle.
 
     Cost at scale: the window shuffles by bucket, sorts by key, then
     buffers each bucket's rows (every column) before numbering them, in
     Spark's spill-backed window buffer; a pandas pass after the same sort
     could stream them instead.  A bucket holds about
     ``rows / num_partitions`` rows, and ``num_partitions`` defaults to the
-    input's partition count (at least 8).
+    input's partition count (at least 8).  The sample job sorts each input
+    partition's keys (only the key column) in place, with no shuffle.
 
     INVARIANT: ``order_cols`` values must not contain ``\\x00``/``\\x01``
     control characters.  The total order here compares the
@@ -154,22 +156,25 @@ def assign_dense_ids(
     construction; an ingest adapter feeding arbitrary bytes must sanitize
     or pre-escape them first (ADVICE r4).
     """
+    n_in = df.rdd.getNumPartitions()
     if num_partitions is None:
-        num_partitions = max(df.rdd.getNumPartitions(), 8)
+        num_partitions = max(n_in, 8)
 
     key = F.concat_ws("\x01", *[F.col(c) for c in order_cols])
     d = df.withColumn("__key", key)
 
     if num_partitions > 1:
-        # the keys of smallest seeded hash: one TakeOrderedAndProject job,
-        # independent of how the rows are partitioned
-        sample = sorted(
-            r["__key"]
-            for r in d.select("__key")
-            .orderBy(F.xxhash64(F.lit(seed), "__key"), "__key")
-            .limit(num_partitions * 100)
-            .collect()
+        # each input partition's keys of smallest seeded hash, sorted in
+        # place and numbered by monotonically_increasing_id (its low 33 bits
+        # count rows within a partition): about num_partitions * 100 keys in
+        # all at any row count, in one job with no shuffle
+        per = -(-num_partitions * 100 // max(n_in, 1))
+        ranked = (
+            d.select("__key")
+            .sortWithinPartitions(F.xxhash64(F.lit(seed), "__key"), "__key")
+            .withColumn("__i", F.monotonically_increasing_id() % (1 << 33))
         )
+        sample = sorted(r[0] for r in ranked.where(F.col("__i") < per).select("__key").collect())
         step = max(len(sample) // num_partitions, 1)
         bounds = sorted(set(sample[step::step]))[: num_partitions - 1]
     else:

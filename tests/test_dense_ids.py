@@ -67,7 +67,7 @@ def test_ids_follow_sort_order(spark, num_partitions, seed):
 
 def test_id_pass_eager_jobs(spark):
     """The id pass's eager work is one sample job (the keys of smallest
-    seeded hash, a TakeOrderedAndProject) and the per-bucket count (its
+    seeded hash in each input partition) and the per-bucket count (its
     shuffle map stage and result): 3 jobs."""
     schema = T.StructType([T.StructField("len_key", T.StringType(), False), *CORPUS_SCHEMA.fields])
     df = spark.createDataFrame(_keyed_rows(), schema)
@@ -78,6 +78,42 @@ def test_id_pass_eager_jobs(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+
+
+def _driver_bytes(spark, group: str, action) -> int:
+    """Bytes the driver receives as task results while ``action`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
+    return sum(
+        store.lastStageAttempt(s).resultSize()
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    )
+
+
+def test_id_pass_sample_bounded_at_many_partitions(spark):
+    """The boundary sample sends the driver about ``num_partitions * 100``
+    keys in all, not that many from every input partition: over 64 input
+    partitions (the default 64 buckets), the id pass's task results hardly
+    grow from 40,000 to 160,000 rows, where a per-partition top 6,400
+    would send every key both times."""
+
+    def id_pass_bytes(n: int) -> int:
+        df = spark.range(0, n, 1, 64).select(
+            F.format_string("%010d", F.col("id") % 5).alias("len_key"),
+            F.concat(F.lit("org"), (F.col("id") % 4).cast("string")).alias("repo"),
+            F.format_string("src/f%d.py", "id").alias("path"),
+        )
+        order = ["len_key", "repo", "path"]
+        return _driver_bytes(spark, f"id-pass-{n}", lambda: assign_dense_ids(df, order))
+
+    small, large = id_pass_bytes(40_000), id_pass_bytes(160_000)
+    assert large < 1.25 * small, (small, large)
 
 
 def test_reorder_plan_one_window_no_python(spark):
