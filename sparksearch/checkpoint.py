@@ -19,7 +19,8 @@ rerun the same driver, and finished stages replay from disk.  Manifests are
 written temp-then-rename, so a killed write never looks committed.
 :func:`build_index` is the index build as three such stages, the
 reference's DocTable, blocked lists and lexicon (documents → blocks →
-lexicon).
+lexicon); a streamed micro-batch runs the same documents and blocks
+stages (``streaming.ingest_batch``).
 
 On a real cluster the same abstraction binds to an Iceberg catalog
 (``writeTo(...).createOrReplace()`` + snapshot ids); parquet + manifest is
@@ -40,6 +41,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .constants import BUCKET_SPAN
 
 
 def _fingerprint(obj) -> str:
@@ -199,49 +202,47 @@ class CheckpointManager:
         return StageResult(stage, path, manifest, resumed, df)
 
 
-def build_index(
-    spark: SparkSession, corpus: DataFrame, out: str, bucket_span: int = 2048
+def _documents_and_blocks(
+    cp: CheckpointManager,
+    corpus: DataFrame,
+    bucket_span: int,
+    offset: int = 0,
+    avg_doc_len: float | None = None,
 ) -> dict[str, StageResult]:
-    """The index build from a corpus table (repo, path, commit, lang,
-    content), as the reference's three on-disk artifacts in resumable stages
-    under ``out``: documents (length-ordered ids,
-    ``corpus.length_ordered_documents``, plus the DocTable's ``word_nums``)
-    → blocks → lexicon (term, df, n_blocks: docNum/blockNum).  The documents
-    stage is rooted at the corpus, so a resume checks
-    ``dataframe_fingerprint(corpus)`` and runs no id pass; its output columns
-    key it, so documents written without ``word_nums`` rebuild.  Each write
-    observes its stage's metrics (docs indexed, postings emitted, bytes
-    compressed); N is the documents ``row_count`` and the blocks' avgdl its
-    observed chars / rows, so no stats job runs.  Stage directories it does
-    not write (an older build's postings, doc_table) are left alone."""
+    """The documents and blocks stages of one build under ``cp``, shared by
+    :func:`build_index` and every streamed micro-batch
+    (``streaming.ingest_batch``).  documents: length-ordered ids
+    (``corpus.length_ordered_documents``) from ``offset`` on, plus the
+    DocTable's ``word_nums``; it is rooted at the corpus, so a resume
+    checks ``dataframe_fingerprint(corpus)`` and runs no id pass, and its
+    output columns and offset key it.  blocks: scored under
+    ``avg_doc_len``, or, when None, the documents' own mean, their observed
+    chars / rows, so no stats job runs."""
     from .analysis import tokens_array
-    from .blocks import build_block_index, lexicon_from_blocks
+    from .blocks import build_block_index
     from .codec import FORMAT
     from .corpus import CORPUS_SCHEMA, DOCUMENTS_SCHEMA, length_ordered_documents
     from .tokenize import postings_from_documents
 
     corpus = corpus.select(*CORPUS_SCHEMA.names)
-    cp = CheckpointManager(spark, out)
-    stages: dict[str, StageResult] = {}
-
     # distinct terms per doc (hw2/DataLoader.cpp:69), as built-ins, so no
     # second tokenize pass; bigint like stats.doc_table's count
     word_nums = F.size(F.array_distinct(tokens_array(F.col("content")))).cast("long")
-    stages["documents"] = cp.run_stage(
+    docs = cp.run_stage(
         "documents",
-        lambda: length_ordered_documents(corpus).withColumn("word_nums", word_nums),
+        lambda: length_ordered_documents(corpus).withColumns(
+            {"doc_id": F.col("doc_id") + offset, "word_nums": word_nums}
+        ),
         inputs=corpus,
-        params={"columns": [*DOCUMENTS_SCHEMA.names, "word_nums"]},
+        params={"columns": [*DOCUMENTS_SCHEMA.names, "word_nums"], "offset": offset},
         metric_cols={"docs_indexed": "count(*)", "chars": "sum(doc_len)"},
     )
-    docs = stages["documents"].df
-    dm = stages["documents"].manifest
-    avg_doc_len = dm["metrics"]["chars"] / dm["row_count"]
-
-    stages["blocks"] = cp.run_stage(
+    if avg_doc_len is None:
+        avg_doc_len = docs.manifest["metrics"]["chars"] / docs.manifest["row_count"]
+    blocks = cp.run_stage(
         "blocks",
         lambda: build_block_index(
-            postings_from_documents(docs), avg_doc_len, bucket_span=bucket_span
+            postings_from_documents(docs.df), avg_doc_len, bucket_span=bucket_span
         ),
         inputs=["documents"],
         # the codec format keys the stage: blocks of another layout rebuild
@@ -255,6 +256,24 @@ def build_index(
             "bytes_compressed": "sum(length(payload))",
         },
     )
+    return {"documents": docs, "blocks": blocks}
+
+
+def build_index(
+    spark: SparkSession, corpus: DataFrame, out: str, bucket_span: int = BUCKET_SPAN
+) -> dict[str, StageResult]:
+    """The index build from a corpus table (repo, path, commit, lang,
+    content), as the reference's three on-disk artifacts in resumable stages
+    under ``out``: documents → blocks (:func:`_documents_and_blocks`, ids
+    from 0, avgdl the collection mean) → lexicon (term, df, n_blocks:
+    docNum/blockNum).  Each write observes its stage's metrics (docs
+    indexed, postings emitted, bytes compressed); N is the documents
+    ``row_count``.  Stage directories it does not write (an older build's
+    postings, doc_table) are left alone."""
+    from .blocks import lexicon_from_blocks
+
+    cp = CheckpointManager(spark, out)
+    stages = _documents_and_blocks(cp, corpus, bucket_span)
     stages["lexicon"] = cp.run_stage(
         "lexicon",
         lambda: lexicon_from_blocks(stages["blocks"].df),

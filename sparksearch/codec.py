@@ -63,8 +63,9 @@ CHUNK_META_BYTES = 16
 
 # payload layout version: 1 = raw doc lengths, 2 = per-chunk zigzag-delta
 # doc lengths.  Both decode without error, so every writer that persists
-# blocks records it (the blocks stage's manifest params, the stream state,
-# each streamed batch's _meta.json) and readers refuse another version.
+# blocks records it (the blocks stage's manifest params, which a streamed
+# batch's and a compaction's blocks stage share, and the stream state) and
+# readers refuse another version.
 FORMAT = 2
 
 

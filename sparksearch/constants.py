@@ -17,6 +17,9 @@ TOP_K = 20
 POSTINGS_PER_CHUNK = 64          # "POSTINGS_IN_BLOCK" in the reference
 BLOCK_SIZE_BYTES = 65536         # BLOCK_SIZE: a block is <= 64 KB
 BLOCK_HEADER_BYTES = 4           # uint32 chunk count
+# doc ids per (term, bucket) encode group of a built or streamed index:
+# bounds every group whatever the term's df (blocks.build_block_index)
+BUCKET_SPAN = 2048
 
 # --- tokenizer separator set (hw3/config.h:59, hw2/DataLoader.cpp:33) --------
 # The C++ engine treats every *byte* of this string as a separator and keeps

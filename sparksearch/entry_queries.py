@@ -1068,9 +1068,10 @@ _register("crawl_frontier", _frontier, _frontier_oracle)
 #      real Structured Streaming query (availableNow, maxFilesPerTrigger=1
 #      -> one micro-batch per file, file mtimes fixed so the
 #      FileStreamSource's oldest-first order is deterministic).  The oracle
-#      is a sequential twin of the ingest policy (bucket-aligned per-batch
-#      doc-id offsets, first-batch-pinned avg_doc_len) + exhaustive BM25
-#      over the union (fixture_oracles.streaming_fixture_sql).  Checks the
+#      is a sequential twin of the ingest policy (length-ordered ids per
+#      batch at bucket-aligned offsets, first-batch-pinned avg_doc_len) +
+#      exhaustive BM25 over the union
+#      (fixture_oracles.streaming_fixture_sql).  Checks the
 #      doc-id offset/alignment policy, exactly-once batch accounting
 #      (n_batches from the stream state), the pinned-avgdl scoring
 #      contract, AND rank/score parity of the top-k kernel over the
@@ -1116,7 +1117,6 @@ def _streaming_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             input_dir,
             index_dir,
             bucket_span=STREAM_BUCKET_SPAN,
-            available_now=True,
             max_files_per_trigger=1,
         )
         docs, blocks, lex, st = read_index(spark, index_dir)

@@ -143,7 +143,8 @@ def streaming_fixture_sql(
     """Expected (query_id, rank, doc_id, path, score_micro, n_docs, n_batches)
     for the ``streaming_incremental`` entry: a sequential twin of the
     micro-batch ingest (streaming.ingest_batch's doc-id policy — per-batch
-    dense ids in (repo, path) order at an offset rounded UP to the next
+    dense ids in (content length, repo, path) order, the key of
+    ``corpus.length_ordered_documents``, at an offset rounded UP to the next
     ``bucket_span`` multiple, ``avg_doc_len`` PINNED to the first batch's
     mean, hw3/config.h:60 analog) followed by exhaustive BM25 over the
     union of all batches.  Batch b = docs with original doc_id % n_batches
@@ -175,7 +176,7 @@ def streaming_fixture_sql(
     path_by: dict[int, str] = {}
     pinned: float | None = None
     for b in batches:
-        b.sort(key=lambda r: (r[0], r[1]))
+        b.sort(key=lambda r: (len(r[2]), r[0], r[1]))
         offset = -(-next_id // bucket_span) * bucket_span
         for i, (_repo, path, text) in enumerate(b):
             docs.append((offset + i, text))

@@ -21,43 +21,48 @@ blocks, and the query path reads old + new blocks unchanged.  Compaction
 (re-encoding many small buckets into big ones, re-densifying ids is NOT
 needed) is an optional offline rewrite, not a correctness requirement.
 
-Exactly-once: each batch lands in its own subdirectory
-(``documents/batch_<id>``, ``blocks/batch_<id>``) via write-to-staging +
-atomic rename, with the blocks rename LAST as the commit point.  On
-foreachBatch redelivery (crash anywhere before state save), a committed
-batch is detected by its blocks dir and only the stream state is
-repaired from the batch's ``_meta.json``; a half-committed batch (docs
-renamed, blocks missing) is discarded and rewritten.  Readers list both
-layouts with ``recursiveFileLookup``.  The stream state and each batch's
-``_meta.json`` record the payload layout (``codec.FORMAT``); ingest,
-compaction and ``read_index`` refuse an index of another layout, so blocks
-of two layouts never mix in one index.
+One build: a micro-batch is indexed by ``checkpoint.build_index``'s own
+documents and blocks stages, under a ``CheckpointManager`` rooted at
+``index_dir/batch_<id>``: length-ordered ids from the batch's offset,
+blocks scored under the index's pinned avgdl.  Each stage commits
+through its manifest.
 
-Collection stats (N, avgdl) and the lexicon are maintained by cheap
-aggregations over the appended tables at read time — both are one
-skew-free aggregate over metadata-sized data (the reference reloads its
-doc table/lexicon at startup the same way, hw3/DocTable.cpp:67-102).
+Exactly-once: the batch joins the index in ONE step, the temp-then-rename
+save of the stream state ``_STREAM_STATE.json``, which records its stage
+directories, its ``n_docs`` (the documents manifest's ``row_count``) and
+chars, and the pinned avgdl.  Readers open exactly the recorded stage
+directories, so a batch whose stages committed but whose state save did
+not is invisible; on foreachBatch redelivery its committed stages resume
+through ``run_stage``'s lineage and source-hash check instead of being
+rebuilt, and a stage killed mid-write has no manifest and rebuilds.  The
+state records the payload layout (``codec.FORMAT``); ingest, compaction
+and ``read_index`` refuse an index of another format, or one in the older
+layout whose state lists no stage directories, so blocks of two layouts
+never mix.
 
-``run_incremental_index(..., available_now=True)`` drains everything
-currently in the input directory and stops — the testable/batch-catchup
-trigger; with ``available_now=False`` it runs continuously per
-micro-batch.
+N and avgdl come from the state, so ``read_index`` runs no Spark job; the
+lexicon is one aggregate over the blocks at query time (the reference
+reloads its doc table/lexicon at startup the same way,
+hw3/DocTable.cpp:67-102).
+
+``run_incremental_index`` drains everything currently in the input
+directory (the availableNow trigger) and stops.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .blocks import build_block_index, decode_block_index, lexicon_from_blocks
+from .checkpoint import CheckpointManager, _documents_and_blocks
 from .codec import FORMAT, check_format
-from .corpus import CORPUS_SCHEMA, documents_from_corpus
-from .tokenize import postings_from_documents
-
-DEFAULT_BUCKET_SPAN = 1 << 14
+from .constants import BUCKET_SPAN
+from .corpus import CORPUS_SCHEMA
 
 
 def _state_path(index_dir: str) -> str:
@@ -65,17 +70,24 @@ def _state_path(index_dir: str) -> str:
 
 
 def _load_state(index_dir: str) -> dict:
+    """The stream state (an empty index's if none is saved); refuses an
+    index of another codec format or of the older layout, whose state
+    records no stage directories."""
     p = _state_path(index_dir)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {"next_doc_id": 0, "batches": [], "codec_format": FORMAT}
-
-
-def _read_parts(spark: SparkSession, path: str) -> DataFrame:
-    """Read a table stored as per-batch subdirs and/or flat part files
-    (post-compaction) — recursive listing, no hive partition inference."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(path)
+    if not os.path.exists(p):
+        return {
+            "codec_format": FORMAT, "next_doc_id": 0, "avg_doc_len": None,
+            "batches": [], "blocks": [],
+        }
+    with open(p) as f:
+        state = json.load(f)
+    check_format(state.get("codec_format"), index_dir)  # no mixed layouts
+    if "blocks" not in state:
+        raise ValueError(
+            f"{index_dir}: streamed index of an older layout (its state records "
+            "no stage directories); rebuild the index"
+        )
+    return state
 
 
 def _save_state(index_dir: str, state: dict) -> None:
@@ -85,102 +97,44 @@ def _save_state(index_dir: str, state: dict) -> None:
     os.replace(tmp, _state_path(index_dir))
 
 
-def _batch_dirs(index_dir: str, batch_id: int) -> tuple[str, str]:
-    return (
-        os.path.join(index_dir, "documents", f"batch_{batch_id}"),
-        os.path.join(index_dir, "blocks", f"batch_{batch_id}"),
+def _read_stages(spark: SparkSession, index_dir: str, stage_dirs: list[str]) -> DataFrame:
+    """One parquet read of the recorded stages' data under the first's
+    manifest schema: no inference job."""
+    with open(os.path.join(index_dir, stage_dirs[0], "_MANIFEST.json")) as f:
+        schema = T.StructType.fromJson(json.load(f)["schema"])
+    return spark.read.schema(schema).parquet(
+        *(os.path.join(index_dir, d, "data") for d in stage_dirs)
     )
-
-
-def _repair_state_from_commit(index_dir: str, state: dict, batch_id: int, docs_dir: str) -> None:
-    """Blocks dir exists but the state file missed the batch (crash between
-    the commit rename and the state save): restore offset/n from the
-    batch's _meta.json."""
-    with open(os.path.join(docs_dir, "_meta.json")) as f:
-        meta = json.load(f)
-    check_format(meta.get("codec_format"), f"{docs_dir}/_meta.json")
-    state["next_doc_id"] = max(int(state["next_doc_id"]), meta["offset"] + meta["n_docs"])
-    state["batches"].append(
-        {"batch_id": batch_id, "n_docs": meta["n_docs"], "offset": meta["offset"]}
-    )
-    if meta.get("avg_doc_len_hint") and not state.get("avg_doc_len_hint"):
-        state["avg_doc_len_hint"] = meta["avg_doc_len_hint"]
-    _save_state(index_dir, state)
 
 
 def ingest_batch(
     batch_df: DataFrame,
     batch_id: int,
     index_dir: str,
-    bucket_span: int = DEFAULT_BUCKET_SPAN,
+    bucket_span: int = BUCKET_SPAN,
 ) -> None:
     """Index one micro-batch exactly-once (idempotent under foreachBatch
-    redelivery).  Commit protocol: stage both tables, atomic-rename docs
-    then blocks (blocks = commit point), then record in the stream state;
-    every crash window is covered by the replay checks at the top."""
-    import shutil
-
-    if batch_df.isEmpty():
-        return
+    redelivery): the build's documents and blocks stages under
+    ``batch_<id>``, then the state save that records them — the commit
+    point."""
     state = _load_state(index_dir)
-    check_format(state.get("codec_format"), index_dir)  # no mixed layouts
-    if str(batch_id) in {str(b["batch_id"]) for b in state["batches"]}:
-        return  # replay of a fully recorded batch
-    docs_dir, blocks_dir = _batch_dirs(index_dir, batch_id)
-    if os.path.exists(blocks_dir):
-        # committed but not recorded (crash before state save) — repair
-        _repair_state_from_commit(index_dir, state, batch_id, docs_dir)
-        return
-    # half-committed leftovers from a crashed attempt: discard and redo
-    shutil.rmtree(docs_dir, ignore_errors=True)
-
+    if batch_id in {b["batch_id"] for b in state["batches"]} or batch_df.isEmpty():
+        return  # replay of a recorded batch, or nothing to index
     # doc-id offset aligned UP to a bucket boundary: batch buckets are
     # disjoint by construction (ids gap at batch boundaries — see module
     # docstring)
-    offset = -(-int(state["next_doc_id"]) // bucket_span) * bucket_span
-
-    docs = documents_from_corpus(batch_df).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(offset)
-    ).localCheckpoint(eager=True)
-    row = docs.agg(F.count("*").alias("n"), F.avg("doc_len").alias("a")).collect()[0]
-    n, hint = int(row["n"]), float(state.get("avg_doc_len_hint") or row["a"] or 1.0)
-    state["avg_doc_len_hint"] = hint
-
-    postings = postings_from_documents(docs)
-    blocks = build_block_index(postings, hint, bucket_span=bucket_span)
-
-    docs_stage, blocks_stage = docs_dir + "__stage", blocks_dir + "__stage"
-    shutil.rmtree(docs_stage, ignore_errors=True)
-    shutil.rmtree(blocks_stage, ignore_errors=True)
-    docs.write.mode("overwrite").parquet(docs_stage)
-    blocks.write.mode("overwrite").parquet(blocks_stage)
-    with open(os.path.join(docs_stage, "_meta.json"), "w") as f:
-        json.dump(
-            {
-                "offset": offset,
-                "n_docs": n,
-                "batch_id": batch_id,
-                "avg_doc_len_hint": hint,
-                "codec_format": FORMAT,
-            },
-            f,
-        )
-    os.makedirs(os.path.dirname(docs_dir), exist_ok=True)
-    os.makedirs(os.path.dirname(blocks_dir), exist_ok=True)
-    # Visibility window (ADVICE r2, documented trade-off): docs land before
-    # blocks, so a concurrent read_index between the two renames can see
-    # this batch's docs (n_docs/avg_doc_len include them) while its
-    # postings are not yet queryable.  Acceptable under the single-WRITER
-    # assumption this module states — readers see a consistent index again
-    # after the blocks rename, and crash recovery treats blocks as the
-    # commit point (docs-without-blocks is repaired on restart).  A
-    # batch-root rename would make both visible atomically at the cost of
-    # rewriting both directory trees per batch.
-    os.replace(docs_stage, docs_dir)
-    os.replace(blocks_stage, blocks_dir)  # <- commit point
-
-    state["next_doc_id"] = offset + n
-    state["batches"].append({"batch_id": batch_id, "n_docs": n, "offset": offset})
+    offset = -(-state["next_doc_id"] // bucket_span) * bucket_span
+    root = f"batch_{batch_id}"
+    cp = CheckpointManager(batch_df.sparkSession, os.path.join(index_dir, root))
+    stages = _documents_and_blocks(cp, batch_df, bucket_span, offset, state["avg_doc_len"])
+    docs = stages["documents"].manifest
+    state["next_doc_id"] = offset + docs["row_count"]
+    state["avg_doc_len"] = stages["blocks"].manifest["params"]["avg_doc_len"]
+    state["batches"].append({
+        "batch_id": batch_id, "offset": offset, "n_docs": docs["row_count"],
+        "chars": docs["metrics"]["chars"], "documents": f"{root}/documents",
+    })
+    state["blocks"].append(f"{root}/blocks")
     _save_state(index_dir, state)
 
 
@@ -188,13 +142,14 @@ def run_incremental_index(
     spark: SparkSession,
     input_dir: str,
     index_dir: str,
-    bucket_span: int = DEFAULT_BUCKET_SPAN,
-    available_now: bool = True,
+    bucket_span: int = BUCKET_SPAN,
     max_files_per_trigger: int = 4,
 ) -> None:
-    """Consume corpus parquet files arriving in ``input_dir``
-    (repo, path, commit, lang, content) and maintain an appendable blocked
-    index + documents table under ``index_dir``.
+    """Drain the corpus parquet files in ``input_dir``
+    (repo, path, commit, lang, content) into an appendable blocked index +
+    documents table under ``index_dir``, one :func:`ingest_batch` per
+    micro-batch, and return when the availableNow trigger has drained
+    them.
 
     BM25 normalization policy: the index pins ``avg_doc_len`` once (the
     first batch's mean) and stores it in the stream state; all
@@ -204,91 +159,76 @@ def run_incremental_index(
     (hw3/config.h:60).  Re-pinning is a compaction-time rewrite.
     """
     os.makedirs(index_dir, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_batch(batch_df, batch_id, index_dir, bucket_span)
-
-    reader = (
+    (
         spark.readStream.schema(CORPUS_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(input_dir)
-    )
-    writer = (
-        reader.writeStream.foreachBatch(process_batch)
+        .writeStream.foreachBatch(lambda df, i: ingest_batch(df, i, index_dir, bucket_span))
         .option("checkpointLocation", os.path.join(index_dir, "_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        writer.start()
 
 
 def compact_index(
     spark: SparkSession,
     index_dir: str,
-    bucket_span: int = DEFAULT_BUCKET_SPAN,
+    bucket_span: int = BUCKET_SPAN,
 ) -> dict:
     """Offline compaction: decode all blocks, re-encode with uniform
     doc-range bucketing, and re-pin ``avg_doc_len`` to the current
     collection mean (tightening block-max bounds drifted by growth).
-    Atomic swap: new blocks land in a staging dir, then replace.
+    The new blocks are a stage under ``compact_<n>``; one state save that
+    swaps the recorded blocks directories commits them, and the old ones
+    are removed after it.
 
     Many tiny per-micro-batch buckets → few uniform buckets: the
     streaming-ingest analog of the reference's pairwise run merge
     (hw2/DataLoader.cpp:239-255), done as one shuffle.
     """
-    import shutil
-
     state = _load_state(index_dir)
-    check_format(state.get("codec_format"), index_dir)
-    docs = _read_parts(spark, os.path.join(index_dir, "documents"))
-    blocks = _read_parts(spark, os.path.join(index_dir, "blocks"))
-
-    avg_dl = float(docs.agg(F.avg("doc_len").alias("a")).collect()[0]["a"])
-
-    postings = decode_block_index(blocks)
-    new_blocks = build_block_index(postings, avg_dl, bucket_span=bucket_span)
-    staging = os.path.join(index_dir, "blocks__compact")
-    new_blocks.write.mode("overwrite").parquet(staging)
-    n_new = spark.read.parquet(staging).count()
-
-    final = os.path.join(index_dir, "blocks")
-    old = os.path.join(index_dir, "blocks__old")
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(final, old)
-    os.replace(staging, final)
-    shutil.rmtree(old, ignore_errors=True)
-
-    state["avg_doc_len_hint"] = avg_dl
-    state["compactions"] = state.get("compactions", 0) + 1
-    _save_state(index_dir, state)
-    return {"n_blocks": n_new, "avg_doc_len": avg_dl}
+    _, blocks, _, stats = read_index(spark, index_dir)
+    avg_dl = stats["avg_doc_len_actual"]
+    n = state.get("compactions", 0) + 1
+    root = f"compact_{n}"
+    new = CheckpointManager(spark, os.path.join(index_dir, root)).run_stage(
+        "blocks",
+        lambda: build_block_index(decode_block_index(blocks), avg_dl, bucket_span=bucket_span),
+        params={"avg_doc_len": avg_dl, "bucket_span": bucket_span, "codec_format": FORMAT},
+    )
+    old = state["blocks"]
+    state.update(blocks=[f"{root}/blocks"], avg_doc_len=avg_dl, compactions=n)
+    _save_state(index_dir, state)  # <- commit point
+    for d in old:
+        shutil.rmtree(os.path.join(index_dir, d), ignore_errors=True)
+    return {"n_blocks": new.manifest["row_count"], "avg_doc_len": avg_dl}
 
 
 def read_index(spark: SparkSession, index_dir: str):
-    """(documents, blocks, lexicon, stats) from an incremental index dir.
+    """(documents, blocks, lexicon, stats) of the batches the stream state
+    records, with no Spark job: each table is one parquet read of its
+    recorded stage directories, and N and avgdl come from the state.
 
-    Lexicon/stats recomputed by aggregation (metadata-sized; the
-    reference's startup reload analog).  ``stats["avg_doc_len"]`` is the
-    PINNED per-index hint, not the live mean: block-max bounds were
-    computed under it, so query-time scoring must use the same constant
-    for the bounds to remain sound — exactly how the reference scores with
-    its compile-time DOC_AVG_LEN (hw3/config.h:60).  The live mean is
-    returned as ``stats["avg_doc_len_actual"]`` for monitoring/periodic
-    re-pin + compaction.
+    ``stats["avg_doc_len"]`` is the PINNED per-index value, not the live
+    mean: block-max bounds were computed under it, so query-time scoring
+    must use the same constant for the bounds to remain sound — exactly
+    how the reference scores with its compile-time DOC_AVG_LEN
+    (hw3/config.h:60).  The live mean (the recorded chars / N) is returned
+    as ``stats["avg_doc_len_actual"]`` for monitoring/periodic re-pin +
+    compaction.
     """
     state = _load_state(index_dir)
-    check_format(state.get("codec_format"), index_dir)
-    docs = _read_parts(spark, os.path.join(index_dir, "documents"))
-    blocks = _read_parts(spark, os.path.join(index_dir, "blocks"))
+    batches = state["batches"]
+    if not batches:
+        raise ValueError(f"{index_dir}: no batch has been indexed")
+    docs = _read_stages(spark, index_dir, [b["documents"] for b in batches])
+    blocks = _read_stages(spark, index_dir, state["blocks"])
     lex = lexicon_from_blocks(blocks).select("term", "df")
-    row = docs.agg(
-        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avg_doc_len")
-    ).collect()[0]
+    n_docs = sum(b["n_docs"] for b in batches)
     stats = {
-        "n_docs": int(row["n_docs"]),
-        "avg_doc_len": float(state.get("avg_doc_len_hint") or row["avg_doc_len"]),
-        "avg_doc_len_actual": float(row["avg_doc_len"]),
+        "n_docs": n_docs,
+        "avg_doc_len": state["avg_doc_len"],
+        "avg_doc_len_actual": sum(b["chars"] for b in batches) / n_docs,
     }
     return docs, blocks, lex, stats

@@ -549,8 +549,8 @@ def block_sources(spark, tmp_path_factory):
     """{source: (blocks, lexicon, n_docs, avg_doc_len)} for every way the
     repo opens a blocks table over local parquet files: the reopened
     `build_index` stage (its manifest's schema), a bare
-    ``spark.read.parquet``, a streamed index (``recursiveFileLookup`` over
-    per-batch directories) and a compacted one."""
+    ``spark.read.parquet``, a streamed index (one read of its per-batch
+    stage directories) and a compacted one."""
     import os
     import shutil
 
